@@ -186,9 +186,11 @@ class OHLCV(FeatureDefinition):
 class Ewma(FeatureDefinition):
     """Event-indexed exponential moving average of an upstream value:
     e_i = alpha*x_i + (1-alpha)*e_{i-1}. Recursive — not expressible as
-    a Spark window function — so batch runs per-key applyInPandas
-    (pandas ewm(adjust=False), the identical recursion); the streaming
-    form is the fused state machine (streaming.feature_vector)."""
+    a Spark window function — so batch runs per-key applyInPandas over
+    the shared kernel `streaming.kernels.ewma` (pandas
+    ewm(adjust=False)), one call per key with no carried state; the
+    streaming form (streaming.feature_vector) runs the same kernel per
+    micro-batch, carrying its (value, null count) state."""
 
     name = "ewma"
     dep_slots = ("upstream",)
@@ -198,6 +200,8 @@ class Ewma(FeatureDefinition):
         import pandas as pd
 
         from pyspark.sql.types import DoubleType, StructField, StructType, TimestampType
+
+        from svoe_spark.streaming.kernels import ewma
 
         df = upstreams["upstream"]
         value = params["value_col"]
@@ -212,7 +216,7 @@ class Ewma(FeatureDefinition):
 
         def fn(key_tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.sort_values("ts")
-            out = pdf[value].ewm(alpha=alpha, adjust=False).mean()
+            out, _ = ewma(pdf[value].to_numpy(dtype=float), alpha)
             data = {k: key_tuple[i] for i, k in enumerate(keys)}
             data.update({"ts": pdf["ts"], "ewma": out})
             return pd.DataFrame(data)

@@ -12,6 +12,11 @@ Supported feature kinds (the reference's online set):
   source : passthrough of a source column
   stddev : trailing-window stddev of an upstream feature (T1/A2)
   ewma   : exponential moving average of an upstream feature
+
+A key's micro-batch runs as whole arrays through the kernels of
+streaming.kernels, which batch shares; the group state is their carried
+state in spec order: per stddev the (ts ns, value) window buffer of
+non-null events, per ewma its (value, null count).
 """
 
 from __future__ import annotations
@@ -25,12 +30,14 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
+    LongType,
     StructField,
     StructType,
     TimestampType,
 )
 
 from svoe_spark.streaming.chunks import batch_frame
+from svoe_spark.streaming.kernels import ewma, trailing_stddev
 
 
 def feature_vector_stream(
@@ -51,11 +58,10 @@ def feature_vector_stream(
         if s["kind"] in ("stddev", "ewma") and s["of"] not in by_name:
             raise ValueError(f"{s['name']}: unknown upstream {s['of']!r}")
 
-    stateful = [s for s in specs if s["kind"] == "stddev"]
-    ewmas = [s for s in specs if s["kind"] == "ewma"]
+    stateful = [s for s in specs if s["kind"] != "source"]
     source_cols = sorted({s["col"] for s in specs if s["kind"] == "source"})
 
-    if not stateful and not ewmas:
+    if not stateful:
         # source-only graph: no state to carry — a plain projection
         # (an applyInPandasWithState with an EMPTY state struct is
         # rejected by the engine: 'head of empty list')
@@ -77,86 +83,40 @@ def feature_vector_stream(
             *[StructField(f"{n}_value", DoubleType()) for n in names],
         ]
     )
+    state_fields = {  # two per stateful spec
+        "stddev": (("ts", ArrayType(LongType())), ("v", ArrayType(DoubleType()))),
+        "ewma": (("ewma", DoubleType()), ("nulls", LongType())),
+    }
     state_schema = StructType(
-        [
-            *[
-                f
-                for s in stateful
-                for f in (
-                    StructField(f"ts_{s['name']}", ArrayType(DoubleType())),
-                    StructField(f"v_{s['name']}", ArrayType(DoubleType())),
-                )
-            ],
-            *[StructField(f"ewma_{s['name']}", DoubleType()) for s in ewmas],
-        ]
+        [StructField(f"{p}_{s['name']}", t) for s in stateful for p, t in state_fields[s["kind"]]]
     )
 
     def fn(
         key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            vals = list(state.get)
-        else:
-            vals = [[] for _ in stateful for _ in range(2)] + [
-                float("nan") for _ in ewmas
-            ]
-        bufs = {
-            s["name"]: (
-                np.asarray(vals[2 * i] or [], dtype=float),
-                np.asarray(vals[2 * i + 1] or [], dtype=float),
-            )
-            for i, s in enumerate(stateful)
-        }
-        ew = {
-            s["name"]: vals[2 * len(stateful) + i] for i, s in enumerate(ewmas)
-        }
-
+        carried = state.get if state.exists else None
         pdf = batch_frame(pdfs, [on], columns=[on, *source_cols])  # one frame, one sort —
         # chunk arrival order is fetch order, not event time
-        ts = pdf[on].astype("int64").to_numpy() / 1e9
+        ts = pdf[on].astype("int64").to_numpy()  # ns
         series: dict[str, np.ndarray] = {}
+        new_state = []
         for s in specs:
             if s["kind"] == "source":
                 series[s["name"]] = pdf[s["col"]].to_numpy(dtype=float)
-            elif s["kind"] == "stddev":
-                up = series[s["of"]]
-                tbuf, vbuf = bufs[s["name"]]
-                all_ts = np.concatenate([tbuf, ts])
-                all_v = np.concatenate([vbuf, up])
-                out = np.full(len(ts), np.nan)
-                win = float(s["window"])
-                for i in range(len(ts)):
-                    lo = np.searchsorted(all_ts, ts[i] - win, side="left")
-                    # peers included: the batch RANGE frame covers
-                    # ALL rows with equal ts, not just earlier ones
-                    hi = np.searchsorted(all_ts, ts[i], side="right")
-                    seg = all_v[lo:hi]
-                    if len(seg) > 1:
-                        out[i] = seg.std(ddof=1)
-                keep = all_ts >= (all_ts[-1] - win) if len(all_ts) else slice(0, 0)
-                bufs[s["name"]] = (all_ts[keep], all_v[keep])
-                series[s["name"]] = out
-            else:  # ewma
-                up = series[s["of"]]
-                alpha = float(s.get("alpha", 0.1))
-                prev = ew[s["name"]]
-                out = np.empty(len(up))
-                for i, x in enumerate(up):
-                    prev = x if (prev != prev) else (alpha * x + (1 - alpha) * prev)
-                    out[i] = prev
-                ew[s["name"]] = prev
-                series[s["name"]] = out
-        data = {key: key_tuple[0], on: pdf[on]}
-        for n in names:
-            data[f"{n}_value"] = series[n]
-        yield pd.DataFrame(data)
-
-        new_vals = []
-        for s in stateful:
-            tbuf, vbuf = bufs[s["name"]]
-            new_vals += [list(map(float, tbuf)), list(map(float, vbuf))]
-        new_vals += [float(ew[s["name"]]) for s in ewmas]
-        state.update(tuple(new_vals))
+                continue
+            i = len(new_state)
+            st = carried and carried[i : i + 2]
+            if s["kind"] == "stddev":
+                win_ns = int(round(float(s["window"]) * 1e9))
+                series[s["name"]], st = trailing_stddev(ts, series[s["of"]], win_ns, st)
+                st = (st[0].tolist(), st[1].tolist())
+            else:
+                series[s["name"]], st = ewma(series[s["of"]], float(s.get("alpha", 0.1)), st)
+            new_state += st
+        yield pd.DataFrame(
+            {key: key_tuple[0], on: pdf[on], **{f"{n}_value": series[n] for n in names}}
+        )
+        state.update(tuple(new_state))
 
     return (
         src.select(key, on, *source_cols)

@@ -5,7 +5,11 @@ watermark). Per-event trailing features (reference T1 `accumulate`
 state machines) can't use analytic range frames in a stream; they
 become `applyInPandasWithState` with a bounded per-key lookback buffer
 — the Spark-native form of the reference's deque state
-(stream_utils.py:31-39, trade_volume_imb_fd.py:22-27).
+(stream_utils.py:31-39, trade_volume_imb_fd.py:22-27). The trailing
+stddev here is the fused operator of streaming.feature_vector with one
+stddev spec: the shared kernel `streaming.kernels.trailing_stddev`,
+whose carried state is that buffer — the non-null (ts ns, value)
+events within the window of the key's latest event.
 
 Watermark policy (T5): the reference assumes strictly ordered input
 (sorted-block invariant); we default to a small configurable watermark
@@ -18,22 +22,11 @@ tests/test_skew_combine.py::test_watermark_drops_late_data.
 
 from __future__ import annotations
 
-from typing import Iterable
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from svoe_spark.functions.time import duration_to_interval_string, duration_to_seconds
-from svoe_spark.streaming.chunks import batch_frame
+from svoe_spark.streaming.feature_vector import feature_vector_stream
 
 
 def ohlcv_stream(
@@ -101,83 +94,19 @@ def trailing_stddev_stream(
     by: str = "symbol",
     window: str = "1m",
 ) -> DataFrame:
-    """Per-event trailing stddev on a stream: applyInPandasWithState
-    keyed by instrument; state = the lookback buffer of (ts, value)
-    within the window — bounded by construction (reference T1/A2,
-    volatility_stddev_fd.py:30-56).
-
+    """Per-event trailing stddev on a stream (reference T1/A2,
+    volatility_stddev_fd.py:30-56), as the module docstring describes.
     Assumes per-key event-time order within and across batches for
     exact parity with the batch window form (the reference's stated
     input invariant)."""
-    win_s = duration_to_seconds(window)
-
-    out_schema = StructType(
-        [
-            StructField(by, df.schema[by].dataType),
-            StructField(on, TimestampType()),
-            StructField(value, df.schema[value].dataType),
-            StructField("volatility", DoubleType()),
-        ]
-    )
-    # state: the within-window lookback buffer, as parallel arrays
-    state_schema = StructType(
-        [
-            StructField("ts_buf", ArrayType(DoubleType())),
-            StructField("v_buf", ArrayType(DoubleType())),
-        ]
-    )
-
-    def fn(
-        key, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        import numpy as np
-
-        if state.exists:
-            ts_list, v_list = state.get
-            ts_buf = np.asarray(ts_list, dtype=float)
-            v_buf = np.asarray(v_list, dtype=float)
-        else:
-            ts_buf = np.array([])
-            v_buf = np.array([])
-
-        # whole micro-batch as one frame, sorted once (chunk arrival
-        # order is fetch order, not event-time — chunks.batch_frame)
-        pdf = batch_frame(pdfs, [on], columns=[on, value])
-        ts = pdf[on].astype("int64").to_numpy() / 1e9
-        vals = pdf[value].to_numpy(dtype=float)
-        all_ts = np.concatenate([ts_buf, ts])
-        all_v = np.concatenate([v_buf, vals])
-        out = np.full(len(ts), np.nan)
-        for i in range(len(ts)):
-            lo = np.searchsorted(all_ts, ts[i] - win_s, side="left")
-            # peers included: the batch RANGE frame covers ALL rows
-            # with equal ts, not just the ones that arrived earlier
-            hi = np.searchsorted(all_ts, ts[i], side="right")
-            seg = all_v[lo:hi]
-            if len(seg) > 1:
-                out[i] = seg.std(ddof=1)
-        ts_buf, v_buf = all_ts, all_v
-        keep = ts_buf >= (ts_buf[-1] - win_s) if len(ts_buf) else slice(0, 0)
-        ts_buf, v_buf = ts_buf[keep], v_buf[keep]
-        yield pd.DataFrame(
-            {
-                by: key[0],
-                on: pdf[on],
-                value: pdf[value],
-                "volatility": out,
-            }
-        )
-
-        state.update((list(map(float, ts_buf)), list(map(float, v_buf))))
-
-    return (
-        df.select(by, on, value)
-        .groupBy(by)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    specs = [
+        {"name": "__src", "kind": "source", "col": value},
+        {"name": "volatility", "kind": "stddev", "of": "__src",
+         "window": duration_to_seconds(window)},
+    ]
+    return feature_vector_stream(df, specs, key=by, on=on).select(
+        by,
+        on,
+        F.col("__src_value").cast(df.schema[value].dataType).alias(value),
+        F.col("volatility_value").alias("volatility"),
     )

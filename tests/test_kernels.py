@@ -1,0 +1,140 @@
+"""Property tests of the per-event window kernels (streaming.kernels),
+Spark-free: any split of a series into micro-batches, carrying the
+state between them, equals a numpy two-pass stddev and a single-pass
+pandas ewm over the whole series."""
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from svoe_spark.streaming.kernels import ewma, trailing_stddev
+
+RTOL = 1e-9
+
+
+def two_pass_std(ts, v, window):
+    """Per event: sample stddev of the non-null values in
+    [t - window, t], peers included, by numpy two-pass (shifted by the
+    window's first value so the reference itself keeps its digits)."""
+    out = np.full(len(ts), np.nan)
+    for i, t in enumerate(ts):
+        seg = v[(ts >= t - window) & (ts <= t)]
+        seg = seg[~np.isnan(seg)]
+        if len(seg) > 1:
+            out[i] = (seg - seg[0]).std(ddof=1)
+    return out
+
+
+def random_splits(rng, ts, n_batches):
+    """Cut points between distinct timestamps (a micro-batch holds all
+    peers of its timestamps), with some empty batches mixed in."""
+    edges = np.flatnonzero(np.diff(ts)) + 1
+    cuts = np.sort(rng.choice(edges, size=min(n_batches, len(edges)), replace=False))
+    cuts = np.concatenate([[0], cuts, cuts[: len(cuts) // 4], [len(ts)]])
+    return [(a, b) for a, b in zip(np.sort(cuts)[:-1], np.sort(cuts)[1:])]
+
+
+def run_split(ts, v, window, alpha, splits):
+    sd_state = ew_state = None
+    sd_out, ew_out = [], []
+    for a, b in splits:
+        sd, sd_state = trailing_stddev(ts[a:b], v[a:b], window, sd_state)
+        ew, ew_state = ewma(v[a:b], alpha, ew_state)
+        assert len(sd) == len(ew) == b - a
+        sd_out.append(sd)
+        ew_out.append(ew)
+    return np.concatenate(sd_out), np.concatenate(ew_out)
+
+
+def assert_std_close(got, want):
+    assert np.array_equal(np.isnan(got), np.isnan(want))
+    ok = ~np.isnan(want)
+    np.testing.assert_allclose(got[ok], want[ok], rtol=RTOL, atol=0)
+
+
+def series(rng, n, null_frac=0.0, peers=False):
+    if peers:  # few distinct timestamps: many equal-ts peers
+        ts = np.sort(rng.integers(0, n // 8, n)) * 1_000
+    else:
+        ts = np.sort(rng.choice(np.arange(50 * n), n, replace=False)) * 1_000
+    v = 100.0 + np.cumsum(rng.normal(0, 1.0, n))
+    if null_frac:
+        v[rng.random(n) < null_frac] = np.nan
+    return ts.astype(np.int64), v
+
+
+@pytest.mark.parametrize(
+    "seed,null_frac,peers",
+    [(0, 0.0, False), (1, 0.0, True), (2, 0.15, False), (3, 0.3, True), (4, 0.9, False)],
+)
+def test_splits_equal_one_pass(seed, null_frac, peers):
+    rng = np.random.default_rng(seed)
+    ts, v = series(rng, 1500, null_frac, peers)
+    # ~40 events per window (~5 distinct stamps of ~8 peers each)
+    window, alpha = (5_000 if peers else 2_000_000), 0.2
+    want_sd = two_pass_std(ts, v, window)
+    want_ew = pd.Series(v).ewm(alpha=alpha, adjust=False).mean().to_numpy()
+    for n_batches in (0, 1, 7, 60):
+        got_sd, got_ew = run_split(ts, v, window, alpha, random_splits(rng, ts, n_batches))
+        assert_std_close(got_sd, want_sd)
+        # ewma is bit-equal, nulls included
+        assert np.array_equal(got_ew, want_ew, equal_nan=True)
+
+
+def test_peers_share_window():
+    ts = np.array([0, 5, 5, 5, 9], dtype=np.int64)
+    v = np.array([1.0, 2.0, 4.0, np.nan, 8.0])
+    got, _ = trailing_stddev(ts, v, 5)
+    # each ts-5 event sees all three peers (one null) and the event at 0
+    assert np.isnan(got[0])
+    assert got[1] == got[2] == got[3] == pytest.approx(np.std([1, 2, 4], ddof=1))
+    assert got[4] == pytest.approx(np.std([2, 4, 8], ddof=1))
+
+
+def test_empty_batch_keeps_state():
+    sd_state = (np.array([1, 2], dtype=np.int64), np.array([1.0, 2.0]))
+    out, new = trailing_stddev(np.empty(0, np.int64), np.empty(0), 10, sd_state)
+    assert len(out) == 0 and [a.tolist() for a in new] == [[1, 2], [1.0, 2.0]]
+    out, new = ewma(np.empty(0), 0.5, (3.0, 2))
+    assert len(out) == 0 and new == (3.0, 2)
+    out, new = ewma(np.empty(0), 0.5)
+    assert len(out) == 0 and np.isnan(new[0]) and new[1] == 0
+
+
+def test_nulls_follow_batch():
+    """stddev skips a null as stddev_samp does; ewma outputs the carried
+    value at a null and carries through it, as pandas ewm does."""
+    ts = np.arange(5, dtype=np.int64)
+    v = np.array([1.0, np.nan, 3.0, np.nan, np.nan])
+    sd, state = trailing_stddev(ts, v, 10)
+    assert np.isnan(sd[0]) and np.isnan(sd[1])
+    assert sd[2] == sd[3] == sd[4] == pytest.approx(np.std([1, 3], ddof=1))
+    assert state[1].tolist() == [1.0, 3.0]
+    ew, state = ewma(v, 0.5)
+    assert ew[1] == 1.0 and ew[3] == ew[4] == ew[2]
+    assert state == (ew[2], 2)
+    nxt, _ = ewma(np.array([5.0]), 0.5, state)
+    full = pd.Series([*v, 5.0]).ewm(alpha=0.5, adjust=False).mean().to_numpy()
+    assert nxt[0] == full[-1]
+
+
+def test_constant_window_is_exact_zero():
+    ts = np.arange(200, dtype=np.int64)
+    got, _ = trailing_stddev(ts, np.full(200, 1234.5678), 50)
+    assert np.isnan(got[0]) and (got[1:] == 0.0).all()
+
+
+@pytest.mark.parametrize("window", [5_000, 200_000])
+def test_adversarial_long_buffer(window):
+    """A trending random walk at ~1e6 with steps of 1e-5: prefix sums of
+    the shifted values dwarf a window's spread, the case where the
+    prefix form cancels and must fall back to two-pass. The long window
+    carries ~2000 events in its buffer between batches."""
+    rng = np.random.default_rng(window)
+    n = 6000
+    ts = np.sort(rng.choice(np.arange(100 * n), n, replace=False)).astype(np.int64)
+    v = 1e6 + np.cumsum(rng.normal(1e-4, 1e-5, n))
+    want = two_pass_std(ts, v, window)
+    for n_batches in (0, 5):
+        got, _ = run_split(ts, v, window, 0.5, random_splits(rng, ts, n_batches))
+        assert_std_close(got, want)
