@@ -28,6 +28,12 @@ def duration_to_seconds(dur: str | int | float) -> float:
     return float(m.group(1)) * _UNIT_SECONDS[m.group(2)]
 
 
+def duration_ns(dur: str | int | float) -> int:
+    """Duration in nanoseconds, exact to the microsecond (Spark's
+    timestamp precision), as the int64 offsets of per-event kernels."""
+    return int(round(duration_to_seconds(dur) * 1e6)) * 1000
+
+
 def duration_to_interval_string(dur: str | int | float) -> str:
     """Duration for Spark's window()/watermark APIs, e.g. '60 seconds'."""
     secs = duration_to_seconds(dur)

@@ -10,16 +10,31 @@ window/group based; genuinely stateful definitions override
 Contract: every produced DataFrame carries an event-time column `ts`,
 the instrument key columns declared by the source, and the feature's
 value columns. The planner as-of joins on (keys, ts).
+
+Kernel contract (optional), for definitions emitting one value per
+upstream event: ``output`` names the one value column,
+``inputs(columns, params)`` lists the upstream columns read, and
+``kernel(ts, up, params)`` is numpy over one key's events sorted by
+event time: ``ts`` int64 ns, ``up`` those columns as float64 arrays
+(NaN = null), returning the float64 output (NaN = undefined).
+``Featurizer.run`` computes all kernel features of a source and the
+label in one grouped pass; the rest (``ohlcv``, ``tvi``, most user
+definitions) are as-of joined onto it.
 """
 
 from __future__ import annotations
 
 from abc import ABC, abstractmethod
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from svoe_spark.operators.windows import ohlcv, pct_change, sliding_stddev, tvi
+from svoe_spark.functions.time import duration_ns
+from svoe_spark.operators.windows import ohlcv, tvi
+from svoe_spark.streaming.kernels import ewma, trailing_stddev
 
 REGISTRY: dict[str, type["FeatureDefinition"]] = {}
 
@@ -33,6 +48,13 @@ class FeatureDefinition(ABC):
     name: str = ""
     # upstream slots: list of (slot_name); deps in config bind by order
     dep_slots: tuple[str, ...] = ("source",)
+    #: the one value column of a per-event kernel; None = no kernel
+    output: str | None = None
+
+    @classmethod
+    def inputs(cls, columns: list[str], params: dict) -> list[str]:
+        """Upstream columns the kernel reads."""
+        return [params["value_col"]]
 
     @classmethod
     @abstractmethod
@@ -51,12 +73,55 @@ class FeatureDefinition(ABC):
         return cls.transform(upstreams, params, keys)
 
 
+def per_key_map(df: DataFrame, keys: list[str], inputs: list[str], outputs: list[str], fn) -> DataFrame:
+    """``groupBy(keys).applyInPandas`` of ``fn(ts, up) -> {column:
+    array}`` over each key's rows, stably sorted by event time (``ts``
+    int64 ns, ``up`` the inputs as float64 arrays). Returns (keys, ts,
+    *outputs) as doubles, NaN read as NULL; a boolean ``"__keep"``
+    entry in fn's result drops the rows it marks False. Each key's rows
+    sit in one pandas frame on one worker."""
+    schema = StructType(
+        [df.schema[c] for c in (*keys, "ts")] + [StructField(c, DoubleType()) for c in outputs]
+    )
+
+    # no type hints: partial ones make PySpark warn it cannot infer the eval type
+    def per_key(pdf):
+        pdf = pdf.sort_values("ts", kind="stable")
+        ts = pdf["ts"].to_numpy(dtype="datetime64[ns]").view("int64")
+        res = fn(ts, [pdf[c].to_numpy(dtype=float) for c in inputs])
+        keep = res.pop("__keep", slice(None))
+        out = {c: pdf[c].to_numpy()[keep] for c in (*keys, "ts")}
+        return pd.DataFrame({**out, **{c: res[c][keep] for c in outputs}})
+
+    return df.select(*keys, "ts", *inputs).groupBy(*keys).applyInPandas(per_key, schema=schema)
+
+
+def _kernel_transform(cls, upstreams, params, keys):
+    """A kernel definition's per-feature transform: its kernel per key."""
+    (df,) = upstreams.values()
+    return per_key_map(
+        df, keys, cls.inputs(df.columns, params), [cls.output],
+        lambda ts, up: {cls.output: cls.kernel(ts, up, params)},
+    )
+
+
 @register
 class MidPrice(FeatureDefinition):
     """(bid+ask)/2 (reference mid_price_fd.py:25-48); with a single
     price column upstream it passes it through as mid_price."""
 
     name = "mid_price"
+    output = "mid_price"
+
+    @classmethod
+    def inputs(cls, columns, params):
+        if "bid" in columns and "ask" in columns:
+            return ["bid", "ask"]
+        return [params.get("price_col", "value")]
+
+    @classmethod
+    def kernel(cls, ts, up, params):
+        return (up[0] + up[1]) / 2 if len(up) == 2 else up[0]
 
     @classmethod
     def transform(cls, upstreams, params, keys):
@@ -74,6 +139,16 @@ class RelativeSpread(FeatureDefinition):
     """2*|bid-ask|/(bid+ask) (reference relative_bid_ask_spread_fd.py:27-33)."""
 
     name = "relative_spread"
+    output = "spread"
+
+    @classmethod
+    def inputs(cls, columns, params):
+        return ["bid", "ask"]
+
+    @classmethod
+    def kernel(cls, ts, up, params):
+        bid, ask = up
+        return 2.0 * np.abs(bid - ask) / (bid + ask)
 
     @classmethod
     def transform(cls, upstreams, params, keys):
@@ -92,22 +167,23 @@ class RelativeSpread(FeatureDefinition):
 @register
 class VolatilityStddev(FeatureDefinition):
     """Trailing-window stddev of an upstream value (reference
-    volatility_stddev_fd.py:30-56). Batch = analytic range frame;
-    stream = applyInPandasWithState lookback buffer (T1) — same values,
-    different physical plan, per the Kappa contract."""
+    volatility_stddev_fd.py:30-56): the shared kernel
+    `streaming.kernels.trailing_stddev` over [ts - window, ts], peers
+    included. Batch runs it per key with no carried state; the stream
+    (trailing_stddev_stream) per micro-batch, carrying its window."""
 
     name = "volatility_stddev"
     dep_slots = ("mid_price",)
+    output = "volatility"
+    transform = classmethod(_kernel_transform)
 
     @classmethod
-    def transform(cls, upstreams, params, keys):
-        df = upstreams["mid_price"]
-        value = params.get("value_col", "mid_price")
-        out = sliding_stddev(
-            df, on="ts", value=value, by=keys, window=params.get("window", "1m"),
-            out="volatility",
-        )
-        return out.select(*keys, "ts", "volatility")
+    def inputs(cls, columns, params):
+        return [params.get("value_col", "mid_price")]
+
+    @classmethod
+    def kernel(cls, ts, up, params):
+        return trailing_stddev(ts, up[0], duration_ns(params.get("window", "1m")))[0]
 
     @classmethod
     def transform_stream(cls, upstreams, params, keys):
@@ -186,42 +262,20 @@ class OHLCV(FeatureDefinition):
 class Ewma(FeatureDefinition):
     """Event-indexed exponential moving average of an upstream value:
     e_i = alpha*x_i + (1-alpha)*e_{i-1}. Recursive — not expressible as
-    a Spark window function — so batch runs per-key applyInPandas over
-    the shared kernel `streaming.kernels.ewma` (pandas
-    ewm(adjust=False)), one call per key with no carried state; the
-    streaming form (streaming.feature_vector) runs the same kernel per
-    micro-batch, carrying its (value, null count) state."""
+    a Spark window function — so batch runs the shared kernel
+    `streaming.kernels.ewma` (pandas ewm(adjust=False)) per key with no
+    carried state; the streaming form (streaming.feature_vector) runs
+    the same kernel per micro-batch, carrying its (value, null count)
+    state."""
 
     name = "ewma"
     dep_slots = ("upstream",)
+    output = "ewma"
+    transform = classmethod(_kernel_transform)
 
     @classmethod
-    def transform(cls, upstreams, params, keys):
-        import pandas as pd
-
-        from pyspark.sql.types import DoubleType, StructField, StructType, TimestampType
-
-        from svoe_spark.streaming.kernels import ewma
-
-        df = upstreams["upstream"]
-        value = params["value_col"]
-        alpha = float(params.get("alpha", 0.1))
-        schema = StructType(
-            [
-                *[StructField(k, df.schema[k].dataType) for k in keys],
-                StructField("ts", TimestampType()),
-                StructField("ewma", DoubleType()),
-            ]
-        )
-
-        def fn(key_tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("ts")
-            out, _ = ewma(pdf[value].to_numpy(dtype=float), alpha)
-            data = {k: key_tuple[i] for i, k in enumerate(keys)}
-            data.update({"ts": pdf["ts"], "ewma": out})
-            return pd.DataFrame(data)
-
-        return df.groupBy(*keys).applyInPandas(fn, schema=schema)
+    def kernel(cls, ts, up, params):
+        return ewma(up[0], float(params.get("alpha", 0.1)))[0]
 
 
 def load_definitions_from_file(path: str) -> list[type[FeatureDefinition]]:
@@ -281,18 +335,19 @@ def _register_from_module(module) -> list[type[FeatureDefinition]]:
 
 @register
 class Diff(FeatureDefinition):
-    """(last-first)/first over a trailing window, generic over any
-    single-value upstream (reference transforms/diff/diff.py:29-64)."""
+    """(last-first)/first over the trailing window [ts - window, ts],
+    peers included, generic over any single-value upstream (reference
+    transforms/diff/diff.py:29-64); NULL where first is null or 0."""
 
     name = "diff"
     dep_slots = ("upstream",)
+    output = "diff"
+    transform = classmethod(_kernel_transform)
 
     @classmethod
-    def transform(cls, upstreams, params, keys):
-        df = upstreams["upstream"]
-        value = params["value_col"]
-        out = pct_change(
-            df, on="ts", value=value, by=keys, window=params.get("window", "1m"),
-            out="diff",
-        )
-        return out.select(*keys, "ts", "diff")
+    def kernel(cls, ts, up, params):
+        (v,) = up
+        lo = np.searchsorted(ts, ts - duration_ns(params.get("window", "1m")), side="left")
+        hi = np.searchsorted(ts, ts, side="right")
+        first = np.where(v[lo] != 0, v[lo], np.nan)
+        return (v[hi - 1] - first) / first

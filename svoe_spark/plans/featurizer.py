@@ -25,14 +25,16 @@ Config shape (YAML or dict):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from svoe_spark.functions.time import duration_ns
 from svoe_spark.operators.asof import asof_join_multi, lookahead_shift
 from svoe_spark.operators.sampling import every_nth
-from svoe_spark.plans.definitions import REGISTRY
+from svoe_spark.plans.definitions import REGISTRY, FeatureDefinition, per_key_map
 from svoe_spark.plans.feature_tree import Feature
 from svoe_spark.sources.synthetic import sine_mid_price
 from svoe_spark.sources.tables import load_table, read_parquet
@@ -88,6 +90,32 @@ class FeaturizerConfig:
         )
 
 
+def _load_definitions(config: FeaturizerConfig) -> None:
+    from svoe_spark.plans.definitions import load_definitions_from_file
+
+    for p in config.definition_paths:
+        load_definitions_from_file(p)
+
+
+def _definition(fc: FeatureConfig) -> type[FeatureDefinition]:
+    defn = REGISTRY.get(fc.feature_definition)
+    if defn is None:
+        raise ValueError(
+            f"unknown feature_definition: {fc.feature_definition!r}; "
+            f"registered: {sorted(REGISTRY)}"
+        )
+    return defn
+
+
+def _value_cols(df: DataFrame, keys: list[str]) -> list[str]:
+    return [c for c in df.columns if c != "ts" and c not in keys]
+
+
+def _ffill(v: np.ndarray) -> np.ndarray:
+    """v with each NaN replaced by the last non-NaN value before it."""
+    return v[np.maximum.accumulate(np.where(np.isnan(v), 0, np.arange(len(v))))]
+
+
 class Featurizer:
     """run(config) -> FeatureLabelSet (reference Featurizer.run +
     get_materialized_data, runner.py:28-164)."""
@@ -141,11 +169,7 @@ class Featurizer:
         shared subtrees by content hash and persisting fan-out > 1
         nodes (the reference's ref-count heuristic,
         cache_actor.py:34-35, done declaratively)."""
-        if config.definition_paths:
-            from svoe_spark.plans.definitions import load_definitions_from_file
-
-            for p in config.definition_paths:
-                load_definitions_from_file(p)
+        _load_definitions(config)
         source_df = self._load_source(config.data_source)
         source_feature = Feature.make("__source__", config.data_source)
 
@@ -159,12 +183,7 @@ class Featurizer:
                 fanout[d] = fanout.get(d, 0) + 1
 
         for fc in config.features:
-            defn = REGISTRY.get(fc.feature_definition)
-            if defn is None:
-                raise ValueError(
-                    f"unknown feature_definition: {fc.feature_definition!r}; "
-                    f"registered: {sorted(REGISTRY)}"
-                )
+            defn = _definition(fc)
             dep_feats = [by_name[d][0] for d in fc.deps] or [source_feature]
             node = Feature.make(
                 fc.feature_definition, fc.params, dep_feats, name=fc.name
@@ -193,35 +212,101 @@ class Featurizer:
         every feature as-of joined (J1), label = the label feature
         ``label_lookahead`` in the future (J2). Column naming matches
         the reference: '{feature}-{col}' and 'label_{feature}-{col}'
-        (tasks.py:243-252)."""
+        (tasks.py:243-252).
+
+        Fused pass: the features whose definition has a per-event
+        kernel (definitions module docstring) and whose deps reach the
+        source only through such features, bar stored ones, come out
+        with the label from ONE ``groupBy(keys).applyInPandas`` over the
+        source columns they read. Per key: stable sort by ts, kernels in
+        dependency order, then ``asof_join_multi``'s contract: each
+        column forward-filled over nulls and read at the row's last
+        equal-ts peer (so peers carry equal values), the label read at
+        the last row with ts <= ts + lookahead, and rows whose ts +
+        lookahead passes the key's last event dropped. Memory: one
+        key's rows, with a float64 array per input and feature, in one
+        pandas frame on one worker, as the batch ``Ewma`` it replaced.
+
+        Fallback: the other features (``ohlcv``, ``tvi``, kernel-less
+        user definitions, stored features and their dependents) come
+        from ``build_features`` and are as-of joined onto the fused
+        output; a kernel-less label gets its rows from
+        ``lookahead_shift`` and the fused output is one more side."""
         config = config if isinstance(config, FeaturizerConfig) else FeaturizerConfig.load(config)
-        feats = self.build_features(config)
+        _load_definitions(config)
         keys = config.keys
-
         label_name = config.label_feature or config.features[0].name
-        label_df = feats[label_name][1]
+        stored = set(config.features_to_store) if self.store is not None else set()
+        fused: dict[str, FeatureConfig] = {}
+        for fc in config.features:
+            if _definition(fc).output and fc.name not in stored and all(d in fused for d in fc.deps):
+                fused[fc.name] = fc
+        rest = [fc for fc in config.features if fc.name not in fused]
+        needed = {fc.name for fc in rest}  # and, below, what they depend on
+        for fc in reversed(config.features):
+            if fc.name in needed:
+                needed.update(fc.deps)
+        feats = self.build_features(replace(
+            config, features=[fc for fc in config.features if fc.name in needed], definition_paths=[]
+        )) if rest else {}
 
-        value_cols = [c for c in label_df.columns if c != "ts" and c not in keys]
-        labels = label_df
-        if config.label_lookahead:
-            labels = lookahead_shift(
-                label_df,
-                config.label_lookahead,
-                on="ts",
-                by=keys,
-                value_cols=value_cols,
-                prefix=f"label_{label_name}-",
-            )
-        labels = labels.select(
-            *keys,
-            "ts",
-            *[c for c in labels.columns if c.startswith("label_")],
-        )
+        left = self._fused(config, fused, label_name) if fused else None
+        rights = {f"{fc.name}-": feats[fc.name][1] for fc in rest}
+        if label_name not in fused:
+            labels = label_df = feats[label_name][1]
+            if config.label_lookahead:
+                labels = lookahead_shift(
+                    label_df, config.label_lookahead, on="ts", by=keys,
+                    value_cols=_value_cols(label_df, keys), prefix=f"label_{label_name}-",
+                )
+            if left is not None:
+                rights = {"": left, **rights}
+            left = labels.select(*keys, "ts", *[c for c in labels.columns if c.startswith("label_")])
+        # the as-of join's column order: ts, keys, label, features
+        columns = ["ts", *keys, *[c for c in left.columns if c.startswith("label_")]]
+        for name in dict.fromkeys(fc.name for fc in config.features):
+            if name in fused:
+                columns.append(f"{name}-{_definition(fused[name]).output}")
+            else:
+                columns += [f"{name}-{c}" for c in _value_cols(feats[name][1], keys)]
+        if rights:
+            left = asof_join_multi(left, rights, on="ts", by=keys)
+        return left.select(*columns)
 
-        rights = {
-            f"{name}-": df for name, (node, df) in feats.items()
-        }
-        return asof_join_multi(labels, rights, on="ts", by=keys)
+    def _fused(self, config, fused: dict[str, FeatureConfig], label_name: str) -> DataFrame:
+        """``run``'s fused pass over the kernel features in ``fused``."""
+        source_df = self._load_source(config.data_source)
+        plan, source_cols = [], []  # (output column, definition, params, input columns)
+        for fc in fused.values():
+            defn = _definition(fc)
+            if not fc.deps:
+                inputs = defn.inputs(source_df.columns, fc.params)
+                source_cols += [c for c in inputs if c not in source_cols]
+            else:
+                dep_out = _definition(fused[fc.deps[0]]).output
+                if defn.inputs([dep_out], fc.params) != [dep_out]:
+                    raise ValueError(f"{fc.name!r} does not read {fc.deps[0]!r}'s {dep_out!r}")
+                inputs = [f"{fc.deps[0]}-{dep_out}"]
+            plan.append((f"{fc.name}-{defn.output}", defn, fc.params, inputs))
+        features = [col for col, *_ in plan]
+        label = None
+        if label_name in fused and config.label_lookahead:
+            label = f"{label_name}-{_definition(fused[label_name]).output}"
+            ahead = duration_ns(config.label_lookahead)
+
+        def fused_pass(ts, src):
+            vals = dict(zip(source_cols, src))
+            for col, defn, params, inputs in plan:
+                vals[col] = defn.kernel(ts, [vals[c] for c in inputs], params)
+            last_peer = np.searchsorted(ts, ts, "right") - 1
+            res = {c: _ffill(vals[c])[last_peer] for c in features}
+            if label:
+                res[f"label_{label}"] = _ffill(vals[label])[np.searchsorted(ts, ts + ahead, "right") - 1]
+                res["__keep"] = ts + ahead <= ts[-1]
+            return res
+
+        outputs = ([f"label_{label}"] if label else []) + features
+        return per_key_map(source_df, config.keys, source_cols, outputs, fused_pass)
 
     def run_stream(self, config, source_stream: DataFrame) -> DataFrame:
         """The Kappa ONLINE path (reference entry point 2, §3.2): the

@@ -1,6 +1,6 @@
 """Per-event window kernels: the one definition of trailing stddev and
 ewma, shared by the online operator (streaming.feature_vector, which
-trailing_stddev_stream also runs) and the batch Ewma definition.
+trailing_stddev_stream also runs) and the batch feature definitions.
 
 A kernel maps one key's batch of events, sorted by event time, and the
 state carried from the key's previous batch to (outputs, new state):
