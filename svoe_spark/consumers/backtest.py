@@ -129,7 +129,9 @@ def run_backtest(
     """One sequential simulation per instrument, instruments in
     parallel. features: (by, ts, price_col, ...)."""
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # no type hints on the pandas functions here: partial ones make
+    # PySpark warn it cannot infer the eval type
+    def fn(key, pdf):
         return _simulate(pdf, key[0], price_col, signal_fn, cfg)
 
     return features.groupBy(by).applyInPandas(fn, schema=RESULT_SCHEMA)
@@ -169,7 +171,7 @@ def run_backtest_time_split(
     )
     bucketed = features.withColumn("__window", bucket)
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         out = _simulate(pdf, key[0], price_col, signal_fn, cfg)
         out.insert(1, "window", key[1])
         return out
@@ -222,7 +224,7 @@ def run_backtest_grid(
         ids = F.array(*[F.lit(i) for i in range(len(cfgs))])
         rep = features.withColumn("__cfg", F.explode(ids))
 
-        def fn_rep(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def fn_rep(key, pdf):
             cid = int(key[1])
             cfg = cfgs[cid]
             out = _simulate(pdf, key[0], price_col, signal_fn, cfg, order_cols)
@@ -232,7 +234,7 @@ def run_backtest_grid(
 
     if mode == "loop":
 
-        def fn_loop(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def fn_loop(key, pdf):
             outs = [
                 _with_cfg(
                     _simulate(pdf, key[0], price_col, signal_fn, cfg,

@@ -13,24 +13,36 @@ value columns. The planner as-of joins on (keys, ts).
 
 Kernel contract (optional), for definitions emitting one value per
 upstream event: ``output`` names the one value column,
-``inputs(columns, params)`` lists the upstream columns read, and
-``kernel(ts, up, params)`` is numpy over one key's events sorted by
-event time: ``ts`` int64 ns, ``up`` those columns as float64 arrays
-(NaN = null), returning the float64 output (NaN = undefined).
-``Featurizer.run`` computes all kernel features of a source and the
-label in one grouped pass; the rest (``ohlcv``, ``tvi``, most user
-definitions) are as-of joined onto it.
+``inputs(columns, params)`` picks the columns read out of the
+upstream's value columns, and ``kernel(ts, up, params, state=None)`` is
+numpy over one key's events sorted by event time (``ts`` int64 ns,
+``up`` those columns as float64 arrays, NaN = null), returning the
+float64 output (NaN = undefined) and the state to carry into the key's
+next batch of events.
+
+State half: ``state_fields`` declares that state as (name, Spark type)
+pairs; ``state`` is a tuple of their values, None before the first
+batch. Any split of a key's events into batches must give the outputs
+of one pass. A kernel with no state (``()``) must be row-local; one
+with ``state_fields = None`` (``diff``) runs in batch only.
+
+``run_plan`` is the one body of both paths: ``Featurizer.run`` runs the
+kernel plan once per key with no state, ``Featurizer.run_stream`` per
+micro-batch carrying it (streaming.feature_vector). Kernel-less
+definitions (``ohlcv``, ``tvi``, most user ones) are as-of joined onto
+the batch pass and do not stream fused.
 """
 
 from __future__ import annotations
 
 from abc import ABC, abstractmethod
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from svoe_spark.functions.time import duration_ns
 from svoe_spark.operators.windows import ohlcv, tvi
@@ -50,11 +62,14 @@ class FeatureDefinition(ABC):
     dep_slots: tuple[str, ...] = ("source",)
     #: the one value column of a per-event kernel; None = no kernel
     output: str | None = None
+    #: the kernel's carried state, (name, Spark type) pairs; None = batch only
+    state_fields: tuple | None = None
 
     @classmethod
     def inputs(cls, columns: list[str], params: dict) -> list[str]:
-        """Upstream columns the kernel reads."""
-        return [params["value_col"]]
+        """The upstream value ``columns`` the kernel reads: ``value_col``,
+        else the upstream's only value column."""
+        return [params.get("value_col", columns[0] if len(columns) == 1 else None)]
 
     @classmethod
     @abstractmethod
@@ -96,12 +111,58 @@ def per_key_map(df: DataFrame, keys: list[str], inputs: list[str], outputs: list
     return df.select(*keys, "ts", *inputs).groupBy(*keys).applyInPandas(per_key, schema=schema)
 
 
+def kernel_inputs(name: str, defn, columns: list[str], params: dict) -> list[str]:
+    """``defn.inputs``, checked: the one column-resolution rule of the
+    batch and stream paths. Raises a ValueError naming feature ``name``
+    if it reads a column its upstream lacks."""
+    inputs = defn.inputs(columns, params)
+    if not set(inputs) <= set(columns):
+        raise ValueError(f"feature {name!r} reads {inputs}, not among its upstream's value columns {columns}")
+    return inputs
+
+
+class KernelStep(NamedTuple):
+    """One kernel feature of a plan; ``inputs`` name source columns or
+    earlier steps' ``column``."""
+
+    name: str
+    defn: type
+    params: dict
+    inputs: list[str]
+
+    @property
+    def column(self) -> str:
+        return f"{self.name}-{self.defn.output}"
+
+
+def source_inputs(plan: list[KernelStep]) -> list[str]:
+    """The source columns a plan reads, in first-use order."""
+    made = {s.column for s in plan}
+    return list(dict.fromkeys(c for s in plan for c in s.inputs if c not in made))
+
+
+def run_plan(plan: list[KernelStep], ts, vals: dict, state=None) -> list:
+    """Run ``plan``'s kernels in order over one key's events (``ts``
+    sorted int64 ns), adding each step's output to ``vals`` (source
+    column -> float64 array) under its ``column``. ``state``: the steps'
+    carried state fields, concatenated in plan order (None = none).
+    Returns the new state, in the same layout."""
+    new_state = []
+    for s in plan:
+        n = len(s.defn.state_fields or ())
+        carried = state and state[len(new_state) : len(new_state) + n]
+        vals[s.column], st = s.defn.kernel(ts, [vals[c] for c in s.inputs], s.params, carried)
+        new_state += st
+    return new_state
+
+
 def _kernel_transform(cls, upstreams, params, keys):
     """A kernel definition's per-feature transform: its kernel per key."""
     (df,) = upstreams.values()
+    columns = [c for c in df.columns if c not in (*keys, "ts")]
     return per_key_map(
-        df, keys, cls.inputs(df.columns, params), [cls.output],
-        lambda ts, up: {cls.output: cls.kernel(ts, up, params)},
+        df, keys, kernel_inputs(cls.name, cls, columns, params), [cls.output],
+        lambda ts, up: {cls.output: cls.kernel(ts, up, params)[0]},
     )
 
 
@@ -112,6 +173,7 @@ class MidPrice(FeatureDefinition):
 
     name = "mid_price"
     output = "mid_price"
+    state_fields = ()
 
     @classmethod
     def inputs(cls, columns, params):
@@ -120,8 +182,8 @@ class MidPrice(FeatureDefinition):
         return [params.get("price_col", "value")]
 
     @classmethod
-    def kernel(cls, ts, up, params):
-        return (up[0] + up[1]) / 2 if len(up) == 2 else up[0]
+    def kernel(cls, ts, up, params, state=None):
+        return ((up[0] + up[1]) / 2 if len(up) == 2 else up[0]), ()
 
     @classmethod
     def transform(cls, upstreams, params, keys):
@@ -140,15 +202,16 @@ class RelativeSpread(FeatureDefinition):
 
     name = "relative_spread"
     output = "spread"
+    state_fields = ()
 
     @classmethod
     def inputs(cls, columns, params):
         return ["bid", "ask"]
 
     @classmethod
-    def kernel(cls, ts, up, params):
+    def kernel(cls, ts, up, params, state=None):
         bid, ask = up
-        return 2.0 * np.abs(bid - ask) / (bid + ask)
+        return 2.0 * np.abs(bid - ask) / (bid + ask), ()
 
     @classmethod
     def transform(cls, upstreams, params, keys):
@@ -170,33 +233,18 @@ class VolatilityStddev(FeatureDefinition):
     volatility_stddev_fd.py:30-56): the shared kernel
     `streaming.kernels.trailing_stddev` over [ts - window, ts], peers
     included. Batch runs it per key with no carried state; the stream
-    (trailing_stddev_stream) per micro-batch, carrying its window."""
+    (``Featurizer.run_stream``, ``trailing_stddev_stream``) per
+    micro-batch, carrying its window buffer."""
 
     name = "volatility_stddev"
     dep_slots = ("mid_price",)
     output = "volatility"
+    state_fields = (("ts", ArrayType(LongType())), ("v", ArrayType(DoubleType())))
     transform = classmethod(_kernel_transform)
 
     @classmethod
-    def inputs(cls, columns, params):
-        return [params.get("value_col", "mid_price")]
-
-    @classmethod
-    def kernel(cls, ts, up, params):
-        return trailing_stddev(ts, up[0], duration_ns(params.get("window", "1m")))[0]
-
-    @classmethod
-    def transform_stream(cls, upstreams, params, keys):
-        from svoe_spark.streaming.features import trailing_stddev_stream
-
-        if len(keys) != 1:
-            raise ValueError("streaming volatility needs exactly one key column")
-        df = upstreams["mid_price"]
-        value = params.get("value_col", "mid_price")
-        out = trailing_stddev_stream(
-            df, on="ts", value=value, by=keys[0], window=params.get("window", "1m")
-        )
-        return out.select(*keys, "ts", "volatility")
+    def kernel(cls, ts, up, params, state=None):
+        return trailing_stddev(ts, up[0], duration_ns(params.get("window", "1m")), state)
 
 
 @register
@@ -264,18 +312,18 @@ class Ewma(FeatureDefinition):
     e_i = alpha*x_i + (1-alpha)*e_{i-1}. Recursive — not expressible as
     a Spark window function — so batch runs the shared kernel
     `streaming.kernels.ewma` (pandas ewm(adjust=False)) per key with no
-    carried state; the streaming form (streaming.feature_vector) runs
-    the same kernel per micro-batch, carrying its (value, null count)
-    state."""
+    carried state; the stream runs the same kernel per micro-batch,
+    carrying its (value, null count) state."""
 
     name = "ewma"
     dep_slots = ("upstream",)
     output = "ewma"
+    state_fields = (("ewma", DoubleType()), ("nulls", LongType()))
     transform = classmethod(_kernel_transform)
 
     @classmethod
-    def kernel(cls, ts, up, params):
-        return ewma(up[0], float(params.get("alpha", 0.1)))[0]
+    def kernel(cls, ts, up, params, state=None):
+        return ewma(up[0], float(params.get("alpha", 0.1)), state)
 
 
 def load_definitions_from_file(path: str) -> list[type[FeatureDefinition]]:
@@ -337,7 +385,9 @@ def _register_from_module(module) -> list[type[FeatureDefinition]]:
 class Diff(FeatureDefinition):
     """(last-first)/first over the trailing window [ts - window, ts],
     peers included, generic over any single-value upstream (reference
-    transforms/diff/diff.py:29-64); NULL where first is null or 0."""
+    transforms/diff/diff.py:29-64); NULL where first is null or 0.
+    Batch only: the kernel reads the key's whole history, so it
+    declares no stream state."""
 
     name = "diff"
     dep_slots = ("upstream",)
@@ -345,9 +395,9 @@ class Diff(FeatureDefinition):
     transform = classmethod(_kernel_transform)
 
     @classmethod
-    def kernel(cls, ts, up, params):
+    def kernel(cls, ts, up, params, state=None):
         (v,) = up
         lo = np.searchsorted(ts, ts - duration_ns(params.get("window", "1m")), side="left")
         hi = np.searchsorted(ts, ts, side="right")
         first = np.where(v[lo] != 0, v[lo], np.nan)
-        return (v[hi - 1] - first) / first
+        return (v[hi - 1] - first) / first, ()

@@ -29,12 +29,19 @@ from dataclasses import dataclass, field, replace
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from svoe_spark.functions.time import duration_ns
 from svoe_spark.operators.asof import asof_join_multi, lookahead_shift
 from svoe_spark.operators.sampling import every_nth
-from svoe_spark.plans.definitions import REGISTRY, FeatureDefinition, per_key_map
+from svoe_spark.plans.definitions import (
+    REGISTRY,
+    FeatureDefinition,
+    KernelStep,
+    kernel_inputs,
+    per_key_map,
+    run_plan,
+    source_inputs,
+)
 from svoe_spark.plans.feature_tree import Feature
 from svoe_spark.sources.synthetic import sine_mid_price
 from svoe_spark.sources.tables import load_table, read_parquet
@@ -109,6 +116,25 @@ def _definition(fc: FeatureConfig) -> type[FeatureDefinition]:
 
 def _value_cols(df: DataFrame, keys: list[str]) -> list[str]:
     return [c for c in df.columns if c != "ts" and c not in keys]
+
+
+def kernel_plan(config: FeaturizerConfig, columns: list[str], exclude=()) -> list[KernelStep]:
+    """The one feature-graph plan of ``run`` and ``run_stream``: in
+    config order, the features whose definition has a per-event kernel
+    and whose deps are planned too, bar ``exclude``. Each step's inputs
+    come from its definition's ``inputs`` (``kernel_inputs``), out of
+    the source's value ``columns`` when it has no deps, else out of its
+    first dep's output."""
+    plan: dict[str, KernelStep] = {}
+    for fc in config.features:
+        defn = _definition(fc)
+        if not defn.output or fc.name in exclude or not all(d in plan for d in fc.deps):
+            continue
+        dep = plan[fc.deps[0]] if fc.deps else None
+        up = {dep.defn.output: dep.column} if dep else {c: c for c in columns}
+        inputs = kernel_inputs(fc.name, defn, list(up), fc.params)
+        plan[fc.name] = KernelStep(fc.name, defn, fc.params, [up[c] for c in inputs])
+    return list(plan.values())
 
 
 def _ffill(v: np.ndarray) -> np.ndarray:
@@ -237,10 +263,8 @@ class Featurizer:
         keys = config.keys
         label_name = config.label_feature or config.features[0].name
         stored = set(config.features_to_store) if self.store is not None else set()
-        fused: dict[str, FeatureConfig] = {}
-        for fc in config.features:
-            if _definition(fc).output and fc.name not in stored and all(d in fused for d in fc.deps):
-                fused[fc.name] = fc
+        source_df = self._load_source(config.data_source)
+        fused = {s.name: s for s in kernel_plan(config, _value_cols(source_df, keys), stored)}
         rest = [fc for fc in config.features if fc.name not in fused]
         needed = {fc.name for fc in rest}  # and, below, what they depend on
         for fc in reversed(config.features):
@@ -250,7 +274,7 @@ class Featurizer:
             config, features=[fc for fc in config.features if fc.name in needed], definition_paths=[]
         )) if rest else {}
 
-        left = self._fused(config, fused, label_name) if fused else None
+        left = self._fused(config, source_df, list(fused.values()), label_name) if fused else None
         rights = {f"{fc.name}-": feats[fc.name][1] for fc in rest}
         if label_name not in fused:
             labels = label_df = feats[label_name][1]
@@ -266,38 +290,24 @@ class Featurizer:
         columns = ["ts", *keys, *[c for c in left.columns if c.startswith("label_")]]
         for name in dict.fromkeys(fc.name for fc in config.features):
             if name in fused:
-                columns.append(f"{name}-{_definition(fused[name]).output}")
+                columns.append(fused[name].column)
             else:
                 columns += [f"{name}-{c}" for c in _value_cols(feats[name][1], keys)]
         if rights:
             left = asof_join_multi(left, rights, on="ts", by=keys)
         return left.select(*columns)
 
-    def _fused(self, config, fused: dict[str, FeatureConfig], label_name: str) -> DataFrame:
-        """``run``'s fused pass over the kernel features in ``fused``."""
-        source_df = self._load_source(config.data_source)
-        plan, source_cols = [], []  # (output column, definition, params, input columns)
-        for fc in fused.values():
-            defn = _definition(fc)
-            if not fc.deps:
-                inputs = defn.inputs(source_df.columns, fc.params)
-                source_cols += [c for c in inputs if c not in source_cols]
-            else:
-                dep_out = _definition(fused[fc.deps[0]]).output
-                if defn.inputs([dep_out], fc.params) != [dep_out]:
-                    raise ValueError(f"{fc.name!r} does not read {fc.deps[0]!r}'s {dep_out!r}")
-                inputs = [f"{fc.deps[0]}-{dep_out}"]
-            plan.append((f"{fc.name}-{defn.output}", defn, fc.params, inputs))
-        features = [col for col, *_ in plan]
-        label = None
-        if label_name in fused and config.label_lookahead:
-            label = f"{label_name}-{_definition(fused[label_name]).output}"
+    def _fused(self, config, source_df: DataFrame, plan: list[KernelStep], label_name: str) -> DataFrame:
+        """``run``'s fused pass over the kernel ``plan``."""
+        source_cols = source_inputs(plan)
+        features = [s.column for s in plan]
+        label = next((s.column for s in plan if s.name == label_name), None) if config.label_lookahead else None
+        if label:
             ahead = duration_ns(config.label_lookahead)
 
         def fused_pass(ts, src):
             vals = dict(zip(source_cols, src))
-            for col, defn, params, inputs in plan:
-                vals[col] = defn.kernel(ts, [vals[c] for c in inputs], params)
+            run_plan(plan, ts, vals)
             last_peer = np.searchsorted(ts, ts, "right") - 1
             res = {c: _ffill(vals[c])[last_peer] for c in features}
             if label:
@@ -311,82 +321,36 @@ class Featurizer:
     def run_stream(self, config, source_stream: DataFrame) -> DataFrame:
         """The Kappa ONLINE path (reference entry point 2, §3.2): the
         configured per-event feature graph over a streaming DataFrame,
-        one combined vector row per source event ('{name}_value'
-        columns). Spark permits a single stateful operator per streaming
-        query, so the whole graph runs FUSED in one per-key state
-        machine (streaming.feature_vector) — the same execution shape as
-        the reference's worker actor pushing each event through its
-        streamz graph. Window-bucket features (ohlcv) stream separately
-        via their transform_stream."""
-        from svoe_spark.functions.time import duration_to_seconds
+        one combined vector row per source event: (key, ts,
+        '{name}_value'...) as doubles. The graph is ``run``'s kernel
+        plan (``kernel_plan``), run per micro-batch by ONE per-key
+        stateful operator (streaming.feature_vector) that carries each
+        kernel's state — Spark permits a single stateful operator per
+        streaming query, and it is the execution shape of the
+        reference's worker actor pushing each event through its streamz
+        graph. A graph of row-local kernels only carries no state and
+        runs as a stateless ``mapInPandas`` of the same plan.
+
+        Every feature must be in the plan and declare stream state
+        (``state_fields``); others (``diff``, window-bucket ``ohlcv``)
+        raise, and stream on their own via ``transform_stream``."""
         from svoe_spark.streaming.feature_vector import feature_vector_stream
 
         config = config if isinstance(config, FeaturizerConfig) else FeaturizerConfig.load(config)
+        _load_definitions(config)
         if len(config.keys) != 1:
             raise ValueError("run_stream needs exactly one key column")
-
-        from pyspark.sql import functions as F
-
-        stream = source_stream
-        specs: list[dict] = []
-        implicit_src: str | None = None
-
-        def source_fallback(fc) -> str:
-            # dep-less stddev/ewma: the batch path binds the raw source
-            # into the upstream slot; mirror it with one implicit
-            # passthrough spec of the source price column
-            nonlocal implicit_src
-            if fc.deps:
-                return fc.deps[0]
-            if implicit_src is None:
-                implicit_src = "__source__"
-                specs.append(
-                    {"name": implicit_src, "kind": "source",
-                     "col": fc.params.get("value_col", fc.params.get("price_col", "value"))}
-                )
-            return implicit_src
-
+        (key,) = config.keys
+        plan = kernel_plan(config, _value_cols(source_stream, config.keys))
+        streams = {s.name for s in plan if s.defn.state_fields is not None}
         for fc in config.features:
-            if fc.feature_definition == "mid_price":
-                # mirror the batch MidPrice definition: with bid/ask on
-                # the source, the feature is (bid+ask)/2 — a raw-column
-                # passthrough here would silently stream a different
-                # series than the batch path computes
-                if "bid" in stream.columns and "ask" in stream.columns:
-                    col = f"__mid_{fc.name}"
-                    stream = stream.withColumn(
-                        col, (F.col("bid") + F.col("ask")) / 2
-                    )
-                else:
-                    col = fc.params.get("price_col", "value")
-                    if col not in stream.columns:
-                        raise ValueError(
-                            f"mid_price {fc.name!r}: source column {col!r} "
-                            f"not in stream columns {stream.columns}"
-                        )
-                specs.append({"name": fc.name, "kind": "source", "col": col})
-            elif fc.feature_definition == "volatility_stddev":
-                specs.append(
-                    {"name": fc.name, "kind": "stddev",
-                     "of": source_fallback(fc),
-                     "window": duration_to_seconds(fc.params.get("window", "1m"))}
-                )
-            elif fc.feature_definition == "ewma":
-                specs.append(
-                    {"name": fc.name, "kind": "ewma", "of": source_fallback(fc),
-                     "alpha": fc.params.get("alpha", 0.1)}
-                )
-            else:
+            if fc.name not in streams:
                 raise ValueError(
                     f"feature {fc.feature_definition!r} has no fused streaming "
                     f"form; use its transform_stream directly (e.g. ohlcv)"
                 )
-        # drop the helper spec's column from the OUTPUT if it was only
-        # an implicit upstream (feature_vector_stream emits every spec)
-        out = feature_vector_stream(stream, specs, key=config.keys[0], on="ts")
-        if implicit_src is not None:
-            out = out.drop(f"{implicit_src}_value")
-        return out
+        out = feature_vector_stream(source_stream, plan, key=key, on="ts")
+        return out.select(key, "ts", *[f"{s.name}_value" for s in plan])
 
     def get_materialized_data(
         self, config, pick_every_nth_row: int = 1

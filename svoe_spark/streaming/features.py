@@ -6,10 +6,11 @@ state machines) can't use analytic range frames in a stream; they
 become `applyInPandasWithState` with a bounded per-key lookback buffer
 — the Spark-native form of the reference's deque state
 (stream_utils.py:31-39, trade_volume_imb_fd.py:22-27). The trailing
-stddev here is the fused operator of streaming.feature_vector with one
-stddev spec: the shared kernel `streaming.kernels.trailing_stddev`,
-whose carried state is that buffer — the non-null (ts ns, value)
-events within the window of the key's latest event.
+stddev here is the fused operator of streaming.feature_vector over a
+one-step ``volatility_stddev`` plan: the shared kernel
+`streaming.kernels.trailing_stddev`, whose carried state is that buffer
+— the non-null (ts ns, value) events within the window of the key's
+latest event.
 
 Watermark policy (T5): the reference assumes strictly ordered input
 (sorted-block invariant); we default to a small configurable watermark
@@ -25,7 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from svoe_spark.functions.time import duration_to_interval_string, duration_to_seconds
+from svoe_spark.functions.time import duration_to_interval_string
+from svoe_spark.plans.definitions import KernelStep, VolatilityStddev
 from svoe_spark.streaming.feature_vector import feature_vector_stream
 
 
@@ -64,29 +66,6 @@ def ohlcv_stream(
     )
 
 
-def sample_last_stream(
-    df: DataFrame,
-    on: str = "ts",
-    by: list[str] | str | None = None,
-    every: str = "1s",
-    watermark: str = "10 seconds",
-    value_cols: list[str] | None = None,
-) -> DataFrame:
-    """Streaming emission sampling (T3): last value per (key, bucket)."""
-    keys = [by] if isinstance(by, str) else list(by or [])
-    value_cols = value_cols or [
-        c for c in df.columns if c not in keys and c != on
-    ]
-    w = F.window(on, duration_to_interval_string(every))
-    epoch = F.col(on).cast("double")
-    return (
-        df.withWatermark(on, watermark)
-        .groupBy(*keys, w.alias("w"))
-        .agg(*[F.max_by(c, epoch).alias(c) for c in value_cols])
-        .select(*keys, F.col("w.start").alias("bucket"), *value_cols)
-    )
-
-
 def trailing_stddev_stream(
     df: DataFrame,
     on: str = "ts",
@@ -99,14 +78,10 @@ def trailing_stddev_stream(
     Assumes per-key event-time order within and across batches for
     exact parity with the batch window form (the reference's stated
     input invariant)."""
-    specs = [
-        {"name": "__src", "kind": "source", "col": value},
-        {"name": "volatility", "kind": "stddev", "of": "__src",
-         "window": duration_to_seconds(window)},
-    ]
-    return feature_vector_stream(df, specs, key=by, on=on).select(
+    plan = [KernelStep("volatility", VolatilityStddev, {"window": window}, [value])]
+    return feature_vector_stream(df, plan, key=by, on=on).select(
         by,
         on,
-        F.col("__src_value").cast(df.schema[value].dataType).alias(value),
+        F.col(value).cast(df.schema[value].dataType).alias(value),
         F.col("volatility_value").alias("volatility"),
     )

@@ -34,6 +34,7 @@ def test_backtest_buy_low_sell_high_profits_on_sine(spark, sine_df):
     assert r["total_commission"] > 0
 
 
+@pytest.mark.filterwarnings("error::UserWarning")  # e.g. "Cannot infer the eval type"
 def test_backtest_time_split(spark, sine_df):
     res = run_backtest_time_split(sine_df, price_col="mid_price", n_splits=4).collect()
     assert len(res) == 4
@@ -42,6 +43,7 @@ def test_backtest_time_split(spark, sine_df):
     assert all(r["final_equity"] > 10_000.0 for r in res)
 
 
+@pytest.mark.filterwarnings("error::UserWarning")  # e.g. "Cannot infer the eval type"
 def test_backtest_param_grid_equals_sequential_runs(spark, sine_df):
     """Grid fan-out (both physical modes) == N independent sequential
     runs, config for config — the reference's actor-per-config sweep
