@@ -274,7 +274,9 @@ def reconstruct_book(
     schema = snapshot_schema(key)
     nb = bundles or _default_bundles(df)
 
-    def fn(_, pdf: pd.DataFrame) -> pd.DataFrame:
+    # no type hints on the applyInPandas functions in this module: partial
+    # ones make PySpark warn it cannot infer the eval type
+    def fn(_, pdf):
         acc = _new_acc()
         for k, g in pdf.groupby(key, sort=False):
             _replay_into(g, _Book(), depth, every, k, seq_col, acc)
@@ -497,7 +499,7 @@ def reconstruct_book_bucketed(
         ]
     )
 
-    def summarize(key_tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def summarize(key_tuple, pdf):
         has_snap, levels = _summarize_segment(pdf, seq_col)
         return pd.DataFrame(
             {
@@ -530,7 +532,7 @@ def reconstruct_book_bucketed(
         ]
     )
 
-    def fold_seeds(key_tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold_seeds(key_tuple, pdf):
         pdf = pdf.sort_values("__bk")
         book: dict[tuple[str, float], float] = {}
         started = False
@@ -614,7 +616,7 @@ def reconstruct_book_bucketed(
         ]
     )
 
-    def replay_bucket(key_tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def replay_bucket(key_tuple, pdf):
         book = _Book()
         seed = pdf[pdf["update_type"] == "__SEED__"]
         events = pdf[pdf["update_type"] != "__SEED__"]

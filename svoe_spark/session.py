@@ -5,6 +5,14 @@ encode the settings that matter at that scale and are harmless locally:
 AQE on (runtime re-planning, skew-join splitting, partition coalescing),
 Arrow on (every pandas-UDF operator in this package moves data via Arrow),
 and a shuffle-partition count that callers override per deployment.
+
+Python workers start from the engine's own daemon module,
+``spark.python.daemon.module=svoe_spark.pyworker``: ``pyspark.daemon`` plus
+a zipimport fix that spares every pandas-UDF task a 56-80 ms re-read of
+``pyspark.zip`` (see that module). So ``svoe_spark`` must be importable
+where the executors start Python: in local mode the daemon inherits the
+driver's working directory and ``PYTHONPATH``; on a cluster, ship or
+install the package on the executors.
 """
 
 from __future__ import annotations
@@ -130,6 +138,9 @@ def get_spark(
         # messages with user call sites; keep it for interactive
         # debugging sessions, not for engine/bench/production runs.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Python workers fork from the engine's daemon, which stops every
+        # task re-reading pyspark.zip's directory (see svoe_spark.pyworker).
+        .config("spark.python.daemon.module", "svoe_spark.pyworker")
         # Timestamps are event-time; keep them timezone-stable.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

@@ -84,6 +84,7 @@ def test_trailing_stddev_stream_equals_batch(spark, sf_small, tick_parquet):
 
 
 @pytest.mark.heavy  # round-9 quick-tier trim: ptest.py/round-close still run it
+@pytest.mark.filterwarnings("error::UserWarning")
 def test_orderbook_stream_equals_batch(spark, sf_small, tmp_path):
     import time
 
