@@ -28,7 +28,6 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from perfbench.common import _stat_fields  # noqa: E402
-from svoe_spark.session import get_spark  # noqa: E402
 
 PARTITIONS = 4
 
@@ -62,6 +61,8 @@ def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     p.add_argument("--runs", type=int, default=20)
     opts = p.parse_args(argv)
+
+    from svoe_spark.session import get_spark
 
     spark = get_spark(
         "pytask_cost",

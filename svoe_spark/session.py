@@ -13,6 +13,10 @@ a zipimport fix that spares every pandas-UDF task a 56-80 ms re-read of
 where the executors start Python: in local mode the daemon inherits the
 driver's working directory and ``PYTHONPATH``; on a cluster, ship or
 install the package on the executors.
+
+Streaming checkpoints are written by temp file + ``FileSystem.rename``
+(the FileSystem-based manager): the default FileContext one creates more
+files, and without native-hadoop each new local file forks a ``chmod``.
 """
 
 from __future__ import annotations
@@ -109,6 +113,9 @@ def get_spark(
 
     On a real cluster, pass ``master=None`` and let spark-submit decide;
     locally defaults to ``local[N]`` with N from $SPARK_GRAFT_CPUS.
+    The FileSystem-based checkpoint manager relies on ``FileSystem.rename``
+    being atomic, as local ``rename(2)`` and HDFS are; on an object store,
+    override ``spark.sql.streaming.checkpointFileManagerClass`` in ``extra_conf``.
 
     Note: importing this module installs a process-global py4j
     name-resolution cache (see _install_py4j_resolution_cache) — it
@@ -141,6 +148,9 @@ def get_spark(
         # Python workers fork from the engine's daemon, which stops every
         # task re-reading pyspark.zip's directory (see svoe_spark.pyworker).
         .config("spark.python.daemon.module", "svoe_spark.pyworker")
+        # checkpoint files by temp file + rename (see the docstring)
+        .config("spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
         # Timestamps are event-time; keep them timezone-stable.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

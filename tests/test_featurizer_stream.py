@@ -2,6 +2,7 @@
 state machine) over a replayed source equals the batch features at
 every event time."""
 
+import datetime
 import math
 
 import pytest
@@ -368,3 +369,174 @@ def test_run_stream_restart_carries_state(spark, tmp_path):
     rows = spark.read.parquet(str(sink)).collect()
     assert len(rows) == n
     _assert_stream_equals_batch(spark, cfg, rows, _REL)
+
+
+# -- the packed boundary: byte-encoded state and packed output rows --
+
+_STATEFUL = [
+    {"name": "mid", "feature_definition": "mid_price"},
+    {"name": "vol", "feature_definition": "volatility_stddev",
+     "deps": ["mid"], "params": {"window": "20s"}},
+    {"name": "ew", "feature_definition": "ewma", "deps": ["mid"],
+     "params": {"alpha": 0.3}},
+]
+
+
+def _write_hot_quotes(path, files=4, per_file=120, hot=0.8, seed=11):
+    """Quotes where symbol "H" takes a ``hot`` share of each file's
+    events; one file (one micro-batch) per 30 s of event time. Returns
+    the fewest "H" events in any one file."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(seed)
+    path.mkdir()
+    fewest = per_file
+    for j in range(files):
+        ms = 30_000 * j + np.sort(rng.choice(np.arange(300), per_file, replace=False)) * 100
+        sym = np.where(rng.random(per_file) < hot, "H", rng.choice(["A", "B"], per_file))
+        bid = 100.0 + np.cumsum(rng.normal(0, 0.2, per_file))
+        f = path / f"part-{j:03d}.parquet"
+        pq.write_table(pa.table({
+            "ts": pa.array(ms.astype("int64") * 1_000, pa.timestamp("us")),
+            "symbol": pa.array(sym),
+            "bid": pa.array(bid, mask=rng.random(per_file) < 0.1),
+            "ask": pa.array(bid + rng.uniform(0.01, 0.05, per_file)),
+        }), f)
+        os.utime(f, (1_000_000 + j, 1_000_000 + j))
+        fewest = min(fewest, int((sym == "H").sum()))
+    return fewest
+
+
+def test_run_stream_equals_batch_across_chunks_and_packed_rows(spark, tmp_path, monkeypatch):
+    """A hot key whose every micro-batch arrives in several Arrow chunks
+    and leaves in several packed rows: stream == batch."""
+    from svoe_spark.streaming import feature_vector
+
+    path = tmp_path / "quotes"
+    assert _write_hot_quotes(path) > 40  # > 5 chunks and > 5 packed rows a batch
+    monkeypatch.setattr(feature_vector, "PACKED_ROW_EVENTS", 7)
+    cfg = _quote_cfg(path, _STATEFUL)
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "8")
+    try:
+        rows = run_available_to_memory(
+            Featurizer(spark).run_stream(cfg, _quote_stream(spark, path))
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    assert len(rows) == 4 * 120
+    _assert_stream_equals_batch(spark, cfg, rows, _REL)
+
+
+def test_run_stream_keeps_a_null_ts_event(spark, tmp_path):
+    """An event with a null ts streams without error and comes out with
+    a null ts; the other events keep theirs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "quotes"
+    path.mkdir()
+    pq.write_table(pa.table({
+        "ts": pa.array([0, 1_000_000, None, 3_000_000], pa.timestamp("us")),
+        "symbol": pa.array(["A"] * 4),
+        "bid": pa.array([1.0, 2.0, 3.0, 4.0]),
+        "ask": pa.array([1.0, 2.0, 3.0, 4.0]),
+    }), path / "part-000.parquet")
+    rows = run_available_to_memory(
+        Featurizer(spark).run_stream(_quote_cfg(path, _STATEFUL), _quote_stream(spark, path))
+    ).collect()
+    got = sorted((r["mid_value"], r["ts"]) for r in rows)
+    assert [m for m, _ in got] == [1.0, 2.0, 3.0, 4.0]
+    epoch = datetime.datetime(1970, 1, 1)
+    assert [t and (t - epoch).total_seconds() for _, t in got] == [0.0, 1.0, None, 3.0]
+
+
+def test_state_codec_round_trips_every_state_field_type():
+    """Spark-free: every state field type a registered definition
+    declares survives encode -> pickle (the state's transport) ->
+    decode; array fields cross as explicit little-endian bytes, empty
+    buffers included; and a kernel carried through the codec across
+    batches equals one pass."""
+    import pickle
+
+    import numpy as np
+    from pyspark.sql.types import ArrayType, BinaryType, DoubleType, LongType
+
+    from svoe_spark.plans.definitions import REGISTRY
+    from svoe_spark.streaming.feature_vector import state_codec
+    from svoe_spark.streaming.kernels import trailing_stddev
+
+    types = {t for d in REGISTRY.values() for _, t in d.state_fields or ()}
+    assert types == {ArrayType(LongType()), ArrayType(DoubleType()), DoubleType(), LongType()}
+    samples = {
+        ArrayType(LongType()): [np.array([-(2**62), 0, 7], np.int64), np.empty(0, np.int64)],
+        ArrayType(DoubleType()): [np.array([1.5, -0.0, np.inf]), np.empty(0)],
+        DoubleType(): [2.5, float("nan")],
+        LongType(): [3, 0],
+    }
+    fields = [(f"{t.simpleString()}_{i}", t) for t in samples for i in range(2)]
+    schema, encode, decode = state_codec(fields)
+    assert [f.dataType for f in schema] == [
+        BinaryType() if isinstance(t, ArrayType) else t for _, t in fields
+    ]
+    state = [v for t in samples for v in samples[t]]
+    row = encode(state)
+    assert row[0] == np.array([-(2**62), 0, 7], "<i8").tobytes() and row[1] == b""
+    back = decode(pickle.loads(pickle.dumps(row)))
+    for want, got in zip(state, back):
+        if isinstance(want, np.ndarray):
+            assert got.dtype == want.dtype and np.array_equal(got, want)
+        else:
+            assert got == want or (math.isnan(want) and math.isnan(got))
+
+    # trailing_stddev's (ts, v) buffer carried through the codec
+    _, enc, dec = state_codec([("ts", ArrayType(LongType())), ("v", ArrayType(DoubleType()))])
+    rng = np.random.default_rng(3)
+    ts = np.sort(rng.choice(10_000, 200, replace=False)).astype(np.int64)
+    v = np.where(rng.random(200) < 0.2, np.nan, rng.normal(size=200))
+    whole, _ = trailing_stddev(ts, v, 500)
+    parts, carried = [], None
+    for lo, hi in ((0, 1), (1, 90), (90, 200)):
+        out, st = trailing_stddev(ts[lo:hi], v[lo:hi], 500, carried)
+        parts.append(out)
+        carried = dec(pickle.loads(pickle.dumps(enc(st))))
+    np.testing.assert_allclose(np.concatenate(parts), whole, rtol=1e-12, equal_nan=True)
+
+
+def test_run_stream_maps_ts_back_in_the_zone_the_query_runs_in(spark, tmp_path):
+    """The handler sees ts as wall time in the session zone, here set
+    after the plan is built: outside a DST fall-back hour every event
+    keeps its instant; inside it, the two instants of one wall time both
+    come out at the earlier (daylight) offset."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    # America/New_York falls back at 2024-11-03 06:00 UTC (01:00-02:00 local repeats)
+    utc = [datetime.datetime(2024, 11, 3, h, 30) for h in (4, 5, 6, 7)]
+    path = tmp_path / "quotes"
+    path.mkdir()
+    pq.write_table(pa.table({
+        "ts": pa.array(utc, pa.timestamp("us", tz="UTC")),  # instants: TimestampType
+        "symbol": pa.array(["A"] * 4),
+        "bid": pa.array([1.0, 2.0, 3.0, 4.0]),
+        "ask": pa.array([1.0, 2.0, 3.0, 4.0]),
+    }), path / "part-000.parquet")
+    out = Featurizer(spark).run_stream(_quote_cfg(path, _STATEFUL), _quote_stream(spark, path))
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        rows = run_available_to_memory(out).select(
+            "mid_value", F.unix_micros("ts").alias("us")
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+    epoch = datetime.datetime(1970, 1, 1)
+    us = [(t - epoch) // datetime.timedelta(microseconds=1) for t in utc]
+    assert sorted((r["mid_value"], r["us"]) for r in rows) == [
+        (1.0, us[0]), (2.0, us[1]), (3.0, us[1]), (4.0, us[3])
+    ]
