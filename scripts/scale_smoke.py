@@ -8,6 +8,8 @@ the hot-key shape that breaks naive per-key plans. Times:
   * as-of join, default plan (per-key sort: the hot key serializes)
   * as-of join, time-bucketed plan (parallelism = keys x buckets)
   * OHLCV tumbling agg, trailing-window volatility, exact dedup
+  * dense-tick tvi and volatility on the per-key kernels
+    (``SMOKE_ONLY=dense``)
   * order-book replay, sequential vs time-bucketed
   * curation (global shuffle rank / sequence packing) at 20M rows
   * MinHash signatures over 2M synthetic docs (shuffle-free path)
@@ -625,28 +627,6 @@ def round4d_smoke(spark, results, force, n_big=100_000_000):
         lambda: force(counts), "purged_folds_100M"
     )
 
-    # dense-tick trailing windows: ~1400 rows/frame, where the range
-    # frame is O(rows x frame) (321 s at 2M) — the prefix path is the
-    # 100 TB plan
-    from svoe_spark.operators.windows import sliding_stddev, tvi
-
-    dense = spark.range(20_000_000).select(
-        (F.col("id") % 10).cast("string").alias("event_type"),
-        F.timestamp_seconds(
-            F.lit(1_700_000_000) + (F.col("id") / 2333.0)
-        ).alias("timestamp"),
-        ((F.col("id") * 7 % 1000).cast("double") / 10).alias("price"),
-        ((F.col("id") % 97) + 1).cast("double").alias("amount"),
-        F.when(F.col("id") % 3 == 0, F.lit("BUY"))
-        .otherwise(F.lit("SELL"))
-        .alias("side"),
-    )
-    results["tvi_prefix_20M_dense_sec"] = timed(
-        lambda: force(
-            tvi(dense, by="event_type", window="1m", method="prefix")
-        ),
-        "tvi_prefix_20M",
-    )
     # exact heavy hitters: 100M rows, 1000 heavy keys planted in a
     # 10M-key long tail — the CMS filter must drop the tail map-side
     from svoe_spark.operators.sketches import frequent_items
@@ -698,16 +678,42 @@ def round4d_smoke(spark, results, force, n_big=100_000_000):
     fz.unpersist()
     assert n_typo_pairs == 10_000, n_typo_pairs
 
-    results["stddev_auto_20M_dense_sec"] = timed(
-        lambda: force(
-            sliding_stddev(
-                dense.withColumnRenamed("price", "mid_price"),
-                by="event_type",
-                window="1m",
-                method="auto",
-            )
-        ),
-        "stddev_auto_20M",
+
+def dense_kernel_smoke(spark, results, force, n=N_LEFT):
+    """Dense-tick trailing windows on the feature definitions' O(rows)
+    kernels (``per_key_map`` per key, as ``Featurizer.run`` runs them):
+    tvi and volatility over 20M ticks on 10 keys (~1400 rows per 1m
+    window), and volatility over the 20M hot-key ticks (18M rows on one
+    key, one pandas frame on one worker). The range frame is
+    O(rows x frame): 321 s at 2M rows."""
+    from svoe_spark.plans.definitions import TradeVolumeImbalance, VolatilityStddev
+
+    dense = spark.range(n).select(
+        (F.col("id") % 10).cast("string").alias("event_type"),
+        F.timestamp_seconds(
+            F.lit(1_700_000_000) + (F.col("id") / 2333.0)
+        ).alias("ts"),
+        ((F.col("id") * 7 % 1000).cast("double") / 10).alias("price"),
+        ((F.col("id") % 97) + 1).cast("double").alias("amount"),
+        F.when(F.col("id") % 3 == 0, F.lit("BUY"))
+        .otherwise(F.lit("SELL"))
+        .alias("side"),
+    )
+    results["tvi_kernel_20M_dense_sec"] = timed(
+        lambda: force(TradeVolumeImbalance.transform({"source": dense}, {"window": "1m"}, ["event_type"])),
+        "tvi_kernel_20M",
+    )
+    results["stddev_kernel_20M_dense_sec"] = timed(
+        lambda: force(VolatilityStddev.transform(
+            {"mid_price": dense}, {"window": "1m", "value_col": "price"}, ["event_type"]
+        )),
+        "stddev_kernel_20M",
+    )
+    results["stddev_kernel_20M_hot_sec"] = timed(
+        lambda: force(VolatilityStddev.transform(
+            {"mid_price": gen_ticks(spark, n)}, {"window": "1m", "value_col": "price"}, ["symbol"]
+        )),
+        "stddev_kernel_20M_hot",
     )
 
 
@@ -1402,6 +1408,11 @@ def main():
     force = lambda df: df.write.format("noop").mode("overwrite").save()  # noqa: E731
 
     only = os.environ.get("SMOKE_ONLY")
+    if only == "dense":
+        results = {}
+        dense_kernel_smoke(spark, results, force)
+        print(json.dumps(results))
+        return
     if only == "round9":
         results = {}
         round9_smoke(spark, results, force)
@@ -1497,20 +1508,12 @@ def main():
         lambda: force(
             sliding_stddev(
                 gen_ticks(spark, 2_000_000), on="ts", value="price",
-                by="symbol", window="1m", method="frame",
+                by="symbol", window="1m",
             )
         ),
         "sliding_stddev_frame_2M",
     )
-    results["sliding_stddev_prefix_20M_sec"] = timed(
-        lambda: force(
-            sliding_stddev(
-                left, on="ts", value="price",
-                by="symbol", window="1m", method="prefix",
-            )
-        ),
-        "sliding_stddev_prefix_20M",
-    )
+    dense_kernel_smoke(spark, results, force)
 
     # order book, 2M updates, one hot instrument carrying 90%: the
     # sequential plan serializes on the hot key; the bucketed plan's

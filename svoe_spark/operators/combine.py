@@ -8,7 +8,7 @@ join, without restricting output to label rows.
 
 running_reduce: per-key cumulative aggregate emitted on every update —
 batch form of the v2 engine's reduce operator (streaming form:
-svoe_spark.streaming.aggregate.running_reduce_stream).
+svoe_spark.streaming.aggregate.keyed_reduce_stream).
 """
 
 from __future__ import annotations

@@ -1,14 +1,15 @@
-"""Window-based feature operators: OHLCV, trailing volatility, trade
-volume imbalance (TVI), diff/%-change, and the generic trailing-window
-helper.
+"""Window-based feature operators: OHLCV, trailing volatility,
+diff/%-change, and the generic trailing-window helper.
 
-The reference computes all of these as per-event Python state machines
-over sorted streams (reference: ohlcv_fd.py:28-101,
-volatility_stddev_fd.py:30-56, trade_volume_imb_fd.py:42-117,
-transforms/diff/diff.py:29-64, stream_utils.py:31-39). Here each one is
-a declarative window/group expression — JVM-side, whole-stage-codegen,
-partition-parallel — and works identically on batch DataFrames; the
-streaming variants live in svoe_spark.streaming.
+The reference computes these as per-event Python state machines over
+sorted streams (reference: ohlcv_fd.py:28-101,
+volatility_stddev_fd.py:30-56, transforms/diff/diff.py:29-64,
+stream_utils.py:31-39). Here each one is a declarative window/group
+expression — JVM-side, whole-stage-codegen, partition-parallel. The
+feature definitions (plans.definitions) compute trailing volatility,
+diff and trade volume imbalance with the O(rows) per-key kernels
+instead, on both the batch and the streaming path; the range-frame
+forms here serve registry queries and batch references.
 """
 
 from __future__ import annotations
@@ -53,83 +54,6 @@ def trailing_window(
     )
 
 
-def trailing_sums_prefix(
-    df: DataFrame,
-    moments: dict[str, Column],
-    on: str,
-    by: list[str] | str | None,
-    window: str | float,
-) -> DataFrame:
-    """Exact trailing-window SUM/COUNT moments in O(rows): attach, for
-    every input row, the sum of each ``moments`` expression over the
-    closed range frame [ts - window, ts] — WITHOUT a bounded sliding
-    frame (Spark re-aggregates those from scratch per row, O(rows x
-    frame); measured 321 s for 2M dense rows in sliding_stddev and
-    271.7 s for 100M in rolling_corr).
-
-    Plan: range-RUNNING cumulative sums (peers at an equal timestamp
-    are all included, exactly like the range frame), then one backward
-    as-of join to the cumulative state strictly BEFORE the window
-    start; frame sum = difference. Peer rows carry equal cumulative
-    values, so the as-of tie is harmless. Float moments subtract large
-    prefixes (values agree with the frame formulation to ~1e-8
-    relative); integer moments are exact.
-    """
-    keys = _by(by)
-    micros = int(round(duration_to_seconds(window) * 1_000_000))
-    wcum = (
-        Window.partitionBy(*keys)
-        .orderBy(F.unix_micros(F.col(on).cast("timestamp")))
-        .rangeBetween(Window.unboundedPreceding, 0)
-    )
-    names = list(moments)
-    cum = df.select(
-        "*", *[F.sum(moments[n]).over(wcum).alias(f"__c_{n}") for n in names]
-    )
-    from svoe_spark.operators.asof import asof_join
-
-    before = cum.select(
-        *keys,
-        (F.col(on) + F.expr(f"INTERVAL {micros + 1} MICROSECOND")).alias(on),
-        *[F.col(f"__c_{n}").alias(f"__b_{n}") for n in names],
-    )
-    joined = asof_join(
-        cum, before, on=on, by=keys, right_cols=[f"__b_{n}" for n in names]
-    )
-    for n in names:
-        joined = joined.withColumn(
-            n,
-            F.coalesce(F.col(f"__c_{n}"), F.lit(0))
-            - F.coalesce(F.col(f"__b_{n}"), F.lit(0)),
-        )
-    return joined.drop(
-        *[f"__c_{n}" for n in names], *[f"__b_{n}" for n in names]
-    )
-
-
-def _estimate_rows_per_frame(
-    df: DataFrame, on: str, by: list[str], window: str | float
-) -> float:
-    """Cheap eager profile (one small agg job, the asof auto-select
-    pattern): average rows per trailing frame = rows / keys /
-    (span / window)."""
-    secs = max(duration_to_seconds(window), 1e-9)
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        (
-            F.approx_count_distinct(F.struct(*by)) if by else F.lit(1)
-        ).alias("k"),
-        (F.unix_micros(F.max(on)) - F.unix_micros(F.min(on))).alias("span_us"),
-    ).first()
-    if not row or not row["n"]:
-        return 0.0
-    n_windows = max((row["span_us"] or 0) / 1e6 / secs, 1.0)
-    return row["n"] / max(row["k"] or 1, 1) / n_windows
-
-
-AUTO_FRAME_ROWS = 256
-
-
 def ohlcv(
     df: DataFrame,
     on: str = "timestamp",
@@ -170,110 +94,15 @@ def sliding_stddev(
     by: list[str] | str | None = None,
     window: str = "1m",
     out: str = "volatility",
-    method: str = "frame",
 ) -> DataFrame:
     """Per-event trailing sample-stddev (volatility) over a time window
-    (reference volatility_stddev_fd.py:30-56).
-
-    method='frame' (default): analytic range frame — exact, but Spark
-    re-aggregates every frame from scratch: O(rows x frame_size). Fine
-    for sparse series; pathological on dense ticks (measured 321s for
-    2M rows at ~1400 rows/frame, scripts/scale_smoke.py).
-
-    method='prefix': O(rows) cumulative moment sums + an as-of join
-    back to the row just before the window start (frame stats = prefix
-    differences, `trailing_sums_prefix`). Scales to dense data;
-    numerically it subtracts large prefixes, so values agree with
-    'frame' to ~1e-8 relative, not bitwise. Unlike the old form, the
-    cumulative frame is a RANGE running frame, so equal-timestamp
-    peers are included exactly like the frame method.
-
-    method='auto': one cheap profile job estimates rows/frame and
-    picks 'prefix' above AUTO_FRAME_ROWS (the asof auto pattern)."""
-    if method == "auto":
-        dense = (
-            _estimate_rows_per_frame(df, on, _by(by), window) > AUTO_FRAME_ROWS
-        )
-        method = "prefix" if dense else "frame"
-    if method == "frame":
-        w = trailing_window(on, window, by)
-        return df.withColumn(out, F.stddev_samp(value).over(w))
-    if method != "prefix":
-        raise ValueError(f"unknown method: {method!r}")
-
-    v = F.col(value).cast("double")
-    joined = trailing_sums_prefix(
-        df,
-        # count NON-NULL values only — stddev_samp ignores nulls, and a
-        # count(*) here would divide the null-skipping sums by the
-        # wrong n (diverging from method='frame' exactly when a null
-        # price appears)
-        {
-            "__fn": F.when(v.isNotNull(), 1).otherwise(0),
-            "__fs": v,
-            "__fs2": v * v,
-        },
-        on=on,
-        by=by,
-        window=window,
-    )
-    fn, fs, fs2 = F.col("__fn"), F.col("__fs"), F.col("__fs2")
-    var = (fs2 - fs * fs / fn) / (fn - 1)
-    return joined.withColumn(
-        out, F.when(fn > 1, F.sqrt(F.greatest(var, F.lit(0.0)))).otherwise(F.lit(None))
-    ).drop("__fn", "__fs", "__fs2")
-
-
-def tvi(
-    df: DataFrame,
-    on: str = "timestamp",
-    price: str = "price",
-    amount: str = "amount",
-    side: str = "side",
-    buy_value: str = "BUY",
-    by: list[str] | str | None = None,
-    window: str = "1m",
-    out: str = "tvi",
-    method: str = "frame",
-) -> DataFrame:
-    """Trade volume imbalance: 2*(buy-sell)/(buy+sell) over trailing
-    notional (price*amount) volume (reference
-    trade_volume_imb_fd.py:42-117; the authors' vectorized pandas
-    reference perf/test_perf.py:18-76 is the semantic model).
-
-    method: 'frame' (exact range frame — O(rows x frame), fine for
-    sparse series), 'prefix' (O(rows) cumulative sums + boundary
-    as-of, `trailing_sums_prefix` — the dense-tick scale path, ~1e-8
-    relative float agreement), or 'auto' (profile and pick)."""
-    notional = F.col(price) * F.col(amount)
-    buy_e = F.when(F.col(side) == buy_value, notional).otherwise(F.lit(0.0))
-    sell_e = F.when(F.col(side) != buy_value, notional).otherwise(F.lit(0.0))
-    if method == "auto":
-        dense = (
-            _estimate_rows_per_frame(df, on, _by(by), window) > AUTO_FRAME_ROWS
-        )
-        method = "prefix" if dense else "frame"
-    if method == "frame":
-        w = trailing_window(on, window, by)
-        buy, sell = F.sum(buy_e).over(w), F.sum(sell_e).over(w)
-        return df.withColumn(
-            out,
-            F.when(
-                buy + sell != 0, 2.0 * (buy - sell) / (buy + sell)
-            ).otherwise(F.lit(0.0)),
-        )
-    if method != "prefix":
-        raise ValueError(f"unknown method: {method!r}")
-    joined = trailing_sums_prefix(
-        df, {"__buy": buy_e, "__sell": sell_e}, on=on, by=by, window=window
-    )
-    buy, sell = F.col("__buy"), F.col("__sell")
-    return joined.withColumn(
-        out,
-        F.when(
-            buy + sell != 0, 2.0 * (buy - sell) / (buy + sell)
-        ).otherwise(F.lit(0.0)),
-    ).drop("__buy", "__sell")
+    (reference volatility_stddev_fd.py:30-56), as an analytic range
+    frame: exact, but Spark re-aggregates every frame from scratch,
+    O(rows x frame_size) — fine for sparse series. Dense ticks take the
+    O(rows) kernel of the ``volatility_stddev`` feature definition
+    (``Featurizer.run``)."""
+    w = trailing_window(on, window, by)
+    return df.withColumn(out, F.stddev_samp(value).over(w))
 
 
 def pct_change(
@@ -288,10 +117,8 @@ def pct_change(
     transforms/diff/diff.py:29-64). first/last are tie-broken by event
     time inside the frame, so the result is deterministic.
 
-    Dense-tick note: first/last are arg-picks, not sums, so the
-    cumulative-prefix rewrite (`trailing_sums_prefix`) does not apply;
-    on dense data bucket to a coarser grid first (resample/rollup)
-    rather than running a huge range frame."""
+    A range frame, O(rows x frame_size): dense ticks take the O(rows)
+    kernel of the ``diff`` feature definition (``Featurizer.run``)."""
     w = trailing_window(on, window, by)
     first = F.min_by(value, epoch_seconds(on)).over(w)
     last = F.max_by(value, epoch_seconds(on)).over(w)

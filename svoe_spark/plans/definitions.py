@@ -13,28 +13,31 @@ value columns. The planner as-of joins on (keys, ts).
 
 Kernel contract (optional), for definitions emitting one value per
 upstream event: ``output`` names the one value column,
-``inputs(columns, params)`` picks the columns read out of the
+``inputs(columns, params)`` picks what the kernel reads out of the
 upstream's value columns, and ``kernel(ts, up, params, state=None)`` is
 numpy over one key's events sorted by event time (``ts`` int64 ns,
-``up`` those columns as float64 arrays, NaN = null), returning the
+``up`` those inputs as float64 arrays, NaN = null), returning the
 float64 output (NaN = undefined) and the state to carry into the key's
-next batch of events.
+next batch of events. An input read from the source may be a SQL
+expression over backquoted source columns (``tvi``'s side flag), which
+both paths project as a double (``project_inputs``).
 
 State half: ``state_fields`` declares that state as (name, Spark type)
 pairs; ``state`` is a tuple of their values, None before the first
 batch. Any split of a key's events into batches must give the outputs
 of one pass. A kernel with no state (``()``) must be row-local; one
-with ``state_fields = None`` (``diff``) runs in batch only.
+with ``state_fields = None`` runs in batch only (no built-in does).
 
 ``run_plan`` is the one body of both paths: ``Featurizer.run`` runs the
 kernel plan once per key with no state, ``Featurizer.run_stream`` per
 micro-batch carrying it (streaming.feature_vector). Kernel-less
-definitions (``ohlcv``, ``tvi``, most user ones) are as-of joined onto
-the batch pass and do not stream fused.
+definitions (``ohlcv``, most user ones) are as-of joined onto the batch
+pass and do not stream fused.
 """
 
 from __future__ import annotations
 
+import re
 from abc import ABC, abstractmethod
 from typing import NamedTuple
 
@@ -45,8 +48,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from svoe_spark.functions.time import duration_ns
-from svoe_spark.operators.windows import ohlcv, tvi
-from svoe_spark.streaming.kernels import ewma, trailing_stddev
+from svoe_spark.operators.windows import ohlcv
+from svoe_spark.streaming.kernels import ewma, trailing_stddev, window_buffer, window_sums
 
 REGISTRY: dict[str, type["FeatureDefinition"]] = {}
 
@@ -88,35 +91,48 @@ class FeatureDefinition(ABC):
         return cls.transform(upstreams, params, keys)
 
 
+def project_inputs(df: DataFrame, columns: list[str], inputs: list[str]) -> tuple[DataFrame, list[str]]:
+    """``df``'s ``columns``, then each source input as a double under a
+    safe name; returns (that frame, the names). An input is a column of
+    df or a SQL expression over its backquoted columns."""
+    names = [f"__in{i}" for i in range(len(inputs))]
+    return df.select(*columns, *[
+        (F.col(c) if c in df.columns else F.expr(c)).cast("double").alias(n) for c, n in zip(inputs, names)
+    ]), names
+
+
 def per_key_map(df: DataFrame, keys: list[str], inputs: list[str], outputs: list[str], fn) -> DataFrame:
     """``groupBy(keys).applyInPandas`` of ``fn(ts, up) -> {column:
     array}`` over each key's rows, stably sorted by event time (``ts``
-    int64 ns, ``up`` the inputs as float64 arrays). Returns (keys, ts,
-    *outputs) as doubles, NaN read as NULL; a boolean ``"__keep"``
-    entry in fn's result drops the rows it marks False. Each key's rows
-    sit in one pandas frame on one worker."""
+    int64 ns, ``up`` the source ``inputs`` as float64 arrays,
+    ``project_inputs``). Returns (keys, ts, *outputs) as doubles, NaN
+    read as NULL; a boolean ``"__keep"`` entry in fn's result drops the
+    rows it marks False. Each key's rows sit in one pandas frame on one
+    worker."""
     schema = StructType(
         [df.schema[c] for c in (*keys, "ts")] + [StructField(c, DoubleType()) for c in outputs]
     )
+    df, names = project_inputs(df, [*keys, "ts"], inputs)
 
     # no type hints: partial ones make PySpark warn it cannot infer the eval type
     def per_key(pdf):
         pdf = pdf.sort_values("ts", kind="stable")
         ts = pdf["ts"].to_numpy(dtype="datetime64[ns]").view("int64")
-        res = fn(ts, [pdf[c].to_numpy(dtype=float) for c in inputs])
+        res = fn(ts, [pdf[n].to_numpy(dtype=float) for n in names])
         keep = res.pop("__keep", slice(None))
         out = {c: pdf[c].to_numpy()[keep] for c in (*keys, "ts")}
         return pd.DataFrame({**out, **{c: res[c][keep] for c in outputs}})
 
-    return df.select(*keys, "ts", *inputs).groupBy(*keys).applyInPandas(per_key, schema=schema)
+    return df.groupBy(*keys).applyInPandas(per_key, schema=schema)
 
 
 def kernel_inputs(name: str, defn, columns: list[str], params: dict) -> list[str]:
     """``defn.inputs``, checked: the one column-resolution rule of the
     batch and stream paths. Raises a ValueError naming feature ``name``
-    if it reads a column its upstream lacks."""
+    if it reads a column its upstream lacks (a SQL expression input
+    reads its backquoted columns)."""
     inputs = defn.inputs(columns, params)
-    if not set(inputs) <= set(columns):
+    if not {c for i in inputs for c in re.findall(r"`([^`]+)`", str(i)) or [i]} <= set(columns):
         raise ValueError(f"feature {name!r} reads {inputs}, not among its upstream's value columns {columns}")
     return inputs
 
@@ -136,7 +152,8 @@ class KernelStep(NamedTuple):
 
 
 def source_inputs(plan: list[KernelStep]) -> list[str]:
-    """The source columns a plan reads, in first-use order."""
+    """The source inputs (columns or SQL expressions) a plan reads, in
+    first-use order."""
     made = {s.column for s in plan}
     return list(dict.fromkeys(c for s in plan for c in s.inputs if c not in made))
 
@@ -144,7 +161,7 @@ def source_inputs(plan: list[KernelStep]) -> list[str]:
 def run_plan(plan: list[KernelStep], ts, vals: dict, state=None) -> list:
     """Run ``plan``'s kernels in order over one key's events (``ts``
     sorted int64 ns), adding each step's output to ``vals`` (source
-    column -> float64 array) under its ``column``. ``state``: the steps'
+    input -> float64 array) under its ``column``. ``state``: the steps'
     carried state fields, concatenated in plan order (None = none).
     Returns the new state, in the same layout."""
     new_state = []
@@ -250,24 +267,36 @@ class VolatilityStddev(FeatureDefinition):
 @register
 class TradeVolumeImbalance(FeatureDefinition):
     """TVI over trailing notional volume (reference
-    trade_volume_imb_fd.py:42-117)."""
+    trade_volume_imb_fd.py:42-117): 2(B-S)/(B+S) over [ts - window, ts],
+    peers included, where B and S sum price*amount of the buy and the
+    other trades; 0.0 where B+S is 0. As SQL's SUM, a null notional
+    counts as nothing, and a trade with a null side in neither sum.
+    The side flag is read as ``side_col = buy_value`` cast to a double.
+    State: the buffered (ts, buy, sell) notional."""
 
     name = "tvi"
+    output = "tvi"
+    state_fields = (("ts", ArrayType(LongType())), ("buy", ArrayType(DoubleType())),
+                    ("sell", ArrayType(DoubleType())))
+    transform = classmethod(_kernel_transform)
 
     @classmethod
-    def transform(cls, upstreams, params, keys):
-        df = upstreams["source"]
-        out = tvi(
-            df,
-            on="ts",
-            price=params.get("price_col", "price"),
-            amount=params.get("amount_col", "amount"),
-            side=params.get("side_col", "side"),
-            buy_value=params.get("buy_value", "BUY"),
-            by=keys,
-            window=params.get("window", "1m"),
-        )
-        return out.select(*keys, "ts", "tvi")
+    def inputs(cls, columns, params):
+        side, buy = params.get("side_col", "side"), params.get("buy_value", "BUY")
+        return [params.get("price_col", "price"), params.get("amount_col", "amount"),
+                f"CAST(`{side}` = {buy!r} AS DOUBLE)"]
+
+    @classmethod
+    def kernel(cls, ts, up, params, state=None):
+        price, amount, is_buy = up
+        notional = price * amount
+        notional[np.isnan(notional)] = 0.0
+        flows = [np.where(is_buy == flag, notional, 0.0) for flag in (1.0, 0.0)]
+        window = duration_ns(params.get("window", "1m"))
+        flows, lo, hi, state = window_buffer(ts, ts, flows, window, state)
+        buy, sell = window_sums(flows, lo, hi)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return np.where(buy + sell != 0, 2.0 * (buy - sell) / (buy + sell), 0.0), state
 
 
 @register
@@ -386,18 +415,17 @@ class Diff(FeatureDefinition):
     """(last-first)/first over the trailing window [ts - window, ts],
     peers included, generic over any single-value upstream (reference
     transforms/diff/diff.py:29-64); NULL where first is null or 0.
-    Batch only: the kernel reads the key's whole history, so it
-    declares no stream state."""
+    State: the buffered (ts, value) events, nulls included."""
 
     name = "diff"
     dep_slots = ("upstream",)
     output = "diff"
+    state_fields = VolatilityStddev.state_fields
     transform = classmethod(_kernel_transform)
 
     @classmethod
     def kernel(cls, ts, up, params, state=None):
-        (v,) = up
-        lo = np.searchsorted(ts, ts - duration_ns(params.get("window", "1m")), side="left")
-        hi = np.searchsorted(ts, ts, side="right")
+        window = duration_ns(params.get("window", "1m"))
+        (v,), lo, hi, state = window_buffer(ts, ts, up, window, state)
         first = np.where(v[lo] != 0, v[lo], np.nan)
-        return (v[hi - 1] - first) / first, ()
+        return (v[hi - 1] - first) / first, state

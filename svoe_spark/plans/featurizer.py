@@ -123,8 +123,8 @@ def kernel_plan(config: FeaturizerConfig, columns: list[str], exclude=()) -> lis
     config order, the features whose definition has a per-event kernel
     and whose deps are planned too, bar ``exclude``. Each step's inputs
     come from its definition's ``inputs`` (``kernel_inputs``), out of
-    the source's value ``columns`` when it has no deps, else out of its
-    first dep's output."""
+    the source's value ``columns`` (or SQL expressions over them) when
+    it has no deps, else out of its first dep's output."""
     plan: dict[str, KernelStep] = {}
     for fc in config.features:
         defn = _definition(fc)
@@ -133,7 +133,7 @@ def kernel_plan(config: FeaturizerConfig, columns: list[str], exclude=()) -> lis
         dep = plan[fc.deps[0]] if fc.deps else None
         up = {dep.defn.output: dep.column} if dep else {c: c for c in columns}
         inputs = kernel_inputs(fc.name, defn, list(up), fc.params)
-        plan[fc.name] = KernelStep(fc.name, defn, fc.params, [up[c] for c in inputs])
+        plan[fc.name] = KernelStep(fc.name, defn, fc.params, [up.get(c, c) for c in inputs])
     return list(plan.values())
 
 
@@ -244,17 +244,19 @@ class Featurizer:
         kernel (definitions module docstring) and whose deps reach the
         source only through such features, bar stored ones, come out
         with the label from ONE ``groupBy(keys).applyInPandas`` over the
-        source columns they read. Per key: stable sort by ts, kernels in
-        dependency order, then ``asof_join_multi``'s contract: each
+        source inputs they read (``project_inputs``). Per key: stable
+        sort by ts, kernels in dependency order, then
+        ``asof_join_multi``'s contract: each
         column forward-filled over nulls and read at the row's last
         equal-ts peer (so peers carry equal values), the label read at
         the last row with ts <= ts + lookahead, and rows whose ts +
-        lookahead passes the key's last event dropped. Memory: one
-        key's rows, with a float64 array per input and feature, in one
-        pandas frame on one worker, as the batch ``Ewma`` it replaced.
+        lookahead passes the key's last event dropped. Cost: O(rows) per
+        key, windowed kernels included, however dense the ticks. Memory:
+        one key's rows, with a float64 array per input and feature, in
+        one pandas frame on one worker, as the batch ``Ewma`` it replaced.
 
-        Fallback: the other features (``ohlcv``, ``tvi``, kernel-less
-        user definitions, stored features and their dependents) come
+        Fallback: the other features (``ohlcv``, kernel-less user
+        definitions, stored features and their dependents) come
         from ``build_features`` and are as-of joined onto the fused
         output; a kernel-less label gets its rows from
         ``lookahead_shift`` and the fused output is one more side."""
@@ -332,8 +334,10 @@ class Featurizer:
         runs as a stateless ``mapInPandas`` of the same plan.
 
         Every feature must be in the plan and declare stream state
-        (``state_fields``); others (``diff``, window-bucket ``ohlcv``)
-        raise, and stream on their own via ``transform_stream``."""
+        (``state_fields``), as every built-in per-event definition does;
+        others (window-bucket ``ohlcv``, kernel-less or batch-only user
+        definitions) raise, and stream on their own via
+        ``transform_stream``. A config must have exactly one key column."""
         from svoe_spark.streaming.feature_vector import feature_vector_stream
 
         config = config if isinstance(config, FeaturizerConfig) else FeaturizerConfig.load(config)

@@ -33,10 +33,9 @@ def normalize(
 
     ``side_values``: (buy_side, sell_side) labels. Default ('bid',
     'ask') matches the reference's L2 convention; pass ('BUY', 'SELL')
-    for trade streams feeding `operators.windows.tvi` (whose
-    ``buy_value`` defaults to 'BUY'), or set the tvi feature's
-    ``buy_value`` param to the label used here — a mismatch makes buy
-    volume silently zero."""
+    for trade streams feeding the ``tvi`` feature definition (whose
+    ``buy_value`` param defaults to 'BUY'), or set that param to the
+    label used here — a mismatch makes buy volume silently zero."""
     for old, new in (renames or {}).items():
         df = df.withColumnRenamed(old, new)
     if ts_format:

@@ -28,25 +28,15 @@ from svoe_spark.streaming.chunks import batch_frame
 _INITS = {"sum": 0.0, "count": 0.0, "min": float("inf"), "max": float("-inf"), "last": float("nan")}
 
 
-def tws_available() -> bool:
-    """transformWithStateInPandas requires protobuf for its state-server
-    protocol (import-try gate, like the optional image dependencies)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_reduce_stream(
+def keyed_reduce_stream(
     df: DataFrame,
     value: str,
     ops: list[str],
     key: str = "symbol",
     on: str = "ts",
 ) -> DataFrame:
-    """df(key, ts, value) -> one row per event with running <op>s."""
+    """df(key, ts, value) -> one row per event with running <op>s: the
+    keyed running reduce (reference A6) on ``applyInPandasWithState``."""
     for op in ops:
         if op not in _INITS:
             raise ValueError(f"unsupported reduce op: {op}; use {sorted(_INITS)}")
@@ -77,19 +67,15 @@ def running_reduce_stream(
         for i, op in enumerate(ops):
             if op == "sum":
                 series = vals.cumsum() + accs[i]
-                accs[i] = float(series.iloc[-1]) if len(series) else accs[i]
             elif op == "count":
                 series = pd.Series(range(1, len(vals) + 1), index=vals.index, dtype=float) + accs[i]
-                accs[i] = float(series.iloc[-1]) if len(series) else accs[i]
             elif op == "min":
                 series = vals.cummin().clip(upper=accs[i])
-                accs[i] = float(series.iloc[-1]) if len(series) else accs[i]
             elif op == "max":
                 series = vals.cummax().clip(lower=accs[i])
-                accs[i] = float(series.iloc[-1]) if len(series) else accs[i]
             else:  # last
                 series = vals
-                accs[i] = float(series.iloc[-1]) if len(series) else accs[i]
+            accs[i] = float(series.iloc[-1]) if len(series) else accs[i]
             cols[f"{op}_{value}"] = series
         out.update(cols)
         yield pd.DataFrame(out)
@@ -106,136 +92,6 @@ def running_reduce_stream(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def running_reduce_tws(
-    df: DataFrame,
-    value: str,
-    ops: list[str],
-    key: str = "symbol",
-    on: str = "ts",
-) -> DataFrame:
-    """The same per-update keyed reduce on Spark 4's
-    ``transformWithStateInPandas`` — the successor API to
-    applyInPandasWithState (explicit named state variables with
-    server-side encoding, optional TTL, timers, and RocksDB-backed
-    state). Semantics are identical to ``running_reduce_stream``; the
-    two share the accumulator definitions, and the equivalence test
-    drives both against the same batch oracle. New pipelines should
-    prefer this form — the legacy variant stays for Spark 3.x parity.
-
-    Environment gate: the tWS driver worker speaks protobuf to the
-    state server; without the google.protobuf package this raises a
-    clear error naming ``running_reduce_stream`` as the fallback.
-    """
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs the google.protobuf package "
-            "(its state-server protocol); not available in this "
-            "environment — use running_reduce_stream (identical "
-            "semantics on the legacy applyInPandasWithState API)"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    for op in ops:
-        if op not in _INITS:
-            raise ValueError(f"unsupported reduce op: {op}; use {sorted(_INITS)}")
-
-    out_schema = StructType(
-        [
-            StructField(key, df.schema[key].dataType),
-            StructField(on, TimestampType()),
-            StructField(value, DoubleType()),
-            *[StructField(f"{op}_{value}", DoubleType()) for op in ops],
-        ]
-    )
-    acc_schema = StructType(
-        [StructField(f"acc_{op}", DoubleType()) for op in ops]
-    )
-
-    class Reduce(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._acc = handle.getValueState("acc", acc_schema)
-
-        def handleInputRows(self, key_tuple, rows, timerValues):
-            accs = (
-                list(self._acc.get())
-                if self._acc.exists()
-                else [_INITS[op] for op in ops]
-            )
-            # one assembled, once-sorted frame (chunks.batch_frame):
-            # same chunk-order fix as the legacy form
-            pdf = batch_frame(rows, [on], columns=[on, value])
-            vals = pdf[value].astype(float)
-            out = {key: key_tuple[0], on: pdf[on], value: vals}
-            for i, op in enumerate(ops):
-                if op == "sum":
-                    series = vals.cumsum() + accs[i]
-                elif op == "count":
-                    series = (
-                        pd.Series(
-                            range(1, len(vals) + 1),
-                            index=vals.index,
-                            dtype=float,
-                        )
-                        + accs[i]
-                    )
-                elif op == "min":
-                    series = vals.cummin().clip(upper=accs[i])
-                elif op == "max":
-                    series = vals.cummax().clip(lower=accs[i])
-                else:  # last
-                    series = vals
-                if len(series):
-                    accs[i] = float(series.iloc[-1])
-                out[f"{op}_{value}"] = series
-            yield pd.DataFrame(out)
-            self._acc.update(tuple(accs))
-
-        def close(self) -> None:
-            pass
-
-    return (
-        df.select(key, on, value)
-        .groupBy(key)
-        .transformWithStateInPandas(
-            Reduce(),
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="none",
-        )
-    )
-
-
-def keyed_reduce_stream(
-    df: DataFrame,
-    value: str,
-    ops: list[str],
-    key: str = "symbol",
-    on: str = "ts",
-    impl: str = "auto",
-) -> DataFrame:
-    """THE public entry point for the keyed running reduce (reference
-    A6): callers never choose a state API. ``impl='auto'`` dispatches
-    to transformWithStateInPandas when its protobuf dependency is
-    importable (Spark 4's successor state API: named state variables,
-    TTL, timers, RocksDB backend) and to the legacy
-    applyInPandasWithState form otherwise — the two are
-    semantics-identical and equivalence-tested against the same batch
-    oracle (tests/test_streaming.py). ``impl='legacy'``/``'tws'``
-    force a specific backend (the forced tws path raises a clear error
-    where protobuf is absent — in this build environment the gate is
-    permanent, so 'auto' always resolves to legacy here)."""
-    if impl == "auto":
-        impl = "tws" if tws_available() else "legacy"
-    if impl == "tws":
-        return running_reduce_tws(df, value, ops, key=key, on=on)
-    if impl == "legacy":
-        return running_reduce_stream(df, value, ops, key=key, on=on)
-    raise ValueError(f"unknown impl: {impl!r}; use 'auto', 'legacy' or 'tws'")
 
 
 def drawdown_stream(

@@ -13,12 +13,13 @@ The graph is a kernel plan (plans.definitions: ``KernelStep``s, built by
 through it as whole arrays with ``run_plan`` — the same body as the
 batch FeatureLabelSet pass. The group state is the steps' carried state
 fields (``state_fields``) in plan order, named ``{field}_{feature}``:
-per ``volatility_stddev`` the (ts ns, value) window buffer of non-null
-events, per ``ewma`` its (value, null count); row-local kernels carry
-none. A key's micro-batch crosses the Python/JVM boundary once, not per
-event: array state as little-endian bytes (``state_codec``; checkpoints
-written before do not resume), output as packed rows of arrays (``ts`` as
-int64 µs, NaT as INT64_MIN, back to NULL) the JVM expands with ``inline``.
+per windowed definition (``volatility_stddev``, ``diff``, ``tvi``) its
+``kernels.window_buffer`` of (ts ns, values), per ``ewma`` its (value,
+null count); row-local kernels carry none. A key's micro-batch crosses
+the Python/JVM boundary once, not per event: array state as
+little-endian bytes (``state_codec``; checkpoints written before do not
+resume), output as packed rows of arrays (``ts`` as int64 µs, NaT as
+INT64_MIN, back to NULL) the JVM expands with ``inline``.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import ArrayType, BinaryType, DoubleType, LongType, StructField, StructType, TimestampType
 
-from svoe_spark.plans.definitions import KernelStep, run_plan, source_inputs
+from svoe_spark.plans.definitions import KernelStep, project_inputs, run_plan, source_inputs
 from svoe_spark.streaming.chunks import batch_frame
 
 #: events per packed output row: a hot key's rows stay far below the JVM's 2 GB limit
@@ -55,15 +56,15 @@ def feature_vector_stream(
 ) -> DataFrame:
     """src: streaming df (key, ts, source cols); plan: kernel steps whose
     definitions all declare ``state_fields``. Output: one row per source
-    event, (key, ts, the source columns the plan reads as doubles,
-    '{name}_value' per step).
+    event, (key, ts, '{name}_value' per step) as doubles.
 
     A plan whose kernels carry no state runs as a stateless
     ``mapInPandas`` of the same body: the engine rejects an
     applyInPandasWithState with an EMPTY state struct ('head of empty
     list'), and row-local kernels need no event-time order."""
     source_cols = source_inputs(plan)
-    value_cols = [*source_cols, *(f"{s.name}_value" for s in plan)]
+    src, names = project_inputs(src, [key, on], source_cols)
+    value_cols = [f"{s.name}_value" for s in plan]
 
     def schema(ts_type, value_type):
         return StructType([StructField(key, src.schema[key].dataType), StructField(on, ts_type)]
@@ -73,15 +74,11 @@ def feature_vector_stream(
 
     def advance(key_value, pdf, carried):
         ts = pdf[on].to_numpy(dtype="datetime64[ns]").view("int64")
-        vals = {c: pdf[c].to_numpy(dtype=float) for c in source_cols}
+        vals = {c: pdf[n].to_numpy(dtype=float) for c, n in zip(source_cols, names)}
         new_state = run_plan(plan, ts, vals, carried)
-        out = pd.DataFrame(
-            {key: key_value, on: pdf[on], **{c: vals[c] for c in source_cols},
-             **{f"{s.name}_value": vals[s.column] for s in plan}}
-        )
+        out = pd.DataFrame({key: key_value, on: pdf[on], **{f"{s.name}_value": vals[s.column] for s in plan}})
         return out, new_state
 
-    src = src.select(key, on, *source_cols)
     if not state_schema.fields:
         return src.mapInPandas(
             lambda pdfs: (advance(pdf[key], pdf, None)[0] for pdf in pdfs),
@@ -91,7 +88,7 @@ def feature_vector_stream(
 
     def fn(key_tuple, pdfs, state):
         # one frame, one sort: chunk arrival order is fetch order, not event time
-        pdf = batch_frame(pdfs, [on], columns=[on, *source_cols])
+        pdf = batch_frame(pdfs, [on], columns=[on, *names])
         out, new_state = advance(key_tuple[0], pdf, decode(state.get) if state.exists else None)
         cols = {on: out[on].to_numpy(dtype="datetime64[us]").view("int64"),
                 **{c: out[c].to_numpy() for c in value_cols}}

@@ -7,7 +7,7 @@ become `applyInPandasWithState` with a bounded per-key lookback buffer
 — the Spark-native form of the reference's deque state
 (stream_utils.py:31-39, trade_volume_imb_fd.py:22-27). The trailing
 stddev here is the fused operator of streaming.feature_vector over a
-one-step ``volatility_stddev`` plan: the shared kernel
+``volatility_stddev`` plan: the shared kernel
 `streaming.kernels.trailing_stddev`, whose carried state is that buffer
 — the non-null (ts ns, value) events within the window of the key's
 latest event.
@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from svoe_spark.functions.time import duration_to_interval_string
-from svoe_spark.plans.definitions import KernelStep, VolatilityStddev
+from svoe_spark.plans.definitions import KernelStep, MidPrice, VolatilityStddev
 from svoe_spark.streaming.feature_vector import feature_vector_stream
 
 
@@ -78,10 +78,12 @@ def trailing_stddev_stream(
     Assumes per-key event-time order within and across batches for
     exact parity with the batch window form (the reference's stated
     input invariant)."""
-    plan = [KernelStep("volatility", VolatilityStddev, {"window": window}, [value])]
+    # mid_price of one column passes it through: the value itself
+    plan = [KernelStep("value", MidPrice, {}, [value]),
+            KernelStep("volatility", VolatilityStddev, {"window": window}, [value])]
     return feature_vector_stream(df, plan, key=by, on=on).select(
         by,
         on,
-        F.col(value).cast(df.schema[value].dataType).alias(value),
+        F.col("value_value").cast(df.schema[value].dataType).alias(value),
         F.col("volatility_value").alias("volatility"),
     )

@@ -1,14 +1,17 @@
-"""Per-event window kernels: the one definition of trailing stddev and
-ewma, shared by the online operator (streaming.feature_vector, which
-trailing_stddev_stream also runs) and the batch feature definitions.
+"""Per-event window kernels: the one definition of trailing stddev,
+ewma and the trailing-window buffer, shared by the online operator
+(streaming.feature_vector, which trailing_stddev_stream also runs) and
+the batch feature definitions.
 
 A kernel maps one key's batch of events, sorted by event time, and the
 state carried from the key's previous batch to (outputs, new state):
 any split of a series into consecutive batches gives the outputs of one
 pass over the whole series. State contracts:
 
-  trailing_stddev: (ts, values) — the non-null events with
-      ts >= latest event time - window; int64 and float64 arrays.
+  window_buffer (trailing_stddev; the diff and tvi definitions):
+      (ts, *values) — the buffered events with ts >= latest event
+      time - window; an int64 array and float64 arrays. trailing_stddev
+      buffers its non-null values, diff all of them.
   ewma: (value, pending) — the ewma after the last non-null input (NaN
       before the first one) and the count of null inputs since then.
 
@@ -23,11 +26,31 @@ import pandas as pd
 
 _EPS = np.finfo(float).eps
 # a window whose estimated relative error in the prefix form exceeds
-# this is recomputed two-pass (kept far below the 1e-9 the kernel is
+# this is recomputed directly (kept far below the 1e-9 the kernel is
 # checked against: numpy's cumsum error grows with the buffer length)
 _PREFIX_RTOL = 1e-12
-# elements gathered per two-pass chunk, bounding its memory
-_TWO_PASS_CHUNK = 1 << 20
+# elements gathered per chunk of directly summed windows, bounding its memory
+_GATHER_CHUNK = 1 << 20
+
+
+def window_buffer(ts, ev_ts, ev_values, window: int, state=None) -> tuple:
+    """The trailing-window buffer of the windowed kernels: append the
+    events (``ev_ts`` sorted int64, ``ev_values`` float64 arrays of the
+    same length) to the carried buffer ``state`` = (ts, *values), None
+    before the first batch.
+
+    Returns (all_values, lo, hi, new_state): the buffered then the new
+    events' values, and for each query time t in ``ts`` (sorted) the
+    bounds [lo, hi) of the events in [t - window, t], equal-timestamp
+    peers included as in a RANGE frame; new_state keeps the events a
+    later query (t >= ts[-1]) can read."""
+    buf = state or ((),) * (1 + len(ev_values))
+    all_ts = np.concatenate([np.asarray(buf[0], dtype=np.int64), ev_ts])
+    all_v = [np.concatenate([np.asarray(b, dtype=float), v]) for b, v in zip(buf[1:], ev_values)]
+    lo = np.searchsorted(all_ts, ts - window, side="left")
+    hi = np.searchsorted(all_ts, ts, side="right")
+    keep = all_ts >= ts[-1] - window if len(ts) else slice(None)
+    return all_v, lo, hi, (all_ts[keep], *(v[keep] for v in all_v))
 
 
 def trailing_stddev(ts, values, window: int, state=None) -> tuple[np.ndarray, tuple]:
@@ -42,15 +65,8 @@ def trailing_stddev(ts, values, window: int, state=None) -> tuple[np.ndarray, tu
     series), the window is recomputed two-pass."""
     ts = np.asarray(ts, dtype=np.int64)
     values = np.asarray(values, dtype=float)
-    buf_ts, buf_v = state or ((), ())
-    buf_ts, buf_v = np.asarray(buf_ts, dtype=np.int64), np.asarray(buf_v, dtype=float)
-    if not len(ts):
-        return np.empty(0), (buf_ts, buf_v)
     ok = ~np.isnan(values)
-    all_ts = np.concatenate([buf_ts, ts[ok]])
-    all_v = np.concatenate([buf_v, values[ok]])
-    lo = np.searchsorted(all_ts, ts - window, side="left")
-    hi = np.searchsorted(all_ts, ts, side="right")
+    (all_v,), lo, hi, state = window_buffer(ts, ts[ok], [values[ok]], window, state)
     n = hi - lo
     d = all_v - (all_v[0] if len(all_v) else 0.0)
     p1, a1, p2 = (np.concatenate([[0.0], np.cumsum(x)]) for x in (d, np.abs(d), d * d))
@@ -62,29 +78,72 @@ def trailing_stddev(ts, values, window: int, state=None) -> tuple[np.ndarray, tu
     redo = np.flatnonzero((n > 1) & ~(err <= _PREFIX_RTOL * m2))
     if len(redo):
         out[redo] = _two_pass_std(all_v, lo[redo], n[redo])
-    keep = all_ts >= ts[-1] - window
-    return out, (all_ts[keep], all_v[keep])
+    return out, state
 
 
-def _two_pass_std(v: np.ndarray, lo: np.ndarray, n: np.ndarray) -> np.ndarray:
-    """Sample stddev of each window v[lo:lo+n] (n >= 2): shift by the
-    window's first value, then a corrected two-pass sum of squares.
-    Windows are gathered in chunks of about _TWO_PASS_CHUNK elements."""
-    out = np.empty(len(n))
+def window_sums(values: list, lo: np.ndarray, hi: np.ndarray) -> list[np.ndarray]:
+    """Sum of each array in ``values`` over each window [lo, hi).
+
+    Sums are differences of prefix sums restarted every L elements, L
+    the longest window: a window spans at most two blocks, so the
+    prefixes it subtracts stay of the order of a few windows however
+    long the series. Windows whose estimated rounding error still
+    exceeds _PREFIX_RTOL of the windows' summed magnitudes (the arrays'
+    together) are summed directly."""
+    size = max(1, int((hi - lo).max(initial=0)))
+    start = lo // size
+    cross = hi // size != start
+    sums, err = [], 0.0
+    for v in values:
+        q, total = _block_prefix(v, size)
+        aq, atotal = _block_prefix(np.abs(v), size)
+        sums.append((np.where(cross, total[start], 0.0) - q[lo]) + q[hi])
+        err = err + _EPS * (aq[lo] + aq[hi] + np.where(cross, atotal[start], 0.0))
+    redo = np.flatnonzero((hi > lo) & ~(err <= _PREFIX_RTOL * sum(np.abs(s) for s in sums)))
+    for v, s in zip(values, sums):
+        for i, j, seg, starts in _gather(v, lo[redo], (hi - lo)[redo]):
+            s[redo[i:j]] = np.add.reduceat(seg, starts)
+    return sums
+
+
+def _block_prefix(v: np.ndarray, size: int) -> tuple[np.ndarray, np.ndarray]:
+    """(q, total): q[k] the sum of v from the start of k's block of
+    ``size`` elements up to k (exclusive), for k in [0, len(v)]; total
+    each block's sum."""
+    blocks = np.zeros((len(v) // size + 1, size))
+    blocks.ravel()[: len(v)] = v
+    c = np.cumsum(blocks, axis=1)
+    q = np.zeros_like(c)
+    q[:, 1:] = c[:, :-1]
+    return q.ravel(), c[:, -1]
+
+
+def _gather(v: np.ndarray, lo: np.ndarray, n: np.ndarray):
+    """The windows v[lo:lo+n] (n >= 1) in chunks of about
+    _GATHER_CHUNK elements: yields (i, j, seg, starts), windows i:j
+    concatenated in seg, each starting at its offset in starts."""
     ends = np.cumsum(n)
     i = 0
     while i < len(n):
         base = ends[i - 1] if i else 0
-        j = max(i + 1, int(np.searchsorted(ends, base + _TWO_PASS_CHUNK, side="right")))
+        j = max(i + 1, int(np.searchsorted(ends, base + _GATHER_CHUNK, side="right")))
         cn, clo = n[i:j], lo[i:j]
         starts = np.cumsum(cn) - cn
-        flat = np.arange(cn.sum()) - np.repeat(starts - clo, cn)
-        seg = v[flat] - np.repeat(v[clo], cn)
+        yield i, j, v[np.arange(cn.sum()) - np.repeat(starts - clo, cn)], starts
+        i = j
+
+
+def _two_pass_std(v: np.ndarray, lo: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """Sample stddev of each window v[lo:lo+n] (n >= 2): shift by the
+    window's first value, then a corrected two-pass sum of squares."""
+    out = np.empty(len(n))
+    for i, j, seg, starts in _gather(v, lo, n):
+        cn = n[i:j]
+        seg = seg - np.repeat(seg[starts], cn)
         dev = seg - np.repeat(np.add.reduceat(seg, starts) / cn, cn)
         s = np.add.reduceat(dev, starts)
         m2 = np.add.reduceat(dev * dev, starts) - s * s / cn
         out[i:j] = np.sqrt(np.maximum(m2, 0.0) / (cn - 1))
-        i = j
     return out
 
 

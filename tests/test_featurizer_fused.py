@@ -214,14 +214,34 @@ def _plan_of(df) -> str:
     return buf.getvalue()
 
 
-def test_all_kernel_plan_is_one_grouped_map(spark, mixed_quotes):
-    df = Featurizer(spark).run(_config(mixed_quotes, ["venue", "sym"]))
+def _assert_one_grouped_map(df):
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     assert optimized.count("FlatMapGroupsInPandas") == 1, optimized
     assert "Window" not in optimized, optimized
     tree = _plan_of(df).split("\n\n")[0]  # the operator tree, before node details
     assert tree.count("Exchange") == 1, tree
     assert tree.index("Exchange") > tree.index("FlatMapGroupsInPandas"), tree
+
+
+def test_all_kernel_plan_is_one_grouped_map(spark, mixed_quotes):
+    _assert_one_grouped_map(Featurizer(spark).run(_config(mixed_quotes, ["venue", "sym"])))
+
+
+def test_tvi_and_diff_config_is_one_grouped_map(spark, tmp_path):
+    """tvi (over trades with a side column) and diff run on the kernel
+    plan: the FLS is still one grouped map, no range-frame Window."""
+    rng = np.random.default_rng(13)
+    n = 200
+    ts, bid, ask = _series(rng, n)
+    trades = pd.DataFrame({"sym": "A", "ts": ts, "bid": bid, "ask": ask, "price": ask,
+                           "amount": rng.uniform(1, 5, n), "side": rng.choice(["BUY", "SELL"], n)})
+    path = _write(trades, str(tmp_path / "trades.parquet"))
+    features = [FEATURES[0], FEATURES[3],
+                {"name": "imb", "feature_definition": "tvi", "params": {"window": f"{WINDOW_S:g}s"}}]
+    df = Featurizer(spark).run(_config(path, ["sym"], features))
+    _assert_one_grouped_map(df)
+    out = df.toPandas()
+    assert len(out) > 150 and out["imb-tvi"].between(-2, 2).all() and out["mom-diff"].notna().any()
 
 
 #: Featurizer.run's schema for this source and FEATURES before the fused

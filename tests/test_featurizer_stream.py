@@ -193,10 +193,13 @@ def test_run_stream_equals_batch_with_null_bids(spark, tmp_path):
 _WINDOWS = range(0, 240_000, 30_000)  # ms: one file (one micro-batch) each
 
 
-def _write_quotes(path, files=range(len(_WINDOWS))):
+def _write_quotes(path, files=range(len(_WINDOWS)), trades=False):
     """The null-bid quotes of test_run_stream_equals_batch_with_null_bids
     (seed 7), one parquet file per 30 s of event time with mtimes in
-    time order; writes only the files numbered in ``files``."""
+    time order; writes only the files numbered in ``files``. ``trades``
+    adds trade columns (price, amount, side: 10% nulls each) and ~10%
+    equal-ts peers that repeat their row's quote and price. Returns the
+    row count."""
     import os
 
     import numpy as np
@@ -210,6 +213,16 @@ def _write_quotes(path, files=range(len(_WINDOWS))):
     bid = 100.0 + np.cumsum(rng.normal(0, 0.2, n))
     ask = bid + rng.uniform(0.01, 0.05, n)
     bid_null = rng.random(n) < 0.2
+    cols = {"bid": bid, "ask": ask}
+    if trades:
+        trng = np.random.default_rng(8)
+        cols["price"] = np.where(trng.random(n) < 0.1, np.nan, ask)
+        peers = np.sort(np.concatenate([np.arange(n), trng.choice(n, n // 10, replace=False)]))
+        sym, ms, bid_null = sym[peers], ms[peers], bid_null[peers]
+        cols = {c: v[peers] for c, v in cols.items()}
+        n = len(peers)
+        cols["amount"] = np.where(trng.random(n) < 0.1, np.nan, trng.uniform(1, 10, n))
+        cols["side"] = trng.choice(np.array(["BUY", "SELL", None]), n, p=[0.45, 0.45, 0.1])
     path.mkdir(exist_ok=True)
     for j in files:
         m = (ms >= _WINDOWS[j]) & (ms < _WINDOWS[j] + 30_000)
@@ -217,8 +230,8 @@ def _write_quotes(path, files=range(len(_WINDOWS))):
         pq.write_table(pa.table({
             "ts": pa.array(ms[m].astype("int64") * 1_000, pa.timestamp("us")),
             "symbol": pa.array(sym[m]),
-            "bid": pa.array(bid[m], mask=bid_null[m]),
-            "ask": pa.array(ask[m]),
+            **{c: pa.array(v[m], mask=bid_null[m] if c == "bid" else None, from_pandas=True)
+               for c, v in cols.items()},
         }), f)
         os.utime(f, (1_000_000 + j, 1_000_000 + j))
     return n
@@ -237,30 +250,42 @@ def _quote_cfg(path, features):
             "keys": ["symbol"], "features": features}
 
 
-def _assert_stream_equals_batch(spark, cfg, rows, rel=None):
+def _by_event(rows, cols):
+    """{(symbol, ts): per column, its values over the event's equal-ts
+    peers, sorted with nulls last} of ``rows``."""
+    events = {}
+    for r in rows:
+        events.setdefault((r["symbol"], r["ts"]), []).append([r[c] for c in cols])
+    null = lambda x: x is None or math.isnan(x)  # noqa: E731
+    return {k: [sorted(c, key=lambda x: (null(x), 0.0 if null(x) else x)) for c in zip(*v)]
+            for k, v in events.items()}
+
+
+def _assert_stream_equals_batch(spark, cfg, rows, tol=None):
     """``run_stream`` output ``rows`` == ``build_features`` for every
-    feature of ``cfg``, per (symbol, ts); NULL where batch is NULL.
-    ``rel``: relative tolerance per definition (default exact)."""
+    feature of ``cfg``, per (symbol, ts) and its peers in either order;
+    NULL where batch is NULL. ``tol``: (rel, abs) tolerance per
+    definition (default exact)."""
     fz = Featurizer(spark)
     feats = fz.build_features(FeaturizerConfig.load(cfg))
     names = [f["name"] for f in cfg["features"]]
-    got = {(r["symbol"], r["ts"]): [r[f"{n}_value"] for n in names] for r in rows}
-    assert len(got) == len(rows)
-    for n, f in zip(names, cfg["features"]):
+    got = _by_event(rows, [f"{n}_value" for n in names])
+    for i, (n, f) in enumerate(zip(names, cfg["features"])):
         df = feats[n][1]
         (col,) = [c for c in df.columns if c not in ("symbol", "ts")]
-        want = {(r["symbol"], r["ts"]): r[col] for r in df.collect()}
+        want = _by_event(df.collect(), [col])
         assert set(want) == set(got), n
-        tol = (rel or {}).get(f["feature_definition"], 0)
-        for k, w in want.items():
-            g = got[k][names.index(n)]
-            if w is None or math.isnan(w):
-                assert g is None or math.isnan(g), (n, k, g)
-            else:
-                assert g == pytest.approx(w, rel=tol, abs=0), (n, k, g, w)
+        rel, abs_ = (tol or {}).get(f["feature_definition"], (0, 0))
+        for k, (ws,) in want.items():
+            assert len(got[k][i]) == len(ws), (n, k)
+            for g, w in zip(got[k][i], ws):
+                if w is None or math.isnan(w):
+                    assert g is None or math.isnan(g), (n, k, g)
+                else:
+                    assert g == pytest.approx(w, rel=rel, abs=abs_), (n, k, g, w)
 
 
-_REL = {"volatility_stddev": 1e-9, "ewma": 1e-12}
+_TOL = {"volatility_stddev": (1e-9, 0), "ewma": (1e-12, 0), "tvi": (1e-9, 1e-12)}
 
 
 _ROW_LOCAL = [
@@ -269,46 +294,82 @@ _ROW_LOCAL = [
 ]
 
 
-@pytest.mark.parametrize("features", [
-    _ROW_LOCAL + [
+@pytest.mark.parametrize("features,trades", [
+    (_ROW_LOCAL + [
         {"name": "vol", "feature_definition": "volatility_stddev",
          "deps": ["mid"], "params": {"window": "20s"}},
+        {"name": "mom", "feature_definition": "diff", "deps": ["mid"],
+         "params": {"window": "20s"}},
         {"name": "ew", "feature_definition": "ewma", "deps": ["mid"],
          "params": {"alpha": 0.3, "value_col": "mid_price"}},
-    ],
-    _ROW_LOCAL,  # no kernel carries state: the stateless form
+        {"name": "imb", "feature_definition": "tvi", "params": {"window": "20s"}},
+    ], True),
+    (_ROW_LOCAL, False),  # no kernel carries state: the stateless form
 ], ids=["stateful", "row_local"])
-def test_run_stream_equals_batch_for_every_streaming_kernel(spark, tmp_path, features):
-    """mid_price, relative_spread, volatility_stddev and ewma in one
-    fused stream over 20% null bids and 8 micro-batches == batch."""
+def test_run_stream_equals_batch_for_every_streaming_kernel(spark, tmp_path, features, trades):
+    """Every built-in per-event definition — mid_price, relative_spread,
+    volatility_stddev, diff, ewma and tvi — in one fused stream over 8
+    micro-batches == batch: 20% null bids and, in the stateful case, a
+    trade feed with null prices, amounts and sides and equal-ts peers."""
     path = tmp_path / "quotes"
-    n = _write_quotes(path)
+    n = _write_quotes(path, trades=trades)
     cfg = _quote_cfg(path, features)
     out = Featurizer(spark).run_stream(cfg, _quote_stream(spark, path))
     assert out.columns == ["symbol", "ts", *[f"{f['name']}_value" for f in features]]
     rows = run_available_to_memory(out).collect()
     assert len(rows) == n
-    _assert_stream_equals_batch(spark, cfg, rows, _REL)
+    _assert_stream_equals_batch(spark, cfg, rows, _TOL)
+
+
+_KERNEL_LESS_FD = """
+from pyspark.sql import functions as F
+
+from svoe_spark.plans.definitions import FeatureDefinition
+
+
+class HalvedMid(FeatureDefinition):
+    name = "halved_mid"
+    dep_slots = ("upstream",)
+
+    @classmethod
+    def transform(cls, upstreams, params, keys):
+        df = upstreams["upstream"]
+        return df.select(*keys, "ts", (F.col("mid_price") / 2).alias("halved"))
+"""
 
 
 @pytest.mark.parametrize("feature", [
-    {"name": "mom", "feature_definition": "diff", "deps": ["mid"],
-     "params": {"window": "20s"}},
+    {"name": "half", "feature_definition": "halved_mid", "deps": ["mid"]},
     {"name": "bars", "feature_definition": "ohlcv", "params": {"price_col": "ask"}},
 ])
 def test_run_stream_rejects_batch_only_features(spark, tmp_path, feature):
+    """A kernel-less user definition and the window-bucket ohlcv have
+    no fused streaming form."""
     path = tmp_path / "quotes"
     _write_quotes(path, files=[0])
-    cfg = _quote_cfg(path, [{"name": "mid", "feature_definition": "mid_price"}, feature])
+    defs = tmp_path / "kernel_less_fd.py"
+    defs.write_text(_KERNEL_LESS_FD)
+    cfg = {**_quote_cfg(path, [{"name": "mid", "feature_definition": "mid_price"}, feature]),
+           "definition_paths": [str(defs)]}
     with pytest.raises(ValueError, match="no fused streaming form"):
+        Featurizer(spark).run_stream(cfg, _quote_stream(spark, path))
+
+
+@pytest.mark.parametrize("keys", [[], ["symbol", "ask"]], ids=["no_key", "two_keys"])
+def test_run_stream_rejects_multi_key_configs(spark, tmp_path, keys):
+    path = tmp_path / "quotes"
+    _write_quotes(path, files=[0])
+    cfg = {**_quote_cfg(path, [{"name": "mid", "feature_definition": "mid_price"}]), "keys": keys}
+    with pytest.raises(ValueError, match="needs exactly one key column"):
         Featurizer(spark).run_stream(cfg, _quote_stream(spark, path))
 
 
 def test_run_stream_and_batch_share_one_input_rule(spark, tmp_path):
     """Definitions' ``inputs`` resolve columns for both paths: a dep
     feature with no value_col reads its dep's output; a dep-less one
-    reads its value_col; a missing column is a ValueError naming the
-    feature in batch and stream alike."""
+    reads its value_col; a missing column, read directly or by a SQL
+    expression input, is a ValueError naming the feature in batch and
+    stream alike."""
     path = tmp_path / "quotes"
     _write_quotes(path)
     deps = _quote_cfg(path, [
@@ -321,7 +382,7 @@ def test_run_stream_and_batch_share_one_input_rule(spark, tmp_path):
     rows = run_available_to_memory(
         Featurizer(spark).run_stream(deps, _quote_stream(spark, path))
     ).collect()
-    _assert_stream_equals_batch(spark, deps, rows, _REL)
+    _assert_stream_equals_batch(spark, deps, rows, _TOL)
 
     depless = _quote_cfg(path, [
         {"name": "vol", "feature_definition": "volatility_stddev",
@@ -330,16 +391,18 @@ def test_run_stream_and_batch_share_one_input_rule(spark, tmp_path):
     rows = run_available_to_memory(
         Featurizer(spark).run_stream(depless, _quote_stream(spark, path))
     ).collect()
-    _assert_stream_equals_batch(spark, depless, rows, _REL)
+    _assert_stream_equals_batch(spark, depless, rows, _TOL)
 
-    missing = _quote_cfg(path, [
-        {"name": "vol", "feature_definition": "volatility_stddev",
-         "params": {"value_col": "last"}},
-    ])
-    with pytest.raises(ValueError, match="feature 'vol' reads"):
-        Featurizer(spark).run_stream(missing, _quote_stream(spark, path))
-    with pytest.raises(ValueError, match="feature 'vol' reads"):
-        Featurizer(spark).run({**missing, "label_lookahead": "1s"})
+    # tvi's side flag is a SQL expression input over the absent `side`
+    for feature in ({"name": "vol", "feature_definition": "volatility_stddev",
+                     "params": {"value_col": "last"}},
+                    {"name": "imb", "feature_definition": "tvi",
+                     "params": {"price_col": "ask", "amount_col": "bid"}}):
+        missing = _quote_cfg(path, [feature])
+        with pytest.raises(ValueError, match=f"feature '{feature['name']}' reads"):
+            Featurizer(spark).run_stream(missing, _quote_stream(spark, path))
+        with pytest.raises(ValueError, match=f"feature '{feature['name']}' reads"):
+            Featurizer(spark).run({**missing, "label_lookahead": "1s"})
 
 
 def test_run_stream_restart_carries_state(spark, tmp_path):
@@ -368,7 +431,7 @@ def test_run_stream_restart_carries_state(spark, tmp_path):
         )
     rows = spark.read.parquet(str(sink)).collect()
     assert len(rows) == n
-    _assert_stream_equals_batch(spark, cfg, rows, _REL)
+    _assert_stream_equals_batch(spark, cfg, rows, _TOL)
 
 
 # -- the packed boundary: byte-encoded state and packed output rows --
@@ -429,7 +492,7 @@ def test_run_stream_equals_batch_across_chunks_and_packed_rows(spark, tmp_path, 
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert len(rows) == 4 * 120
-    _assert_stream_equals_batch(spark, cfg, rows, _REL)
+    _assert_stream_equals_batch(spark, cfg, rows, _TOL)
 
 
 def test_run_stream_keeps_a_null_ts_event(spark, tmp_path):

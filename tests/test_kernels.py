@@ -1,12 +1,15 @@
-"""Property tests of the per-event window kernels (streaming.kernels),
-Spark-free: any split of a series into micro-batches, carrying the
-state between them, equals a numpy two-pass stddev and a single-pass
-pandas ewm over the whole series."""
+"""Property tests of the per-event window kernels (streaming.kernels
+and the tvi and diff definitions' kernels), Spark-free: any split of a
+series into micro-batches, carrying the state between them, equals a
+numpy two-pass stddev, a single-pass pandas ewm, and direct per-window
+tvi and diff over the whole series; tvi equals a DuckDB range frame."""
 
+import duckdb
 import numpy as np
 import pandas as pd
 import pytest
 
+from svoe_spark.plans.definitions import Diff, TradeVolumeImbalance
 from svoe_spark.streaming.kernels import ewma, trailing_stddev
 
 RTOL = 1e-9
@@ -23,6 +26,51 @@ def two_pass_std(ts, v, window):
         if len(seg) > 1:
             out[i] = (seg - seg[0]).std(ddof=1)
     return out
+
+
+def direct_tvi(ts, price, amount, is_buy, window):
+    """Per event: 2(B-S)/(B+S) of the buy (is_buy 1) and sell (0)
+    notional in [t - window, t], nulls counting as nothing; 0.0 where
+    B+S is 0."""
+    notional = np.where(np.isnan(price * amount), 0.0, price * amount)
+    out = np.empty(len(ts))
+    for i, t in enumerate(ts):
+        w = (ts >= t - window) & (ts <= t)
+        b, s = notional[w & (is_buy == 1)].sum(), notional[w & (is_buy == 0)].sum()
+        out[i] = 2 * (b - s) / (b + s) if b + s != 0 else 0.0
+    return out
+
+
+def direct_diff(ts, v, window):
+    """Per event: (last - first) / first of all events in
+    [t - window, t] in array order; NaN where first is null or 0."""
+    out = np.empty(len(ts))
+    for i, t in enumerate(ts):
+        idx = np.flatnonzero((ts >= t - window) & (ts <= t))
+        first, last = v[idx[0]], v[idx[-1]]
+        out[i] = (last - first) / first if first != 0 else np.nan
+    return out
+
+
+def trades(rng, v, null_frac):
+    """Trade inputs around price ``v``: amount and the side flag (1.0
+    buy, 0.0 sell) with ``null_frac`` nulls each."""
+    n = len(v)
+    amount = rng.uniform(0.1, 10.0, n)
+    is_buy = (rng.random(n) < 0.5).astype(float)
+    amount[rng.random(n) < null_frac] = np.nan
+    is_buy[rng.random(n) < null_frac] = np.nan
+    return amount, is_buy
+
+
+def run_kernel(defn, ts, up, window, splits):
+    """``defn``'s kernel over the ``splits`` of (ts, up), carrying state."""
+    state, out = None, []
+    for a, b in splits:
+        o, state = defn.kernel(ts[a:b], [x[a:b] for x in up], {"window": window / 1e9}, state)
+        assert len(o) == b - a
+        out.append(o)
+    return np.concatenate(out)
 
 
 def random_splits(rng, ts, n_batches):
@@ -70,15 +118,24 @@ def series(rng, n, null_frac=0.0, peers=False):
 def test_splits_equal_one_pass(seed, null_frac, peers):
     rng = np.random.default_rng(seed)
     ts, v = series(rng, 1500, null_frac, peers)
+    amount, is_buy = trades(rng, v, null_frac)
     # ~40 events per window (~5 distinct stamps of ~8 peers each)
     window, alpha = (5_000 if peers else 2_000_000), 0.2
     want_sd = two_pass_std(ts, v, window)
     want_ew = pd.Series(v).ewm(alpha=alpha, adjust=False).mean().to_numpy()
+    want_tvi = direct_tvi(ts, v, amount, is_buy, window)
+    want_diff = direct_diff(ts, v, window)
     for n_batches in (0, 1, 7, 60):
-        got_sd, got_ew = run_split(ts, v, window, alpha, random_splits(rng, ts, n_batches))
+        splits = random_splits(rng, ts, n_batches)
+        got_sd, got_ew = run_split(ts, v, window, alpha, splits)
         assert_std_close(got_sd, want_sd)
         # ewma is bit-equal, nulls included
         assert np.array_equal(got_ew, want_ew, equal_nan=True)
+        got_tvi = run_kernel(TradeVolumeImbalance, ts, [v, amount, is_buy], window, splits)
+        np.testing.assert_allclose(got_tvi, want_tvi, rtol=RTOL, atol=1e-12)
+        # diff reads two buffered values: exact, nulls included
+        got_diff = run_kernel(Diff, ts, [v], window, splits)
+        assert np.array_equal(got_diff, want_diff, equal_nan=True)
 
 
 def test_peers_share_window():
@@ -99,6 +156,12 @@ def test_empty_batch_keeps_state():
     assert len(out) == 0 and new == (3.0, 2)
     out, new = ewma(np.empty(0), 0.5)
     assert len(out) == 0 and np.isnan(new[0]) and new[1] == 0
+    empty = np.empty(0)
+    tvi_state = (np.array([1], dtype=np.int64), np.array([2.0]), np.array([0.0]))
+    out, new = TradeVolumeImbalance.kernel(empty.astype(np.int64), [empty] * 3, {}, tvi_state)
+    assert len(out) == 0 and [a.tolist() for a in new] == [[1], [2.0], [0.0]]
+    out, new = Diff.kernel(empty.astype(np.int64), [empty], {}, sd_state)
+    assert len(out) == 0 and [a.tolist() for a in new] == [[1, 2], [1.0, 2.0]]
 
 
 def test_nulls_follow_batch():
@@ -128,13 +191,46 @@ def test_constant_window_is_exact_zero():
 def test_adversarial_long_buffer(window):
     """A trending random walk at ~1e6 with steps of 1e-5: prefix sums of
     the shifted values dwarf a window's spread, the case where the
-    prefix form cancels and must fall back to two-pass. The long window
-    carries ~2000 events in its buffer between batches."""
+    prefix form cancels and must fall back to two-pass (for tvi, to
+    direct sums). The long window carries ~2000 events in its buffer
+    between batches."""
     rng = np.random.default_rng(window)
     n = 6000
     ts = np.sort(rng.choice(np.arange(100 * n), n, replace=False)).astype(np.int64)
     v = 1e6 + np.cumsum(rng.normal(1e-4, 1e-5, n))
     want = two_pass_std(ts, v, window)
+    # tvi: rare trades 1e10 times the usual size, whose notional the
+    # prefix sums still carry in the windows after they leave them
+    amount = np.where(rng.random(n) < 0.005, 1e10, rng.uniform(0.5, 1.5, n))
+    is_buy = (rng.random(n) < 0.5).astype(float)
+    want_tvi = direct_tvi(ts, v, amount, is_buy, window)
     for n_batches in (0, 5):
-        got, _ = run_split(ts, v, window, 0.5, random_splits(rng, ts, n_batches))
+        splits = random_splits(rng, ts, n_batches)
+        got, _ = run_split(ts, v, window, 0.5, splits)
         assert_std_close(got, want)
+        got_tvi = run_kernel(TradeVolumeImbalance, ts, [v, amount, is_buy], window, splits)
+        np.testing.assert_allclose(got_tvi, want_tvi, rtol=RTOL, atol=1e-12)
+
+
+def test_tvi_equals_duckdb_range_frame():
+    """The tvi kernel against SQL: SUM of CASE over a RANGE frame, with
+    null prices, amounts and sides, and equal-ts peers."""
+    rng = np.random.default_rng(17)
+    n = 3000
+    ts = np.sort(rng.integers(0, n // 3, n)).astype(np.int64) * 1_000_000_000
+    price = 100.0 + np.cumsum(rng.normal(0, 0.5, n))
+    price[rng.random(n) < 0.1] = np.nan
+    amount, is_buy = trades(rng, price, 0.1)
+    side = np.where(np.isnan(is_buy), None, np.where(is_buy == 1, "BUY", "SELL"))
+    events = pd.DataFrame({"i": np.arange(n), "ts": ts, "price": price, "amount": amount, "side": side})
+    want = duckdb.sql(f"""
+        SELECT CASE WHEN b + s <> 0 THEN 2 * (b - s) / (b + s) ELSE 0.0 END AS tvi
+        FROM (SELECT i,
+                     SUM(CASE WHEN side = 'BUY' THEN price * amount ELSE 0.0 END) OVER w AS b,
+                     SUM(CASE WHEN side <> 'BUY' THEN price * amount ELSE 0.0 END) OVER w AS s
+              FROM events
+              WINDOW w AS (ORDER BY ts RANGE BETWEEN {20 * 10**9} PRECEDING AND CURRENT ROW))
+        ORDER BY i""").df()["tvi"].to_numpy()
+    assert (np.diff(ts) == 0).sum() > n // 2 and np.isnan(price).any()
+    got, _ = TradeVolumeImbalance.kernel(ts, [price, amount, is_buy], {"window": "20s"})
+    np.testing.assert_allclose(got, want, rtol=RTOL, atol=1e-12)

@@ -16,7 +16,6 @@ from svoe_spark.operators.orderbook import (
 from svoe_spark.operators.windows import ohlcv, sliding_stddev
 from svoe_spark.queries import ticks
 from svoe_spark.sources.tables import load_table
-from svoe_spark.streaming.aggregate import running_reduce_stream
 from svoe_spark.streaming.features import ohlcv_stream, trailing_stddev_stream
 from svoe_spark.streaming.sinks import run_available_to_memory
 from svoe_spark.streaming.sources import replay_parquet
@@ -166,8 +165,6 @@ def test_stream_equi_join_equals_batch(spark, sf_small, tick_parquet):
 
 
 def test_running_reduce_stream(spark, sf_small, tick_parquet):
-    # drive through the unified dispatcher — resolves to whichever
-    # state API the environment supports
     from svoe_spark.streaming.aggregate import keyed_reduce_stream
 
     stream = replay_parquet(spark, tick_parquet).select(
@@ -268,58 +265,14 @@ def test_stateless_cleaning_runs_on_stream(spark, sf_small, tmp_path):
         )
 
 
-def test_running_reduce_tws_equals_legacy(spark, sf_small, tick_parquet):
-    """Spark 4 transformWithStateInPandas form: identical per-update
-    emissions to the legacy applyInPandasWithState operator. Skipped
-    where the tWS protobuf dependency is absent (this container); the
-    gate itself must then raise a clear error."""
-    from svoe_spark.streaming.aggregate import running_reduce_tws, tws_available
-
-    if not tws_available():
-        with pytest.raises(RuntimeError, match="running_reduce_stream"):
-            running_reduce_tws(
-                replay_parquet(spark, tick_parquet).select(
-                    F.col("event_type").alias("symbol"), F.col("ts"), F.col("value")
-                ),
-                value="value",
-                ops=["sum"],
-            )
-        pytest.skip("google.protobuf absent: transformWithState gated off")
-
-    def src():
-        return replay_parquet(spark, tick_parquet).select(
-            F.col("event_type").alias("symbol"), F.col("ts"), F.col("value")
-        )
-
-    new = run_available_to_memory(
-        running_reduce_tws(src(), value="value", ops=["sum", "count", "max"]),
-        "tws_reduce",
-    )
-    old = run_available_to_memory(
-        running_reduce_stream(src(), value="value", ops=["sum", "count", "max"]),
-        "legacy_reduce",
-    )
-    k = lambda r: (r["symbol"], r["ts"])  # noqa: E731
-    a = sorted(map(tuple, new.collect()), key=lambda t: (t[0], t[1]))
-    b = sorted(map(tuple, old.collect()), key=lambda t: (t[0], t[1]))
-    assert a == b and len(a) > 0
-
-
 def test_keyed_reduce_dispatch(spark):
-    from svoe_spark.streaming.aggregate import keyed_reduce_stream, tws_available
+    from svoe_spark.streaming.aggregate import keyed_reduce_stream
 
     df = spark.readStream.format("rate").load().selectExpr(
         "'k' AS symbol", "timestamp AS ts", "CAST(value AS DOUBLE) AS value"
     )
-    # auto picks a backend without raising in either environment
     q = keyed_reduce_stream(df, value="value", ops=["sum"])
     assert q.isStreaming
-    # forcing tws where protobuf is absent must raise the documented gate
-    if not tws_available():
-        with pytest.raises(RuntimeError, match="protobuf"):
-            keyed_reduce_stream(df, value="value", ops=["sum"], impl="tws")
-    with pytest.raises(ValueError, match="unknown impl"):
-        keyed_reduce_stream(df, value="value", ops=["sum"], impl="nope")
 
 
 @pytest.mark.heavy  # round-10 quick-tier trim (slowest cases -> sharded tier)

@@ -148,75 +148,3 @@ def test_subsecond_trailing_window(spark):
     assert out[300] == 1.0  # 0+1
     assert out[600] == 3.0  # 1+2
     assert out[1200] == 3.0  # just row 3
-
-
-def test_tvi_prefix_matches_frame(spark, sf_small):
-    from svoe_spark.operators.windows import tvi
-    from svoe_spark.queries import ticks
-
-    t = ticks(spark, sf_small).select(
-        "event_type", F.col("ts").alias("timestamp"),
-        F.col("value").alias("price"), F.col("qty").cast("double").alias("amount"),
-        "side", "event_id",
-    )
-    frame = tvi(t, by="event_type", window="1h")
-    prefix = tvi(t, by="event_type", window="1h", method="prefix")
-    f = {r["event_id"]: r["tvi"] for r in frame.collect()}
-    p = {r["event_id"]: r["tvi"] for r in prefix.collect()}
-    assert set(f) == set(p)
-    for k in f:
-        assert p[k] == pytest.approx(f[k], rel=1e-8, abs=1e-10)
-
-
-def test_trailing_sums_prefix_peer_rows_included(spark):
-    import datetime as dt
-
-    from svoe_spark.operators.windows import trailing_sums_prefix
-
-    # two rows at the SAME instant: a range frame includes both for
-    # both rows; the prefix rewrite must agree (range-running cum)
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [("k", t0, 1.0), ("k", t0, 2.0), ("k", t0 + dt.timedelta(seconds=30), 4.0)]
-    df = spark.createDataFrame(rows, "g string, ts timestamp, v double")
-    out = trailing_sums_prefix(
-        df, {"s": F.col("v")}, on="ts", by="g", window="1m"
-    )
-    got = sorted(r["s"] for r in out.collect())
-    assert got == [3.0, 3.0, 7.0]
-
-
-def test_sliding_stddev_auto_dispatch(spark, sf_small):
-    from svoe_spark.operators.windows import sliding_stddev
-    from svoe_spark.queries import ticks
-
-    t = ticks(spark, sf_small).select(
-        "event_type", F.col("ts").alias("timestamp"),
-        F.col("value").alias("mid_price"), "event_id",
-    )
-    # sparse fixture -> auto picks the frame plan; result must equal it
-    auto = sliding_stddev(t, by="event_type", window="1h", method="auto")
-    frame = sliding_stddev(t, by="event_type", window="1h", method="frame")
-    a = {r["event_id"]: r["volatility"] for r in auto.collect()}
-    f = {r["event_id"]: r["volatility"] for r in frame.collect()}
-    assert a == f
-
-
-def test_sliding_stddev_prefix_null_values_match_frame(spark):
-    from svoe_spark.operators.windows import sliding_stddev
-
-    rows = [
-        ("k", dt.datetime(2024, 1, 1, 0, 0, 0), None),
-        ("k", dt.datetime(2024, 1, 1, 0, 0, 1), 5.0),
-        ("k", dt.datetime(2024, 1, 1, 0, 0, 2), 7.0),
-    ]
-    df = spark.createDataFrame(rows, "g string, timestamp timestamp, mid_price double")
-    f = {r["timestamp"]: r["volatility"]
-         for r in sliding_stddev(df, by="g", window="1m").collect()}
-    p = {r["timestamp"]: r["volatility"]
-         for r in sliding_stddev(df, by="g", window="1m", method="prefix").collect()}
-    for ts, want in f.items():
-        got = p[ts]
-        if want is None:
-            assert got is None
-        else:
-            assert got == pytest.approx(want, rel=1e-9)
