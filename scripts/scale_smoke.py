@@ -8,7 +8,7 @@ the hot-key shape that breaks naive per-key plans. Times:
   * as-of join, default plan (per-key sort: the hot key serializes)
   * as-of join, time-bucketed plan (parallelism = keys x buckets)
   * OHLCV tumbling agg, trailing-window volatility, exact dedup
-  * dense-tick tvi and volatility on the per-key kernels
+  * dense-tick tvi, OHLCV bars and volatility on the per-key kernels
     (``SMOKE_ONLY=dense``)
   * order-book replay, sequential vs time-bucketed
   * curation (global shuffle rank / sequence packing) at 20M rows
@@ -682,11 +682,11 @@ def round4d_smoke(spark, results, force, n_big=100_000_000):
 def dense_kernel_smoke(spark, results, force, n=N_LEFT):
     """Dense-tick trailing windows on the feature definitions' O(rows)
     kernels (``per_key_map`` per key, as ``Featurizer.run`` runs them):
-    tvi and volatility over 20M ticks on 10 keys (~1400 rows per 1m
-    window), and volatility over the 20M hot-key ticks (18M rows on one
-    key, one pandas frame on one worker). The range frame is
-    O(rows x frame): 321 s at 2M rows."""
-    from svoe_spark.plans.definitions import TradeVolumeImbalance, VolatilityStddev
+    tvi, 1m closed OHLCV bars and volatility over 20M ticks on 10 keys
+    (~1400 rows per 1m window), and volatility over the 20M hot-key
+    ticks (18M rows on one key, one pandas frame on one worker). The
+    range frame is O(rows x frame): 321 s at 2M rows."""
+    from svoe_spark.plans.definitions import OHLCV, TradeVolumeImbalance, VolatilityStddev
 
     dense = spark.range(n).select(
         (F.col("id") % 10).cast("string").alias("event_type"),
@@ -702,6 +702,10 @@ def dense_kernel_smoke(spark, results, force, n=N_LEFT):
     results["tvi_kernel_20M_dense_sec"] = timed(
         lambda: force(TradeVolumeImbalance.transform({"source": dense}, {"window": "1m"}, ["event_type"])),
         "tvi_kernel_20M",
+    )
+    results["ohlcv_kernel_20M_dense_sec"] = timed(
+        lambda: force(OHLCV.transform({"source": dense}, {"window": "1m"}, ["event_type"])),
+        "ohlcv_kernel_20M",
     )
     results["stddev_kernel_20M_dense_sec"] = timed(
         lambda: force(VolatilityStddev.transform(

@@ -34,15 +34,6 @@ def duration_ns(dur: str | int | float) -> int:
     return int(round(duration_to_seconds(dur) * 1e6)) * 1000
 
 
-def duration_to_interval_string(dur: str | int | float) -> str:
-    """Duration for Spark's window()/watermark APIs, e.g. '60 seconds'."""
-    secs = duration_to_seconds(dur)
-    if secs == int(secs):
-        return f"{int(secs)} seconds"
-    ms = round(secs * 1000)
-    return f"{ms} milliseconds"
-
-
 def epoch_seconds(ts: Column | str) -> Column:
     """Timestamp -> epoch seconds as DOUBLE (micro precision).
 

@@ -2,25 +2,24 @@
 
 A FeatureDefinition is a typed DataFrame->DataFrame transformation with
 declared upstreams (reference: features/definitions/feature_definition.py:14-67
-— `stream(upstreams, params)` + `dep_upstream_schema`). Here the batch
-and streaming paths share the same transform wherever the expression is
-window/group based; genuinely stateful definitions override
-`transform_stream`.
+— `stream(upstreams, params)` + `dep_upstream_schema`).
 
 Contract: every produced DataFrame carries an event-time column `ts`,
 the instrument key columns declared by the source, and the feature's
 value columns. The planner as-of joins on (keys, ts).
 
-Kernel contract (optional), for definitions emitting one value per
-upstream event: ``output`` names the one value column,
+Kernel contract, for definitions emitting values at every upstream
+event (every built-in): ``outputs`` names the value columns,
 ``inputs(columns, params)`` picks what the kernel reads out of the
 upstream's value columns, and ``kernel(ts, up, params, state=None)`` is
 numpy over one key's events sorted by event time (``ts`` int64 ns,
-``up`` those inputs as float64 arrays, NaN = null), returning the
-float64 output (NaN = undefined) and the state to carry into the key's
-next batch of events. An input read from the source may be a SQL
-expression over backquoted source columns (``tvi``'s side flag), which
-both paths project as a double (``project_inputs``).
+``up`` those inputs as float64 arrays, NaN = null), returning one
+float64 array per output (NaN = undefined) and the state to carry into
+the key's next batch of events. The base ``transform`` runs the kernel
+per key, so a kernel definition needs no transform of its own. An
+input read from the source may be a SQL expression over backquoted
+source columns (``tvi``'s side flag), which both paths project as a
+double (``project_inputs``).
 
 State half: ``state_fields`` declares that state as (name, Spark type)
 pairs; ``state`` is a tuple of their values, None before the first
@@ -31,14 +30,13 @@ with ``state_fields = None`` runs in batch only (no built-in does).
 ``run_plan`` is the one body of both paths: ``Featurizer.run`` runs the
 kernel plan once per key with no state, ``Featurizer.run_stream`` per
 micro-batch carrying it (streaming.feature_vector). Kernel-less
-definitions (``ohlcv``, most user ones) are as-of joined onto the batch
-pass and do not stream fused.
+definitions (user ones that override ``transform``) are as-of joined
+onto the batch pass and do not stream.
 """
 
 from __future__ import annotations
 
 import re
-from abc import ABC, abstractmethod
 from typing import NamedTuple
 
 import numpy as np
@@ -48,8 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from svoe_spark.functions.time import duration_ns
-from svoe_spark.operators.windows import ohlcv
-from svoe_spark.streaming.kernels import ewma, trailing_stddev, window_buffer, window_sums
+from svoe_spark.streaming.kernels import closed_bars, ewma, trailing_stddev, window_buffer, window_sums
 
 REGISTRY: dict[str, type["FeatureDefinition"]] = {}
 
@@ -59,12 +56,12 @@ def register(cls: type["FeatureDefinition"]) -> type["FeatureDefinition"]:
     return cls
 
 
-class FeatureDefinition(ABC):
+class FeatureDefinition:
     name: str = ""
     # upstream slots: list of (slot_name); deps in config bind by order
     dep_slots: tuple[str, ...] = ("source",)
-    #: the one value column of a per-event kernel; None = no kernel
-    output: str | None = None
+    #: the value columns of a per-event kernel, one array each; () = no kernel
+    outputs: tuple[str, ...] = ()
     #: the kernel's carried state, (name, Spark type) pairs; None = batch only
     state_fields: tuple | None = None
 
@@ -75,20 +72,19 @@ class FeatureDefinition(ABC):
         return [params.get("value_col", columns[0] if len(columns) == 1 else None)]
 
     @classmethod
-    @abstractmethod
     def transform(
         cls, upstreams: dict[str, DataFrame], params: dict, keys: list[str]
     ) -> DataFrame:
-        ...
-
-    @classmethod
-    def transform_stream(
-        cls, upstreams: dict[str, DataFrame], params: dict, keys: list[str]
-    ) -> DataFrame:
-        """Streaming variant; default = same expression (valid for
-        stateless/row-local transforms; window-agg definitions override
-        with watermarked groupBy-window forms)."""
-        return cls.transform(upstreams, params, keys)
+        """The feature's frame (keys, ts, *outputs): the kernel per key,
+        with no carried state. Kernel-less definitions override it."""
+        if not cls.outputs:
+            raise NotImplementedError(f"feature definition {cls.name!r} has neither outputs nor a transform")
+        (df,) = upstreams.values()
+        columns = [c for c in df.columns if c not in (*keys, "ts")]
+        return per_key_map(
+            df, keys, kernel_inputs(cls.name, cls, columns, params), list(cls.outputs),
+            lambda ts, up: dict(zip(cls.outputs, cls.kernel(ts, up, params)[0])),
+        )
 
 
 def project_inputs(df: DataFrame, columns: list[str], inputs: list[str]) -> tuple[DataFrame, list[str]]:
@@ -139,7 +135,7 @@ def kernel_inputs(name: str, defn, columns: list[str], params: dict) -> list[str
 
 class KernelStep(NamedTuple):
     """One kernel feature of a plan; ``inputs`` name source columns or
-    earlier steps' ``column``."""
+    earlier steps' ``columns``."""
 
     name: str
     defn: type
@@ -147,40 +143,32 @@ class KernelStep(NamedTuple):
     inputs: list[str]
 
     @property
-    def column(self) -> str:
-        return f"{self.name}-{self.defn.output}"
+    def columns(self) -> list[str]:
+        """``{name}-{output}`` per output, as the FLS names them."""
+        return [f"{self.name}-{o}" for o in self.defn.outputs]
 
 
 def source_inputs(plan: list[KernelStep]) -> list[str]:
     """The source inputs (columns or SQL expressions) a plan reads, in
     first-use order."""
-    made = {s.column for s in plan}
+    made = {c for s in plan for c in s.columns}
     return list(dict.fromkeys(c for s in plan for c in s.inputs if c not in made))
 
 
 def run_plan(plan: list[KernelStep], ts, vals: dict, state=None) -> list:
     """Run ``plan``'s kernels in order over one key's events (``ts``
-    sorted int64 ns), adding each step's output to ``vals`` (source
-    input -> float64 array) under its ``column``. ``state``: the steps'
+    sorted int64 ns), adding each step's outputs to ``vals`` (source
+    input -> float64 array) under its ``columns``. ``state``: the steps'
     carried state fields, concatenated in plan order (None = none).
     Returns the new state, in the same layout."""
     new_state = []
     for s in plan:
         n = len(s.defn.state_fields or ())
         carried = state and state[len(new_state) : len(new_state) + n]
-        vals[s.column], st = s.defn.kernel(ts, [vals[c] for c in s.inputs], s.params, carried)
+        outs, st = s.defn.kernel(ts, [vals[c] for c in s.inputs], s.params, carried)
+        vals.update(zip(s.columns, outs))
         new_state += st
     return new_state
-
-
-def _kernel_transform(cls, upstreams, params, keys):
-    """A kernel definition's per-feature transform: its kernel per key."""
-    (df,) = upstreams.values()
-    columns = [c for c in df.columns if c not in (*keys, "ts")]
-    return per_key_map(
-        df, keys, kernel_inputs(cls.name, cls, columns, params), [cls.output],
-        lambda ts, up: {cls.output: cls.kernel(ts, up, params)[0]},
-    )
 
 
 @register
@@ -189,7 +177,7 @@ class MidPrice(FeatureDefinition):
     price column upstream it passes it through as mid_price."""
 
     name = "mid_price"
-    output = "mid_price"
+    outputs = ("mid_price",)
     state_fields = ()
 
     @classmethod
@@ -200,7 +188,7 @@ class MidPrice(FeatureDefinition):
 
     @classmethod
     def kernel(cls, ts, up, params, state=None):
-        return ((up[0] + up[1]) / 2 if len(up) == 2 else up[0]), ()
+        return [(up[0] + up[1]) / 2 if len(up) == 2 else up[0]], ()
 
     @classmethod
     def transform(cls, upstreams, params, keys):
@@ -218,7 +206,7 @@ class RelativeSpread(FeatureDefinition):
     """2*|bid-ask|/(bid+ask) (reference relative_bid_ask_spread_fd.py:27-33)."""
 
     name = "relative_spread"
-    output = "spread"
+    outputs = ("spread",)
     state_fields = ()
 
     @classmethod
@@ -228,7 +216,7 @@ class RelativeSpread(FeatureDefinition):
     @classmethod
     def kernel(cls, ts, up, params, state=None):
         bid, ask = up
-        return 2.0 * np.abs(bid - ask) / (bid + ask), ()
+        return [2.0 * np.abs(bid - ask) / (bid + ask)], ()
 
     @classmethod
     def transform(cls, upstreams, params, keys):
@@ -255,13 +243,13 @@ class VolatilityStddev(FeatureDefinition):
 
     name = "volatility_stddev"
     dep_slots = ("mid_price",)
-    output = "volatility"
+    outputs = ("volatility",)
     state_fields = (("ts", ArrayType(LongType())), ("v", ArrayType(DoubleType())))
-    transform = classmethod(_kernel_transform)
 
     @classmethod
     def kernel(cls, ts, up, params, state=None):
-        return trailing_stddev(ts, up[0], duration_ns(params.get("window", "1m")), state)
+        out, state = trailing_stddev(ts, up[0], duration_ns(params.get("window", "1m")), state)
+        return [out], state
 
 
 @register
@@ -275,10 +263,9 @@ class TradeVolumeImbalance(FeatureDefinition):
     State: the buffered (ts, buy, sell) notional."""
 
     name = "tvi"
-    output = "tvi"
+    outputs = ("tvi",)
     state_fields = (("ts", ArrayType(LongType())), ("buy", ArrayType(DoubleType())),
                     ("sell", ArrayType(DoubleType())))
-    transform = classmethod(_kernel_transform)
 
     @classmethod
     def inputs(cls, columns, params):
@@ -296,43 +283,32 @@ class TradeVolumeImbalance(FeatureDefinition):
         flows, lo, hi, state = window_buffer(ts, ts, flows, window, state)
         buy, sell = window_sums(flows, lo, hi)
         with np.errstate(divide="ignore", invalid="ignore"):
-            return np.where(buy + sell != 0, 2.0 * (buy - sell) / (buy + sell), 0.0), state
+            return [np.where(buy + sell != 0, 2.0 * (buy - sell) / (buy + sell), 0.0)], state
 
 
 @register
 class OHLCV(FeatureDefinition):
-    """Tumbling OHLCV (reference ohlcv_fd.py:28-101). Emits one row per
-    closed bucket at the bucket start."""
+    """Tumbling OHLCV bars (reference ohlcv_fd.py:28-101) on the event
+    grid: at each event, the last bar closed by then
+    (``kernels.closed_bars``; buckets epoch-aligned as
+    ``functions.time.bucket_start``), so a bar is visible from its
+    bucket end on, as the reference emits it on the first event past
+    the window's end. ``operators.windows.ohlcv`` is the same bar
+    stamped at its bucket start. State: the open bucket's partial
+    aggregates and the last closed bar."""
 
     name = "ohlcv"
+    outputs = ("open", "high", "low", "close", "volume", "vwap", "num_trades")
+    state_fields = (("span", ArrayType(LongType())), ("partial", ArrayType(DoubleType())),
+                    ("closed", ArrayType(DoubleType())))
 
     @classmethod
-    def transform(cls, upstreams, params, keys):
-        df = upstreams["source"]
-        out = ohlcv(
-            df,
-            on="ts",
-            price=params.get("price_col", "price"),
-            amount=params.get("amount_col", "amount"),
-            by=keys,
-            window=params.get("window", "1m"),
-        )
-        return out.withColumnRenamed("window_start", "ts")
+    def inputs(cls, columns, params):
+        return [params.get("price_col", "price"), params.get("amount_col", "amount")]
 
     @classmethod
-    def transform_stream(cls, upstreams, params, keys):
-        from svoe_spark.streaming.features import ohlcv_stream
-
-        out = ohlcv_stream(
-            upstreams["source"],
-            on="ts",
-            price=params.get("price_col", "price"),
-            amount=params.get("amount_col", "amount"),
-            by=keys,
-            window=params.get("window", "1m"),
-            watermark=params.get("watermark", "10 seconds"),
-        )
-        return out.withColumnRenamed("window_start", "ts")
+    def kernel(cls, ts, up, params, state=None):
+        return closed_bars(ts, *up, duration_ns(params.get("window", "1m")), state)
 
 
 @register
@@ -346,13 +322,13 @@ class Ewma(FeatureDefinition):
 
     name = "ewma"
     dep_slots = ("upstream",)
-    output = "ewma"
+    outputs = ("ewma",)
     state_fields = (("ewma", DoubleType()), ("nulls", LongType()))
-    transform = classmethod(_kernel_transform)
 
     @classmethod
     def kernel(cls, ts, up, params, state=None):
-        return ewma(up[0], float(params.get("alpha", 0.1)), state)
+        out, state = ewma(up[0], float(params.get("alpha", 0.1)), state)
+        return [out], state
 
 
 def load_definitions_from_file(path: str) -> list[type[FeatureDefinition]]:
@@ -419,13 +395,12 @@ class Diff(FeatureDefinition):
 
     name = "diff"
     dep_slots = ("upstream",)
-    output = "diff"
+    outputs = ("diff",)
     state_fields = VolatilityStddev.state_fields
-    transform = classmethod(_kernel_transform)
 
     @classmethod
     def kernel(cls, ts, up, params, state=None):
         window = duration_ns(params.get("window", "1m"))
         (v,), lo, hi, state = window_buffer(ts, ts, up, window, state)
         first = np.where(v[lo] != 0, v[lo], np.nan)
-        return (v[hi - 1] - first) / first, state
+        return [(v[hi - 1] - first) / first], state

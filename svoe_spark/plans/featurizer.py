@@ -124,14 +124,14 @@ def kernel_plan(config: FeaturizerConfig, columns: list[str], exclude=()) -> lis
     and whose deps are planned too, bar ``exclude``. Each step's inputs
     come from its definition's ``inputs`` (``kernel_inputs``), out of
     the source's value ``columns`` (or SQL expressions over them) when
-    it has no deps, else out of its first dep's output."""
+    it has no deps, else out of its first dep's outputs."""
     plan: dict[str, KernelStep] = {}
     for fc in config.features:
         defn = _definition(fc)
-        if not defn.output or fc.name in exclude or not all(d in plan for d in fc.deps):
+        if not defn.outputs or fc.name in exclude or not all(d in plan for d in fc.deps):
             continue
         dep = plan[fc.deps[0]] if fc.deps else None
-        up = {dep.defn.output: dep.column} if dep else {c: c for c in columns}
+        up = dict(zip(dep.defn.outputs, dep.columns)) if dep else {c: c for c in columns}
         inputs = kernel_inputs(fc.name, defn, list(up), fc.params)
         plan[fc.name] = KernelStep(fc.name, defn, fc.params, [up.get(c, c) for c in inputs])
     return list(plan.values())
@@ -241,21 +241,23 @@ class Featurizer:
         (tasks.py:243-252).
 
         Fused pass: the features whose definition has a per-event
-        kernel (definitions module docstring) and whose deps reach the
-        source only through such features, bar stored ones, come out
-        with the label from ONE ``groupBy(keys).applyInPandas`` over the
-        source inputs they read (``project_inputs``). Per key: stable
-        sort by ts, kernels in dependency order, then
-        ``asof_join_multi``'s contract: each
+        kernel (every built-in; definitions module docstring) and whose
+        deps reach the source only through such features, bar stored
+        ones, come out with the label from ONE
+        ``groupBy(keys).applyInPandas`` over the source inputs they read
+        (``project_inputs``). Per key: stable sort by ts, kernels in
+        dependency order, then ``asof_join_multi``'s contract: each
         column forward-filled over nulls and read at the row's last
-        equal-ts peer (so peers carry equal values), the label read at
-        the last row with ts <= ts + lookahead, and rows whose ts +
-        lookahead passes the key's last event dropped. Cost: O(rows) per
-        key, windowed kernels included, however dense the ticks. Memory:
-        one key's rows, with a float64 array per input and feature, in
-        one pandas frame on one worker, as the batch ``Ewma`` it replaced.
+        equal-ts peer (so peers carry equal values), the label (one
+        column per output of the label feature) read at the last row
+        with ts <= ts + lookahead, and rows whose ts + lookahead passes
+        the key's last event dropped. A row's features read no event
+        after it: ``ohlcv`` gives the last bar closed by then. Cost:
+        O(rows) per key, windowed kernels included, however dense the
+        ticks. Memory: one key's rows, with a float64 array per input
+        and feature output, in one pandas frame on one worker.
 
-        Fallback: the other features (``ohlcv``, kernel-less user
+        Fallback: the other features (kernel-less user
         definitions, stored features and their dependents) come
         from ``build_features`` and are as-of joined onto the fused
         output; a kernel-less label gets its rows from
@@ -292,7 +294,7 @@ class Featurizer:
         columns = ["ts", *keys, *[c for c in left.columns if c.startswith("label_")]]
         for name in dict.fromkeys(fc.name for fc in config.features):
             if name in fused:
-                columns.append(fused[name].column)
+                columns += fused[name].columns
             else:
                 columns += [f"{name}-{c}" for c in _value_cols(feats[name][1], keys)]
         if rights:
@@ -302,9 +304,9 @@ class Featurizer:
     def _fused(self, config, source_df: DataFrame, plan: list[KernelStep], label_name: str) -> DataFrame:
         """``run``'s fused pass over the kernel ``plan``."""
         source_cols = source_inputs(plan)
-        features = [s.column for s in plan]
-        label = next((s.column for s in plan if s.name == label_name), None) if config.label_lookahead else None
-        if label:
+        features = [c for s in plan for c in s.columns]
+        labels = next((s.columns for s in plan if s.name == label_name), []) if config.label_lookahead else []
+        if labels:
             ahead = duration_ns(config.label_lookahead)
 
         def fused_pass(ts, src):
@@ -312,12 +314,13 @@ class Featurizer:
             run_plan(plan, ts, vals)
             last_peer = np.searchsorted(ts, ts, "right") - 1
             res = {c: _ffill(vals[c])[last_peer] for c in features}
-            if label:
-                res[f"label_{label}"] = _ffill(vals[label])[np.searchsorted(ts, ts + ahead, "right") - 1]
+            if labels:
+                at = np.searchsorted(ts, ts + ahead, "right") - 1
+                res.update({f"label_{c}": _ffill(vals[c])[at] for c in labels})
                 res["__keep"] = ts + ahead <= ts[-1]
             return res
 
-        outputs = ([f"label_{label}"] if label else []) + features
+        outputs = [f"label_{c}" for c in labels] + features
         return per_key_map(source_df, config.keys, source_cols, outputs, fused_pass)
 
     def run_stream(self, config, source_stream: DataFrame) -> DataFrame:
@@ -331,13 +334,14 @@ class Featurizer:
         streaming query, and it is the execution shape of the
         reference's worker actor pushing each event through its streamz
         graph. A graph of row-local kernels only carries no state and
-        runs as a stateless ``mapInPandas`` of the same plan.
+        runs as a stateless ``mapInPandas`` of the same plan. A feature
+        with several outputs (``ohlcv``) gives one ``{name}_{output}``
+        column each.
 
         Every feature must be in the plan and declare stream state
-        (``state_fields``), as every built-in per-event definition does;
-        others (window-bucket ``ohlcv``, kernel-less or batch-only user
-        definitions) raise, and stream on their own via
-        ``transform_stream``. A config must have exactly one key column."""
+        (``state_fields``), as every built-in does; a kernel-less or
+        batch-only (``state_fields = None``) user definition raises. A
+        config must have exactly one key column."""
         from svoe_spark.streaming.feature_vector import feature_vector_stream
 
         config = config if isinstance(config, FeaturizerConfig) else FeaturizerConfig.load(config)
@@ -351,10 +355,9 @@ class Featurizer:
             if fc.name not in streams:
                 raise ValueError(
                     f"feature {fc.feature_definition!r} has no fused streaming "
-                    f"form; use its transform_stream directly (e.g. ohlcv)"
+                    f"form: it needs a kernel that declares its state_fields"
                 )
-        out = feature_vector_stream(source_stream, plan, key=key, on="ts")
-        return out.select(key, "ts", *[f"{s.name}_value" for s in plan])
+        return feature_vector_stream(source_stream, plan, key=key, on="ts")
 
     def get_materialized_data(
         self, config, pick_every_nth_row: int = 1

@@ -2309,28 +2309,20 @@ def _ivfpq_seed_chain(
     sf_dir: str,
     m: int = PQ_M_Q,
     ksub: int = PQ_KSUB_Q,
-    numpy_encode: bool = True,
 ):
     """(emb, cents, cbs, persisted IVF-PQ codes) at the given PQ
-    geometry. ``numpy_encode`` selects the bit-identical numpy encoder
-    (required at production geometry, where the m*ksub-leaf expression
-    tree bloats task serialization; round 11 — now the default at the
-    query geometry too: measured 1.56/0.61 -> 0.46/0.44 s cold/warm at
-    m=8 ksub=16 over sf0.1, all 2000 coded rows verified identical to
-    the expression form in-session, on top of the standing
-    bit-identity contract in ivfpq_encode_numpy's docstring/tests)."""
-    from svoe_spark.operators.similarity import (
-        ivfpq_encode,
-        ivfpq_encode_numpy,
-        ivfpq_train,
-    )
+    geometry, coded by the numpy encoder ``ivfpq_encode_numpy``: at
+    production geometry the expression form's m*ksub-leaf tree bloats
+    task serialization, and at the query geometry it measured 1.56/0.61
+    -> 0.46/0.44 s cold/warm at m=8 ksub=16 over sf0.1. The two are
+    bit-identical (ivfpq_encode_numpy's docstring and tests)."""
+    from svoe_spark.operators.similarity import ivfpq_encode_numpy, ivfpq_train
 
     def build():
         emb = load_table(spark, "embeddings", sf_dir)
         cents = _ivf_cents(spark, sf_dir)
         cbs = ivfpq_train(emb, cents, m=m, ksub=ksub, method="seed")
-        enc = ivfpq_encode_numpy if numpy_encode else ivfpq_encode
-        coded = enc(emb, cents, cbs).persist()
+        coded = ivfpq_encode_numpy(emb, cents, cbs).persist()
         return emb, cents, cbs, coded
 
     return _cached_chain(spark, sf_dir, f"ivfpq-seed-m{m}k{ksub}", build)
@@ -2535,7 +2527,7 @@ def ann_ivfpq_recall90_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb, cents, cbs, coded = _ivfpq_seed_chain(
-        spark, sf_dir, m=RECALL90_M, ksub=RECALL90_KSUB, numpy_encode=True
+        spark, sf_dir, m=RECALL90_M, ksub=RECALL90_KSUB
     )
     qdf = emb.filter(F.col("vec_id") == 0)
     short = ann_ivfpq_topk_numpy(

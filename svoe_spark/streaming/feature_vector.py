@@ -15,7 +15,8 @@ batch FeatureLabelSet pass. The group state is the steps' carried state
 fields (``state_fields``) in plan order, named ``{field}_{feature}``:
 per windowed definition (``volatility_stddev``, ``diff``, ``tvi``) its
 ``kernels.window_buffer`` of (ts ns, values), per ``ewma`` its (value,
-null count); row-local kernels carry none. A key's micro-batch crosses
+null count), per ``ohlcv`` its open bucket's partial aggregates and last
+closed bar; row-local kernels carry none. A key's micro-batch crosses
 the Python/JVM boundary once, not per event: array state as
 little-endian bytes (``state_codec``; checkpoints written before do not
 resume), output as packed rows of arrays (``ts`` as int64 µs, NaT as
@@ -56,7 +57,8 @@ def feature_vector_stream(
 ) -> DataFrame:
     """src: streaming df (key, ts, source cols); plan: kernel steps whose
     definitions all declare ``state_fields``. Output: one row per source
-    event, (key, ts, '{name}_value' per step) as doubles.
+    event, (key, ts, then per step ``{name}_value`` for one output, else
+    ``{name}_{output}`` each) as doubles.
 
     A plan whose kernels carry no state runs as a stateless
     ``mapInPandas`` of the same body: the engine rejects an
@@ -64,7 +66,8 @@ def feature_vector_stream(
     list'), and row-local kernels need no event-time order."""
     source_cols = source_inputs(plan)
     src, names = project_inputs(src, [key, on], source_cols)
-    value_cols = [f"{s.name}_value" for s in plan]
+    value_cols = {f"{s.name}_{o if len(s.columns) > 1 else 'value'}": c
+                  for s in plan for o, c in zip(s.defn.outputs, s.columns)}
 
     def schema(ts_type, value_type):
         return StructType([StructField(key, src.schema[key].dataType), StructField(on, ts_type)]
@@ -76,7 +79,7 @@ def feature_vector_stream(
         ts = pdf[on].to_numpy(dtype="datetime64[ns]").view("int64")
         vals = {c: pdf[n].to_numpy(dtype=float) for c, n in zip(source_cols, names)}
         new_state = run_plan(plan, ts, vals, carried)
-        out = pd.DataFrame({key: key_value, on: pdf[on], **{f"{s.name}_value": vals[s.column] for s in plan}})
+        out = pd.DataFrame({key: key_value, on: pdf[on], **{c: vals[col] for c, col in value_cols.items()}})
         return out, new_state
 
     if not state_schema.fields:

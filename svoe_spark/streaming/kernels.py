@@ -1,7 +1,7 @@
 """Per-event window kernels: the one definition of trailing stddev,
-ewma and the trailing-window buffer, shared by the online operator
-(streaming.feature_vector, which trailing_stddev_stream also runs) and
-the batch feature definitions.
+ewma, closed OHLCV bars and the trailing-window buffer, shared by the
+online operator (streaming.feature_vector, which trailing_stddev_stream
+also runs) and the batch feature definitions.
 
 A kernel maps one key's batch of events, sorted by event time, and the
 state carried from the key's previous batch to (outputs, new state):
@@ -14,6 +14,9 @@ pass over the whole series. State contracts:
       buffers its non-null values, diff all of them.
   ewma: (value, pending) — the ewma after the last non-null input (NaN
       before the first one) and the count of null inputs since then.
+  closed_bars: (span, partial, closed) — the open bucket's first and
+      last event times (empty before the first event), its partial
+      aggregates and the last closed bar.
 
 Nulls (NaN) follow the batch forms: stddev skips them as `stddev_samp`
 does, ewma carries through them as `pandas.Series.ewm` does.
@@ -163,3 +166,70 @@ def ewma(values, alpha: float, state=None) -> tuple[np.ndarray, tuple[float, int
     if len(seen):
         return out, (float(out[seen[-1]]), len(values) - 1 - int(seen[-1]))
     return out, (last, pending + len(values) if last == last else 0)
+
+
+def closed_bars(ts, price, amount, window: int, state=None) -> tuple[list[np.ndarray], tuple]:
+    """At each event time t in ``ts`` (sorted int64), the last closed
+    OHLCV bar of the epoch-aligned buckets [k*window, (k+1)*window): the
+    latest bucket with events whose end is <= t. Returns its open, high,
+    low, close, volume, vwap and num_trades as float64 arrays (NaN
+    before the first bar closes) and the new state.
+
+    Bars follow ``operators.windows.ohlcv``: high, low and volume skip
+    null (NaN) inputs and are NaN when all are null, num_trades counts
+    rows, vwap is sum(price*amount) / volume, NaN when volume is 0.
+    open (close) is the price of the bucket's first (last) event; where
+    several events share that time, the lowest (highest) non-null price
+    among them, so a bar does not depend on the order of peers."""
+    span, c_part, closed = state or (np.empty(0, np.int64), np.full(7, np.nan), np.full(7, np.nan))
+    n = len(ts)
+    if not n:
+        return [np.empty(0)] * 7, (span, c_part, closed)
+    bucket = ts // window
+    new = np.concatenate([[True], bucket[1:] != bucket[:-1]])
+    starts = np.flatnonzero(new)
+    seg = np.cumsum(new) - 1
+    first, last = ts[starts], ts[np.append(starts[1:], n) - 1]
+    # partial aggregates per bucket: open, high, low, close, volume, sum(price*amount), count
+    part = np.stack([
+        np.fmin.reduceat(np.where(ts == first[seg], price, np.nan), starts),
+        np.fmax.reduceat(price, starts),
+        np.fmin.reduceat(price, starts),
+        np.fmax.reduceat(np.where(ts == last[seg], price, np.nan), starts),
+        _null_sums(amount, starts),
+        _null_sums(price * amount, starts),
+        np.diff(np.append(starts, n)).astype(float),
+    ], axis=1)
+    if len(span) and span[0] // window == bucket[0]:  # the batch continues the open bucket
+        o, h, lo, c, vol, pv, cnt = part[0]
+        part[0] = (np.fmin(c_part[0], o) if first[0] == span[0] else c_part[0],
+                   np.fmax(c_part[1], h), np.fmin(c_part[2], lo),
+                   np.fmax(c_part[3], c) if last[0] == span[1] else c,
+                   _null_add(c_part[4], vol), _null_add(c_part[5], pv), c_part[6] + cnt)
+        first[0] = span[0]
+    elif len(span):
+        closed = _bar(c_part)
+    # bars[k]: the bar closed when bucket k opens
+    bars = np.vstack([closed, _bar(part[:-1])])
+    return list(bars[seg].T), (np.array([first[-1], last[-1]]), part[-1], bars[-1])
+
+
+def _null_sums(v: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """SQL SUM of each segment of v starting at ``starts``: the non-null
+    values' sum, NaN where all are null."""
+    ok = ~np.isnan(v)
+    return np.where(np.logical_or.reduceat(ok, starts), np.add.reduceat(np.where(ok, v, 0.0), starts), np.nan)
+
+
+def _null_add(a: float, b: float) -> float:
+    """SQL SUM of two partial sums, NaN meaning no non-null term."""
+    return b if np.isnan(a) else a if np.isnan(b) else a + b
+
+
+def _bar(part: np.ndarray) -> np.ndarray:
+    """Bars (open, high, low, close, volume, vwap, num_trades) from the
+    partial aggregates of closed buckets, one per row."""
+    vol, pv = part[..., 4], part[..., 5]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        vwap = np.where(vol != 0, pv / vol, np.nan)
+    return np.concatenate([part[..., :5], vwap[..., None], part[..., 6:]], axis=-1)

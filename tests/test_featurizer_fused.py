@@ -37,6 +37,8 @@ FEATURES = [
 ]
 COLS = ["label_mid-mid_price", "mid-mid_price", "spr-spread", "vol-volatility",
         "mom-diff", "ew-ewma"]
+BARS = {"name": "bars", "feature_definition": "ohlcv", "params": {"window": "15s"}}
+BAR_COLS = [f"bars-{c}" for c in ("open", "high", "low", "close", "volume", "vwap", "num_trades")]
 T0 = pd.Timestamp("2024-01-02 00:00:00")
 
 
@@ -147,6 +149,18 @@ def test_run_equals_old_asof_path(spark, mixed_quotes):
     assert not new["sym"].isin(["S1", "S2"]).any()
 
 
+def _bars(q: pd.DataFrame) -> pd.DataFrame:
+    """``BARS`` by pandas: ``groupby`` 15 s bucket bars of the trades
+    (null-free, unique ts) stamped at the bucket end."""
+    g = q.assign(pa=q["price"] * q["amount"]).groupby(q["ts"].dt.floor("15s"))
+    bars = pd.DataFrame({"open": g["price"].first(), "high": g["price"].max(),
+                         "low": g["price"].min(), "close": g["price"].last(),
+                         "volume": g["amount"].sum(), "vwap": g["pa"].sum() / g["amount"].sum(),
+                         "num_trades": g.size().astype(float)})
+    bars.index = bars.index + pd.Timedelta(seconds=15)
+    return bars.add_prefix("bars-").rename_axis("ts").reset_index()
+
+
 def _reference(q: pd.DataFrame) -> pd.DataFrame:
     """One key's FLS as a chain of pandas merge_asof (unique ts)."""
     q = q.sort_values("ts").reset_index(drop=True)
@@ -171,28 +185,33 @@ def _reference(q: pd.DataFrame) -> pd.DataFrame:
     for name, values in sides.items():
         out = pd.merge_asof(out, pd.DataFrame({"ts": ts, name: values}), on="ts",
                             direction="backward")
+    out = pd.merge_asof(out, _bars(q), on="ts", direction="backward")
     return out.reset_index(drop=True)
 
 
 @pytest.mark.parametrize("mixed", [False, True], ids=["kernels", "with_user_definition"])
 def test_run_equals_merge_asof_reference(spark, tmp_path, mixed):
-    """Null-free, unique-ts quotes: the fused FLS, alone and with a user
-    definition joined through the as-of fallback, equals the reference."""
+    """Null-free, unique-ts quotes and trades: the fused FLS, alone and
+    with a user definition joined through the as-of fallback, equals the
+    reference, ohlcv bars included."""
     rng = np.random.default_rng(5)
     parts = []
     for inst, n in [("I0", 400), ("I1", 150), ("I2", 60)]:
         ts, bid, ask = _series(rng, n)
         parts.append(pd.DataFrame({"instrument": inst, "ts": ts, "bid": bid, "ask": ask}))
     q = pd.concat(parts, ignore_index=True)
+    trade_rng = np.random.default_rng(6)
+    q["price"] = q["ask"].round(2)
+    q["amount"] = trade_rng.uniform(1, 5, len(q)).round(3)
     path = _write(q, str(tmp_path / "quotes.parquet"))
-    features, extra, cols = FEATURES, {}, COLS
+    features, extra, cols = [*FEATURES, BARS], {}, [*COLS, *BAR_COLS]
     if mixed:
         (tmp_path / "user_fd.py").write_text(USER_FD)
         features = [*FEATURES[:3],
                     {"name": "dbl", "feature_definition": "doubled_mid", "deps": ["mid"]},
-                    *FEATURES[3:]]
+                    *FEATURES[3:], BARS]
         extra = {"definition_paths": [str(tmp_path / "user_fd.py")]}
-        cols = [*COLS[:4], "dbl-doubled", *COLS[4:]]
+        cols = [*COLS[:4], "dbl-doubled", *COLS[4:], *BAR_COLS]
 
     got = Featurizer(spark).run(_config(path, ["instrument"], features, **extra)).toPandas()
     assert list(got.columns) == ["ts", "instrument", *cols]
@@ -228,8 +247,9 @@ def test_all_kernel_plan_is_one_grouped_map(spark, mixed_quotes):
 
 
 def test_tvi_and_diff_config_is_one_grouped_map(spark, tmp_path):
-    """tvi (over trades with a side column) and diff run on the kernel
-    plan: the FLS is still one grouped map, no range-frame Window."""
+    """tvi (over trades with a side column), diff, ohlcv and a
+    volatility over the bars' close run on the kernel plan: the FLS is
+    still one grouped map, with no range-frame Window or as-of join."""
     rng = np.random.default_rng(13)
     n = 200
     ts, bid, ask = _series(rng, n)
@@ -237,11 +257,14 @@ def test_tvi_and_diff_config_is_one_grouped_map(spark, tmp_path):
                            "amount": rng.uniform(1, 5, n), "side": rng.choice(["BUY", "SELL"], n)})
     path = _write(trades, str(tmp_path / "trades.parquet"))
     features = [FEATURES[0], FEATURES[3],
-                {"name": "imb", "feature_definition": "tvi", "params": {"window": f"{WINDOW_S:g}s"}}]
+                {"name": "imb", "feature_definition": "tvi", "params": {"window": f"{WINDOW_S:g}s"}},
+                BARS, {"name": "bvol", "feature_definition": "volatility_stddev", "deps": ["bars"],
+                       "params": {"window": "60s", "value_col": "close"}}]
     df = Featurizer(spark).run(_config(path, ["sym"], features))
     _assert_one_grouped_map(df)
     out = df.toPandas()
     assert len(out) > 150 and out["imb-tvi"].between(-2, 2).all() and out["mom-diff"].notna().any()
+    assert out["bars-num_trades"].max() > 3 and out["bvol-volatility"].notna().any()
 
 
 #: Featurizer.run's schema for this source and FEATURES before the fused

@@ -94,8 +94,11 @@ def test_ewma_batch_equals_stream(spark, sf_small, tmp_path):
 
 
 def test_run_stream_rejects_unfusable_feature(spark, sf_small, tmp_path):
-    cfg = {**CFG, "features": CFG["features"] + [
-        {"name": "bars", "feature_definition": "ohlcv", "params": {}}
+    """A kernel that declares no stream state runs in batch only."""
+    defs = tmp_path / "user_fds.py"
+    defs.write_text(_USER_FDS)
+    cfg = {**CFG, "definition_paths": [str(defs)], "features": CFG["features"] + [
+        {"name": "peak", "feature_definition": "running_max", "deps": ["mid"]}
     ]}
     src = load_table(spark, "events", sf_small).select("ts", "event_type", "value")
     path = str(tmp_path / "src2")
@@ -261,31 +264,37 @@ def _by_event(rows, cols):
             for k, v in events.items()}
 
 
+def _stream_columns(name, outputs):
+    """``run_stream``'s columns of a feature: ``{name}_value`` for one
+    output, else ``{name}_{output}`` each."""
+    return [f"{name}_value"] if len(outputs) == 1 else [f"{name}_{o}" for o in outputs]
+
+
 def _assert_stream_equals_batch(spark, cfg, rows, tol=None):
     """``run_stream`` output ``rows`` == ``build_features`` for every
-    feature of ``cfg``, per (symbol, ts) and its peers in either order;
-    NULL where batch is NULL. ``tol``: (rel, abs) tolerance per
-    definition (default exact)."""
+    feature of ``cfg`` and each of its outputs, per (symbol, ts) and
+    its peers in either order; NULL where batch is NULL. ``tol``: (rel,
+    abs) tolerance per definition (default exact)."""
     fz = Featurizer(spark)
     feats = fz.build_features(FeaturizerConfig.load(cfg))
-    names = [f["name"] for f in cfg["features"]]
-    got = _by_event(rows, [f"{n}_value" for n in names])
-    for i, (n, f) in enumerate(zip(names, cfg["features"])):
-        df = feats[n][1]
-        (col,) = [c for c in df.columns if c not in ("symbol", "ts")]
-        want = _by_event(df.collect(), [col])
-        assert set(want) == set(got), n
+    for f in cfg["features"]:
+        df = feats[f["name"]][1]
+        outputs = [c for c in df.columns if c not in ("symbol", "ts")]
+        got = _by_event(rows, _stream_columns(f["name"], outputs))
+        want = _by_event(df.collect(), outputs)
+        assert set(want) == set(got), f["name"]
         rel, abs_ = (tol or {}).get(f["feature_definition"], (0, 0))
-        for k, (ws,) in want.items():
-            assert len(got[k][i]) == len(ws), (n, k)
-            for g, w in zip(got[k][i], ws):
-                if w is None or math.isnan(w):
-                    assert g is None or math.isnan(g), (n, k, g)
-                else:
-                    assert g == pytest.approx(w, rel=rel, abs=abs_), (n, k, g, w)
+        for k, per_output in want.items():
+            for n, ws, gs in zip(outputs, per_output, got[k]):
+                assert len(gs) == len(ws), (f["name"], n, k)
+                for g, w in zip(gs, ws):
+                    if w is None or math.isnan(w):
+                        assert g is None or math.isnan(g), (f["name"], n, k, g)
+                    else:
+                        assert g == pytest.approx(w, rel=rel, abs=abs_), (f["name"], n, k, g, w)
 
 
-_TOL = {"volatility_stddev": (1e-9, 0), "ewma": (1e-12, 0), "tvi": (1e-9, 1e-12)}
+_TOL = {"volatility_stddev": (1e-9, 0), "ewma": (1e-12, 0), "tvi": (1e-9, 1e-12), "ohlcv": (1e-12, 0)}
 
 
 _ROW_LOCAL = [
@@ -303,25 +312,34 @@ _ROW_LOCAL = [
         {"name": "ew", "feature_definition": "ewma", "deps": ["mid"],
          "params": {"alpha": 0.3, "value_col": "mid_price"}},
         {"name": "imb", "feature_definition": "tvi", "params": {"window": "20s"}},
+        {"name": "bars", "feature_definition": "ohlcv", "params": {"window": "7s"}},
+        {"name": "bvol", "feature_definition": "volatility_stddev", "deps": ["bars"],
+         "params": {"window": "40s", "value_col": "close"}},
     ], True),
     (_ROW_LOCAL, False),  # no kernel carries state: the stateless form
 ], ids=["stateful", "row_local"])
 def test_run_stream_equals_batch_for_every_streaming_kernel(spark, tmp_path, features, trades):
-    """Every built-in per-event definition — mid_price, relative_spread,
-    volatility_stddev, diff, ewma and tvi — in one fused stream over 8
-    micro-batches == batch: 20% null bids and, in the stateful case, a
-    trade feed with null prices, amounts and sides and equal-ts peers."""
+    """Every built-in definition — mid_price, relative_spread,
+    volatility_stddev, diff, ewma, tvi and ohlcv, with a volatility over
+    the bars' close — in one fused stream over 8 micro-batches == batch:
+    20% null bids and, in the stateful case, a trade feed with null
+    prices, amounts and sides and equal-ts peers."""
+    from svoe_spark.plans.definitions import REGISTRY
+
     path = tmp_path / "quotes"
     n = _write_quotes(path, trades=trades)
     cfg = _quote_cfg(path, features)
     out = Featurizer(spark).run_stream(cfg, _quote_stream(spark, path))
-    assert out.columns == ["symbol", "ts", *[f"{f['name']}_value" for f in features]]
+    assert out.columns == ["symbol", "ts", *[
+        c for f in features for c in _stream_columns(f["name"], REGISTRY[f["feature_definition"]].outputs)
+    ]]
     rows = run_available_to_memory(out).collect()
     assert len(rows) == n
     _assert_stream_equals_batch(spark, cfg, rows, _TOL)
 
 
-_KERNEL_LESS_FD = """
+_USER_FDS = """
+import numpy as np
 from pyspark.sql import functions as F
 
 from svoe_spark.plans.definitions import FeatureDefinition
@@ -335,20 +353,31 @@ class HalvedMid(FeatureDefinition):
     def transform(cls, upstreams, params, keys):
         df = upstreams["upstream"]
         return df.select(*keys, "ts", (F.col("mid_price") / 2).alias("halved"))
+
+
+# a kernel that declares no state to carry between batches: batch only
+class RunningMax(FeatureDefinition):
+    name = "running_max"
+    dep_slots = ("upstream",)
+    outputs = ("max",)
+
+    @classmethod
+    def kernel(cls, ts, up, params, state=None):
+        return [np.fmax.accumulate(up[0])], ()
 """
 
 
 @pytest.mark.parametrize("feature", [
     {"name": "half", "feature_definition": "halved_mid", "deps": ["mid"]},
-    {"name": "bars", "feature_definition": "ohlcv", "params": {"price_col": "ask"}},
+    {"name": "peak", "feature_definition": "running_max", "deps": ["mid"]},
 ])
 def test_run_stream_rejects_batch_only_features(spark, tmp_path, feature):
-    """A kernel-less user definition and the window-bucket ohlcv have
-    no fused streaming form."""
+    """A kernel-less user definition and a user kernel that declares no
+    state (``state_fields = None``) have no fused streaming form."""
     path = tmp_path / "quotes"
     _write_quotes(path, files=[0])
-    defs = tmp_path / "kernel_less_fd.py"
-    defs.write_text(_KERNEL_LESS_FD)
+    defs = tmp_path / "user_fds.py"
+    defs.write_text(_USER_FDS)
     cfg = {**_quote_cfg(path, [{"name": "mid", "feature_definition": "mid_price"}, feature]),
            "definition_paths": [str(defs)]}
     with pytest.raises(ValueError, match="no fused streaming form"):

@@ -1,15 +1,16 @@
 """Property tests of the per-event window kernels (streaming.kernels
-and the tvi and diff definitions' kernels), Spark-free: any split of a
-series into micro-batches, carrying the state between them, equals a
-numpy two-pass stddev, a single-pass pandas ewm, and direct per-window
-tvi and diff over the whole series; tvi equals a DuckDB range frame."""
+and the tvi, diff and ohlcv definitions' kernels), Spark-free: any
+split of a series into micro-batches, carrying the state between them,
+equals a numpy two-pass stddev, a single-pass pandas ewm, direct
+per-window tvi and diff, and pandas bars as-of joined onto the events
+over the whole series; tvi equals a DuckDB range frame."""
 
 import duckdb
 import numpy as np
 import pandas as pd
 import pytest
 
-from svoe_spark.plans.definitions import Diff, TradeVolumeImbalance
+from svoe_spark.plans.definitions import OHLCV, Diff, TradeVolumeImbalance
 from svoe_spark.streaming.kernels import ewma, trailing_stddev
 
 RTOL = 1e-9
@@ -52,6 +53,38 @@ def direct_diff(ts, v, window):
     return out
 
 
+def pandas_bars(ts, price, amount, window):
+    """Per event: the last bar closed by its time, by pandas — bars of
+    ``groupby`` bucket ts // window (open / close the lowest / highest
+    non-null price among the bucket's first / last equal-ts events,
+    SQL sums, vwap NaN where the volume is 0) stamped at the bucket end,
+    then ``merge_asof`` onto the events."""
+    ev = pd.DataFrame({"ts": ts, "price": price, "amount": amount, "pa": price * amount})
+    ev["b"] = ev["ts"] // window
+    g = ev.groupby("b")
+    edge = lambda at: ev[ev["ts"] == g["ts"].transform(at)].groupby("b")["price"]  # noqa: E731
+    volume = g["amount"].sum(min_count=1)
+    bars = pd.DataFrame({
+        "open": edge("min").min(), "high": g["price"].max(), "low": g["price"].min(),
+        "close": edge("max").max(), "volume": volume,
+        "vwap": g["pa"].sum(min_count=1) / volume.where(volume != 0),
+        "num_trades": g.size().astype(float),
+    })
+    bars["ts"] = (bars.index + 1) * window
+    out = pd.merge_asof(ev[["ts"]], bars.reset_index(drop=True), on="ts")
+    return [out[c].to_numpy(dtype=float) for c in OHLCV.outputs]
+
+
+def assert_bars_equal(got, want):
+    """Prices and counts exact; volume and vwap, sums in another order, to RTOL."""
+    for name, g, w in zip(OHLCV.outputs, got, want):
+        if name in ("volume", "vwap"):
+            assert np.array_equal(np.isnan(g), np.isnan(w)), name
+            np.testing.assert_allclose(g, w, rtol=RTOL, atol=0, equal_nan=True, err_msg=name)
+        else:
+            assert np.array_equal(g, w, equal_nan=True), name
+
+
 def trades(rng, v, null_frac):
     """Trade inputs around price ``v``: amount and the side flag (1.0
     buy, 0.0 sell) with ``null_frac`` nulls each."""
@@ -64,19 +97,21 @@ def trades(rng, v, null_frac):
 
 
 def run_kernel(defn, ts, up, window, splits):
-    """``defn``'s kernel over the ``splits`` of (ts, up), carrying state."""
+    """``defn``'s kernel over the ``splits`` of (ts, up), carrying
+    state: one array per output."""
     state, out = None, []
     for a, b in splits:
         o, state = defn.kernel(ts[a:b], [x[a:b] for x in up], {"window": window / 1e9}, state)
-        assert len(o) == b - a
+        assert len(o) == len(defn.outputs) and all(len(x) == b - a for x in o)
         out.append(o)
-    return np.concatenate(out)
+    return [np.concatenate(x) for x in zip(*out)]
 
 
-def random_splits(rng, ts, n_batches):
+def random_splits(rng, ts, n_batches, split_peers=False):
     """Cut points between distinct timestamps (a micro-batch holds all
-    peers of its timestamps), with some empty batches mixed in."""
-    edges = np.flatnonzero(np.diff(ts)) + 1
+    peers of its timestamps) or, with ``split_peers``, anywhere, with
+    some empty batches mixed in."""
+    edges = np.arange(1, len(ts)) if split_peers else np.flatnonzero(np.diff(ts)) + 1
     cuts = np.sort(rng.choice(edges, size=min(n_batches, len(edges)), replace=False))
     cuts = np.concatenate([[0], cuts, cuts[: len(cuts) // 4], [len(ts)]])
     return [(a, b) for a, b in zip(np.sort(cuts)[:-1], np.sort(cuts)[1:])]
@@ -121,21 +156,28 @@ def test_splits_equal_one_pass(seed, null_frac, peers):
     amount, is_buy = trades(rng, v, null_frac)
     # ~40 events per window (~5 distinct stamps of ~8 peers each)
     window, alpha = (5_000 if peers else 2_000_000), 0.2
+    # an idle gap: seven empty windows (ohlcv buckets) mid-series
+    ts[len(ts) // 2 :] += 7 * window
     want_sd = two_pass_std(ts, v, window)
     want_ew = pd.Series(v).ewm(alpha=alpha, adjust=False).mean().to_numpy()
     want_tvi = direct_tvi(ts, v, amount, is_buy, window)
     want_diff = direct_diff(ts, v, window)
+    want_bars = pandas_bars(ts, v, amount, window)
     for n_batches in (0, 1, 7, 60):
         splits = random_splits(rng, ts, n_batches)
         got_sd, got_ew = run_split(ts, v, window, alpha, splits)
         assert_std_close(got_sd, want_sd)
         # ewma is bit-equal, nulls included
         assert np.array_equal(got_ew, want_ew, equal_nan=True)
-        got_tvi = run_kernel(TradeVolumeImbalance, ts, [v, amount, is_buy], window, splits)
+        (got_tvi,) = run_kernel(TradeVolumeImbalance, ts, [v, amount, is_buy], window, splits)
         np.testing.assert_allclose(got_tvi, want_tvi, rtol=RTOL, atol=1e-12)
         # diff reads two buffered values: exact, nulls included
-        got_diff = run_kernel(Diff, ts, [v], window, splits)
+        (got_diff,) = run_kernel(Diff, ts, [v], window, splits)
         assert np.array_equal(got_diff, want_diff, equal_nan=True)
+        # ohlcv: batch boundaries inside buckets, the open bucket carried;
+        # it shows closed bars only, so a batch may also end inside peers
+        for bar_splits in (splits, random_splits(rng, ts, n_batches, split_peers=True)):
+            assert_bars_equal(run_kernel(OHLCV, ts, [v, amount], window, bar_splits), want_bars)
 
 
 def test_peers_share_window():
@@ -158,10 +200,18 @@ def test_empty_batch_keeps_state():
     assert len(out) == 0 and np.isnan(new[0]) and new[1] == 0
     empty = np.empty(0)
     tvi_state = (np.array([1], dtype=np.int64), np.array([2.0]), np.array([0.0]))
-    out, new = TradeVolumeImbalance.kernel(empty.astype(np.int64), [empty] * 3, {}, tvi_state)
+    (out,), new = TradeVolumeImbalance.kernel(empty.astype(np.int64), [empty] * 3, {}, tvi_state)
     assert len(out) == 0 and [a.tolist() for a in new] == [[1], [2.0], [0.0]]
-    out, new = Diff.kernel(empty.astype(np.int64), [empty], {}, sd_state)
+    (out,), new = Diff.kernel(empty.astype(np.int64), [empty], {}, sd_state)
     assert len(out) == 0 and [a.tolist() for a in new] == [[1, 2], [1.0, 2.0]]
+    bars_state = (np.array([60, 70], dtype=np.int64), np.arange(7.0), np.full(7, np.nan))
+    out, new = OHLCV.kernel(empty.astype(np.int64), [empty] * 2, {}, bars_state)
+    assert [len(o) for o in out] == [0] * 7 and all(a is b for a, b in zip(new, bars_state))
+    # no event yet: an empty span, then the first batch starts a bucket
+    out, new = OHLCV.kernel(empty.astype(np.int64), [empty] * 2, {})
+    assert [len(o) for o in out] == [0] * 7 and len(new[0]) == 0
+    out, new = OHLCV.kernel(np.array([5], np.int64), [np.array([1.0])] * 2, {}, new)
+    assert np.isnan(out).all() and new[0].tolist() == [5, 5] and new[1][6] == 1
 
 
 def test_nulls_follow_batch():
@@ -208,7 +258,7 @@ def test_adversarial_long_buffer(window):
         splits = random_splits(rng, ts, n_batches)
         got, _ = run_split(ts, v, window, 0.5, splits)
         assert_std_close(got, want)
-        got_tvi = run_kernel(TradeVolumeImbalance, ts, [v, amount, is_buy], window, splits)
+        (got_tvi,) = run_kernel(TradeVolumeImbalance, ts, [v, amount, is_buy], window, splits)
         np.testing.assert_allclose(got_tvi, want_tvi, rtol=RTOL, atol=1e-12)
 
 
@@ -232,5 +282,47 @@ def test_tvi_equals_duckdb_range_frame():
               WINDOW w AS (ORDER BY ts RANGE BETWEEN {20 * 10**9} PRECEDING AND CURRENT ROW))
         ORDER BY i""").df()["tvi"].to_numpy()
     assert (np.diff(ts) == 0).sum() > n // 2 and np.isnan(price).any()
-    got, _ = TradeVolumeImbalance.kernel(ts, [price, amount, is_buy], {"window": "20s"})
+    (got,), _ = TradeVolumeImbalance.kernel(ts, [price, amount, is_buy], {"window": "20s"})
     np.testing.assert_allclose(got, want, rtol=RTOL, atol=1e-12)
+
+
+def test_ohlcv_shows_a_bar_from_its_bucket_end():
+    """Trades at 10:00:00 (100), 10:00:30 (101), 10:00:59 (200),
+    10:01:30 (102), 10:02:30 (103) and later, 1m bars: no bar before
+    10:01, and the 10:00 bar's close (the 10:00:59 trade) only from then
+    on."""
+    sec = np.array([0, 30, 59, 90, 150, 180, 181, 240])
+    ts = (36_000 + sec).astype(np.int64) * 1_000_000_000
+    price = np.array([100.0, 101.0, 200.0, 102.0, 103.0, np.nan, 3.0, 1.0])
+    amount = np.array([1.0, 2.0, 1.0, 0.0, np.nan, 2.0, -2.0, 0.0])
+    out, state = OHLCV.kernel(ts, [price, amount], {"window": "1m"})
+    bars = np.column_stack(out)
+    assert np.isnan(bars[:3]).all()
+    assert bars[3].tolist() == [100.0, 200.0, 100.0, 200.0, 4.0, 502.0 / 4, 3.0]
+    # the 10:01 bar: volume 0 gives a NULL vwap
+    assert np.array_equal(bars[4], [102.0, 102.0, 102.0, 102.0, 0.0, np.nan, 1.0], equal_nan=True)
+    # the 10:02 bar: a null amount adds no volume, and all-null amounts sum to NULL
+    assert np.array_equal(bars[5], [103.0, 103.0, 103.0, 103.0, np.nan, np.nan, 1.0], equal_nan=True)
+    # the 10:03 bar: signed amounts summing to 0 give a NULL vwap; its
+    # null-price trade counts, and adds to the volume only
+    assert np.array_equal(bars[7], [np.nan, 3.0, 3.0, 3.0, 0.0, np.nan, 2.0], equal_nan=True)
+    assert state[0].tolist() == [ts[7], ts[7]]
+
+
+def test_ohlcv_equals_pandas_bars():
+    """One pass over trades with 20% null prices and amounts, equal-ts
+    peers at bucket edges, zero amounts, idle gaps of several empty
+    buckets and times before the epoch == pandas_bars."""
+    rng = np.random.default_rng(23)
+    n, window = 4000, 10_000
+    ts = np.sort(rng.integers(-200, 2000, n)) * 1_000
+    ts[ts > 1_000_000] += 50 * window
+    price = np.round(100 + np.cumsum(rng.normal(0, 0.5, n)), 1)
+    amount = rng.choice([0.0, 1.0, 2.5, 3.0], n)
+    price[rng.random(n) < 0.2] = np.nan
+    amount[rng.random(n) < 0.2] = np.nan
+    assert (np.diff(ts) == 0).sum() > n // 2 and (ts < 0).any()
+    out, _ = OHLCV.kernel(ts, [price, amount], {"window": window / 1e9})
+    want = pandas_bars(ts, price, amount, window)
+    assert_bars_equal(out, want)
+    assert np.isnan(want[5]).any() and (~np.isnan(want[0])).sum() > n // 2

@@ -1,5 +1,4 @@
-"""Salted aggregation + streaming combine_latest + watermark/late-data
-semantics."""
+"""Salted aggregation + streaming combine_latest."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -88,45 +87,3 @@ def test_combine_latest_stream_equals_batch(spark, sf_small, tmp_path):
         for r in want.collect()
     }
     assert g == w and len(g) > 0
-
-
-def test_watermark_drops_late_data(spark, tmp_path):
-    """T5: the reference assumes ordered input; our watermark policy
-    makes lateness explicit — an event older than the watermark when
-    its window has already been finalized is dropped."""
-    import datetime as dt
-    import time
-
-    from svoe_spark.streaming.features import ohlcv_stream
-
-    base = dt.datetime(2024, 1, 1)
-    mk = lambda off, px: (base + dt.timedelta(seconds=off), "X", px, 1.0)  # noqa: E731
-    schema = "ts timestamp, symbol string, price double, amount double"
-    path = str(tmp_path / "late")
-    # batch 0: minutes 0 and 10; batch 1: minute 20 (the watermark used
-    # in batch N comes from batch N-1's max event time, so it reaches
-    # 19:50 only in batch 2); batch 2: a 20-minutes-late event
-    spark.createDataFrame([mk(0, 1.0), mk(600, 2.0)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    time.sleep(1.1)
-    spark.createDataFrame([mk(1200, 3.0)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-    time.sleep(1.1)
-    spark.createDataFrame([mk(5, 99.0)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    out = run_available_to_memory(
-        ohlcv_stream(stream, on="ts", by="symbol", window="1m", watermark="10 seconds")
-    ).collect()
-    by_min = {r["window_start"].minute: r for r in out if r["window_start"].hour == 0}
-    # minute-0 window was finalized before the late event arrived: the
-    # 99.0 print must NOT appear
-    assert by_min[0]["num_trades"] == 1 and by_min[0]["high"] == 1.0

@@ -1,8 +1,11 @@
 """Kappa equivalence (reference T6, the framework's core requirement):
 the SAME feature computed over a replayed stream must equal the batch
-computation. Plus stateful streaming ops: trailing stddev, running
-reduce, order-book reconstruction with state across micro-batches."""
+computation. Plus stateful streaming ops: OHLCV bars, trailing stddev,
+running reduce, order-book reconstruction with state across
+micro-batches."""
 
+import bisect
+import datetime
 import math
 
 import pytest
@@ -14,9 +17,10 @@ from svoe_spark.operators.orderbook import (
     synthetic_l2_updates,
 )
 from svoe_spark.operators.windows import ohlcv, sliding_stddev
+from svoe_spark.plans.featurizer import Featurizer
 from svoe_spark.queries import ticks
 from svoe_spark.sources.tables import load_table
-from svoe_spark.streaming.features import ohlcv_stream, trailing_stddev_stream
+from svoe_spark.streaming.features import trailing_stddev_stream
 from svoe_spark.streaming.sinks import run_available_to_memory
 from svoe_spark.streaming.sources import replay_parquet
 
@@ -36,26 +40,38 @@ def _rows(df, keycols):
 
 
 def test_ohlcv_stream_equals_batch(spark, sf_small, tick_parquet):
-    stream = replay_parquet(spark, tick_parquet)
-    out = run_available_to_memory(
-        ohlcv_stream(stream, on="ts", price="value", amount="qty",
-                     by="event_type", window="1h"),
-        output_mode="complete",  # append would hold back the final open windows
-    )
+    """``run_stream`` with ``ohlcv`` gives at each tick the last closed
+    bar: the batch ``windows.ohlcv`` bar stamped at its bucket end,
+    as-of joined onto the ticks."""
+    cfg = {"data_source": {"kind": "parquet", "path": tick_parquet}, "keys": ["event_type"],
+           "features": [{"name": "bars", "feature_definition": "ohlcv",
+                         "params": {"price_col": "value", "amount_col": "qty", "window": "1h"}}]}
+    stream = replay_parquet(spark, tick_parquet).select("event_type", "ts", "value", "qty")
+    out = run_available_to_memory(Featurizer(spark).run_stream(cfg, stream)).collect()
     batch = ohlcv(
         ticks(spark, sf_small), on="ts", price="value", amount="qty",
         by="event_type", window="1h",
-    )
-    got = _rows(out, ("event_type", "window_start"))
-    want = _rows(batch, ("event_type", "window_start"))
-    assert set(got) == set(want)
-    for k, w in want.items():
-        g = got[k]
+    ).collect()
+    hour = datetime.timedelta(hours=1)
+    bars = {}  # per key: (bucket ends, bars) sorted by end
+    for b in sorted(batch, key=lambda b: b["window_start"]):
+        ends, rows = bars.setdefault(b["event_type"], ([], []))
+        ends.append(b["window_start"] + hour)
+        rows.append(b)
+    assert len(out) == ticks(spark, sf_small).count()
+    closed = 0
+    for r in out:
+        ends, rows = bars[r["event_type"]]
+        i = bisect.bisect_right(ends, r["ts"]) - 1
+        if i < 0:
+            assert r["bars_num_trades"] is None or math.isnan(r["bars_num_trades"]), r
+            continue
+        closed += 1
+        w = rows[i]
         for col in ("open", "high", "low", "close", "volume", "num_trades"):
-            assert g[col] == w[col], (k, col)
-        assert g["vwap"] == pytest.approx(w["vwap"], rel=1e-12, abs=1e-12) or (
-            g["vwap"] is None and w["vwap"] is None
-        )
+            assert r[f"bars_{col}"] == w[col], (r, col)
+        assert r["bars_vwap"] == pytest.approx(w["vwap"], rel=1e-12, abs=1e-12)
+    assert closed > len(out) // 2
 
 
 def test_trailing_stddev_stream_equals_batch(spark, sf_small, tick_parquet):
