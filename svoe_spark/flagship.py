@@ -46,9 +46,10 @@ def flagship_streaming_scored(
     combine_latest -> served-model polling, feature_stream_graph.py +
     inference_loop.py):
 
-      1. the trailing-volatility feature runs as its own stateful
-         streaming query, materialized through the exactly-once
-         day-partitioned parquet block sink (S11);
+      1. the mid and trailing-volatility features run as their own
+         stateful streaming query (``Featurizer.run_stream``),
+         materialized through the exactly-once day-partitioned parquet
+         block sink (S11);
       2. the mid stream (stateless projection of the replayed source)
          and the materialized vol stream are tagged, unioned, and fused
          into the per-event inference vector by the combine_latest
@@ -73,7 +74,6 @@ def flagship_streaming_scored(
 
     from svoe_spark.sources.tables import load_table
     from svoe_spark.streaming.combine_stream import combine_latest_stream
-    from svoe_spark.streaming.features import trailing_stddev_stream
     from svoe_spark.streaming.sinks import run_available_to_memory, write_parquet_blocks
     from svoe_spark.streaming.sources import replay_parquet
 
@@ -87,15 +87,11 @@ def flagship_streaming_scored(
         "ts", "event_type", "value"
     ).orderBy("ts").coalesce(1).write.mode("overwrite").parquet(src_path)
 
-    # query 1: stateful vol feature -> exactly-once parquet block sink
+    # query 1: the stateful mid + vol features -> exactly-once parquet block sink
+    config = flagship_config(sf_dir)
+    config["features"] = [f for f in config["features"] if f["name"] in ("mid", "vol")]
     q = write_parquet_blocks(
-        trailing_stddev_stream(
-            replay_parquet(spark, src_path),
-            on="ts",
-            value="value",
-            by="event_type",
-            window="1h",
-        ),
+        Featurizer(spark).run_stream(config, replay_parquet(spark, src_path)),
         path=vol_path,
         checkpoint=ckpt,
         trigger={"availableNow": True},
@@ -110,7 +106,7 @@ def flagship_streaming_scored(
         F.col(col).cast("double").alias("value"),
     )
     mid = tag(replay_parquet(spark, src_path), "mid", "value")
-    vol = tag(replay_parquet(spark, vol_path), "vol", "volatility")
+    vol = tag(replay_parquet(spark, vol_path), "vol", "vol_value")
     vector = combine_latest_stream(
         mid.unionByName(vol), streams=["mid", "vol"], key="symbol"
     )

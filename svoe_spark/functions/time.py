@@ -4,13 +4,17 @@ The reference accepts duration strings like '1m'/'5s'/'100ms'
 (reference: svoe/common/time/utils.py:12-17) and aligns tumbling buckets
 to UTC midnight (svoe/common/time/utils.py:40-51). We keep the same
 string surface but do all arithmetic on Spark TimestampType / epoch
-doubles so Catalyst can push everything into codegen.
+doubles so Catalyst can push everything into codegen. Event time enters
+and leaves every per-key Python stage as int64 UTC µs (``to_micros`` /
+``from_micros``), never as session-zone wall time.
 """
 
 from __future__ import annotations
 
 import re
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -47,6 +51,29 @@ def epoch_seconds(ts: Column | str) -> Column:
     """
     c = F.col(ts) if isinstance(ts, str) else ts
     return c.cast("timestamp").cast("double")
+
+
+def to_micros(ts: str) -> Column:
+    """Event time as int64 µs since the epoch (UTC): the one form in
+    which it crosses into a per-key Python stage, which hands its
+    kernels ``micros_ns`` and returns these µs. An instant, so the
+    session time zone never shifts or reorders it; a NULL stays NULL."""
+    return F.unix_micros(F.col(ts).cast("timestamp"))
+
+
+def from_micros(us: str) -> Column:
+    """``to_micros``' inverse: the µs a Python stage returns, as the
+    TimestampType event time."""
+    return F.timestamp_micros(us)
+
+
+def micros_ns(us: pd.Series) -> np.ndarray:
+    """A Python stage's ``to_micros`` column (float64 with NaN when it
+    holds nulls) as the int64 ns of the kernels; a null reads as
+    INT64_MIN, NaT's value."""
+    ns = us.to_numpy(dtype=np.int64, na_value=0) * 1000
+    ns[us.isna().to_numpy()] = np.iinfo(np.int64).min
+    return ns
 
 
 def bucket_start(ts: Column | str, dur: str | int | float) -> Column:

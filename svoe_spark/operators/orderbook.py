@@ -18,6 +18,10 @@ instrument is inherently sequential (same as the reference); depth
 truncation bounds state and output size. The per-event-emission cost the
 reference measured at 300x (l2_snapshot_fd.py:65-66) is controlled the
 same way: `emit_every` bucket-samples emissions inside the operator.
+Every form hands its Python replay ``ts`` as int64 UTC µs
+(``functions.time.to_micros``) and rebuilds the timestamp from the µs
+it returns, so events replay in instant order whatever the session
+time zone.
 """
 
 from __future__ import annotations
@@ -37,10 +41,9 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
-from svoe_spark.functions.time import duration_to_seconds
+from svoe_spark.functions.time import duration_to_seconds, from_micros, micros_ns, to_micros
 
 LEVEL = StructType(
     [StructField("price", DoubleType()), StructField("size", DoubleType())]
@@ -48,10 +51,11 @@ LEVEL = StructType(
 
 
 def snapshot_schema(key_col: str = "symbol") -> StructType:
+    """The replay's output: ``ts`` as µs (``from_micros`` rebuilds it)."""
     return StructType(
         [
             StructField(key_col, StringType()),
-            StructField("ts", TimestampType()),
+            StructField("ts", LongType()),
             StructField("bids", ArrayType(LEVEL)),
             StructField("asks", ArrayType(LEVEL)),
             StructField("inconsistencies", IntegerType()),
@@ -163,7 +167,7 @@ def _acc_frame(acc: dict, key: str) -> pd.DataFrame:
     return pd.DataFrame(
         {
             key: pd.Series(acc["__key"], dtype="object"),
-            "ts": pd.Series(acc["ts"], dtype="datetime64[ns]"),
+            "ts": pd.Series(acc["ts"], dtype="Int64"),
             "bids": pd.Series(acc["bids"], dtype="object"),
             "asks": pd.Series(acc["asks"], dtype="object"),
             "inconsistencies": pd.Series(acc["inconsistencies"], dtype="int64"),
@@ -190,7 +194,7 @@ def _replay_into(
     # sorted-frame construction dominates the actual replay (profiled
     # ~3x the event loop). seq_col: deterministic tie-break for equal
     # timestamps (a plain ts sort is not stable across input orders).
-    ts_ns = pdf["ts"].astype("int64").to_numpy()
+    ts_ns = micros_ns(pdf["ts"])
     if seq_col:
         order = np.lexsort((pdf[seq_col].to_numpy(), ts_ns))
     else:
@@ -282,10 +286,10 @@ def reconstruct_book(
             _replay_into(g, _Book(), depth, every, k, seq_col, acc)
         return _acc_frame(acc, key)
 
-    bundled = df.withColumn(
+    bundled = df.withColumn("ts", to_micros("ts")).withColumn(
         "__bundle", F.pmod(F.xxhash64(F.col(key)), F.lit(nb))
     )
-    return bundled.groupBy("__bundle").applyInPandas(fn, schema=schema)
+    return bundled.groupBy("__bundle").applyInPandas(fn, schema=schema).withColumn("ts", from_micros("ts"))
 
 
 #: Above this many update rows on the hottest instrument, a single
@@ -400,7 +404,7 @@ _NEG_INF = float("-inf")
 
 def _summarize_segment(pdf: pd.DataFrame, seq_col: str | None):
     """One (key, bucket) segment -> boundary-state transfer summary."""
-    ts_ns = pdf["ts"].astype("int64").to_numpy()
+    ts_ns = micros_ns(pdf["ts"])
     if seq_col:
         order = np.lexsort((pdf[seq_col].to_numpy(), ts_ns))
     else:
@@ -475,7 +479,7 @@ def reconstruct_book_bucketed(
     in_cols = [key, "ts", "update_type", "orders"] + ([seq_col] if seq_col else [])
     ev = df.select(*in_cols).withColumn(
         "__bk", F.floor(F.unix_timestamp("ts") / F.lit(bucket_s)).cast("long")
-    )
+    ).withColumn("ts", to_micros("ts"))
 
     # ---- pass 1 (parallel over key x bucket): segment summaries
     sum_schema = StructType(
@@ -597,7 +601,7 @@ def reconstruct_book_bucketed(
     seed_rows = seeds.select(
         "__key",
         "__bk",
-        F.lit(None).cast("timestamp").alias("ts"),
+        F.lit(None).cast("long").alias("ts"),
         "update_type",
         "orders",
         *([F.lit(None).cast("double").alias("__seq")] if seq_col else []),
@@ -608,7 +612,7 @@ def reconstruct_book_bucketed(
         [
             StructField("__key", StringType()),
             StructField("__bk", LongType()),
-            StructField("ts", TimestampType()),
+            StructField("ts", LongType()),
             StructField("bids", ArrayType(LEVEL)),
             StructField("asks", ArrayType(LEVEL)),
             StructField("inc_rel", IntegerType()),
@@ -634,7 +638,7 @@ def reconstruct_book_bucketed(
             {
                 "__key": [key_tuple[0]],
                 "__bk": [key_tuple[1]],
-                "ts": [pd.NaT],
+                "ts": pd.Series([None], dtype="Int64"),
                 "bids": [[]],
                 "asks": [[]],
                 "inc_rel": [book.inconsistencies],
@@ -675,7 +679,7 @@ def reconstruct_book_bucketed(
         .join(F.broadcast(offsets), on=["__key", "__bk"])
         .select(
             F.col("__key").alias(key),
-            "ts",
+            from_micros("ts").alias("ts"),
             "bids",
             "asks",
             (F.col("inc_rel") + F.col("__off")).cast("int").alias("inconsistencies"),
@@ -760,12 +764,17 @@ def reconstruct_book_stream(
             )
         )
 
-    return df.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return (
+        df.select(key, to_micros("ts").alias("ts"), "update_type", "orders")
+        .groupBy(key)
+        .applyInPandasWithState(
+            fn,
+            outputStructType=schema,
+            stateStructType=state_schema,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        .withColumn("ts", from_micros("ts"))
     )
 
 

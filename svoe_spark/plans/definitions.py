@@ -12,8 +12,10 @@ Kernel contract, for definitions emitting values at every upstream
 event (every built-in): ``outputs`` names the value columns,
 ``inputs(columns, params)`` picks what the kernel reads out of the
 upstream's value columns, and ``kernel(ts, up, params, state=None)`` is
-numpy over one key's events sorted by event time (``ts`` int64 ns,
-``up`` those inputs as float64 arrays, NaN = null), returning one
+numpy over one key's events sorted by event time (``ts`` int64 UTC
+ns, whatever the session time zone: each per-key stage reads the
+event time as µs, ``functions.time.to_micros``; ``up`` those inputs as
+float64 arrays, NaN = null), returning one
 float64 array per output (NaN = undefined) and the state to carry into
 the key's next batch of events. The base ``transform`` runs the kernel
 per key, so a kernel definition needs no transform of its own. An
@@ -45,7 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
-from svoe_spark.functions.time import duration_ns
+from svoe_spark.functions.time import duration_ns, from_micros, micros_ns, to_micros
 from svoe_spark.streaming.kernels import closed_bars, ewma, trailing_stddev, window_buffer, window_sums
 
 REGISTRY: dict[str, type["FeatureDefinition"]] = {}
@@ -104,22 +106,22 @@ def per_key_map(df: DataFrame, keys: list[str], inputs: list[str], outputs: list
     ``project_inputs``). Returns (keys, ts, *outputs) as doubles, NaN
     read as NULL; a boolean ``"__keep"`` entry in fn's result drops the
     rows it marks False. Each key's rows sit in one pandas frame on one
-    worker."""
+    worker; ``ts`` crosses as UTC µs (``functions.time.to_micros``)."""
     schema = StructType(
-        [df.schema[c] for c in (*keys, "ts")] + [StructField(c, DoubleType()) for c in outputs]
+        [df.schema[c] for c in keys] + [StructField("ts", LongType())]
+        + [StructField(c, DoubleType()) for c in outputs]
     )
-    df, names = project_inputs(df, [*keys, "ts"], inputs)
+    df, names = project_inputs(df.withColumn("ts", to_micros("ts")), [*keys, "ts"], inputs)
 
     # no type hints: partial ones make PySpark warn it cannot infer the eval type
     def per_key(pdf):
         pdf = pdf.sort_values("ts", kind="stable")
-        ts = pdf["ts"].to_numpy(dtype="datetime64[ns]").view("int64")
-        res = fn(ts, [pdf[n].to_numpy(dtype=float) for n in names])
+        res = fn(micros_ns(pdf["ts"]), [pdf[n].to_numpy(dtype=float) for n in names])
         keep = res.pop("__keep", slice(None))
         out = {c: pdf[c].to_numpy()[keep] for c in (*keys, "ts")}
         return pd.DataFrame({**out, **{c: res[c][keep] for c in outputs}})
 
-    return df.groupBy(*keys).applyInPandas(per_key, schema=schema)
+    return df.groupBy(*keys).applyInPandas(per_key, schema=schema).withColumn("ts", from_micros("ts"))
 
 
 def kernel_inputs(name: str, defn, columns: list[str], params: dict) -> list[str]:
@@ -238,8 +240,8 @@ class VolatilityStddev(FeatureDefinition):
     volatility_stddev_fd.py:30-56): the shared kernel
     `streaming.kernels.trailing_stddev` over [ts - window, ts], peers
     included. Batch runs it per key with no carried state; the stream
-    (``Featurizer.run_stream``, ``trailing_stddev_stream``) per
-    micro-batch, carrying its window buffer."""
+    (``Featurizer.run_stream``) per micro-batch, carrying its window
+    buffer."""
 
     name = "volatility_stddev"
     dep_slots = ("mid_price",)

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -33,10 +33,6 @@ class Feature:
         canon = tuple(sorted((k, json.dumps(v, sort_keys=True)) for k, v in (params or {}).items()))
         return Feature(definition, canon, tuple(deps or ()), name)
 
-    @property
-    def params_dict(self) -> dict:
-        return {k: json.loads(v) for k, v in self.params}
-
     def key(self) -> str:
         """Content hash — stable across processes (no Python id()s)."""
         payload = json.dumps(
@@ -44,22 +40,3 @@ class Feature:
         )
         return hashlib.sha1(payload.encode()).hexdigest()[:16]
 
-    @property
-    def display_name(self) -> str:
-        return self.name or f"{self.definition}-{self.key()[:6]}"
-
-    def walk_postorder(self):
-        for d in self.deps:
-            yield from d.walk_postorder()
-        yield self
-
-
-@dataclass
-class FeatureCatalog:
-    """Dedup map from content key -> Feature (reference
-    feature_tree.py:176-179)."""
-
-    _by_key: dict[str, Feature] = field(default_factory=dict)
-
-    def intern(self, f: Feature) -> Feature:
-        return self._by_key.setdefault(f.key(), f)

@@ -6,12 +6,16 @@ NotImplementedError).
 Plain streaming groupBy can't emit per-update rows; this is
 applyInPandasWithState with a numeric accumulator vector. Supported
 reduces: sum, count, min, max, last (enough to cover the reference's
-lambda-reduce uses; arbitrary Python folds fit the same template)."""
+lambda-reduce uses; arbitrary Python folds fit the same template).
+sum/min/max skip nulls as SQL's do (``combine.running_reduce``): NULL
+until the key's first non-null value; count counts rows."""
 
 from __future__ import annotations
 
+import math
 from typing import Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -25,7 +29,8 @@ from pyspark.sql.types import (
 
 from svoe_spark.streaming.chunks import batch_frame
 
-_INITS = {"sum": 0.0, "count": 0.0, "min": float("inf"), "max": float("-inf"), "last": float("nan")}
+# NaN: no non-null value yet
+_INITS = {"sum": math.nan, "count": 0.0, "min": math.nan, "max": math.nan, "last": math.nan}
 
 
 def keyed_reduce_stream(
@@ -65,16 +70,16 @@ def keyed_reduce_stream(
         out = {key: key_tuple[0], on: pdf[on], value: vals}
         cols = {}
         for i, op in enumerate(ops):
-            if op == "sum":
-                series = vals.cumsum() + accs[i]
-            elif op == "count":
+            if op == "count":
                 series = pd.Series(range(1, len(vals) + 1), index=vals.index, dtype=float) + accs[i]
-            elif op == "min":
-                series = vals.cummin().clip(upper=accs[i])
-            elif op == "max":
-                series = vals.cummax().clip(lower=accs[i])
-            else:  # last
+            elif op == "last":
                 series = vals
+            else:  # sum/min/max: the batch's running op over its non-null values, then the carried one
+                series = getattr(vals, f"cum{op}")().ffill()
+                if op != "sum":
+                    series = getattr(np, f"f{op}")(series, accs[i])  # fmin/fmax skip a NaN side
+                elif not math.isnan(accs[i]):
+                    series = series.fillna(0) + accs[i]
             accs[i] = float(series.iloc[-1]) if len(series) else accs[i]
             cols[f"{op}_{value}"] = series
         out.update(cols)

@@ -3,7 +3,7 @@ streaming forward and nearest matches (VERDICT r6 ask 4; state bounding
 and native value types: VERDICT r7 asks 4-5).
 
 The backward as-of is purely causal (the flagship feature stream
-already computes it: `streaming/features.py`). Forward and nearest
+already computes it: `Featurizer.run_stream`). Forward and nearest
 need the first right observation AT-OR-AFTER a left row — a DELAY, not
 an impossibility, exactly like the linear-interpolation gapfill
 (`streaming/resample_stream.py`): a left row's match is computable the
@@ -76,7 +76,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from svoe_spark.functions.time import duration_to_seconds
+from svoe_spark.functions.time import duration_to_seconds, from_micros, to_micros
 from svoe_spark.streaming.chunks import batch_frame
 
 
@@ -129,14 +129,14 @@ def _tagged_union(
     l_ = left.select(
         F.col(by),
         F.col(on).alias("__ts"),
-        F.unix_micros(F.col(on)).alias("__us"),
+        to_micros(on).alias("__us"),
         F.lit(1).cast("int").alias("__side"),
         F.lit(None).cast(vstruct).alias("__v"),
     )
     r_ = right.select(
         F.col(by),
         F.col(on).alias("__ts"),
-        F.unix_micros(F.col(on)).alias("__us"),
+        to_micros(on).alias("__us"),
         F.lit(0).cast("int").alias("__side"),
         F.struct(
             *[
@@ -353,7 +353,7 @@ def asof_forward_stream(
         outputMode="append",
         timeoutConf=timeout_conf,
     )
-    return res.select(by, F.timestamp_micros("ts_us").alias(on), *names)
+    return res.select(by, from_micros("ts_us").alias(on), *names)
 
 
 def asof_nearest_stream(
@@ -522,4 +522,4 @@ def asof_nearest_stream(
         outputMode="append",
         timeoutConf=timeout_conf,
     )
-    return res.select(by, F.timestamp_micros("ts_us").alias(on), *names)
+    return res.select(by, from_micros("ts_us").alias(on), *names)

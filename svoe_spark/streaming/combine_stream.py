@@ -4,7 +4,8 @@ input tick carrying the latest value of every feature stream — the live
 inference vector.
 
 applyInPandasWithState keyed by instrument; state = one latest value
-per stream (fixed, tiny). Assumes per-key in-order delivery (T5)."""
+per stream (fixed, tiny); event time crosses as UTC µs
+(``functions.time.to_micros``). Assumes per-key in-order delivery (T5)."""
 
 from __future__ import annotations
 
@@ -14,8 +15,9 @@ from typing import Iterable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import DoubleType, StringType, StructField, StructType, TimestampType
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
+from svoe_spark.functions.time import from_micros, to_micros
 from svoe_spark.streaming.chunks import batch_frame
 
 
@@ -37,7 +39,7 @@ def combine_latest_stream(
     out_schema = StructType(
         [
             StructField(key, df.schema[key].dataType),
-            StructField(on, TimestampType()),
+            StructField(on, LongType()),
             StructField(stream_col, StringType()),
             *[StructField(f"{s}_value", DoubleType()) for s in streams],
         ]
@@ -71,7 +73,7 @@ def combine_latest_stream(
         state.update(tuple(latest))
 
     return (
-        df.select(key, on, stream_col, value_col)
+        df.select(key, to_micros(on).alias(on), stream_col, value_col)
         .groupBy(key)
         .applyInPandasWithState(
             fn,
@@ -80,4 +82,5 @@ def combine_latest_stream(
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
+        .withColumn(on, from_micros(on))
     )

@@ -19,8 +19,9 @@ null count), per ``ohlcv`` its open bucket's partial aggregates and last
 closed bar; row-local kernels carry none. A key's micro-batch crosses
 the Python/JVM boundary once, not per event: array state as
 little-endian bytes (``state_codec``; checkpoints written before do not
-resume), output as packed rows of arrays (``ts`` as int64 µs, NaT as
-INT64_MIN, back to NULL) the JVM expands with ``inline``.
+resume), output as packed rows of arrays the JVM expands with
+``inline``. Event time crosses both ways as int64 UTC µs
+(``functions.time.to_micros``), never as session-zone wall time.
 """
 
 from __future__ import annotations
@@ -30,8 +31,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
-from pyspark.sql.types import ArrayType, BinaryType, DoubleType, LongType, StructField, StructType, TimestampType
+from pyspark.sql.types import ArrayType, BinaryType, DoubleType, LongType, StructField, StructType
 
+from svoe_spark.functions.time import from_micros, micros_ns, to_micros
 from svoe_spark.plans.definitions import KernelStep, project_inputs, run_plan, source_inputs
 from svoe_spark.streaming.chunks import batch_frame
 
@@ -65,7 +67,7 @@ def feature_vector_stream(
     applyInPandasWithState with an EMPTY state struct ('head of empty
     list'), and row-local kernels need no event-time order."""
     source_cols = source_inputs(plan)
-    src, names = project_inputs(src, [key, on], source_cols)
+    src, names = project_inputs(src.withColumn(on, to_micros(on)), [key, on], source_cols)
     value_cols = {f"{s.name}_{o if len(s.columns) > 1 else 'value'}": c
                   for s in plan for o, c in zip(s.defn.outputs, s.columns)}
 
@@ -76,25 +78,24 @@ def feature_vector_stream(
     state_schema, encode, decode = state_codec([(f"{f}_{s.name}", t) for s in plan for f, t in s.defn.state_fields])
 
     def advance(key_value, pdf, carried):
-        ts = pdf[on].to_numpy(dtype="datetime64[ns]").view("int64")
         vals = {c: pdf[n].to_numpy(dtype=float) for c, n in zip(source_cols, names)}
-        new_state = run_plan(plan, ts, vals, carried)
+        new_state = run_plan(plan, micros_ns(pdf[on]), vals, carried)
         out = pd.DataFrame({key: key_value, on: pdf[on], **{c: vals[col] for c, col in value_cols.items()}})
         return out, new_state
 
     if not state_schema.fields:
         return src.mapInPandas(
             lambda pdfs: (advance(pdf[key], pdf, None)[0] for pdf in pdfs),
-            schema=schema(TimestampType(), DoubleType()),
-        )
+            schema=schema(LongType(), DoubleType()),
+        ).withColumn(on, from_micros(on))
     cap = PACKED_ROW_EVENTS  # bound here: the workers see the driver's value
 
     def fn(key_tuple, pdfs, state):
         # one frame, one sort: chunk arrival order is fetch order, not event time
         pdf = batch_frame(pdfs, [on], columns=[on, *names])
         out, new_state = advance(key_tuple[0], pdf, decode(state.get) if state.exists else None)
-        cols = {on: out[on].to_numpy(dtype="datetime64[us]").view("int64"),
-                **{c: out[c].to_numpy() for c in value_cols}}
+        # Int64: a null ts packs as None, not as a float NaN
+        cols = {on: out[on].astype("Int64").array, **{c: out[c].to_numpy() for c in value_cols}}
         starts = range(0, len(out), cap)
         yield pd.DataFrame({key: [key_tuple[0]] * len(starts),
                             **{c: [x[i : i + cap].tolist() for i in starts] for c, x in cols.items()}})
@@ -107,9 +108,4 @@ def feature_vector_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    # the handler's ts is wall time in the zone the query runs in. A DST fall-back hour's two
-    # instants of one wall time both get the earlier offset (batch applyInPandas: the later).
-    ts = F.to_utc_timestamp(F.timestamp_micros(on), F.current_timezone())
-    return packed.select(key, F.inline(F.arrays_zip(on, *value_cols))).select(
-        key, F.when(F.col(on) != np.iinfo(np.int64).min, ts).alias(on), *value_cols
-    )
+    return packed.select(key, F.inline(F.arrays_zip(on, *value_cols))).withColumn(on, from_micros(on))

@@ -1,9 +1,12 @@
 """Per-event window kernels: the one definition of trailing stddev,
 ewma, closed OHLCV bars and the trailing-window buffer, shared by the
-online operator (streaming.feature_vector, which trailing_stddev_stream
-also runs) and the batch feature definitions.
+online operator (streaming.feature_vector) and the batch feature
+definitions.
 
-A kernel maps one key's batch of events, sorted by event time, and the
+A kernel maps one key's batch of events, sorted by event time (int64
+UTC ns, the instant: both paths read it as µs, never as session-zone
+wall time, so a DST fall-back hour keeps its order and ``closed_bars``
+aligns to UTC midnight in any session zone), and the
 state carried from the key's previous batch to (outputs, new state):
 any split of a series into consecutive batches gives the outputs of one
 pass over the whole series. State contracts:

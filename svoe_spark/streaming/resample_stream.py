@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from svoe_spark.functions.time import from_micros, to_micros
 from svoe_spark.operators.resample import _grid_step
 from svoe_spark.streaming.chunks import batch_frame
 
@@ -112,7 +113,7 @@ def resample_ffill_stream(
 
     src = df.select(
         F.col(by),
-        F.unix_micros(F.col(on)).alias("__sec"),
+        to_micros(on).alias("__sec"),
         F.col(value_col).cast("double").alias("__v"),
     )
     out = src.groupBy(by).applyInPandasWithState(
@@ -123,7 +124,7 @@ def resample_ffill_stream(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     return out.select(
-        by, F.timestamp_micros("ts_us").alias(on), "locf"
+        by, from_micros("ts_us").alias(on), "locf"
     )
 
 
@@ -233,7 +234,7 @@ def resample_interpolate_stream(
 
     src = df.select(
         F.col(by),
-        F.unix_micros(F.col(on)).alias("__sec"),
+        to_micros(on).alias("__sec"),
         F.col(value_col).cast("double").alias("__v"),
     )
     out = src.groupBy(by).applyInPandasWithState(
@@ -244,5 +245,5 @@ def resample_interpolate_stream(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     return out.select(
-        by, F.timestamp_micros("ts_us").alias(on), "locf", "interp"
+        by, from_micros("ts_us").alias(on), "locf", "interp"
     )

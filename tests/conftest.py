@@ -1,3 +1,5 @@
+import contextlib
+
 import pytest
 
 from svoe_spark.session import get_spark
@@ -36,3 +38,15 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_mid():
     return SF_MID
+
+
+@contextlib.contextmanager
+def session_time_zone(spark, zone: str):
+    """Run the block with ``spark.sql.session.timeZone`` = ``zone``, and
+    always restore it: the tests share one session."""
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)

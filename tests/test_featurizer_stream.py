@@ -600,12 +600,13 @@ def test_state_codec_round_trips_every_state_field_type():
 
 
 def test_run_stream_maps_ts_back_in_the_zone_the_query_runs_in(spark, tmp_path):
-    """The handler sees ts as wall time in the session zone, here set
-    after the plan is built: outside a DST fall-back hour every event
-    keeps its instant; inside it, the two instants of one wall time both
-    come out at the earlier (daylight) offset."""
+    """The session zone, here set after the plan is built, does not
+    touch event time: the handler reads it as UTC µs, so every event
+    keeps its instant, including the two that share a wall time in the
+    DST fall-back hour."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from conftest import session_time_zone
     from pyspark.sql import functions as F
 
     # America/New_York falls back at 2024-11-03 06:00 UTC (01:00-02:00 local repeats)
@@ -619,16 +620,10 @@ def test_run_stream_maps_ts_back_in_the_zone_the_query_runs_in(spark, tmp_path):
         "ask": pa.array([1.0, 2.0, 3.0, 4.0]),
     }), path / "part-000.parquet")
     out = Featurizer(spark).run_stream(_quote_cfg(path, _STATEFUL), _quote_stream(spark, path))
-    old = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
+    with session_time_zone(spark, "America/New_York"):
         rows = run_available_to_memory(out).select(
             "mid_value", F.unix_micros("ts").alias("us")
         ).collect()
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", old)
     epoch = datetime.datetime(1970, 1, 1)
     us = [(t - epoch) // datetime.timedelta(microseconds=1) for t in utc]
-    assert sorted((r["mid_value"], r["us"]) for r in rows) == [
-        (1.0, us[0]), (2.0, us[1]), (3.0, us[1]), (4.0, us[3])
-    ]
+    assert sorted((r["mid_value"], r["us"]) for r in rows) == [(1.0 + i, u) for i, u in enumerate(us)]

@@ -20,7 +20,6 @@ from svoe_spark.operators.windows import ohlcv, sliding_stddev
 from svoe_spark.plans.featurizer import Featurizer
 from svoe_spark.queries import ticks
 from svoe_spark.sources.tables import load_table
-from svoe_spark.streaming.features import trailing_stddev_stream
 from svoe_spark.streaming.sinks import run_available_to_memory
 from svoe_spark.streaming.sources import replay_parquet
 
@@ -75,10 +74,15 @@ def test_ohlcv_stream_equals_batch(spark, sf_small, tick_parquet):
 
 
 def test_trailing_stddev_stream_equals_batch(spark, sf_small, tick_parquet):
+    """``run_stream`` of ``volatility_stddev`` over the tick value gives
+    the batch ``windows.sliding_stddev`` at every tick."""
+    cfg = {"data_source": {"kind": "parquet", "path": tick_parquet}, "keys": ["event_type"],
+           "features": [{"name": "mid", "feature_definition": "mid_price", "params": {"price_col": "value"}},
+                        {"name": "volatility", "feature_definition": "volatility_stddev",
+                         "deps": ["mid"], "params": {"window": "1h"}}]}
     stream = replay_parquet(spark, tick_parquet).select("event_type", "ts", "value")
-    out = run_available_to_memory(
-        trailing_stddev_stream(stream, on="ts", value="value",
-                               by="event_type", window="1h")
+    out = run_available_to_memory(Featurizer(spark).run_stream(cfg, stream)).withColumnRenamed(
+        "volatility_value", "volatility"
     )
     batch = sliding_stddev(
         ticks(spark, sf_small).select("event_type", "ts", "value"),
@@ -201,6 +205,48 @@ def test_running_reduce_stream(spark, sf_small, tick_parquet):
     for r in rows:
         run += r["value"]
         assert r["sum_value"] == pytest.approx(run)
+
+
+def test_running_reduce_stream_skips_nulls_across_batches(spark, tmp_path):
+    """Two files replayed as two micro-batches, the first ending in a
+    null value: every running op equals ``combine.running_reduce``'s
+    SQL aggregates, whose sum/min/max skip nulls."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from svoe_spark.operators.combine import running_reduce
+    from svoe_spark.streaming.aggregate import keyed_reduce_stream
+
+    path = tmp_path / "vals"
+    path.mkdir()
+    files = [  # (symbol, second, value) per file
+        [("s", 0, 1.0), ("s", 1, None), ("m", 0, 5.0), ("m", 1, None), ("n", 0, None)],
+        [("s", 2, 2.0), ("m", 2, 1.0), ("m", 3, 7.0), ("n", 1, None), ("n", 2, 3.0)],
+    ]
+    for j, rows in enumerate(files):
+        sym, sec, val = zip(*rows)
+        f = path / f"part-{j}.parquet"
+        pq.write_table(pa.table({
+            "symbol": pa.array(sym),
+            "ts": pa.array([s * 1_000_000 for s in sec], pa.timestamp("us", tz="UTC")),
+            "value": pa.array(val, pa.float64()),
+        }), f)
+        os.utime(f, (1_000_000 + j, 1_000_000 + j))
+    ops = ["sum", "count", "min", "max", "last"]
+    stream = spark.readStream.schema(spark.read.parquet(str(path)).schema).option(
+        "maxFilesPerTrigger", 1).parquet(str(path))
+    got = run_available_to_memory(keyed_reduce_stream(stream, value="value", ops=ops))
+    want = running_reduce(spark.read.parquet(str(path)), {
+        "sum_value": F.sum("value"), "count_value": F.count(F.lit(1)),
+        "min_value": F.min("value"), "max_value": F.max("value"), "last_value": F.last("value"),
+    }, on="ts", by="symbol")
+    cols = ["symbol", "ts", *[f"{op}_value" for op in ops]]
+    nan_to_none = lambda r: tuple(None if isinstance(x, float) and math.isnan(x) else x for x in r)  # noqa: E731
+    assert sorted(map(nan_to_none, got.select(cols).collect())) == sorted(
+        map(nan_to_none, want.select(cols).collect())
+    )
 
 
 def test_stream_exact_dedup_equals_batch(spark, sf_small, tmp_path):
