@@ -42,22 +42,28 @@ def time_split(
     )
 
 
+def _fit(
+    train: DataFrame, feature_cols: list[str], label_col: str, kind: str, **params
+) -> PipelineModel:
+    """Assemble features, drop rows with missing values (warmup windows
+    produce nulls), fit the ``kind`` estimator with ``params``."""
+    assembler = VectorAssembler(
+        inputCols=feature_cols, outputCol="features", handleInvalid="skip"
+    )
+    estimator = GBTRegressor if kind == "gbt" else LinearRegression
+    est = estimator(featuresCol="features", labelCol=label_col, **params)
+    return Pipeline(stages=[assembler, est]).fit(train.na.drop(subset=feature_cols + [label_col]))
+
+
 def train_regressor(
     train: DataFrame,
     feature_cols: list[str],
     label_col: str,
     kind: str = "linear",
 ) -> PipelineModel:
-    """Assemble features, drop rows with missing values (warmup windows
-    produce nulls), fit."""
-    assembler = VectorAssembler(
-        inputCols=feature_cols, outputCol="features", handleInvalid="skip"
-    )
-    if kind == "gbt":
-        est = GBTRegressor(featuresCol="features", labelCol=label_col, maxIter=20)
-    else:
-        est = LinearRegression(featuresCol="features", labelCol=label_col)
-    return Pipeline(stages=[assembler, est]).fit(train.na.drop(subset=feature_cols + [label_col]))
+    """The ``kind`` regressor with its default parameters, fit on the
+    rows of ``train`` with no missing feature or label."""
+    return _fit(train, feature_cols, label_col, kind)
 
 
 def score(model: PipelineModel, df: DataFrame) -> DataFrame:
@@ -97,16 +103,7 @@ def best_model(
     best: tuple[float, PipelineModel, dict] | None = None
     clean_valid = valid.na.drop(subset=feature_cols + [label_col])
     for params in grid:
-        assembler = VectorAssembler(
-            inputCols=feature_cols, outputCol="features", handleInvalid="skip"
-        )
-        if kind == "gbt":
-            est = GBTRegressor(featuresCol="features", labelCol=label_col, **params)
-        else:
-            est = LinearRegression(featuresCol="features", labelCol=label_col, **params)
-        model = Pipeline(stages=[assembler, est]).fit(
-            train.na.drop(subset=feature_cols + [label_col])
-        )
+        model = _fit(train, feature_cols, label_col, kind, **params)
         metric = r2(model.transform(clean_valid), label_col)
         if best is None or metric > best[0]:
             best = (metric, model, params)

@@ -20,9 +20,7 @@ Scale shape: one window partitioned by the series key — parallel
 across keys, no driver state, no iteration. For a SINGLE global
 series too hot for one task, decompose the prefix sum with
 ``curation.global_cumsum`` (bucket prefix decomposition) and apply the
-same identity on top. The streaming twin (`streaming/
-changepoint_stream.py`) carries the recursion with four longs of
-state per key.
+same identity on top.
 """
 
 from __future__ import annotations

@@ -8,7 +8,12 @@ applyInPandasWithState with a numeric accumulator vector. Supported
 reduces: sum, count, min, max, last (enough to cover the reference's
 lambda-reduce uses; arbitrary Python folds fit the same template).
 sum/min/max skip nulls as SQL's do (``combine.running_reduce``): NULL
-until the key's first non-null value; count counts rows."""
+until the key's first non-null value; count counts rows.
+
+Every handler here sorts and returns event time as UTC µs
+(``functions.time.to_micros``), so a session time zone's DST fall-back
+hour neither reorders nor restamps its events; the states hold no
+times."""
 
 from __future__ import annotations
 
@@ -19,14 +24,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from svoe_spark.functions.time import from_micros, to_micros
 from svoe_spark.streaming.chunks import batch_frame
 
 # NaN: no non-null value yet
@@ -49,7 +49,7 @@ def keyed_reduce_stream(
     out_schema = StructType(
         [
             StructField(key, df.schema[key].dataType),
-            StructField(on, TimestampType()),
+            StructField(on, LongType()),
             StructField(value, DoubleType()),
             *[StructField(f"{op}_{value}", DoubleType()) for op in ops],
         ]
@@ -87,7 +87,7 @@ def keyed_reduce_stream(
         state.update(tuple(accs))
 
     return (
-        df.select(key, on, value)
+        df.select(key, to_micros(on).alias(on), value)
         .groupBy(key)
         .applyInPandasWithState(
             fn,
@@ -96,6 +96,7 @@ def keyed_reduce_stream(
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
+        .withColumn(on, from_micros(on))
     )
 
 
@@ -126,7 +127,7 @@ def drawdown_stream(
     out_schema = StructType(
         [
             StructField(key, df.schema[key].dataType),
-            StructField(on, TimestampType()),
+            StructField(on, LongType()),
             *extra,
             StructField(value, DoubleType()),
             StructField("peak", DoubleType()),
@@ -162,7 +163,7 @@ def drawdown_stream(
         state.update((peak, max_dd))
 
     return (
-        df.select(key, on, *([tiebreak] if tiebreak is not None else []), value)
+        df.select(key, to_micros(on).alias(on), *sort_cols[1:], value)
         .groupBy(key)
         .applyInPandasWithState(
             fn,
@@ -171,6 +172,7 @@ def drawdown_stream(
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
+        .withColumn(on, from_micros(on))
     )
 
 
@@ -203,7 +205,7 @@ def ofi_stream(
     out_schema = StructType(
         [
             StructField(key, df.schema[key].dataType),
-            StructField(on, TimestampType()),
+            StructField(on, LongType()),
             *extra,
             StructField("e_ofi", LongType()),
         ]
@@ -255,7 +257,7 @@ def ofi_stream(
             )
 
     return (
-        df.select(key, on, *([tiebreak] if tiebreak is not None else []), *cols)
+        df.select(key, to_micros(on).alias(on), *sort_cols[1:], *cols)
         .groupBy(key)
         .applyInPandasWithState(
             fn,
@@ -264,4 +266,5 @@ def ofi_stream(
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
+        .withColumn(on, from_micros(on))
     )

@@ -5,11 +5,10 @@ and native value types: VERDICT r7 asks 4-5).
 The backward as-of is purely causal (the flagship feature stream
 already computes it: `Featurizer.run_stream`). Forward and nearest
 need the first right observation AT-OR-AFTER a left row — a DELAY, not
-an impossibility, exactly like the linear-interpolation gapfill
-(`streaming/resample_stream.py`): a left row's match is computable the
-moment the gap-CLOSING right observation arrives, so each left row is
-held as pending state and emitted FINAL (no retraction, no watermark
-hold) on the first right row at-or-after it.
+an impossibility: a left row's match is computable the moment the
+gap-CLOSING right observation arrives, so each left row is held as
+pending state and emitted FINAL (no retraction, no watermark hold) on
+the first right row at-or-after it.
 
 Why stream == batch exactly on closed rows (the equivalence tests
 drive both): processing (key, ts)-ordered events with right rows

@@ -8,7 +8,7 @@ from svoe_spark.consumers.backtest import (
     run_backtest,
     run_backtest_time_split,
 )
-from svoe_spark.consumers.trainer import r2, score, time_split, train_regressor
+from svoe_spark.consumers.trainer import best_model, r2, score, time_split, train_regressor
 from svoe_spark.plans.featurizer import Featurizer
 from svoe_spark.sources.synthetic import sine_mid_price
 
@@ -132,6 +132,39 @@ def test_trainer_end_to_end(spark):
     scored = score(model, test.na.drop(subset=feature_cols + [label]))
     # a smooth sine is highly predictable from level+momentum
     assert r2(scored, label) > 0.9
+
+
+def test_best_model_picks_the_grid_point_with_the_highest_valid_r2(spark):
+    """On a seeded frame with more noise features than signal, the
+    linear grid's points score differently on the validation split;
+    ``best_model`` returns the first point with the highest r2, the same
+    as fitting each point by hand."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import VectorAssembler
+    from pyspark.ml.regression import LinearRegression
+
+    rng = np.random.default_rng(7)
+    cols = [f"x{i}" for i in range(8)]
+
+    def frame(n):
+        pdf = pd.DataFrame(rng.normal(size=(n, len(cols))), columns=cols)
+        pdf["y"] = pdf["x0"] + rng.normal(scale=2.0, size=n)
+        return spark.createDataFrame(pdf)
+
+    train, valid = frame(24), frame(200)
+    grid = [{"regParam": rp, "elasticNetParam": en} for rp in (0.0, 0.01, 0.1) for en in (0.0, 0.5)]
+    by_hand = []
+    for params in grid:
+        stages = [VectorAssembler(inputCols=cols, outputCol="features"),
+                  LinearRegression(featuresCol="features", labelCol="y", **params)]
+        by_hand.append(r2(Pipeline(stages=stages).fit(train).transform(valid), "y"))
+    best = int(np.argmax(by_hand))
+    assert len(set(by_hand)) > 2  # the grid matters on this frame
+    model, info = best_model(train, valid, cols, "y")
+    assert info == {"params": grid[best], "valid_r2": by_hand[best]}
+    assert r2(model.transform(valid), "y") == by_hand[best]
 
 
 @pytest.mark.heavy  # round-10 quick-tier trim (slowest cases -> sharded tier)

@@ -7,7 +7,8 @@ too) must leave the feature columns of the rows at ts <= t unchanged
 
 Event time is an instant: in a session zone with DST, the events of a
 fall-back hour keep their order and their instants through the FLS,
-``run_stream``, the order book and ``ohlcv``'s UTC-midnight bars."""
+``run_stream``, the order book, ``ohlcv``'s UTC-midnight bars and the
+running folds of ``streaming/aggregate.py``."""
 
 import numpy as np
 import pandas as pd
@@ -17,9 +18,12 @@ import pytest
 from conftest import session_time_zone
 from pyspark.sql import functions as F
 
+from svoe_spark.operators.combine import running_reduce
 from svoe_spark.operators.orderbook import reconstruct_book, reconstruct_book_bucketed, reconstruct_book_stream
+from svoe_spark.operators.quant import max_drawdown, order_flow_imbalance
 from svoe_spark.plans.definitions import REGISTRY
 from svoe_spark.plans.featurizer import Featurizer
+from svoe_spark.streaming.aggregate import drawdown_stream, keyed_reduce_stream, ofi_stream
 from svoe_spark.streaming.sinks import run_available_to_memory
 from svoe_spark.streaming.sources import replay_parquet
 from test_definition_loading import USER_FD
@@ -253,3 +257,63 @@ def test_fall_back_hour_book_equals_utc_session(spark, tmp_path):
         assert _book_rows(reconstruct_book_bucketed(updates, depth=5, bucket="1h")) == want
         stream = reconstruct_book_stream(replay_parquet(spark, path), depth=5)
         assert _book_rows(run_available_to_memory(stream)) == want
+
+
+REDUCE_OPS = ["sum", "count", "min", "max", "last"]
+
+
+def _book_top(df):
+    """The events as integer best bid/ask updates for the OFI."""
+    p = F.col("price")
+    return df.select("sym", "ts", p.cast("long").alias("bid_px"), p.cast("long").alias("bid_sz"),
+                     (p + 1).cast("long").alias("ask_px"), (7 - p).cast("long").alias("ask_sz"))
+
+
+def _prefix_max_drawdown(df):
+    """``quant.max_drawdown`` over each prefix of the events, stamped
+    with the prefix's last instant."""
+    prefixes = df.crossJoin(df.select(F.col("ts").alias("cut"))).where(F.col("ts") <= F.col("cut"))
+    return max_drawdown(prefixes, "price", by="cut").select(F.col("cut").alias("ts"), F.col("max_dd").cast("double"))
+
+
+RUNNING_FOLDS = {  # name -> (stream form, batch form), each to (ts, values...)
+    "reduce": (
+        lambda df: keyed_reduce_stream(df.select("sym", "ts", "price"), "price", REDUCE_OPS, key="sym")
+        .select("ts", *[f"{op}_price" for op in REDUCE_OPS]),
+        lambda df: running_reduce(df, {
+            "sum_price": F.sum("price"), "count_price": F.count(F.lit(1)),
+            "min_price": F.min("price"), "max_price": F.max("price"), "last_price": F.last("price"),
+        }, by="sym").select("ts", *[f"{op}_price" for op in REDUCE_OPS]),
+    ),
+    "drawdown": (
+        lambda df: drawdown_stream(df.select("sym", "ts", "price"), "price", key="sym").select("ts", "max_dd"),
+        _prefix_max_drawdown,
+    ),
+    "ofi": (
+        lambda df: ofi_stream(_book_top(df), key="sym").select("ts", "e_ofi"),
+        lambda df: order_flow_imbalance(_book_top(df), "sym", "ts", "bid_px", "bid_sz", "ask_px", "ask_sz")
+        .select("ts", "e_ofi"),
+    ),
+}
+
+
+def _fold_rows(df) -> list:
+    return sorted(tuple(r) for r in df.select(F.unix_micros("ts"), *df.columns[1:]).collect())
+
+
+@pytest.mark.parametrize("fold", list(RUNNING_FOLDS))
+def test_fall_back_hour_running_folds_stream_equal_batch(spark, tmp_path, fold):
+    """In a New York session each running fold of
+    ``streaming/aggregate.py`` folds the fall-back events in instant
+    order and stamps each row with its own instant: its rows equal its
+    batch form's and the UTC session's."""
+    # rises and dips, so a reordered fall-back hour changes every fold
+    _write(_fall_back_events((3.0, 5.0, 4.0, 6.0, 2.0, 1.0)), str(tmp_path / "events.parquet"))
+    path = str(tmp_path)
+    stream, batch = RUNNING_FOLDS[fold]
+    with session_time_zone(spark, NY):
+        got = _fold_rows(run_available_to_memory(stream(replay_parquet(spark, path))))
+        want = _fold_rows(batch(spark.read.parquet(path)))
+    utc = _fold_rows(run_available_to_memory(stream(replay_parquet(spark, path))))
+    assert [r[0] for r in got] == [_us(t) for t in FALL_BACK]
+    assert got == want == utc

@@ -146,44 +146,6 @@ def test_orderbook_stream_equals_batch(spark, sf_small, tmp_path):
     assert diffs == []
 
 
-@pytest.mark.heavy  # round-10 quick-tier trim (slowest cases -> sharded tier)
-def test_stream_equi_join_equals_batch(spark, sf_small, tick_parquet):
-    """Streaming watermarked equi-join == the same join in batch
-    (reference J3 with bounded state instead of buffer-forever)."""
-    from svoe_spark.streaming.joins import stream_equi_join
-
-    def sides(df):
-        left = df.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts", F.col("value").alias("purchase_value")
-        )
-        right = df.filter(F.col("event_type") == "view").select(
-            "user_id", "ts", F.col("value").alias("view_value")
-        )
-        return left, right
-
-    sl, sr = sides(replay_parquet(spark, tick_parquet))
-    out = run_available_to_memory(
-        stream_equi_join(sl, sr, key="user_id", max_delay="1 hour")
-    )
-
-    bl, br = sides(ticks(spark, sf_small))
-    br2 = br.select(
-        F.col("user_id").alias("user_id_r"),
-        F.col("ts").alias("ts_r"),
-        F.col("view_value").alias("view_value_r"),
-    )
-    batch = bl.join(
-        br2,
-        (F.col("user_id") == F.col("user_id_r"))
-        & (F.col("ts_r") >= F.col("ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("ts_r") <= F.col("ts") + F.expr("INTERVAL 1 HOUR")),
-    )
-    got = sorted(tuple(r) for r in out.collect())
-    want = sorted(tuple(r) for r in batch.collect())
-    assert len(got) == len(want) > 0
-    assert got == want
-
-
 def test_running_reduce_stream(spark, sf_small, tick_parquet):
     from svoe_spark.streaming.aggregate import keyed_reduce_stream
 

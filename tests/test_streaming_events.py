@@ -1,59 +1,16 @@
-"""Kappa parity for the events-analytics layer (T6 applied to round-4
-ops): streaming funnel / retention state over a time-ranged replay must
-fold to exactly the batch operators' answers."""
+"""Kappa parity for the stateful book-top operator: ``ofi_stream``
+over a time-sliced replay must equal the batch
+``quant.order_flow_imbalance`` row for row, also when each key's
+micro-batch arrives as many Arrow chunks (``chunks.batch_frame``)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from svoe_spark.operators.events_analytics import funnel, retention_cohorts
-from svoe_spark.sources.tables import load_table
-from svoe_spark.streaming.events_stream import (
-    funnel_counts,
-    funnel_stream,
-    retention_counts,
-    retention_stream,
-)
 from svoe_spark.streaming.sinks import run_available_to_memory
 
 pytestmark = pytest.mark.heavy  # multi-minute suite: deselected by the
 # default `pytest tests/ -q` tier (pytest.ini); scripts/ptest.py shards and
 # the round-close sweep run it
-
-
-STEPS = ["view", "click", "purchase"]
-
-
-@pytest.fixture(scope="module")
-def event_parquet(spark, sf_small, tmp_path_factory):
-    """Events re-materialized at microsecond ts, written as FOUR
-    sequential time-slice files (one write each, so file modification
-    times follow event time — the file source replays them in order:
-    the cross-batch ordering contract shared with drawdown_stream).
-    A single parallel repartitionByRange write would NOT do: its part
-    files share one mod time, so the source's replay order between
-    them is arbitrary."""
-    import time
-
-    path = str(tmp_path_factory.mktemp("evstream") / "events")
-    ev = (
-        load_table(spark, "events", sf_small)
-        .select("user_id", "event_type", "ts", "event_id")
-        .persist()
-    )
-    qs = ev.selectExpr(
-        "percentile(unix_micros(ts), array(0.25, 0.5, 0.75)) AS q"
-    ).first()["q"]
-    bounds = [None, *[int(q) for q in qs], None]
-    for i in range(4):
-        sl = ev
-        if bounds[i] is not None:
-            sl = sl.where(F.unix_micros("ts") > bounds[i])
-        if bounds[i + 1] is not None:
-            sl = sl.where(F.unix_micros("ts") <= bounds[i + 1])
-        sl.coalesce(1).write.mode("append").parquet(path)
-        time.sleep(1.1)  # distinct mod-time seconds => replay order
-    ev.unpersist()
-    return path
 
 
 def _replay(spark, path):
@@ -63,239 +20,6 @@ def _replay(spark, path):
         .option("maxFilesPerTrigger", 1)  # force state across batches
         .parquet(path)
     )
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def test_funnel_stream_equals_batch(spark, sf_small, event_parquet):
-    out = run_available_to_memory(
-        funnel_stream(_replay(spark, event_parquet), STEPS)
-    )
-    got = _rows(funnel_counts(out, STEPS))
-    want = _rows(funnel(load_table(spark, "events", sf_small), STEPS))
-    assert got == want
-    # sanity: a real funnel, not all-zeros
-    assert got[0][2] > 0 and got[0][2] >= got[1][2] >= got[2][2]
-
-
-def test_funnel_stream_equals_batch_with_horizon(
-    spark, sf_small, event_parquet
-):
-    out = run_available_to_memory(
-        funnel_stream(_replay(spark, event_parquet), STEPS, within="72h")
-    )
-    got = _rows(funnel_counts(out, STEPS))
-    want = _rows(
-        funnel(load_table(spark, "events", sf_small), STEPS, within="72h")
-    )
-    assert got == want
-
-
-def test_funnel_stream_chain_instants_match_batch_reachability(
-    spark, event_parquet
-):
-    """The per-user chain is internally consistent: instants strictly
-    increase along the steps a user reached."""
-    out = run_available_to_memory(
-        funnel_stream(_replay(spark, event_parquet), STEPS)
-    )
-    latest = out.groupBy("user").agg(
-        *[F.max_by(f"m{i}", "n_events").alias(f"m{i}") for i in range(3)]
-    )
-    bad = latest.where(
-        (F.col("m1").isNotNull() & (F.col("m1") <= F.col("m0")))
-        | (F.col("m2").isNotNull() & (F.col("m2") <= F.col("m1")))
-        | (F.col("m1").isNotNull() & F.col("m0").isNull())
-        | (F.col("m2").isNotNull() & F.col("m1").isNull())
-    )
-    assert bad.count() == 0
-
-
-def test_retention_stream_equals_batch(spark, sf_small, event_parquet):
-    out = run_available_to_memory(
-        retention_stream(_replay(spark, event_parquet), max_offset_days=14)
-    )
-    got = _rows(retention_counts(out))
-    want = _rows(
-        retention_cohorts(
-            load_table(spark, "events", sf_small), max_offset_days=14
-        )
-    )
-    assert got == want and len(got) > 5
-
-
-def test_resample_ffill_stream_equals_batch(spark, sf_small, tmp_path):
-    """Streaming locf gapfill == batch resample_ffill, row for row
-    (grid instants, values, and the NULL-before-first-observation
-    instant)."""
-    import time
-
-    from svoe_spark.operators.resample import resample_ffill
-    from svoe_spark.queries import ticks
-    from svoe_spark.streaming.resample_stream import resample_ffill_stream
-
-    # unique (key, ts): pre-aggregate duplicate instants (the shared
-    # contract of both forms)
-    t = (
-        ticks(spark, sf_small)
-        .groupBy("event_type", "ts")
-        .agg(F.max("value").alias("value"))
-        .persist()
-    )
-    path = str(tmp_path / "tt")
-    qs = t.selectExpr(
-        "percentile(unix_micros(ts), array(0.34, 0.67)) AS q"
-    ).first()["q"]
-    bounds = [None, *[int(q) for q in qs], None]
-    for i in range(3):
-        sl = t
-        if bounds[i] is not None:
-            sl = sl.where(F.unix_micros("ts") > bounds[i])
-        if bounds[i + 1] is not None:
-            sl = sl.where(F.unix_micros("ts") <= bounds[i + 1])
-        sl.coalesce(1).write.mode("append").parquet(path)
-        time.sleep(1.1)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(path).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    out = run_available_to_memory(
-        resample_ffill_stream(
-            stream, on="ts", by="event_type", every="1h", value_col="value"
-        )
-    )
-    got = sorted(
-        (r["event_type"], r["ts"], r["locf"]) for r in out.collect()
-    )
-    want = sorted(
-        (r["event_type"], r["ts"], r["value"])
-        for r in resample_ffill(
-            t, on="ts", by=["event_type"], every="1h", value_cols=["value"]
-        ).collect()
-    )
-    t.unpersist()
-    assert got == want and len(got) > 100
-
-
-@pytest.fixture(scope="module")
-def tick_parquet(spark, sf_small, tmp_path_factory):
-    """Unique-(key, ts) ticks written as three sequential time-slice
-    files (mod-time replay order — same contract as event_parquet)."""
-    import time
-
-    from svoe_spark.queries import ticks
-
-    path = str(tmp_path_factory.mktemp("tickstream") / "ticks")
-    t = (
-        ticks(spark, sf_small)
-        .groupBy("event_type", "ts")
-        .agg(F.max("value").alias("value"))
-        .persist()
-    )
-    qs = t.selectExpr(
-        "percentile(unix_micros(ts), array(0.34, 0.67)) AS q"
-    ).first()["q"]
-    bounds = [None, *[int(q) for q in qs], None]
-    for i in range(3):
-        sl = t
-        if bounds[i] is not None:
-            sl = sl.where(F.unix_micros("ts") > bounds[i])
-        if bounds[i + 1] is not None:
-            sl = sl.where(F.unix_micros("ts") <= bounds[i + 1])
-        sl.coalesce(1).write.mode("append").parquet(path)
-        time.sleep(1.1)
-    t.unpersist()
-    return path
-
-
-def _interp_stream_vs_batch(spark, sf_small, tick_parquet):
-    from svoe_spark.operators.resample import resample_interpolate
-    from svoe_spark.queries import ticks
-    from svoe_spark.streaming.resample_stream import (
-        resample_interpolate_stream,
-    )
-
-    out = run_available_to_memory(
-        resample_interpolate_stream(
-            _replay(spark, tick_parquet),
-            on="ts",
-            by="event_type",
-            every="1h",
-            value_col="value",
-        )
-    )
-    got = sorted(
-        (r["event_type"], r["ts"], r["locf"], r["interp"])
-        for r in out.collect()
-    )
-    t = (
-        ticks(spark, sf_small)
-        .groupBy("event_type", "ts")
-        .agg(F.max("value").alias("value"))
-    )
-    want = sorted(
-        (r["event_type"], r["ts"], r["locf"], r["interp"])
-        for r in resample_interpolate(
-            t, on="ts", by=["event_type"], every="1h", value_col="value"
-        ).collect()
-    )
-    return got, want
-
-
-def test_resample_interpolate_stream_equals_batch(
-    spark, sf_small, tick_parquet
-):
-    """VERDICT r5 ask 3: streaming linear gapfill == batch
-    resample_interpolate, row for row and bit for bit (grid instants,
-    locf, the interpolated doubles, the NULL floor instant, exact
-    grid-hit values) — each gap emitted at its closing observation."""
-    got, want = _interp_stream_vs_batch(spark, sf_small, tick_parquet)
-    assert got == want and len(got) > 100
-    # the fills are real: some rows interpolate strictly between obs
-    assert any(
-        i is not None and lo is not None and i != lo
-        for _, _, lo, i in got
-    )
-
-
-def test_resample_interpolate_stream_survives_tiny_arrow_chunks(
-    spark, sf_small, tick_parquet
-):
-    """Same Arrow-chunk-reassembly regression guard as funnel_stream:
-    3-row chunks must not break cross-chunk event-time ordering."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "3")
-    try:
-        got, want = _interp_stream_vs_batch(spark, sf_small, tick_parquet)
-        assert got == want
-    finally:
-        spark.conf.set(key, old)
-
-
-def test_funnel_stream_survives_tiny_arrow_chunks(
-    spark, sf_small, event_parquet
-):
-    """Review-finding regression: the state API hands each (key, batch)
-    as MULTIPLE Arrow chunks in fetch order once a group exceeds
-    spark.sql.execution.arrow.maxRecordsPerBatch; per-chunk sorting
-    processed them out of event-time order. Force 3-row chunks and
-    re-check batch equivalence (chunks.batch_frame assembles first)."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "3")
-    try:
-        out = run_available_to_memory(
-            funnel_stream(_replay(spark, event_parquet), STEPS)
-        )
-        got = _rows(funnel_counts(out, STEPS))
-        want = _rows(funnel(load_table(spark, "events", sf_small), STEPS))
-        assert got == want
-    finally:
-        spark.conf.set(key, old)
 
 
 def test_batch_frame_assembles_and_sorts_across_chunks():
@@ -318,85 +42,12 @@ def test_batch_frame_assembles_and_sorts_across_chunks():
 
 
 @pytest.fixture(scope="module")
-def session_parquet(spark, sf_small, tmp_path_factory):
-    """Events (with value) as four sequential time-slice files — same
-    replay-order contract as event_parquet. Returns (path, q3_micros):
-    the third time-quartile bound, a conservative floor for the
-    watermark in force while the LAST file's batch runs."""
-    import time
-
-    path = str(tmp_path_factory.mktemp("sessstream") / "events")
-    ev = (
-        load_table(spark, "events", sf_small)
-        .select("user_id", "ts", "value")
-        .persist()
-    )
-    qs = ev.selectExpr(
-        "percentile(unix_micros(ts), array(0.25, 0.5, 0.75)) AS q"
-    ).first()["q"]
-    bounds = [None, *[int(q) for q in qs], None]
-    for i in range(4):
-        sl = ev
-        if bounds[i] is not None:
-            sl = sl.where(F.unix_micros("ts") > bounds[i])
-        if bounds[i + 1] is not None:
-            sl = sl.where(F.unix_micros("ts") <= bounds[i + 1])
-        sl.coalesce(1).write.mode("append").parquet(path)
-        time.sleep(1.1)
-    ev.unpersist()
-    return path, int(qs[2])
-
-
-def test_session_windows_stream_equals_batch(spark, session_parquet):
-    from svoe_spark.streaming.events_stream import session_windows_stream
-
-    path, q3_micros = session_parquet
-    out = run_available_to_memory(
-        session_windows_stream(_replay(spark, path), "30 minutes", "1 minute")
-    )
-    emitted = {
-        (r["user_id"], r["session_start"]): (
-            r["session_end"], r["n_events"], r["total_value"]
-        )
-        for r in out.collect()
-    }
-    # batch truth over the SAME files, same exact-integer arithmetic
-    ev = spark.read.parquet(path)
-    bat = {
-        (r["user_id"], r["session_start"]): (
-            r["session_end"], r["n_events"], r["total_value"]
-        )
-        for r in (
-            ev.groupBy("user_id", F.session_window("ts", "30 minutes"))
-            .agg(
-                F.min("ts").alias("session_start"),
-                F.max("ts").alias("session_end"),
-                F.count(F.lit(1)).alias("n_events"),
-                (F.sum(F.round(F.col("value") * 100, 0).cast("long")) / 100.0)
-                .alias("total_value"),
-            )
-            .collect()
-        )
-    }
-    assert emitted, "stream emitted nothing"
-    # every emitted session is bit-identical to the batch session
-    for k, v in emitted.items():
-        assert bat[k] == v
-    # completeness: every session closed before the watermark in force
-    # during the final batch (q3 - delay) must have been emitted
-    import datetime
-
-    wm = datetime.datetime.utcfromtimestamp((q3_micros - 60_000_000) / 1e6)
-    gap = datetime.timedelta(minutes=30)
-    for k, (s_end, _, _) in bat.items():
-        if s_end + gap <= wm:
-            assert k in emitted, f"closed session {k} not emitted"
-
-
-@pytest.fixture(scope="module")
 def booktop_parquet(spark, sf_small, tmp_path_factory):
     """Synthetic best bid/ask stream (the ofi_1h construction) as four
-    sequential time-slice files — same replay-order contract."""
+    sequential time-slice files: one write each, a second apart, so
+    file modification times follow event time and the file source
+    replays them in order (the cross-batch ordering contract of
+    ``ofi_stream``)."""
     import time
 
     from svoe_spark.queries import ticks
@@ -480,256 +131,3 @@ def test_ofi_stream_survives_tiny_arrow_chunks(spark, booktop_parquet):
         assert got == want
     finally:
         spark.conf.set(key, old)
-
-
-# ---------------------------------------------------------------------------
-# transition_stream (Kappa twin of events_analytics.transition_matrix)
-# ---------------------------------------------------------------------------
-
-
-def _transition_want(spark, sf_small):
-    from svoe_spark.operators.events_analytics import transition_matrix
-
-    ev = load_table(spark, "events", sf_small)
-    return {
-        (r["from_state"], r["to_state"]): (r["n"], r["p"])
-        for r in transition_matrix(
-            ev, tiebreak="event_id", gap_seconds=1800
-        ).collect()
-    }
-
-
-def test_transition_stream_equals_batch(spark, sf_small, event_parquet):
-    from svoe_spark.streaming.events_stream import (
-        transition_counts,
-        transition_stream,
-    )
-
-    out = run_available_to_memory(
-        transition_stream(
-            _replay(spark, event_parquet),
-            tiebreak="event_id",
-            gap_seconds=1800,
-        )
-    )
-    got = {
-        (r["from_state"], r["to_state"]): (r["n"], r["p"])
-        for r in transition_counts(out).collect()
-    }
-    want = _transition_want(spark, sf_small)
-    assert len(got) == len(want) > 0
-    assert got == want
-
-
-def test_transition_stream_survives_tiny_arrow_chunks(
-    spark, sf_small, event_parquet
-):
-    from svoe_spark.streaming.events_stream import (
-        transition_counts,
-        transition_stream,
-    )
-
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "3")
-    try:
-        out = run_available_to_memory(
-            transition_stream(
-                _replay(spark, event_parquet),
-                tiebreak="event_id",
-                gap_seconds=1800,
-            )
-        )
-        got = {
-            (r["from_state"], r["to_state"]): (r["n"], r["p"])
-            for r in transition_counts(out).collect()
-        }
-    finally:
-        spark.conf.set(key, old)
-    assert got == _transition_want(spark, sf_small)
-
-
-def test_transition_stream_gap_reanchors_without_emitting(spark, tmp_path):
-    """A successor beyond the gap is NOT a transition, but it must
-    re-anchor state: the event after it transitions FROM it, not from
-    the pre-gap event."""
-    import time
-
-    from svoe_spark.streaming.events_stream import transition_stream
-
-    rows = [
-        (1, "a", "2024-01-01 00:00:00"),
-        (1, "b", "2024-01-01 00:10:00"),  # a->b (within 30m)
-        (1, "c", "2024-01-01 02:00:00"),  # gap: no b->c
-        (1, "d", "2024-01-01 02:05:00"),  # c->d (within 30m)
-    ]
-    path = str(tmp_path / "gapev")
-    for i, r in enumerate(rows):
-        df = spark.createDataFrame([r], "user_id long, event_type string, ts_s string")
-        df.selectExpr(
-            "user_id", "event_type", "CAST(ts_s AS TIMESTAMP) AS ts",
-            f"CAST({i} AS LONG) AS event_id",
-        ).coalesce(1).write.mode("append").parquet(path)
-        time.sleep(1.1)
-    out = run_available_to_memory(
-        transition_stream(
-            _replay(spark, path), tiebreak="event_id", gap_seconds=1800
-        )
-    )
-    got = sorted((r["from_state"], r["to_state"]) for r in out.collect())
-    assert got == [("a", "b"), ("c", "d")]
-
-
-# ---------------------------------------------------------------------------
-# cusum_stream (Kappa twin of changepoint.cusum_scores)
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def cusum_parquet(spark, sf_small, tmp_path_factory):
-    """Hourly integer value level per event type with frozen per-type
-    median/MAD baselines attached (a sequential detector monitors new
-    data against a scale frozen from history), written as three
-    sequential time slices."""
-    import time
-
-    from svoe_spark.operators.profiling import attach_broadcast, order_statistics
-
-    path = str(tmp_path_factory.mktemp("cusumstream") / "hourly")
-    e = load_table(spark, "events", sf_small)
-    hourly = (
-        e.select(
-            "event_type",
-            F.date_trunc("hour", F.col("ts")).alias("hour_ts"),
-            F.round(F.col("value") * 100, 0).cast("long").alias("v"),
-        )
-        .groupBy("event_type", "hour_ts")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("sv"))
-        .withColumn("avg_c", F.expr("sv DIV n"))
-        .drop("n", "sv")
-    )
-    med = order_statistics(
-        hourly, "avg_c", [0.5], ["event_type"], out="med"
-    ).select("event_type", "med")
-    d = attach_broadcast(hourly, med, ["event_type"]).withColumn(
-        "dev", F.abs(F.col("avg_c") - F.col("med"))
-    )
-    mad = order_statistics(
-        d, "dev", [0.5], ["event_type"], out="mad"
-    ).select("event_type", "mad")
-    y = attach_broadcast(d, mad, ["event_type"]).drop("dev").persist()
-    qs = y.selectExpr(
-        "percentile(unix_micros(hour_ts), array(0.34, 0.67)) AS q"
-    ).first()["q"]
-    bounds = [None, *[int(q) for q in qs], None]
-    for i in range(3):
-        sl = y
-        if bounds[i] is not None:
-            sl = sl.where(F.unix_micros("hour_ts") > bounds[i])
-        if bounds[i + 1] is not None:
-            sl = sl.where(F.unix_micros("hour_ts") <= bounds[i + 1])
-        sl.coalesce(1).write.mode("append").parquet(path)
-        time.sleep(1.1)
-    y.unpersist()
-    return path
-
-
-def _cusum_stream_rows(spark, cusum_parquet, tiny_chunks=False):
-    from svoe_spark.streaming.changepoint_stream import cusum_stream
-
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    if tiny_chunks:
-        spark.conf.set(key, "3")
-    try:
-        out = run_available_to_memory(
-            cusum_stream(
-                _replay(spark, cusum_parquet),
-                value_col="avg_c",
-                on="hour_ts",
-                key="event_type",
-                baseline_col="med",
-                slack="mad",
-            )
-        )
-        return {
-            (r["event_type"], r["hour_ts"]): (r["c_pos"], r["c_neg"])
-            for r in out.collect()
-        }
-    finally:
-        spark.conf.set(key, old)
-
-
-def _cusum_batch_rows(spark, cusum_parquet):
-    from svoe_spark.operators.changepoint import cusum_scores
-
-    y = spark.read.parquet(cusum_parquet)
-    want_df = cusum_scores(
-        y, "avg_c", on="hour_ts", by=["event_type"],
-        baseline_col="med", slack="mad",
-    )
-    return {
-        (r["event_type"], r["hour_ts"]): (r["c_pos"], r["c_neg"])
-        for r in want_df.collect()
-    }
-
-
-def test_cusum_stream_equals_batch(spark, cusum_parquet):
-    got = _cusum_stream_rows(spark, cusum_parquet)
-    want = _cusum_batch_rows(spark, cusum_parquet)
-    assert len(got) == len(want) > 100
-    assert got == want
-    # the detector actually excursions on this data
-    assert max(v[0] for v in got.values()) > 0
-
-
-def test_cusum_stream_survives_tiny_arrow_chunks(spark, cusum_parquet):
-    got = _cusum_stream_rows(spark, cusum_parquet, tiny_chunks=True)
-    assert got == _cusum_batch_rows(spark, cusum_parquet)
-
-
-def test_transition_stream_integer_state_codes(spark, tmp_path):
-    """Non-string state columns must round-trip through stream state
-    without dtype corruption (shift() would NaN-upcast int64)."""
-    import time
-
-    from svoe_spark.operators.events_analytics import transition_matrix
-    from svoe_spark.streaming.events_stream import (
-        transition_counts,
-        transition_stream,
-    )
-
-    rows = [
-        (1, 10, "2024-01-01 00:00:00", 1),
-        (1, 20, "2024-01-01 00:01:00", 2),
-        (1, 10, "2024-01-01 00:02:00", 3),
-        (2, 30, "2024-01-01 00:00:30", 4),
-        (2, 30, "2024-01-01 00:01:30", 5),
-    ]
-    path = str(tmp_path / "intstate")
-    for i in range(0, len(rows), 2):
-        df = spark.createDataFrame(
-            rows[i : i + 2],
-            "user_id long, event_type long, ts_s string, event_id long",
-        )
-        df.selectExpr(
-            "user_id", "event_type", "CAST(ts_s AS TIMESTAMP) AS ts", "event_id"
-        ).coalesce(1).write.mode("append").parquet(path)
-        time.sleep(1.1)
-    out = run_available_to_memory(
-        transition_stream(_replay(spark, path), tiebreak="event_id")
-    )
-    got = {
-        (r["from_state"], r["to_state"]): (r["n"], r["p"])
-        for r in transition_counts(out).collect()
-    }
-    batch = spark.read.parquet(path)
-    want = {
-        (r["from_state"], r["to_state"]): (r["n"], r["p"])
-        for r in transition_matrix(batch, tiebreak="event_id").collect()
-    }
-    assert got == want == {
-        (10, 20): (1, 1.0),
-        (20, 10): (1, 1.0),
-        (30, 30): (1, 1.0),
-    }
