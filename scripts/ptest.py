@@ -26,28 +26,32 @@ import tempfile
 
 # measured per-file wall cost (round-8 refresh: round-7 durations
 # adjusted for the round-8 additions — pagerank gained the fixpoint +
-# mode-equality stress tests, streaming_asof gained timeout/typed
-# tests, oracle_parity tracks the 201-query registry; streaming_events
-# re-timed with `-m heavy` once only its ofi and batch_frame tests
-# remained); unknown/new files get a default weight — refresh occasionally
+# mode-equality stress tests, oracle_parity tracks the 201-query
+# registry; the files edited when the test-only library functions were
+# deleted re-timed one at a time with `-m "not slow"` at 2 cores);
+# unknown/new files get a default weight — refresh occasionally
 WEIGHTS = {
     "test_oracle_parity.py": 265, "test_pagerank.py": 190,
-    "test_streaming_asof.py": 170, "test_asof_property.py": 101,
+    "test_asof_property.py": 101,
     "test_orderbook.py": 86, "test_spans_property.py": 73, "test_pq.py": 69,
-    "test_dedup_index.py": 67, "test_cleaning_property.py": 53,
+    "test_dedup_index.py": 67, "test_featurizer_stream.py": 58,
+    "test_cleaning_property.py": 53, "test_streaming_asof.py": 52,
     "test_plan_quality.py": 46,
-    "test_stream_api.py": 41, "test_cleaning.py": 35,
-    "test_empty_inputs.py": 31, "test_streaming_events.py": 31,
-    "test_curation.py": 30,
-    "test_quant.py": 29, "test_graph.py": 27,
-    "test_events_analytics.py": 26, "test_storage_ingest.py": 26,
-    "test_skew_combine.py": 24, "test_streaming.py": 24,
+    "test_stream_api.py": 41, "test_point_in_time.py": 40,
+    "test_vector_index.py": 40, "test_streaming.py": 37,
+    "test_sketches.py": 36, "test_cleaning.py": 35,
+    "test_empty_inputs.py": 31, "test_storage_ingest.py": 31,
+    "test_curation.py": 30, "test_scd_store.py": 29,
+    "test_quant.py": 29, "test_graph.py": 27, "test_pair_blocking.py": 26,
+    "test_events_analytics.py": 26,
+    "test_skew_combine.py": 24,
     "test_tokenizer.py": 20, "test_quality_checks.py": 19,
+    "test_selection.py": 19, "test_window_ops.py": 18,
     "test_orderbook_property.py": 18,
-    "test_sketches.py": 17, "test_scd_store.py": 16,
-    "test_profiling.py": 16, "test_vector_index.py": 15,
+    "test_profiling.py": 16,
     "test_streaming_flagship.py": 15, "test_rollup.py": 14,
-    "test_similarity_train.py": 14,
+    "test_similarity_train.py": 14, "test_multimodal.py": 14,
+    "test_library_reach.py": 2,
 }
 DEFAULT_WEIGHT = 12
 

@@ -1255,20 +1255,16 @@ def round7_smoke(spark, results, force, n_edges=20_000_000):
 
 
 def round8_smoke(spark, results, force, n=100_000_000):
-    """Round-8: the streaming as-of twins at 100M union rows (VERDICT
-    r7 ask 4) — forward and nearest with a tolerance, so the
-    state-bounding finalization (data-driven + event-time timeout for
-    the un-closed tail) runs at scale; noop sink measures pure
-    throughput. 64 keys parallelize the per-key handlers across
+    """Round-8: the streaming nearest as-of at 100M union rows (VERDICT
+    r7 ask 4) with a tolerance, so the state-bounding finalization
+    (data-driven + event-time timeout for the un-closed tail) runs at
+    scale; noop sink measures pure throughput. 64 keys parallelize the per-key handlers across
     cores; one availableNow batch per side (in-batch event-time sort
     is the replay contract's degenerate case)."""
     import shutil
     import tempfile
 
-    from svoe_spark.streaming.asof_stream import (
-        asof_forward_stream,
-        asof_nearest_stream,
-    )
+    from svoe_spark.streaming.asof_stream import asof_nearest_stream
 
     half = n // 2
     keys = 64
@@ -1290,7 +1286,7 @@ def round8_smoke(spark, results, force, n=100_000_000):
         )
 
     # disjoint instants per side (left = right + third-of-a-step), so
-    # every match is a genuine forward/nearest decision
+    # every match is a genuine nearest decision
     step = span / half
     gen(half, 0.0).write.mode("overwrite").parquet(rp)
     gen(half, step / 3).write.mode("overwrite").parquet(lp)
@@ -1309,20 +1305,6 @@ def round8_smoke(spark, results, force, n=100_000_000):
         )
         q.awaitTermination()
 
-    t0 = time.perf_counter()
-    run_stream(
-        asof_forward_stream(
-            replay(lp), replay(rp), on="ts", by="symbol",
-            value_col="value", tolerance="1m",
-        ),
-        "/cp_fwd",
-    )
-    results[f"asof_forward_stream_{n//1_000_000}M_sec"] = round(
-        time.perf_counter() - t0, 2
-    )
-    print(f"# asof_forward_stream {n//1_000_000}M: "
-          f"{results[f'asof_forward_stream_{n//1_000_000}M_sec']}s",
-          file=sys.stderr)
     t0 = time.perf_counter()
     run_stream(
         asof_nearest_stream(

@@ -134,9 +134,9 @@ class DataStream:
         return DataStream(self.df, key)
 
     def reduce(self, **aggs: Column) -> "DataStream":
-        """Keyed aggregate (reference reduce, operator.py:171-191).
-        Batch: final values per key; streams: use
-        svoe_spark.streaming.aggregate for per-update emission."""
+        """Keyed aggregate (reference reduce, operator.py:171-191): final
+        values per key (on a stream, a streaming aggregation). For one row
+        per update, use ``combine.running_reduce`` on a batch."""
         if not self._key:
             raise ValueError("reduce requires key_by first")
         # the key column survives the groupBy, so the stream STAYS

@@ -55,17 +55,6 @@ def codepoints(text: Column | str) -> Column:
     )
 
 
-def poly_hash(text: Column | str) -> Column:
-    """Rolling polynomial hash of a string -> bigint in [0, P_HASH).
-    Pure arithmetic (portable to ANY SQL engine) but interpreted
-    per-char — use md5_hash for hot paths."""
-    return F.aggregate(
-        codepoints(text),
-        F.lit(0).cast("long"),
-        lambda acc, ch: (acc * 31 + ch) % P_HASH,
-    )
-
-
 def _md5_hash_sql(text: str) -> str:
     return (
         f"CAST(conv(substring(md5(encode({text}, 'UTF-8')), 1, 15), 16, 10)"
@@ -218,13 +207,6 @@ def sql_kgram_hashes(th: str, k: int, mult: int = 31) -> str:
 def sql_codepoints(expr: str) -> str:
     return (
         f"list_transform(range(1, length({expr})+1), i -> ord(substr({expr}, i, 1)))"
-    )
-
-
-def sql_poly_hash(expr: str) -> str:
-    return (
-        f"list_reduce(list_prepend(CAST(0 AS BIGINT), {sql_codepoints(expr)}), "
-        f"(acc, ch) -> (acc*31 + ch) % {P_HASH})"
     )
 
 

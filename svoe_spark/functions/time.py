@@ -76,6 +76,14 @@ def micros_ns(us: pd.Series) -> np.ndarray:
     return ns
 
 
+def utc_day(ts: Column | str) -> Column:
+    """The UTC calendar date of an instant: the lake's ``day`` partition.
+    ``date_format``/``to_date`` give the session zone's date, so a lake
+    written in one zone would be pruned wrongly by a read in another."""
+    us = F.unix_micros((F.col(ts) if isinstance(ts, str) else ts).cast("timestamp"))
+    return F.date_from_unix_date(F.floor(us / 86_400_000_000).cast("int"))
+
+
 def bucket_start(ts: Column | str, dur: str | int | float) -> Column:
     """UTC-midnight-aligned tumbling-bucket start for a timestamp.
 

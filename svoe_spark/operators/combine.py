@@ -7,8 +7,7 @@ assembly op. Same union + running-last(ignorenulls) core as the as-of
 join, without restricting output to label rows.
 
 running_reduce: per-key cumulative aggregate emitted on every update —
-batch form of the v2 engine's reduce operator (streaming form:
-svoe_spark.streaming.aggregate.keyed_reduce_stream).
+the v2 engine's reduce operator, in batch.
 """
 
 from __future__ import annotations

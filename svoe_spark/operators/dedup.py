@@ -128,24 +128,6 @@ def drop_exact_duplicates(
     return df.join(keep, on=id_col, how="left_semi")
 
 
-def drop_exact_duplicates_stream(
-    df: DataFrame,
-    text: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    fast: bool = True,
-) -> DataFrame:
-    """Streaming exact dedup (the Kappa form of drop_exact_duplicates):
-    fingerprint each document, then dropDuplicatesWithinWatermark — the
-    first arrival of each content hash within the watermark horizon
-    survives, and dedup state is evicted past it (bounded, unlike an
-    unbounded seen-set). Use on the ingest stream so near-realtime
-    crawls dedup online with the same fingerprint as the batch path."""
-    h = F.xxhash64(F.col(text)) if fast else md5_hash(text)
-    d = df.withColumn("__fp", h).withWatermark(ts_col, watermark)
-    return d.dropDuplicatesWithinWatermark(["__fp"]).drop("__fp")
-
-
 # --------------------------------------------------------------------------
 # MinHash + LSH
 # --------------------------------------------------------------------------
@@ -438,79 +420,6 @@ def simhash(
     )
     fp = F.expr(f"CAST(0 AS BIGINT) + {votes}")
     return t.select(id_col, fp.alias("simhash"))
-
-
-def simhash_pairs(
-    df: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
-    group_cols: list[str] | None = None,
-    max_hamming: int = 8,
-) -> DataFrame:
-    """Pairs whose SimHash fingerprints are within ``max_hamming`` bits.
-
-    Candidate generation is a Hamming pigeonhole band join, never a
-    cross join: the fingerprint splits into ``max_hamming + 1`` bit
-    bands, and any pair within ``max_hamming`` bits must agree EXACTLY
-    on at least one band — so an equi-join on (band index, band value)
-    has perfect recall, and the quadratic step is confined to documents
-    sharing a band value. ``group_cols`` adds explicit blocking on top.
-    This is the same banding idea as MinHash-LSH, exact here because
-    Hamming distance bounds the number of differing bands."""
-    group_cols = group_cols or []
-    if max_hamming >= SIMHASH_BITS:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= {SIMHASH_BITS} fingerprint bits: "
-            "every pair qualifies — that is an all-pairs join, not a "
-            "similarity query"
-        )
-    n_bands = max_hamming + 1
-    # partition the REAL bits into n_bands contiguous bands of balanced
-    # width. A uniform ceil-width grid would place high bands past bit
-    # SIMHASH_BITS, where every fingerprint is 0 — one degenerate band
-    # key shared by ALL documents, i.e. a silent all-pairs join.
-    base, rem = divmod(SIMHASH_BITS, n_bands)
-    widths = [base + 1] * rem + [base] * (n_bands - rem)
-    offsets = [sum(widths[:j]) for j in range(n_bands)]
-    keys = df.select(*group_cols, id_col)
-    fps = simhash(df, text, id_col).join(keys, on=id_col)
-    banded = fps.select(
-        *group_cols,
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("bi"),
-                        F.shiftright("simhash", offsets[j])
-                        .bitwiseAND((1 << widths[j]) - 1)
-                        .alias("bv"),
-                    )
-                    for j in range(n_bands)
-                ]
-            )
-        ).alias("__band"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    cond = (
-        (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        & (F.col("a.__band.bi") == F.col("b.__band.bi"))
-        & (F.col("a.__band.bv") == F.col("b.__band.bv"))
-    )
-    for g in group_cols:
-        cond = cond & (F.col(f"a.{g}") == F.col(f"b.{g}"))
-    dist = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(b, cond)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            dist.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()  # a pair may agree on several bands
-    )
 
 
 # --------------------------------------------------------------------------

@@ -1,5 +1,5 @@
 """Multimodal columns: opaque binary payloads + typed metadata, with
-decode / feature-extraction / resize / frame-sampling as Arrow-batched
+decode / feature-extraction / frame-sampling as Arrow-batched
 mapInPandas operators.
 
 The Spark-side plumbing is real and tested: binary columns, metadata
@@ -24,8 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -177,71 +175,3 @@ def frame_sample(
             F.col("payload"), F.col("frame_idx") * frame_bytes + 1, frame_bytes
         ).alias("frame"),
     )
-
-
-def resize_image(
-    df: DataFrame,
-    width: int = 32,
-    height: int = 32,
-    id_col: str = "doc_id",
-    allow_fake: bool = False,
-) -> DataFrame:
-    """Resize the payload image to (width, height), returning the
-    resized bytes plus output dims — the thumbnail/normalize stage of a
-    multimodal training pipeline, as an Arrow-batched mapInPandas.
-
-    STUB like decode_image: with allow_fake=True the deterministic
-    byte-level downsample (stride-sampled payload truncated/padded to
-    width*height bytes) is FORCED, even when pillow is importable —
-    exercising the identical schema, batching and partitioning on
-    non-image payloads; with allow_fake=False and PIL present, a real
-    decode-resize-reencode; otherwise NotImplementedError naming the
-    dependency."""
-    try:
-        from PIL import Image  # noqa: F401
-
-        have_pil = True
-    except ImportError:
-        have_pil = False
-    have_pil = have_pil and not allow_fake
-
-    if not have_pil and not allow_fake:
-        raise NotImplementedError(
-            "image resize needs pillow (not installed here); pass "
-            "allow_fake=True for the deterministic stub resizer"
-        )
-
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("resized", BinaryType()),
-        ]
-    )
-    target = width * height
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf["payload"]):
-                if have_pil:
-                    from PIL import Image
-
-                    img = Image.open(io.BytesIO(payload)).resize((width, height))
-                    buf = io.BytesIO()
-                    img.save(buf, format="PNG")
-                    out = buf.getvalue()
-                else:
-                    n = len(payload)
-                    stride = max(1, n // target)
-                    sampled = bytes(payload[::stride])[:target]
-                    out = sampled + b"\x00" * (target - len(sampled))
-                rows.append(
-                    {id_col: i, "width": width, "height": height, "resized": out}
-                )
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, "payload").mapInPandas(fn, schema=schema)

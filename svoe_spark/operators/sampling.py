@@ -1,10 +1,10 @@
-"""Emission sampling / decimation / time-range subsetting.
+"""Emission sampling / decimation.
 
 Reference semantics: ``sampling: raw|skip_all|<dur>`` — emit every
 event, never, or once per time bucket with the latest value winning
 (reference l2_snapshot_fd.py:64-77, stream_utils.py:12-24); every-nth
 row decimation for materialization (df_utils.py:168-169,
-runner.py:148-164); closed ts-range subset (df_utils.py:53-57).
+runner.py:148-164).
 """
 
 from __future__ import annotations
@@ -55,26 +55,6 @@ def every_nth(
         df.withColumn("__rn", F.row_number().over(w))
         .filter((F.col("__rn") - 1) % n == 0)
         .drop("__rn")
-    )
-
-
-def ts_range(
-    df: DataFrame, start, end, on: str = "timestamp"
-) -> DataFrame:
-    """Closed-interval time subset (reference sub_df_ts,
-    df_utils.py:53-57); the between predicate pushes down to the scan."""
-    return df.filter(F.col(on).between(start, end))
-
-
-def prefix_columns(df: DataFrame, prefix: str, exclude: list[str] | None = None) -> DataFrame:
-    """Namespace feature columns '{prefix}{col}' before a wide join
-    (reference df_utils.py:172-180)."""
-    exclude = set(exclude or [])
-    return df.select(
-        *[
-            F.col(c).alias(c if c in exclude else f"{prefix}{c}")
-            for c in df.columns
-        ]
     )
 
 

@@ -298,19 +298,3 @@ class SCD2Store:
             batch_id,
             lambda: self.refresh(batch_df, batch_id=batch_id),
         )
-
-
-def maintain_scd2_stream(store: SCD2Store, update_stream: DataFrame, checkpoint: str):
-    """Keep an SCD2Store continuously maintained from a CDC/observation
-    stream: foreachBatch -> bucket-incremental merge. At-least-once
-    replays are absorbed by the commit log, the per-bucket batch stamp,
-    and scd2_merge's own replay idempotence (see SCD2Store). Returns
-    the StreamingQuery (availableNow trigger for bounded replays)."""
-    from svoe_spark.streaming.sinks import foreach_batch
-
-    return foreach_batch(
-        update_stream,
-        store.apply_batch,
-        checkpoint,
-        trigger={"availableNow": True},
-    )

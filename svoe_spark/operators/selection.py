@@ -4,8 +4,8 @@ Importance Resampling", arXiv:2302.03169).
 
 Beyond-reference layer (SURVEY §2.13). DSIR scores every raw document
 by how much more likely its hashed n-gram features are under a trusted
-target corpus than under the raw corpus, then keeps the top-weighted
-documents. The paper scores log p_target(x) - log p_raw(x); this
+target corpus than under the raw corpus; the caller keeps the
+top-weighted documents. The paper scores log p_target(x) - log p_raw(x); this
 implementation uses the per-token PROBABILITY RATIO averaged over the
 document (a log-free monotone analogue per token) because ln() differs
 by 1 ulp across libm implementations and would break cross-engine
@@ -125,72 +125,4 @@ def dsir_importance(
         F.col(id_col),
         n.cast("long").alias("n_tokens"),
         F.when(n > 0, total / n).otherwise(F.lit(0.0)).alias("importance"),
-    )
-
-
-def dsir_select(
-    raw: DataFrame,
-    target: DataFrame,
-    frac: float = 0.1,
-    buckets: int = DSIR_BUCKETS,
-    text: str = "text",
-    id_col: str = "doc_id",
-    rank_buckets: int = 64,
-) -> DataFrame:
-    """Keep the top ``frac`` of raw documents by DSIR importance,
-    deterministically (ties broken by ascending id). The paper
-    resamples with Gumbel noise; top-k is the deterministic variant
-    production pipelines use.
-
-    No global sort: the importance range is histogrammed into
-    ``rank_buckets`` cells (one tiny collect), the exclusive
-    higher-bucket prefix turns a PER-BUCKET row_number into a global
-    descending rank (same decomposition as curation.global_rank), and
-    rank <= ceil(N*frac) filters. The scored relation is persisted —
-    it feeds the histogram and the output, and its lineage folds every
-    token of the corpus. Degenerate case: if every document scores
-    identically the histogram is one bucket and the window serializes;
-    real corpora spread."""
-    from pyspark.sql import Window
-
-    scored = dsir_importance(raw, target, buckets, text, id_col).persist()
-    lo, hi = scored.agg(F.min("importance"), F.max("importance")).first()
-    if lo is None:
-        return scored
-    span = hi - lo
-    if span > 0.0:
-        b = F.least(
-            F.lit(rank_buckets - 1),
-            F.floor((F.col("importance") - lo) / span * rank_buckets).cast(
-                "int"
-            ),
-        )
-    else:
-        b = F.lit(0)
-    hist = dict(scored.groupBy(b.alias("__b")).count().collect())
-    total = sum(hist.values())
-    import math
-
-    n_keep = math.ceil(total * frac)
-    # exclusive count of rows in STRICTLY HIGHER buckets
-    above = []
-    acc = 0
-    for i in range(rank_buckets - 1, -1, -1):
-        above.append((i, acc))
-        acc += hist.get(i, 0)
-    above_arr = [v for _, v in sorted(above)]
-    w = Window.partitionBy("__bkt").orderBy(
-        F.desc("importance"), F.col(id_col)
-    )
-    return (
-        scored.withColumn("__bkt", b)
-        .withColumn(
-            "__rank",
-            F.row_number().over(w).cast("long")
-            + F.element_at(
-                F.lit(above_arr).cast("array<long>"), F.col("__bkt") + 1
-            ),
-        )
-        .filter(F.col("__rank") <= F.lit(int(n_keep)))
-        .drop("__bkt", "__rank")
     )

@@ -98,18 +98,6 @@ def cms_build(
     )
 
 
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Counter-wise sum of sketches built with the SAME params — the
-    mergeability that makes CMS per-partition / per-day maintainable:
-    sketch(A ∪ B) == merge(sketch(A), sketch(B)) exactly."""
-    from functools import reduce
-
-    u = reduce(lambda a, b: a.unionByName(b), sketches)
-    return u.groupBy("row", "bucket").agg(
-        F.sum("cnt").cast("bigint").alias("cnt")
-    )
-
-
 def cms_lookup(
     sketch: DataFrame,
     keys: DataFrame,
@@ -1014,19 +1002,6 @@ def quantile_sketch(
         .groupBy(*groups, "qv")
         .agg(cnt)
     )
-
-
-def quantile_sketch_merge(
-    sketches: list[DataFrame], group_cols: list[str] | None = None
-) -> DataFrame:
-    """Counts add — sketch(A) + sketch(B) == sketch(A union B).
-    Valid ONLY for sketches built with the SAME QSketchParams (the
-    relation does not carry them; see QSketchParams)."""
-    from functools import reduce
-
-    groups = list(group_cols or [])
-    u = reduce(lambda x, y: x.unionByName(y), sketches)
-    return u.groupBy(*groups, "qv").agg(F.sum("cnt").alias("cnt"))
 
 
 def quantile_sketch_estimate(

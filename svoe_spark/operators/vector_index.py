@@ -134,87 +134,3 @@ def search_ivfpq_index(
     return refine_topk(
         cand, refine_from, query, k=k, vec_col=vec_col, id_col=id_col
     )
-
-
-def search_ivfpq_index_batch(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    k: int = 10,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    cluster_col: str = "cluster_id",
-    codes_col: str = "codes",
-    refine_from: DataFrame | None = None,
-    shortlist: int | None = None,
-) -> DataFrame:
-    """Batch search over the persisted index: one pruned pass over the
-    UNION of every query's probed cells (``ann_ivfpq_topk_batch`` —
-    the IN-list still prunes ``cluster_id=`` directories inside every
-    batch subtree), per-query ADC top-k; with ``refine_from``, the
-    per-query shortlists rescore exactly through the fully relational
-    ``refine_topk_batch`` (no driver round-trip between stages). Rows
-    per query are bit-identical to ``search_ivfpq_index``."""
-    from svoe_spark.operators.similarity import (
-        ann_ivfpq_topk_batch,
-        refine_topk_batch,
-    )
-
-    adc_k = (
-        k
-        if refine_from is None
-        else (shortlist or max(ANN_REFINE_SHORTLIST, 4 * k))
-    )
-    cand = ann_ivfpq_topk_batch(
-        read_ivfpq_index(spark, path),
-        queries,
-        centroids,
-        codebooks,
-        k=adc_k,
-        nprobe=nprobe,
-        vec_col=vec_col,
-        id_col=id_col,
-        query_id_col=query_id_col,
-        cluster_col=cluster_col,
-        codes_col=codes_col,
-    )
-    if refine_from is None:
-        return cand
-    return refine_topk_batch(
-        cand,
-        refine_from,
-        queries,
-        k=k,
-        vec_col=vec_col,
-        id_col=id_col,
-        query_id_col=query_id_col,
-    )
-
-
-def maintain_ivfpq_stream(
-    vec_stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-):
-    """Keep the index ingesting from an embedding stream: one
-    ``append_ivfpq_batch`` per micro-batch (availableNow trigger —
-    bounded replay, single writer per path, exactly like
-    ``maintain_dedup_index_stream``). Returns the StreamingQuery."""
-    from svoe_spark.streaming.sinks import foreach_batch
-
-    return foreach_batch(
-        vec_stream,
-        lambda bdf, bid: append_ivfpq_batch(
-            path, bdf, bid, centroids, codebooks, vec_col=vec_col, id_col=id_col
-        ),
-        checkpoint,
-        trigger={"availableNow": True},
-    )

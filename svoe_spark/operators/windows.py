@@ -14,7 +14,7 @@ forms here serve registry queries and batch references.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from svoe_spark.functions.time import (
@@ -125,20 +125,6 @@ def pct_change(
     return df.withColumn(
         out, F.when(first != 0, (last - first) / first).otherwise(F.lit(None))
     )
-
-
-def trailing_agg(
-    df: DataFrame,
-    aggs: dict[str, Column],
-    on: str = "timestamp",
-    by: list[str] | str | None = None,
-    window: str = "1m",
-) -> DataFrame:
-    """Generic trailing-window apply: attach arbitrary aggregate
-    expressions evaluated over the trailing frame (library form of the
-    reference's lookback_apply deque fold, stream_utils.py:31-39)."""
-    w = trailing_window(on, window, by)
-    return df.select("*", *[expr.over(w).alias(name) for name, expr in aggs.items()])
 
 
 def local_extrema(

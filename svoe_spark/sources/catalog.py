@@ -19,6 +19,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from svoe_spark.functions.time import utc_day
 from svoe_spark.sources.tables import read_parquet
 
 
@@ -32,9 +33,10 @@ def write_partitioned(
     """Day-partitioned parquet lake write (reference S2 gzip blocks +
     day partition pathing). Partition pruning makes (feature,
     date-range) resolution a directory listing, replacing the SQL
-    index."""
+    index. ``day`` is the UTC date (``functions.time.utc_day``) in any
+    session time zone."""
     (
-        df.withColumn("day", F.date_format(ts_col, "yyyy-MM-dd"))
+        df.withColumn("day", utc_day(ts_col))
         .repartitionByRange(
             max(df.sparkSession.sparkContext.defaultParallelism, 1), ts_col
         )
@@ -55,75 +57,21 @@ def read_time_range(
     spark: SparkSession, path: str, start=None, end=None, ts_col: str = "ts"
 ) -> DataFrame:
     """Catalog-driven scan (reference S3): day-level partition pruning +
-    exact ts filter, both pushed to the source."""
+    exact ts filter, both pushed to the source. The bounds are read in
+    the session zone and pruned on their UTC day, as the lake is
+    written."""
     df = spark.read.parquet(path)
     if start is not None:
         df = df.filter(
-            (F.col("day") >= F.date_format(F.lit(start), "yyyy-MM-dd"))
+            (F.col("day") >= utc_day(F.lit(start)))
             & (F.col(ts_col) >= F.lit(start))
         )
     if end is not None:
         df = df.filter(
-            (F.col("day") <= F.date_format(F.lit(end), "yyyy-MM-dd"))
+            (F.col("day") <= utc_day(F.lit(end)))
             & (F.col(ts_col) <= F.lit(end))
         )
     return df.drop("day")
-
-
-def write_bucketed(
-    df: DataFrame,
-    name: str,
-    path: str,
-    key: str | list[str],
-    n_buckets: int = 32,
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> DataFrame:
-    """Hash-bucketed (and bucket-sorted) table for CO-LOCATED joins: two
-    tables bucketed on the same key with the same bucket count join with
-    NO exchange — each task reads matching bucket files from both sides.
-    At 100 TB this turns the recurring fact-fact join (orders x
-    lineitem, features x labels) from a full network shuffle per query
-    into a one-time layout cost at write. ``sort`` additionally orders
-    rows within each bucket so the sort-merge join skips its sort step.
-
-    Registered in the session catalog (`spark.table(name)`); a
-    production deployment records the same layout in a shared metastore.
-    Returns the re-read table (carrying the bucket metadata — a plain
-    ``read.parquet`` of the path would not)."""
-    keys = [key] if isinstance(key, str) else list(key)
-    w = (
-        df.write.mode(mode)
-        .option("path", path)
-        .bucketBy(n_buckets, *keys)
-    )
-    if sort:
-        w = w.sortBy(*keys)
-    w.saveAsTable(name)
-    return df.sparkSession.table(name)
-
-
-def content_hash(df: DataFrame, cols: list[str] | None = None) -> int:
-    """Order-insensitive content hash of a DataFrame (reference F6,
-    df_utils.py:163-164 — joblib hash of the pandas frame): xor-fold of
-    per-row xxhash64. Distributed, one aggregate, no collect of data."""
-    cols = cols or df.columns
-    hashed = df.select(F.xxhash64(*cols).alias("h"))
-    # xor alone cancels even-multiplicity rows ({A,A,B} == {C,C,B}), so
-    # combine it with a multiset-sensitive sum; decimal(38,0) keeps the
-    # sum ANSI-safe (a plain long sum of uniform 64-bit hashes overflows
-    # immediately, which ANSI mode turns into a hard error).
-    row = hashed.agg(
-        F.expr("bit_xor(h)").alias("x"),
-        F.sum(F.col("h").cast("decimal(38,0)")).alias("s"),
-        F.count(F.lit(1)).alias("n"),
-    ).first()
-    # hash only numbers: str hashing is salted per process
-    # (PYTHONHASHSEED), which would make the digest useless for any
-    # cross-session change detection; int hashing is not salted. On an
-    # empty relation the aggregates are NULL — substitute constants
-    # (hash(None) is id-based on CPython < 3.12, process-dependent).
-    return hash((int(row["x"] or 0), int(row["s"] or 0), row["n"]))
 
 
 def compact(
@@ -165,28 +113,6 @@ def compact(
         for f in files
         if f.endswith(".parquet")
     )
-
-
-def assert_ts_sorted(
-    df: DataFrame, order_col: str, on: str = "ts", by: list[str] | None = None
-) -> None:
-    """Data-quality assertion (reference's sortedness invariant,
-    df_utils.py:93-105, as an explicit check): event time must be
-    non-decreasing along ``order_col`` (a sequence id / file offset —
-    DataFrames have no inherent row order to check against) per key.
-    Raises ValueError with the violation count."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*(by or [])).orderBy(order_col)
-    bad = (
-        df.withColumn("__prev", F.lag(on).over(w))
-        .filter(F.col("__prev") > F.col(on))
-        .count()
-    )
-    if bad:
-        raise ValueError(
-            f"{bad} rows violate ts-sortedness on {on!r} along {order_col!r}"
-        )
 
 
 class FeatureStore:
@@ -255,7 +181,7 @@ def write_clustered(
     if isinstance(cluster_cols, str):
         cluster_cols = [cluster_cols]
     (
-        df.withColumn("day", F.date_format(ts_col, "yyyy-MM-dd"))
+        df.withColumn("day", utc_day(ts_col))
         .repartition(
             max(df.sparkSession.sparkContext.defaultParallelism, 1),
             *[F.col(c) for c in cluster_cols],

@@ -1,31 +1,24 @@
-"""Kappa forms of the directional as-of joins (`operators/asof.py`):
-streaming forward and nearest matches (VERDICT r6 ask 4; state bounding
-and native value types: VERDICT r7 asks 4-5).
+"""Kappa form of the nearest as-of join (`operators/asof.py:
+asof_join_nearest`): streaming nearest matches (VERDICT r6 ask 4; state
+bounding and native value types: VERDICT r7 asks 4-5).
 
 The backward as-of is purely causal (the flagship feature stream
-already computes it: `Featurizer.run_stream`). Forward and nearest
-need the first right observation AT-OR-AFTER a left row — a DELAY, not
-an impossibility: a left row's match is computable the moment the
-gap-CLOSING right observation arrives, so each left row is held as
-pending state and emitted FINAL (no retraction, no watermark hold) on
-the first right row at-or-after it.
+already computes it: `Featurizer.run_stream`). Nearest needs the first
+right observation AFTER a left row — a DELAY, not an impossibility: a
+left row's match is computable the moment the gap-CLOSING right
+observation arrives, so each left row is held as pending state and
+emitted FINAL (no retraction, no watermark hold) on the first right row
+after it.
 
 Why stream == batch exactly on closed rows (the equivalence tests
 drive both): processing (key, ts)-ordered events with right rows
-before left rows at equal instants,
-
-* forward (`operators/asof.py:asof_join` direction='forward'): a left
-  row at t matches the EARLIEST right at r >= t. A right at exactly t
-  has already been processed when the left arrives (emit immediately);
-  otherwise the first right with r > t is, by arrival order, the
-  earliest right after t — emit the pending left with it.
-* nearest (`operators/asof.py:asof_join_nearest`): the backward
-  candidate (latest right <= t) is final the moment the left arrives —
-  snapshot it into the pending entry; the forward candidate is the
-  first right with r > t. When it arrives, both distances are known
-  exact int64 microseconds and the batch tie-break (backward wins ties)
-  evaluates identically. A left row whose backward distance is ZERO is
-  emitted immediately: no future right can beat an exact match.
+before left rows at equal instants, the backward candidate (latest
+right <= t) is final the moment the left arrives — snapshot it into
+the pending entry; the forward candidate is the first right with
+r > t. When it arrives, both distances are known exact int64
+microseconds and the batch tie-break (backward wins ties) evaluates
+identically. A left row whose backward distance is ZERO is emitted
+immediately: no future right can beat an exact match.
 
 Whole-row semantics match the batch operators: the matched right row's
 value columns are carried as parallel native-typed columns snapshotted
@@ -34,10 +27,9 @@ column's original Spark type — a string-valued or integer-valued as-of
 join streams exactly like the batch form, with no double coercion.
 
 State bounding under ``tolerance``: once event time passes t +
-tolerance, a pending left's outcome is already decided — forward can
-only match out-of-tolerance (NULL), and nearest's only live candidate
-is the snapshotted backward one (any future forward is farther than
-the tolerance). Expired pendings are therefore FINALIZED and evicted
+tolerance, a pending left's outcome is already decided: its only live
+candidate is the snapshotted backward one (any future forward is
+farther than the tolerance). Expired pendings are therefore FINALIZED and evicted
 two ways: (a) data-driven — any same-key event at u finalizes pendings
 with t + tolerance < u (the ordered-replay contract makes u a lower
 bound on future instants); (b) watermark-driven — the union stream is
@@ -48,7 +40,7 @@ tolerance the un-closable tail must wait by definition (the same
 un-emittable tail as the interpolation stream's trailing NULLs), and
 the handler keeps the no-timeout contract.
 
-Contracts (shared with the other Kappa twins): cross-batch event-time
+Contracts (shared with the other Kappa handlers): cross-batch event-time
 ordered replay; unique (key, ts) per side (pre-aggregate duplicate
 right instants — the batch operators' tiebreak column has no stream
 counterpart); tolerance is exact integer microseconds, matching the
@@ -230,129 +222,6 @@ def _schedule_timeout(state: GroupState, pend_ts: list[int], tol_us: int) -> Non
     wm_ms = state.getCurrentWatermarkMs()
     deadline_ms = (min(pend_ts) + tol_us) // 1000
     state.setTimeoutTimestamp(max(deadline_ms, wm_ms + 1))
-
-
-def asof_forward_stream(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "timestamp",
-    by: str = "symbol",
-    value_col: str | list[str] = "value",
-    out: str | list[str] | None = None,
-    tolerance: str | float | None = None,
-) -> DataFrame:
-    """Streaming forward as-of: for each left row at t, the value
-    columns of the EARLIEST right row at r >= t, emitted FINAL when
-    that right row arrives (immediately when a right at exactly t
-    precedes it). Out-of-tolerance matches emit with NULL values, like
-    the batch fill — and with a tolerance set, a pending left whose
-    deadline t + tolerance passes event time is finalized as NULL and
-    EVICTED (data-driven within the replay, event-time timeout for
-    quiet keys), bounding state to the tolerance window. Value columns
-    keep their native types. State per key: the last right (ts,
-    values) + the pending left instants. Output: (by, on, *out);
-    ``out`` defaults to 'fwd_value' for a single column, the columns'
-    own names for a list.
-
-    Ordering contract (tolerance mode): NULL-finalization uses the
-    GLOBAL event-time horizon (batch max + watermark), so it is exact
-    only under this module's globally event-time-ordered replay
-    contract (see module docstring). On a source that is merely
-    per-KEY ordered (e.g. multiple Kafka partitions), one key's
-    traffic would advance the horizon past another key's still-coming
-    rows and early-emit NULLs that batch semantics would match — run
-    tolerance mode only on globally ordered replays."""
-    cols, names = _norm_cols(value_col, out, "fwd_value")
-    tol_us = (
-        None
-        if tolerance is None
-        else int(round(duration_to_seconds(tolerance) * 1_000_000))
-    )
-    u, vts, enc = _tagged_union(left, right, on, by, cols)
-    out_schema = _out_schema(left, by, names, vts)
-    nv = len(cols)
-    sts = [StringType() if e else t for t, e in zip(vts, enc)]
-    state_schema = StructType(
-        [StructField("pr_ts", LongType())]
-        + [StructField(f"pr_v{j}", t) for j, t in enumerate(sts)]
-        + [StructField("pend_ts", ArrayType(LongType()))]
-    )
-
-    def fn(
-        key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            got = state.get
-            pr_ts = got[0]
-            pr_v = tuple(
-                _dec_val(v, e) for v, e in zip(got[1 : 1 + nv], enc)
-            )
-            pend = list(got[1 + nv]) if got[1 + nv] is not None else []
-        else:
-            pr_ts, pr_v, pend = None, (None,) * nv, []
-        out_t: list[int] = []
-        out_v: list[tuple | None] = []
-
-        def emit(t: int, r: int, v: tuple) -> None:
-            out_t.append(t)
-            out_v.append(v if tol_us is None or (r - t) <= tol_us else None)
-
-        pdf = batch_frame(
-            pdfs, ["__us", "__side"], columns=["__us", "__side", "__v"]
-        )
-        max_us = None
-        vcol = pdf["__v"]
-        for i, (us, side) in enumerate(zip(pdf["__us"], pdf["__side"])):
-            us = int(us)
-            max_us = us
-            if side == 0:
-                v = _v_tuple(vcol.iloc[i], enc)
-                still = []
-                for t in pend:
-                    if t <= us:
-                        emit(t, us, v)
-                    else:
-                        still.append(t)
-                pend = still
-                pr_ts, pr_v = us, v
-            else:
-                if pr_ts is not None and pr_ts == us:
-                    emit(us, pr_ts, pr_v)
-                else:
-                    pend.append(us)
-        if tol_us is not None and pend:
-            # finalize expired pendings: by this batch's own horizon
-            # (ordered replay: future same-key instants are >= max_us),
-            # then by the global watermark (covers quiet keys; this is
-            # also the timeout-firing path, where the batch is empty)
-            horizon = max_us
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            horizon = wm_us if horizon is None else max(horizon, wm_us)
-            live = []
-            for t in pend:
-                if t + tol_us < horizon:
-                    out_t.append(t)
-                    out_v.append(None)  # no in-tolerance right can come
-                else:
-                    live.append(t)
-            pend = live
-        state.update(
-            (pr_ts, *(_enc_val(v, e) for v, e in zip(pr_v, enc)), pend)
-        )
-        if tol_us is not None:
-            _schedule_timeout(state, pend, tol_us)
-        if out_t:
-            yield _emit_frame(by, key_tuple, names, out_t, out_v)
-
-    u, timeout_conf = _prep(u, tol_us)
-    res = u.groupBy(by).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=timeout_conf,
-    )
-    return res.select(by, from_micros("ts_us").alias(on), *names)
 
 
 def asof_nearest_stream(

@@ -7,10 +7,10 @@ delivered in shuffle-fetch order, NOT event-time order. Every stateful
 operator here carries running state across rows, so sorting each chunk
 independently and processing chunks as they arrive silently breaks the
 operator's event-time ordering contract the moment one key exceeds the
-chunk size within a single micro-batch (e.g. a running max-drawdown
-whose chunk 2 holds an earlier, higher peak than chunk 1 would measure
-chunk 1's drawdowns from the wrong peak). Assemble the whole batch,
-sort ONCE, then process.
+chunk size within a single micro-batch (e.g. a trailing window buffer
+whose chunk 2 holds earlier events than chunk 1 would append them
+after chunk 1's and search an unsorted buffer). Assemble the whole
+batch, sort ONCE, then process.
 
 Memory note: this materializes one (key, micro-batch) in pandas — the
 same footprint contract applyInPandas already imposes per group, and

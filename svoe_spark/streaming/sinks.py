@@ -12,8 +12,9 @@ from __future__ import annotations
 import uuid
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from svoe_spark.functions.time import utc_day
 
 
 def write_parquet_blocks(
@@ -26,10 +27,11 @@ def write_parquet_blocks(
 ) -> StreamingQuery:
     """Day-partitioned parquet block sink with exactly-once checkpointing
     (replaces S11/BlockWriter; partition path mirrors the reference's
-    {day}/ layout, data_source_block_metadata.py:42-55)."""
+    {day}/ layout, data_source_block_metadata.py:42-55); ``day`` is the
+    UTC date, as in ``catalog.write_partitioned``."""
     out = df
     if "day" in partition_by and "day" not in df.columns:
-        out = df.withColumn("day", F.date_format(ts_col, "yyyy-MM-dd"))
+        out = df.withColumn("day", utc_day(ts_col))
     writer = (
         out.writeStream.format("parquet")
         .option("path", path)

@@ -524,6 +524,25 @@ def test_run_stream_equals_batch_across_chunks_and_packed_rows(spark, tmp_path, 
     _assert_stream_equals_batch(spark, cfg, rows, _TOL)
 
 
+def test_batch_frame_assembles_and_sorts_across_chunks():
+    import pandas as pd
+
+    from svoe_spark.streaming.chunks import batch_frame
+
+    # chunk 2 holds EARLIER events than chunk 1 (fetch order != time)
+    c1 = pd.DataFrame({"ts": [5, 7], "v": [50, 70]})
+    c2 = pd.DataFrame({"ts": [1, 6], "v": [10, 60]})
+    got = batch_frame(iter([c1, c2]), ["ts"])
+    assert list(got["ts"]) == [1, 5, 6, 7]
+    assert list(got["v"]) == [10, 50, 60, 70]
+    one = batch_frame(iter([c1]), ["ts"])
+    assert list(one["ts"]) == [5, 7]
+    # a timeout-fired key arrives with ZERO chunks: an empty frame,
+    # not a crash in pd.concat([])
+    empty = batch_frame(iter([]), ["ts"])
+    assert len(empty) == 0
+
+
 def test_run_stream_keeps_a_null_ts_event(spark, tmp_path):
     """An event with a null ts streams without error and comes out with
     a null ts; the other events keep theirs."""

@@ -1,8 +1,8 @@
 """No pair operator may have an unblocked all-pairs (cross-join) form:
-simhash_pairs bands by Hamming pigeonhole, embedding_neardup_pairs
-defaults to LSH-bucket blocking. These tests pin (a) recall — banding
-is exact for simhash, bucket-equality for embeddings — and (b) plan
-shape — no CartesianProduct / BroadcastNestedLoopJoin."""
+embedding_neardup_pairs defaults to LSH-bucket blocking, and the
+n-gram/contamination joins cap hot inverted-index keys. These tests pin
+(a) recall — bucket-equality for embeddings — and (b) plan shape — no
+CartesianProduct / BroadcastNestedLoopJoin."""
 
 from pyspark.sql import functions as F
 
@@ -11,38 +11,6 @@ from svoe_spark.sources.tables import load_table
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_simhash_pairs_banding_exact(spark, sf_small):
-    """Band-join candidates must reproduce the brute-force all-pairs
-    result exactly (pigeonhole: <=8 differing bits over 9 bands forces
-    an identical band)."""
-    from svoe_spark.operators.dedup import simhash, simhash_pairs
-
-    docs = load_table(spark, "documents", sf_small)
-    got = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_pairs(docs, max_hamming=8).collect()
-    }
-
-    fps = simhash(docs).collect()
-    want = {}
-    for i, a in enumerate(fps):
-        for b in fps[i + 1 :]:
-            lo, hi = sorted((a["doc_id"], b["doc_id"]))
-            d = bin(a["simhash"] ^ b["simhash"]).count("1")
-            if d <= 8:
-                want[(lo, hi)] = d
-    assert got == want
-    assert len(got) > 0
-
-
-def test_simhash_pairs_no_cross_join(spark, sf_small):
-    from svoe_spark.operators.dedup import simhash_pairs
-
-    plan = _plan(simhash_pairs(load_table(spark, "documents", sf_small)))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_ngram_doc_freq_cap_kills_stop_shingle(spark):
@@ -137,47 +105,6 @@ def test_embedding_neardup_default_is_lsh_blocked(spark, sf_small):
     assert a == b
     assert len(a) > 0
     assert auto.columns == ["id_a", "id_b", "cosine"]
-
-
-def test_simhash_bands_cover_only_real_bits(spark):
-    """Regression: with 30-bit fingerprints and max_hamming=8 the old
-    uniform ceil-width banding put band 8 at bits 32-35 — beyond the
-    fingerprint, so EVERY document shared (band 8, value 0) and the
-    band join silently degenerated to all-pairs. Bands must partition
-    exactly the real bits, and no band key may be shared by documents
-    with nothing in common."""
-    from pyspark.sql import Row
-
-    from svoe_spark.operators.dedup import SIMHASH_BITS, simhash_pairs
-
-    # two maximally-different docs: no shared tokens -> far fingerprints
-    df = spark.createDataFrame(
-        [Row(doc_id=0, text="aa bb cc dd ee ff gg hh"),
-         Row(doc_id=1, text="zz yy xx ww vv uu tt ss")]
-    )
-    pairs = simhash_pairs(df, max_hamming=8)
-    # candidate join must not force them into a shared degenerate band:
-    # with real-bit banding their band values differ somewhere unless
-    # fingerprints genuinely collide in a band - but the emitted pairs
-    # must respect the hamming threshold regardless
-    for r in pairs.collect():
-        assert r.hamming <= 8
-    # banding arithmetic: widths partition SIMHASH_BITS exactly
-    n_bands = 9
-    base, rem = divmod(SIMHASH_BITS, n_bands)
-    widths = [base + 1] * rem + [base] * (n_bands - rem)
-    assert sum(widths) == SIMHASH_BITS and min(widths) >= 1
-
-
-def test_simhash_pairs_rejects_degenerate_threshold(spark):
-    import pytest as _pytest
-    from pyspark.sql import Row
-
-    from svoe_spark.operators.dedup import SIMHASH_BITS, simhash_pairs
-
-    df = spark.createDataFrame([Row(doc_id=0, text="a b c")])
-    with _pytest.raises(ValueError):
-        simhash_pairs(df, max_hamming=SIMHASH_BITS)
 
 
 def test_numpy_pairs_match_expr_pairs(spark, sf_small):

@@ -8,7 +8,7 @@ too) must leave the feature columns of the rows at ts <= t unchanged
 Event time is an instant: in a session zone with DST, the events of a
 fall-back hour keep their order and their instants through the FLS,
 ``run_stream``, the order book, ``ohlcv``'s UTC-midnight bars and the
-running folds of ``streaming/aggregate.py``."""
+batch running folds."""
 
 import numpy as np
 import pandas as pd
@@ -23,7 +23,6 @@ from svoe_spark.operators.orderbook import reconstruct_book, reconstruct_book_bu
 from svoe_spark.operators.quant import max_drawdown, order_flow_imbalance
 from svoe_spark.plans.definitions import REGISTRY
 from svoe_spark.plans.featurizer import Featurizer
-from svoe_spark.streaming.aggregate import drawdown_stream, keyed_reduce_stream, ofi_stream
 from svoe_spark.streaming.sinks import run_available_to_memory
 from svoe_spark.streaming.sources import replay_parquet
 from test_definition_loading import USER_FD
@@ -276,23 +275,32 @@ def _prefix_max_drawdown(df):
     return max_drawdown(prefixes, "price", by="cut").select(F.col("cut").alias("ts"), F.col("max_dd").cast("double"))
 
 
-RUNNING_FOLDS = {  # name -> (stream form, batch form), each to (ts, values...)
+def _ofi_reference(p) -> list:
+    """Cont-Kukanov-Stoikov e_n over ``_book_top``'s updates; the first is 0."""
+    b = qb = p.astype(np.int64)
+    a, qa = b + 1, 7 - b
+    e = ((b[1:] >= b[:-1]) * qb[1:] - (b[1:] <= b[:-1]) * qb[:-1]
+         - (a[1:] <= a[:-1]) * qa[1:] + (a[1:] >= a[:-1]) * qa[:-1])
+    return [np.concatenate([[0], e])]
+
+
+RUNNING_FOLDS = {  # name -> (batch form to (ts, values...), numpy fold of the prices in instant order)
     "reduce": (
-        lambda df: keyed_reduce_stream(df.select("sym", "ts", "price"), "price", REDUCE_OPS, key="sym")
-        .select("ts", *[f"{op}_price" for op in REDUCE_OPS]),
         lambda df: running_reduce(df, {
             "sum_price": F.sum("price"), "count_price": F.count(F.lit(1)),
             "min_price": F.min("price"), "max_price": F.max("price"), "last_price": F.last("price"),
         }, by="sym").select("ts", *[f"{op}_price" for op in REDUCE_OPS]),
+        lambda p: [np.cumsum(p), np.arange(1, len(p) + 1), np.minimum.accumulate(p),
+                   np.maximum.accumulate(p), p],
     ),
     "drawdown": (
-        lambda df: drawdown_stream(df.select("sym", "ts", "price"), "price", key="sym").select("ts", "max_dd"),
         _prefix_max_drawdown,
+        lambda p: [np.maximum.accumulate(np.maximum.accumulate(p) - p)],
     ),
     "ofi": (
-        lambda df: ofi_stream(_book_top(df), key="sym").select("ts", "e_ofi"),
         lambda df: order_flow_imbalance(_book_top(df), "sym", "ts", "bid_px", "bid_sz", "ask_px", "ask_sz")
         .select("ts", "e_ofi"),
+        _ofi_reference,
     ),
 }
 
@@ -302,18 +310,17 @@ def _fold_rows(df) -> list:
 
 
 @pytest.mark.parametrize("fold", list(RUNNING_FOLDS))
-def test_fall_back_hour_running_folds_stream_equal_batch(spark, tmp_path, fold):
-    """In a New York session each running fold of
-    ``streaming/aggregate.py`` folds the fall-back events in instant
-    order and stamps each row with its own instant: its rows equal its
-    batch form's and the UTC session's."""
-    # rises and dips, so a reordered fall-back hour changes every fold
-    _write(_fall_back_events((3.0, 5.0, 4.0, 6.0, 2.0, 1.0)), str(tmp_path / "events.parquet"))
-    path = str(tmp_path)
-    stream, batch = RUNNING_FOLDS[fold]
+def test_fall_back_hour_running_folds_equal_numpy(spark, tmp_path, fold):
+    """In a New York session each running fold (``combine.running_reduce``,
+    the prefix ``quant.max_drawdown``, ``quant.order_flow_imbalance``)
+    folds the fall-back events in instant order and stamps each row with
+    its own instant: its rows equal a numpy fold of the events in
+    instant order, and the UTC session's."""
+    prices = np.array([3.0, 5.0, 4.0, 6.0, 2.0, 1.0])  # rises and dips: a reordered hour changes every fold
+    path = _write(_fall_back_events(prices), str(tmp_path / "events.parquet"))
+    batch, reference = RUNNING_FOLDS[fold]
     with session_time_zone(spark, NY):
-        got = _fold_rows(run_available_to_memory(stream(replay_parquet(spark, path))))
-        want = _fold_rows(batch(spark.read.parquet(path)))
-    utc = _fold_rows(run_available_to_memory(stream(replay_parquet(spark, path))))
-    assert [r[0] for r in got] == [_us(t) for t in FALL_BACK]
+        got = _fold_rows(batch(spark.read.parquet(path)))
+    utc = _fold_rows(batch(spark.read.parquet(path)))
+    want = sorted(zip([_us(t) for t in FALL_BACK], *reference(prices)))  # FALL_BACK is in instant order
     assert got == want == utc

@@ -1,16 +1,12 @@
 """SCD2Store: bucket-incremental dimension maintenance (operators/
 scd.py). scd2_compress/merge semantics are pinned in test_scd.py; these
 tests pin the store path — incremental == full recompute, touched-
-bucket-only rewrites, streaming maintenance, replay idempotence."""
+bucket-only rewrites, replay idempotence."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from svoe_spark.operators.scd import (
-    SCD2Store,
-    maintain_scd2_stream,
-    scd2_compress,
-)
+from svoe_spark.operators.scd import SCD2Store, scd2_compress
 from svoe_spark.sources.tables import load_table
 
 
@@ -98,39 +94,6 @@ def test_refresh_warns_when_batch_scatters_across_buckets(
             )
         )
     assert len(touched) == 1
-
-
-@pytest.mark.heavy  # round-9 quick-tier trim: ptest.py/round-close still run it
-def test_streaming_maintenance_equals_batch(spark, sf_small, tmp_path):
-    import time
-
-    ev = _ev(spark, sf_small).persist()
-    qs = ev.selectExpr(
-        "percentile(unix_micros(ts), array(0.33, 0.66)) AS q"
-    ).first()["q"]
-    bounds = [None, *[int(q) for q in qs], None]
-    path = str(tmp_path / "updates")
-    for i in range(3):
-        sl = ev
-        if bounds[i] is not None:
-            sl = sl.where(F.unix_micros("ts") > bounds[i])
-        if bounds[i + 1] is not None:
-            sl = sl.where(F.unix_micros("ts") <= bounds[i + 1])
-        sl.coalesce(1).write.mode("append").parquet(path)
-        time.sleep(1.1)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(path).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    store = _store(spark, str(tmp_path / "dim"))
-    q = maintain_scd2_stream(store, stream, str(tmp_path / "ckpt"))
-    q.awaitTermination()
-    full = scd2_compress(
-        ev, "user_id", ["event_type"], ts="ts", tie_col="event_id"
-    )
-    assert _sorted_rows(store.read()) == _sorted_rows(full)
-    ev.unpersist()
 
 
 def test_apply_batch_idempotent_on_replayed_batch_id(spark, sf_small, tmp_path):

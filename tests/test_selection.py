@@ -1,16 +1,12 @@
-"""DSIR importance weighting: semantics on a planted fixture,
-deterministic top-frac selection, shuffle-free scoring plan."""
+"""DSIR importance weighting: semantics on a planted fixture and a
+shuffle-free scoring plan."""
 
 import contextlib
 import io
 
 from pyspark.sql import functions as F
 
-from svoe_spark.operators.selection import (
-    dsir_importance,
-    dsir_select,
-    hashed_bucket_counts,
-)
+from svoe_spark.operators.selection import dsir_importance, hashed_bucket_counts
 
 
 def _docs(spark, rows):
@@ -52,22 +48,6 @@ def test_bucket_counts_total_tokens(spark):
         .first()["s"]
     )
     assert total == 5
-
-
-def test_dsir_select_keeps_top_frac_deterministically(spark):
-    target = _docs(spark, ["alpha beta"] * 2)
-    raw = _docs(
-        spark,
-        ["alpha beta", "alpha junk", "junk junk", "alpha beta", "junk noise"],
-    )
-    kept = dsir_select(raw, target, frac=0.4, buckets=64)
-    ids = sorted(r["doc_id"] for r in kept.collect())
-    # ceil(5*0.4)=2; docs 0 and 3 are the pure-target ties, id-ordered
-    assert ids == [0, 3]
-    ids2 = sorted(
-        r["doc_id"] for r in dsir_select(raw, target, frac=0.4, buckets=64).collect()
-    )
-    assert ids2 == ids
 
 
 def test_dsir_scoring_pass_is_shuffle_free(spark, sf_mid):

@@ -1,13 +1,13 @@
-"""Count-min sketch: the never-underestimate guarantee, exact
-mergeability, forced-collision overestimation, NULL handling, and the
-bounded sketch size."""
+"""Count-min sketch: the never-underestimate guarantee,
+forced-collision overestimation, NULL handling, and the bounded sketch
+size."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from svoe_spark.operators.sketches import CMSParams, cms_build, cms_lookup, cms_merge
+from svoe_spark.operators.sketches import CMSParams, cms_build, cms_lookup
 from svoe_spark.sources.tables import load_table
 
 
@@ -48,23 +48,6 @@ def test_cms_sketch_size_is_bounded(events):
     sketch = cms_build(events, "user_id", params).collect()
     assert len(sketch) <= params.width * params.depth
     assert {r["row"] for r in sketch} <= set(range(params.depth))
-
-
-def test_cms_merge_equals_whole(events):
-    params = CMSParams(width=128, depth=4)
-    a = events.where(F.col("event_id") % 2 == 0)
-    b = events.where(F.col("event_id") % 2 != 0)
-    merged = {
-        (r["row"], r["bucket"]): r["cnt"]
-        for r in cms_merge(
-            cms_build(a, "user_id", params), cms_build(b, "user_id", params)
-        ).collect()
-    }
-    whole = {
-        (r["row"], r["bucket"]): r["cnt"]
-        for r in cms_build(events, "user_id", params).collect()
-    }
-    assert merged == whole
 
 
 def test_cms_null_keys_counted_under_sentinel(spark):
@@ -307,26 +290,6 @@ def test_quantile_sketch_error_bound_and_zero(spark, events):
         "value",
     ).collect()
     assert {r["qv"]: r["cnt"] for r in zero} == {0: 2, 500: 1}
-
-
-@pytest.mark.heavy  # round-9 quick-tier margin: ptest.py/round-close run it
-def test_quantile_sketch_merge_equals_whole(spark, events):
-    """sketch(A) + sketch(B) == sketch(A union B) EXACTLY — the
-    mergeability that makes per-day/per-partition maintenance free."""
-    from svoe_spark.operators.sketches import (
-        quantile_sketch,
-        quantile_sketch_merge,
-    )
-
-    a = events.where(F.col("user_id") % 2 == 0).select("value")
-    b = events.where(F.col("user_id") % 2 == 1).select("value")
-    whole = quantile_sketch(events.select("value"), "value")
-    merged = quantile_sketch_merge(
-        [quantile_sketch(a, "value"), quantile_sketch(b, "value")]
-    )
-    lhs = sorted((r["qv"], r["cnt"]) for r in whole.collect())
-    rhs = sorted((r["qv"], r["cnt"]) for r in merged.collect())
-    assert lhs == rhs
 
 
 def test_quantile_sketch_negative_values_sign_symmetric(spark):

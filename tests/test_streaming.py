@@ -1,8 +1,8 @@
 """Kappa equivalence (reference T6, the framework's core requirement):
 the SAME feature computed over a replayed stream must equal the batch
-computation. Plus stateful streaming ops: OHLCV bars, trailing stddev,
-running reduce, order-book reconstruction with state across
-micro-batches."""
+computation. Plus stateful streaming ops: OHLCV bars, trailing stddev
+and order-book reconstruction with state across micro-batches, and
+stateless operators run unchanged on a stream."""
 
 import bisect
 import datetime
@@ -146,108 +146,6 @@ def test_orderbook_stream_equals_batch(spark, sf_small, tmp_path):
     assert diffs == []
 
 
-def test_running_reduce_stream(spark, sf_small, tick_parquet):
-    from svoe_spark.streaming.aggregate import keyed_reduce_stream
-
-    stream = replay_parquet(spark, tick_parquet).select(
-        F.col("event_type").alias("symbol"), F.col("ts"), F.col("value")
-    )
-    out = run_available_to_memory(
-        keyed_reduce_stream(stream, value="value", ops=["sum", "count", "max"])
-    )
-    rows = sorted(
-        (r for r in out.collect() if r["symbol"] == "click"), key=lambda r: r["ts"]
-    )
-    vals = [r["value"] for r in rows]
-    assert rows[-1]["sum_value"] == pytest.approx(sum(vals))
-    assert rows[-1]["count_value"] == len(vals)
-    assert rows[-1]["max_value"] == max(vals)
-    # running invariants hold at every prefix
-    run = 0.0
-    for r in rows:
-        run += r["value"]
-        assert r["sum_value"] == pytest.approx(run)
-
-
-def test_running_reduce_stream_skips_nulls_across_batches(spark, tmp_path):
-    """Two files replayed as two micro-batches, the first ending in a
-    null value: every running op equals ``combine.running_reduce``'s
-    SQL aggregates, whose sum/min/max skip nulls."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from svoe_spark.operators.combine import running_reduce
-    from svoe_spark.streaming.aggregate import keyed_reduce_stream
-
-    path = tmp_path / "vals"
-    path.mkdir()
-    files = [  # (symbol, second, value) per file
-        [("s", 0, 1.0), ("s", 1, None), ("m", 0, 5.0), ("m", 1, None), ("n", 0, None)],
-        [("s", 2, 2.0), ("m", 2, 1.0), ("m", 3, 7.0), ("n", 1, None), ("n", 2, 3.0)],
-    ]
-    for j, rows in enumerate(files):
-        sym, sec, val = zip(*rows)
-        f = path / f"part-{j}.parquet"
-        pq.write_table(pa.table({
-            "symbol": pa.array(sym),
-            "ts": pa.array([s * 1_000_000 for s in sec], pa.timestamp("us", tz="UTC")),
-            "value": pa.array(val, pa.float64()),
-        }), f)
-        os.utime(f, (1_000_000 + j, 1_000_000 + j))
-    ops = ["sum", "count", "min", "max", "last"]
-    stream = spark.readStream.schema(spark.read.parquet(str(path)).schema).option(
-        "maxFilesPerTrigger", 1).parquet(str(path))
-    got = run_available_to_memory(keyed_reduce_stream(stream, value="value", ops=ops))
-    want = running_reduce(spark.read.parquet(str(path)), {
-        "sum_value": F.sum("value"), "count_value": F.count(F.lit(1)),
-        "min_value": F.min("value"), "max_value": F.max("value"), "last_value": F.last("value"),
-    }, on="ts", by="symbol")
-    cols = ["symbol", "ts", *[f"{op}_value" for op in ops]]
-    nan_to_none = lambda r: tuple(None if isinstance(x, float) and math.isnan(x) else x for x in r)  # noqa: E731
-    assert sorted(map(nan_to_none, got.select(cols).collect())) == sorted(
-        map(nan_to_none, want.select(cols).collect())
-    )
-
-
-def test_stream_exact_dedup_equals_batch(spark, sf_small, tmp_path):
-    """Streaming exact dedup must keep exactly one survivor per distinct
-    content, with the same distinct-content set as the batch hash
-    groupBy (survivor identity differs: first-arrival vs min-id)."""
-    from svoe_spark.operators.dedup import (
-        drop_exact_duplicates,
-        drop_exact_duplicates_stream,
-    )
-
-    docs = (
-        load_table(spark, "documents", sf_small)
-        .limit(200)
-        .select(
-            "doc_id",
-            "text",
-            F.timestamp_seconds(1_700_000_000 + F.col("doc_id")).alias("ts"),
-        )
-    )
-    # duplicate every doc under a new id so the stream sees real dups
-    dupped = docs.unionByName(
-        docs.select((F.col("doc_id") + 100000).alias("doc_id"), "text", "ts")
-    )
-    path = str(tmp_path / "docs")
-    dupped.repartitionByRange(4, "doc_id").write.parquet(path)
-
-    stream = replay_parquet(spark, path)
-    out = run_available_to_memory(
-        drop_exact_duplicates_stream(stream), "dedup_stream"
-    )
-    batch = drop_exact_duplicates(spark.read.parquet(path))
-
-    stream_texts = sorted(r["text"] for r in out.collect())
-    batch_texts = sorted(r["text"] for r in batch.collect())
-    assert stream_texts == batch_texts
-    assert len(stream_texts) == len(set(stream_texts))
-
-
 def test_stateless_minhash_runs_on_stream(spark, sf_small, tmp_path):
     """The array-side MinHash signature is a narrow projection, so the
     SAME operator code must run unchanged on a streaming DataFrame
@@ -287,97 +185,3 @@ def test_stateless_cleaning_runs_on_stream(spark, sf_small, tmp_path):
         assert sorted(map(tuple, out.collect()), key=k) == sorted(
             map(tuple, op(batch).collect()), key=k
         )
-
-
-def test_keyed_reduce_dispatch(spark):
-    from svoe_spark.streaming.aggregate import keyed_reduce_stream
-
-    df = spark.readStream.format("rate").load().selectExpr(
-        "'k' AS symbol", "timestamp AS ts", "CAST(value AS DOUBLE) AS value"
-    )
-    q = keyed_reduce_stream(df, value="value", ops=["sum"])
-    assert q.isStreaming
-
-
-@pytest.mark.heavy  # round-10 quick-tier trim (slowest cases -> sharded tier)
-def test_stream_curation_chain_equals_batch(spark, sf_small, tmp_path):
-    """Kappa for the curation layer: the SAME operator code — linear
-    quality classifier (stateless projection) -> keep-filter ->
-    streaming exact dedup — over a replayed document stream keeps
-    exactly the batch chain's distinct surviving contents."""
-    from svoe_spark.operators.dedup import (
-        drop_exact_duplicates,
-        drop_exact_duplicates_stream,
-    )
-    from svoe_spark.operators.text_analysis import quality_classifier
-
-    docs = (
-        load_table(spark, "documents", sf_small)
-        .limit(200)
-        .select(
-            "doc_id",
-            "text",
-            F.timestamp_seconds(1_700_000_000 + F.col("doc_id")).alias("ts"),
-        )
-    )
-    dupped = docs.unionByName(
-        docs.select((F.col("doc_id") + 100000).alias("doc_id"), "text", "ts")
-    )
-    path = str(tmp_path / "docs")
-    dupped.repartitionByRange(4, "doc_id").write.parquet(path)
-
-    def chain(df, dedup):
-        scored = quality_classifier(df, threshold=-0.25, passthrough=True)
-        kept = scored.where("keep").select("doc_id", "text", "ts")
-        return dedup(kept)
-
-    stream_out = run_available_to_memory(
-        chain(replay_parquet(spark, path), drop_exact_duplicates_stream),
-        "curation_stream",
-    )
-    batch_out = chain(spark.read.parquet(path), drop_exact_duplicates)
-
-    s_texts = sorted(r["text"] for r in stream_out.collect())
-    b_texts = sorted(r["text"] for r in batch_out.collect())
-    assert s_texts == b_texts
-    assert 0 < len(s_texts) < 200  # classifier filtered some, dedup halved
-
-
-def test_drawdown_stream_equals_batch(spark, sf_small, tick_parquet):
-    from svoe_spark.operators.quant import max_drawdown
-    from svoe_spark.streaming.aggregate import drawdown_stream
-
-    stream = replay_parquet(spark, tick_parquet).select(
-        F.col("event_type").alias("symbol"),
-        F.col("ts"),
-        F.col("event_id"),
-        F.col("value_c").cast("double").alias("v"),
-    )
-    out = run_available_to_memory(
-        drawdown_stream(stream, value="v", key="symbol", tiebreak="event_id")
-    )
-    got = {
-        r["symbol"]: r["max_dd"]
-        for r in out.groupBy("symbol").agg(F.max("max_dd").alias("max_dd")).collect()
-    }
-    batch = ticks(spark, sf_small).select(
-        F.col("event_type").alias("symbol"), "ts", "event_id", "value_c"
-    )
-    want = {
-        r["symbol"]: float(r["max_dd"])
-        for r in max_drawdown(
-            batch, "value_c", by="symbol", order=["ts", "event_id"]
-        ).collect()
-    }
-    assert got == want
-    # running invariants: peak never decreases, dd = peak - v, max_dd
-    # never decreases per key
-    rows = sorted(
-        (r for r in out.collect() if r["symbol"] == "view"),
-        key=lambda r: r["ts"],
-    )
-    prev_peak, prev_mdd = float("-inf"), 0.0
-    for r in rows:
-        assert r["peak"] >= prev_peak and r["max_dd"] >= prev_mdd
-        assert r["dd"] == r["peak"] - r["v"]
-        prev_peak, prev_mdd = r["peak"], r["max_dd"]

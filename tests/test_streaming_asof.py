@@ -1,7 +1,7 @@
-"""Kappa parity for the directional as-of joins (VERDICT r6 ask 4):
-streaming forward and nearest matches over a time-ranged replay must
-equal the batch operators on the CLOSED row set — every left row with
-a right observation at-or-after it (the gap-closing row exists); the
+"""Kappa parity for the nearest as-of join (VERDICT r6 ask 4):
+streaming nearest matches over a time-ranged replay must equal the
+batch operator on the CLOSED row set — every left row with a right
+observation at-or-after it (the gap-closing row exists); the
 un-closable tail past the last right observation of all time is the
 same un-emittable set as the interpolation stream's trailing NULLs."""
 
@@ -10,11 +10,8 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from svoe_spark.operators.asof import asof_join, asof_join_nearest
-from svoe_spark.streaming.asof_stream import (
-    asof_forward_stream,
-    asof_nearest_stream,
-)
+from svoe_spark.operators.asof import asof_join_nearest
+from svoe_spark.streaming.asof_stream import asof_nearest_stream
 from svoe_spark.streaming.sinks import run_available_to_memory
 
 SHIFT_US = 7 * 60 * 1_000_000  # left instants = right instants + 7min
@@ -87,11 +84,10 @@ def _closed(df, right, on="ts", by="event_type", tol_us=None, wm_us=None):
     return df.join(F.broadcast(mx), by).where(cond).drop("__mx")
 
 
-def _stream_vs_batch(spark, sf_small, asof_parquet, kind, tolerance=None):
+def _stream_vs_batch(spark, sf_small, asof_parquet, tolerance=None):
     lp, rp = asof_parquet
-    fn = asof_forward_stream if kind == "forward" else asof_nearest_stream
     out = run_available_to_memory(
-        fn(
+        asof_nearest_stream(
             _replay(spark, lp),
             _replay(spark, rp),
             on="ts",
@@ -103,16 +99,10 @@ def _stream_vs_batch(spark, sf_small, asof_parquet, kind, tolerance=None):
     )
     got = sorted((r["event_type"], r["ts"], r["v"]) for r in out.collect())
     left, right = _sides(spark, sf_small)
-    if kind == "forward":
-        batch = asof_join(
-            left, right, on="ts", by=["event_type"], right_cols=["value"],
-            direction="forward", tolerance=tolerance,
-        )
-    else:
-        batch = asof_join_nearest(
-            left, right, on="ts", by=["event_type"], right_cols=["value"],
-            tolerance=tolerance,
-        )
+    batch = asof_join_nearest(
+        left, right, on="ts", by=["event_type"], right_cols=["value"],
+        tolerance=tolerance,
+    )
     tol_us = wm_us = None
     if tolerance is not None:
         from svoe_spark.functions.time import duration_to_seconds
@@ -133,15 +123,8 @@ def _stream_vs_batch(spark, sf_small, asof_parquet, kind, tolerance=None):
 
 
 @pytest.mark.heavy  # round-9 quick-tier trim: ptest.py/round-close still run it
-def test_asof_forward_stream_equals_batch(spark, sf_small, asof_parquet):
-    got, want = _stream_vs_batch(spark, sf_small, asof_parquet, "forward")
-    assert got == want and len(got) > 100
-    assert any(v is not None for *_, v in got)
-
-
-@pytest.mark.heavy  # round-9 quick-tier trim: ptest.py/round-close still run it
 def test_asof_nearest_stream_equals_batch(spark, sf_small, asof_parquet):
-    got, want = _stream_vs_batch(spark, sf_small, asof_parquet, "nearest")
+    got, want = _stream_vs_batch(spark, sf_small, asof_parquet)
     assert got == want and len(got) > 100
     assert any(v is not None for *_, v in got)
 
@@ -152,23 +135,9 @@ def test_asof_nearest_stream_tolerance_nulls_match_batch(
 ):
     """Out-of-tolerance rows emit with a NULL value in BOTH forms —
     the batch fill's semantics, not a dropped row."""
-    got, want = _stream_vs_batch(
-        spark, sf_small, asof_parquet, "nearest", tolerance="5m"
-    )
+    got, want = _stream_vs_batch(spark, sf_small, asof_parquet, tolerance="5m")
     assert got == want
     assert any(v is None for *_, v in got)  # the tolerance bites
-    assert any(v is not None for *_, v in got)
-
-
-@pytest.mark.heavy  # round-9 quick-tier trim: ptest.py/round-close still run it
-def test_asof_forward_stream_tolerance_nulls_match_batch(
-    spark, sf_small, asof_parquet
-):
-    got, want = _stream_vs_batch(
-        spark, sf_small, asof_parquet, "forward", tolerance="5m"
-    )
-    assert got == want
-    assert any(v is None for *_, v in got)
     assert any(v is not None for *_, v in got)
 
 
@@ -181,7 +150,7 @@ def test_asof_nearest_stream_survives_tiny_arrow_chunks(
     old = spark.conf.get(key)
     spark.conf.set(key, "3")
     try:
-        got, want = _stream_vs_batch(spark, sf_small, asof_parquet, "nearest")
+        got, want = _stream_vs_batch(spark, sf_small, asof_parquet)
         assert got == want
     finally:
         spark.conf.set(key, old)
@@ -281,61 +250,6 @@ def test_asof_nearest_hand_case_tiebreak_and_exact_match(spark, tmp_path):
         for r in out.collect()
     )
     assert got == [("k", 200, 1.0), ("k", 300, 2.0)]
-
-
-@pytest.mark.heavy  # round-9 quick-tier trim: ptest.py/round-close still run it
-def test_asof_forward_stream_quiet_right_key_finalizes(spark, tmp_path):
-    """State bounding under tolerance (VERDICT r7 ask 4): a key whose
-    right stream goes QUIET must not hold its pending lefts forever —
-    once the watermark (advanced by the OTHER key's traffic) passes
-    t + tolerance, the event-time timeout finalizes them as NULL and
-    evicts the state. Without a tolerance the same rows legitimately
-    wait forever (and must NOT appear)."""
-    lp, rp = str(tmp_path / "l"), str(tmp_path / "r")
-    # key 'q' (quiet): one right at t=100, lefts at 200/250 — no right
-    # ever closes them; with tolerance=30s their deadlines (230/280)
-    # expire once 'a' traffic pushes the watermark past them.
-    # key 'a' (active): rights march to t=1000.
-    right_rows = [("q", 100, 1.0)] + [("a", s, float(s)) for s in (100, 500, 1000)]
-    left_rows = [("q", 200), ("q", 250), ("a", 400)]
-    spark.createDataFrame(
-        right_rows, "event_type string, sec long, value double"
-    ).select(
-        "event_type", F.timestamp_seconds("sec").alias("ts"), "value"
-    ).coalesce(1).write.parquet(rp)
-    spark.createDataFrame(
-        left_rows, "event_type string, sec long"
-    ).select(
-        "event_type", F.timestamp_seconds("sec").alias("ts")
-    ).coalesce(1).write.parquet(lp)
-
-    def run(tolerance):
-        out = run_available_to_memory(
-            asof_forward_stream(
-                _replay(spark, lp),
-                _replay(spark, rp),
-                on="ts",
-                by="event_type",
-                value_col="value",
-                out="v",
-                tolerance=tolerance,
-            )
-        )
-        return sorted(
-            (r["event_type"], int(r["ts"].timestamp()), r["v"])
-            for r in out.collect()
-        )
-
-    # tolerance set: the quiet key's expired pendings emit NULL-final
-    # (proving eviction — they can only appear via the timeout path);
-    # the active key's left matches its 500s right, out of tolerance.
-    assert run("30s") == [
-        ("a", 400, None),
-        ("q", 200, None),
-        ("q", 250, None),
-    ]
-    # no tolerance: the quiet lefts wait forever (only 'a' closes)
-    assert run(None) == [("a", 400, 500.0)]
 
 
 @pytest.mark.heavy  # round-9 quick-tier trim: ptest.py/round-close still run it

@@ -1,6 +1,6 @@
 """Incremental IVF-PQ vector lake: append-only batches, exactly-once
-replay, search parity with one-shot encoding, partition pruning inside
-batch subtrees, and the streaming maintainer."""
+replay, search parity with one-shot encoding and partition pruning
+inside batch subtrees."""
 
 import contextlib
 import io
@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from svoe_spark.operators.similarity import ivfpq_encode_numpy, ivfpq_train
 from svoe_spark.operators.vector_index import (
     append_ivfpq_batch,
-    maintain_ivfpq_stream,
     read_ivfpq_index,
     search_ivfpq_index,
 )
@@ -105,34 +104,6 @@ def test_search_matches_inmemory_and_prunes_partitions(
     ), p
 
 
-def test_streaming_maintainer_matches_batch_appends(
-    spark, emb, cents, cbs, tmp_path
-):
-    src = str(tmp_path / "src")
-    emb.limit(120).select("vec_id", "embedding").write.parquet(src)
-    stream = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    path = str(tmp_path / "vidx")
-    q = maintain_ivfpq_stream(
-        stream, path, str(tmp_path / "ckpt"), cents, cbs
-    )
-    q.awaitTermination(120)
-    got = {
-        r["vec_id"]: (r["cluster_id"], tuple(r["codes"]))
-        for r in read_ivfpq_index(spark, path).collect()
-    }
-    want = {
-        r["vec_id"]: (r["cluster_id"], tuple(r["codes"]))
-        for r in ivfpq_encode_numpy(
-            spark.read.parquet(src), cents, cbs
-        ).collect()
-    }
-    assert got == want
-
-
 def test_search_refine_default_shortlist_is_operating_point(
     spark, emb, cents, cbs, tmp_path
 ):
@@ -161,39 +132,6 @@ def test_search_refine_default_shortlist_is_operating_point(
         for r in refine_topk(short, emb, q, k=5).collect()
     ]
     assert got == want and len(got) == 5
-
-
-@pytest.mark.heavy  # round-9 quick-tier trim: ptest.py/round-close still run it
-def test_search_batch_matches_per_query_search(spark, emb, cents, cbs, tmp_path):
-    """Batch search over the stored lake == per-query search_ivfpq_index,
-    row for row, with and without the refine stage."""
-    from svoe_spark.operators.vector_index import search_ivfpq_index_batch
-
-    path = str(tmp_path / "vidx_batch")
-    assert append_ivfpq_batch(path, emb, 0, cents, cbs)
-    qids = [7, 42]
-    queries = emb.where(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    for refine in (None, emb):
-        got = {}
-        out = search_ivfpq_index_batch(
-            spark, path, queries, cents, cbs, k=5, nprobe=2,
-            refine_from=refine, shortlist=40 if refine is not None else None,
-        )
-        for r in out.collect():
-            got.setdefault(r["query_id"], []).append(tuple(r)[1:])
-        for qid in qids:
-            want = [
-                tuple(r)
-                for r in search_ivfpq_index(
-                    spark, path, emb.where(F.col("vec_id") == qid),
-                    cents, cbs, k=5, nprobe=2,
-                    refine_from=refine,
-                    shortlist=40 if refine is not None else None,
-                ).collect()
-            ]
-            assert got[qid] == want, (qid, refine is not None)
 
 
 def test_search_with_refine_matches_inmemory_pipeline(

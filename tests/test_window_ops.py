@@ -1,14 +1,13 @@
 """Direct unit tests for the window-operator library helpers not
-already covered by oracle queries: trailing_agg (A5), prefix_columns
-(P5), ohlcv on a hand-computed fixture."""
+already covered by oracle queries: the trailing_window frame (A5) and
+ohlcv on a hand-computed fixture."""
 
 import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
 
-from svoe_spark.operators.sampling import prefix_columns
-from svoe_spark.operators.windows import ohlcv, trailing_agg
+from svoe_spark.operators.windows import ohlcv, trailing_window
 
 BASE = dt.datetime(2024, 1, 1)
 
@@ -38,22 +37,16 @@ def test_ohlcv_hand_computed(trades):
     assert (m1["open"], m1["close"], m1["num_trades"]) == (102.0, 98.0, 2)
 
 
-def test_trailing_agg_generic(trades):
-    out = trailing_agg(
-        trades,
-        {"n_30s": F.count(F.lit(1)), "max_30s": F.max("price")},
-        on="ts",
-        window="30s",
+def test_trailing_window_frame(trades):
+    """The frame is [ts - window, ts], both ends inclusive."""
+    w = trailing_window("ts", "30s")
+    out = trades.select(
+        "seq", F.count(F.lit(1)).over(w).alias("n_30s"), F.max("price").over(w).alias("max_30s")
     )
     by_seq = {r["seq"]: r for r in out.collect()}
     assert by_seq[0]["n_30s"] == 1
     assert by_seq[2]["n_30s"] == 3 and by_seq[2]["max_30s"] == 101.0  # 0,10,30 all in [0,30]
     assert by_seq[4]["n_30s"] == 2 and by_seq[4]["max_30s"] == 102.0  # 70,75
-
-
-def test_prefix_columns(trades):
-    out = prefix_columns(trades.select("ts", "price"), "feat-", exclude=["ts"])
-    assert out.columns == ["ts", "feat-price"]
 
 
 def test_approx_sketches_error_bound(spark, sf_mid):
