@@ -32,8 +32,9 @@ from perfbench.common import _stat_fields  # noqa: E402
 PARTITIONS = 4
 
 
-def python_worker_cpu_s(root_pid: int) -> float:
-    """CPU seconds of the ``python*`` processes under ``root_pid``."""
+def python_workers(root_pid: int) -> dict[int, int]:
+    """The ``python*`` processes under ``root_pid``: pid -> CPU clock
+    ticks, user + system, children already reaped included."""
     children: dict[int, list[int]] = {}
     stats: dict[int, tuple[str, int]] = {}
     for name in os.listdir("/proc"):
@@ -46,15 +47,20 @@ def python_worker_cpu_s(root_pid: int) -> float:
         children.setdefault(int(rest[1]), []).append(int(name))
         # utime, stime, cutime, cstime
         stats[int(name)] = (comm, sum(int(x) for x in rest[11:15]))
-    ticks = 0
+    found = {}
     todo = list(children.get(root_pid, ()))
     while todo:
         pid = todo.pop()
         comm, t = stats[pid]
         if comm.startswith("python"):
-            ticks += t
+            found[pid] = t
         todo.extend(children.get(pid, ()))
-    return ticks / os.sysconf("SC_CLK_TCK")
+    return found
+
+
+def python_worker_cpu_s(root_pid: int) -> float:
+    """CPU seconds of the ``python*`` processes under ``root_pid``."""
+    return sum(python_workers(root_pid).values()) / os.sysconf("SC_CLK_TCK")
 
 
 def main(argv=None) -> int:

@@ -56,8 +56,9 @@ def epoch_seconds(ts: Column | str) -> Column:
 def to_micros(ts: str) -> Column:
     """Event time as int64 µs since the epoch (UTC): the one form in
     which it crosses into a per-key Python stage, which hands its
-    kernels ``micros_ns`` and returns these µs. An instant, so the
-    session time zone never shifts or reorders it; a NULL stays NULL."""
+    kernels these µs as ns (``micros_ns`` in a pandas stage) and returns
+    the µs. An instant, so the session time zone never shifts or
+    reorders it; a NULL stays NULL."""
     return F.unix_micros(F.col(ts).cast("timestamp"))
 
 

@@ -77,6 +77,7 @@ def _prep(df: DataFrame, on: str, by: list[str]) -> DataFrame:
 #: aggregation would re-execute the whole Python subtree.
 _PY_STAGES = (
     "FlatMapGroupsInPandas",
+    "FlatMapGroupsInArrow",
     "MapInPandas",
     "FlatMapCoGroupsInPandas",
     "ArrowEvalPython",

@@ -186,10 +186,6 @@ def matches(column: str, pattern: str, name: str | None = None) -> Constraint:
     )
 
 
-def non_negative(column: str, name: str | None = None) -> Constraint:
-    return bounds(column, lo=0, name=name or f"non_negative({column})")
-
-
 def custom(
     name: str,
     column: str,

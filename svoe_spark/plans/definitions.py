@@ -30,8 +30,9 @@ of one pass. A kernel with no state (``()``) must be row-local; one
 with ``state_fields = None`` runs in batch only (no built-in does).
 
 ``run_plan`` is the one body of both paths: ``Featurizer.run`` runs the
-kernel plan once per key with no state, ``Featurizer.run_stream`` per
-micro-batch carrying it (streaming.feature_vector). Kernel-less
+kernel plan over each key's ts-ordered Arrow batches with carried state
+(``per_key_map``), ``Featurizer.run_stream`` per micro-batch carrying it
+(streaming.feature_vector). Kernel-less
 definitions (user ones that override ``transform``) are as-of joined
 onto the batch pass and do not stream.
 """
@@ -39,10 +40,10 @@ onto the batch pass and do not stream.
 from __future__ import annotations
 
 import re
-from typing import NamedTuple
+from typing import Iterator, NamedTuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
@@ -78,15 +79,20 @@ class FeatureDefinition:
         cls, upstreams: dict[str, DataFrame], params: dict, keys: list[str]
     ) -> DataFrame:
         """The feature's frame (keys, ts, *outputs): the kernel per key,
-        with no carried state. Kernel-less definitions override it."""
+        batch by batch with its carried state (``per_key_map``).
+        Kernel-less definitions override it."""
         if not cls.outputs:
             raise NotImplementedError(f"feature definition {cls.name!r} has neither outputs nor a transform")
         (df,) = upstreams.values()
         columns = [c for c in df.columns if c not in (*keys, "ts")]
-        return per_key_map(
-            df, keys, kernel_inputs(cls.name, cls, columns, params), list(cls.outputs),
-            lambda ts, up: dict(zip(cls.outputs, cls.kernel(ts, up, params)[0])),
-        )
+
+        def per_key(batches):
+            state = None
+            for ts, up in batches if cls.state_fields is not None else whole(batches):
+                outs, state = cls.kernel(ts, up, params, state)
+                yield ts, dict(zip(cls.outputs, outs))
+
+        return per_key_map(df, keys, kernel_inputs(cls.name, cls, columns, params), list(cls.outputs), per_key)
 
 
 def project_inputs(df: DataFrame, columns: list[str], inputs: list[str]) -> tuple[DataFrame, list[str]]:
@@ -100,28 +106,65 @@ def project_inputs(df: DataFrame, columns: list[str], inputs: list[str]) -> tupl
 
 
 def per_key_map(df: DataFrame, keys: list[str], inputs: list[str], outputs: list[str], fn) -> DataFrame:
-    """``groupBy(keys).applyInPandas`` of ``fn(ts, up) -> {column:
-    array}`` over each key's rows, stably sorted by event time (``ts``
-    int64 ns, ``up`` the source ``inputs`` as float64 arrays,
-    ``project_inputs``). Returns (keys, ts, *outputs) as doubles, NaN
-    read as NULL; a boolean ``"__keep"`` entry in fn's result drops the
-    rows it marks False. Each key's rows sit in one pandas frame on one
-    worker; ``ts`` crosses as UTC µs (``functions.time.to_micros``)."""
+    """``fn`` over each key's events as ts-ordered Arrow batches with
+    carried state: ``groupBy(keys).applyInArrow`` after a Spark sort on
+    (keys, ts), so the grouped stage adds no sort of its own. ``fn``
+    takes one key's batches, an iterator of (``ts`` int64 ns, ``up`` the
+    source ``inputs`` as float64 arrays with NaN = null,
+    ``project_inputs``), and yields (ts, {output: array}) for the rows it
+    emits, in any batching. Returns (keys, ts, *outputs) as doubles, NaN
+    read as NULL; ``ts`` crosses as UTC µs (``functions.time.to_micros``).
+
+    A per-key batch stage ignores events with no event time. The
+    handler raises if a batch's ``ts`` decreases or does not continue
+    the key's previous batch, and never computes on disordered input. A
+    key's Python memory is one batch plus what ``fn`` carries."""
     schema = StructType(
         [df.schema[c] for c in keys] + [StructField("ts", LongType())]
         + [StructField(c, DoubleType()) for c in outputs]
     )
-    df, names = project_inputs(df.withColumn("ts", to_micros("ts")), [*keys, "ts"], inputs)
+    df = df.where(F.col("ts").isNotNull()).withColumn("ts", to_micros("ts"))
+    df, names = project_inputs(df, [*keys, "ts"], inputs)
+    return (df.repartition(*keys).sortWithinPartitions(*keys, "ts").groupBy(*keys)
+            .applyInArrow(key_handler(keys, names, outputs, fn), schema=schema).withColumn("ts", from_micros("ts")))
 
-    # no type hints: partial ones make PySpark warn it cannot infer the eval type
-    def per_key(pdf):
-        pdf = pdf.sort_values("ts", kind="stable")
-        res = fn(micros_ns(pdf["ts"]), [pdf[n].to_numpy(dtype=float) for n in names])
-        keep = res.pop("__keep", slice(None))
-        out = {c: pdf[c].to_numpy()[keep] for c in (*keys, "ts")}
-        return pd.DataFrame({**out, **{c: res[c][keep] for c in outputs}})
 
-    return df.groupBy(*keys).applyInPandas(per_key, schema=schema).withColumn("ts", from_micros("ts"))
+def key_handler(keys: list[str], names: list[str], outputs: list[str], fn):
+    """``per_key_map``'s Arrow handler of one key: checks the order of
+    its batches, hands ``fn`` their (ts ns, input columns ``names``) and
+    builds the output batches."""
+
+    # the hints pick PySpark's iterator-of-batches form; they resolve from this module's globals
+    def per_key(key: tuple, batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for ts, res in fn(_ordered(batches, names)):
+            yield pa.RecordBatch.from_arrays(
+                [*(pa.repeat(k, len(ts)) for k in key), pa.array(ts // 1000)]
+                + [pa.array(res[c], pa.float64(), mask=np.isnan(res[c])) for c in outputs],
+                names=[*keys, "ts", *outputs],
+            )
+
+    return per_key
+
+
+def _ordered(batches, names: list[str]):
+    """(ts ns, input arrays) of each non-empty batch, raising where ts
+    decreases within a batch or from the previous one."""
+    last = np.iinfo(np.int64).min
+    for batch in batches:
+        us = batch.column("ts").to_numpy()
+        if not len(us):
+            continue
+        if us[0] < last or (us[1:] < us[:-1]).any():
+            raise ValueError("per_key_map: a key's batches are not ordered by ts")
+        last = us[-1]
+        yield us * 1000, [batch.column(n).to_numpy(zero_copy_only=False) for n in names]
+
+
+def whole(batches) -> list:
+    """A key's (ts, up) batches as one: how a plan with a batch-only
+    kernel (``state_fields = None``) reads them."""
+    ts, up = zip(*batches)
+    return [(np.concatenate(ts), [np.concatenate(c) for c in zip(*up)])]
 
 
 def kernel_inputs(name: str, defn, columns: list[str], params: dict) -> list[str]:
@@ -239,8 +282,8 @@ class VolatilityStddev(FeatureDefinition):
     """Trailing-window stddev of an upstream value (reference
     volatility_stddev_fd.py:30-56): the shared kernel
     `streaming.kernels.trailing_stddev` over [ts - window, ts], peers
-    included. Batch runs it per key with no carried state; the stream
-    (``Featurizer.run_stream``) per micro-batch, carrying its window
+    included. Batch runs it over each key's Arrow batches and the stream
+    (``Featurizer.run_stream``) per micro-batch, both carrying its window
     buffer."""
 
     name = "volatility_stddev"
@@ -318,9 +361,9 @@ class Ewma(FeatureDefinition):
     """Event-indexed exponential moving average of an upstream value:
     e_i = alpha*x_i + (1-alpha)*e_{i-1}. Recursive — not expressible as
     a Spark window function — so batch runs the shared kernel
-    `streaming.kernels.ewma` (pandas ewm(adjust=False)) per key with no
-    carried state; the stream runs the same kernel per micro-batch,
-    carrying its (value, null count) state."""
+    `streaming.kernels.ewma` (pandas ewm(adjust=False)) over each key's
+    Arrow batches and the stream per micro-batch, both carrying its
+    (value, null count) state."""
 
     name = "ewma"
     dep_slots = ("upstream",)

@@ -244,9 +244,11 @@ class Featurizer:
         kernel (every built-in; definitions module docstring) and whose
         deps reach the source only through such features, bar stored
         ones, come out with the label from ONE
-        ``groupBy(keys).applyInPandas`` over the source inputs they read
-        (``project_inputs``). Per key: stable sort by ts, kernels in
-        dependency order, then ``asof_join_multi``'s contract: each
+        ``groupBy(keys).applyInArrow`` over the source inputs they read
+        (``project_inputs``; ``per_key_map``, which ignores events with
+        no event time). Per key, over its ts-ordered Arrow batches with
+        carried state: kernels in dependency order, then
+        ``asof_join_multi``'s contract: each
         column forward-filled over nulls and read at the row's last
         equal-ts peer (so peers carry equal values), the label (one
         column per output of the label feature) read at the last row
@@ -254,8 +256,10 @@ class Featurizer:
         the key's last event dropped. A row's features read no event
         after it: ``ohlcv`` gives the last bar closed by then. Cost:
         O(rows) per key, windowed kernels included, however dense the
-        ticks. Memory: one key's rows, with a float64 array per input
-        and feature output, in one pandas frame on one worker.
+        ticks. Memory: one Arrow batch of a key's rows with a float64
+        array per input and feature output, plus the kernels' state and
+        the rows held for the trailing peer group and the lookahead (a
+        plan with a batch-only kernel reads a key's batches as one).
 
         Fallback: the other features (kernel-less user
         definitions, stored features and their dependents) come
@@ -302,23 +306,43 @@ class Featurizer:
         return left.select(*columns)
 
     def _fused(self, config, source_df: DataFrame, plan: list[KernelStep], label_name: str) -> DataFrame:
-        """``run``'s fused pass over the kernel ``plan``."""
+        """``run``'s fused pass over the kernel ``plan``, one key's
+        batches at a time. Carried from batch to batch: the kernels'
+        state, each column's last non-null value, and the rows not yet
+        resolved (the trailing equal-ts peer group, and the rows whose
+        ts + lookahead no later event has passed)."""
         source_cols = source_inputs(plan)
         features = [c for s in plan for c in s.columns]
         labels = next((s.columns for s in plan if s.name == label_name), []) if config.label_lookahead else []
-        if labels:
-            ahead = duration_ns(config.label_lookahead)
+        ahead = duration_ns(config.label_lookahead) if labels else 0
+        streams = all(s.defn.state_fields is not None for s in plan)
 
-        def fused_pass(ts, src):
-            vals = dict(zip(source_cols, src))
-            run_plan(plan, ts, vals)
-            last_peer = np.searchsorted(ts, ts, "right") - 1
-            res = {c: _ffill(vals[c])[last_peer] for c in features}
+        def resolve(ts, held, n):
+            """The outputs of the first ``n`` held rows, ``ts`` and the
+            forward-filled ``held`` columns reaching past them."""
+            last_peer = np.searchsorted(ts, ts[:n], "right") - 1
+            res = {c: held[c][last_peer] for c in features}
             if labels:
-                at = np.searchsorted(ts, ts + ahead, "right") - 1
-                res.update({f"label_{c}": _ffill(vals[c])[at] for c in labels})
-                res["__keep"] = ts + ahead <= ts[-1]
-            return res
+                at = np.searchsorted(ts, ts[:n] + ahead, "right") - 1
+                res.update({f"label_{c}": held[c][at] for c in labels})
+            return ts[:n], res
+
+        def fused_pass(batches):
+            state, ts = None, np.empty(0, np.int64)
+            held = {c: np.empty(0) for c in features}
+            for bts, src in batches if streams else whole(batches):
+                vals = dict(zip(source_cols, src))
+                state = run_plan(plan, bts, vals, state)
+                # the last event is always held, so its values seed the forward fill
+                held = {c: _ffill(np.concatenate([held[c], vals[c]])) for c in features}
+                ts = np.concatenate([ts, bts])
+                # resolved: a later event has passed ts + lookahead (and ended the peer group)
+                n = np.searchsorted(ts, ts[-1] - ahead, "left")
+                if n:
+                    yield resolve(ts, held, n)
+                    ts, held = ts[n:], {c: v[n:] for c, v in held.items()}
+            if len(ts):  # the key's end: keep the rows whose lookahead its last event reaches
+                yield resolve(ts, held, np.searchsorted(ts, ts[-1] - ahead, "right"))
 
         outputs = [f"label_{c}" for c in labels] + features
         return per_key_map(source_df, config.keys, source_cols, outputs, fused_pass)

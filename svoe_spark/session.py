@@ -134,6 +134,12 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Let AQE coalesce a persisted plan's partitions too: otherwise a
+        # persisted FeatureLabelSet runs its per-key Python stage as one
+        # task per shuffle partition, most of them near empty, each paying
+        # a Python task's fixed cost. The price: a read of the cached data
+        # may need one shuffle more.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Arrow transfer for every pandas UDF / applyInPandas operator.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Error call-site capture wraps EVERY DataFrame API call in 3

@@ -41,12 +41,17 @@ def sf_mid():
 
 
 @contextlib.contextmanager
-def session_time_zone(spark, zone: str):
-    """Run the block with ``spark.sql.session.timeZone`` = ``zone``, and
-    always restore it: the tests share one session."""
-    old = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", zone)
+def session_conf(spark, key: str, value):
+    """Run the block with session conf ``key`` = ``value``, and always
+    restore it: the tests share one session."""
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.session.timeZone", old)
+        spark.conf.set(key, old)
+
+
+def session_time_zone(spark, zone: str):
+    """``session_conf`` of ``spark.sql.session.timeZone``."""
+    return session_conf(spark, "spark.sql.session.timeZone", zone)

@@ -4,6 +4,7 @@ independent pandas merge_asof reference."""
 
 import contextlib
 import io
+import re
 import warnings
 
 import numpy as np
@@ -20,7 +21,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from conftest import session_conf
 from svoe_spark.operators.asof import asof_join_multi, lookahead_shift
+from svoe_spark.plans import featurizer
+from svoe_spark.plans.definitions import key_handler
 from test_definition_loading import USER_FD
 from svoe_spark.plans.featurizer import Featurizer, FeaturizerConfig
 
@@ -226,6 +230,121 @@ def test_run_equals_merge_asof_reference(spark, tmp_path, mixed):
             )
 
 
+def _small_batches(spark):
+    """Arrow batches of 7 rows: peers, null runs, ewma nulls and the
+    lookahead tail cross batch edges."""
+    return session_conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch", 7)
+
+
+def test_run_equals_old_asof_path_in_small_batches(spark, mixed_quotes):
+    with _small_batches(spark):
+        test_run_equals_old_asof_path(spark, mixed_quotes)
+
+
+@pytest.mark.parametrize("mixed", [False, True], ids=["kernels", "with_user_definition"])
+def test_run_equals_merge_asof_reference_in_small_batches(spark, tmp_path, mixed):
+    with _small_batches(spark):
+        test_run_equals_merge_asof_reference(spark, tmp_path, mixed)
+
+
+def test_peers_and_lookahead_on_a_batch_edge(spark, tmp_path):
+    """A peer group and a label's lookahead boundary exactly on the
+    edge of the first 7-row batch: the FLS equals the one-batch FLS."""
+    secs = [0, 1, 2, 3, 4, 5, 6, 6, 7, 8, 12, 13, 20, 30]  # rows 6 and 7 are peers across the edge
+    bid = 100.0 + np.arange(len(secs))
+    bid[7] = bid[6]  # peers repeat their quote: Spark's sort orders peers arbitrarily
+    bid[[2, 9]] = np.nan
+    q = pd.DataFrame({"sym": "A", "ts": T0 + pd.to_timedelta(secs, unit="s"), "bid": bid,
+                      "ask": bid + 0.5, "price": bid + 0.5, "amount": 1.0})
+    cfg = _config(_write(q, str(tmp_path / "edge.parquet")), ["sym"], [*FEATURES, BARS])
+    whole = Featurizer(spark).run(cfg).toPandas()
+    with _small_batches(spark):
+        edged = Featurizer(spark).run(cfg).toPandas()
+    pd.testing.assert_frame_equal(edged, whole)
+    # 1 s + 5 s lookahead lands on the peers' 6 s: the label reads the edge's second batch
+    row = whole[whole["ts"] == T0 + pd.Timedelta(seconds=1)]
+    assert row["label_mid-mid_price"].item() == bid[6] + 0.25
+    # every row but the last event's has its lookahead inside the key
+    assert whole["ts"].max() == T0 + pd.Timedelta(seconds=20) and len(whole) == len(secs) - 1
+
+
+@pytest.mark.parametrize("label", [True, False], ids=["with_label", "features_only"])
+def test_null_ts_event_is_ignored(spark, tmp_path, label):
+    """An event with no event time drops out of its key's pass: the key
+    keeps its other rows, and none reads the null event's values."""
+    secs = [0.0, 1.0, np.nan, 3.0, 20.0, 40.0]
+    q = pd.DataFrame({"sym": "A", "ts": T0 + pd.to_timedelta(secs, unit="s"),
+                      "value": np.arange(1.0, 7.0)})
+    features = [{"name": "mid", "feature_definition": "mid_price"},
+                {"name": "vol", "feature_definition": "volatility_stddev", "deps": ["mid"],
+                 "params": {"window": "1m"}}]
+    cfg = _config(_write(q, str(tmp_path / "null_ts.parquet")), ["sym"], features)
+    if not label:
+        cfg = {**cfg, "label_lookahead": None}
+    got = Featurizer(spark).run(cfg).toPandas()
+    kept = q.dropna(subset=["ts"])
+    if label:  # ts + 5 s <= 40 s
+        kept = kept[kept["ts"] <= T0 + pd.Timedelta(seconds=35)]
+        assert got["label_mid-mid_price"].tolist() == [4.0, 4.0, 4.0, 5.0]
+    assert got["ts"].tolist() == kept["ts"].tolist()
+    assert got["mid-mid_price"].tolist() == kept["value"].tolist()
+    mids = q.dropna(subset=["ts"])["value"].to_numpy()
+    want = [np.std(mids[: i + 1], ddof=1) if i else np.nan for i in range(len(kept))]
+    np.testing.assert_allclose(got["vol-volatility"].to_numpy(dtype=float), want, rtol=1e-12)
+
+
+def test_fused_pass_in_any_batching_equals_one_batch(monkeypatch):
+    """No Spark: the fused pass over one key cut into batches of every
+    size equals the one-batch pass, with peers of different quotes and
+    a lookahead boundary (1 s + 5 s) on the 7-row batches' edge."""
+    captured = {}
+    monkeypatch.setattr(featurizer, "per_key_map", lambda df, keys, inputs, outputs, fn: captured.update(
+        inputs=inputs, outputs=outputs, fn=fn))
+    cfg = FeaturizerConfig.load(_config("unused.parquet", ["sym"], [*FEATURES, BARS]))
+    Featurizer(None)._fused(cfg, None, featurizer.kernel_plan(cfg, ["bid", "ask", "price", "amount"]), "mid")
+    secs = np.array([0, 1, 2, 3, 4, 5, 6, 6, 7, 8, 12, 13, 20, 30])
+    bid = 100.0 + np.arange(len(secs))
+    bid[[2, 9]] = np.nan
+    src = {"bid": bid, "ask": bid + 0.5, "price": bid + 0.5, "amount": np.ones(len(secs))}
+    ts, up = secs * 1_000_000_000, [src[c] for c in captured["inputs"]]
+
+    def run(size):
+        outs = list(captured["fn"]((ts[i : i + size], [u[i : i + size] for u in up])
+                                   for i in range(0, len(ts), size)))
+        return np.concatenate([o[0] for o in outs]), {
+            c: np.concatenate([o[1][c] for o in outs]) for c in captured["outputs"]}
+
+    want_ts, want = run(len(ts))
+    assert want["label_mid-mid_price"][1] == bid[7] + 0.25  # the edge's later peer
+    for size in range(1, len(ts)):
+        got_ts, got = run(size)
+        np.testing.assert_array_equal(got_ts, want_ts, err_msg=str(size))
+        for c in captured["outputs"]:
+            np.testing.assert_allclose(got[c], want[c], rtol=1e-12, equal_nan=True, err_msg=f"{size} {c}")
+
+
+def _batch(secs, values):
+    return pa.RecordBatch.from_pydict({"ts": pa.array(secs, pa.int64()), "__in0": pa.array(values, pa.float64())})
+
+
+@pytest.mark.parametrize("batches", [
+    [[0, 2, 1]],
+    [[0, 1, 5], [4, 6]],
+], ids=["within_a_batch", "across_batches"])
+def test_handler_raises_on_disordered_ts(batches):
+    """No Spark: the per-key handler refuses event times that go back."""
+    def identity(chunks):
+        for ts, (v,) in chunks:
+            yield ts, {"v": v}
+
+    handler = key_handler(["k"], ["__in0"], ["v"], identity)
+    with pytest.raises(ValueError, match="not ordered by ts"):
+        list(handler((pa.scalar("A"),), iter(_batch(b, [1.0] * len(b)) for b in batches)))
+    # in order, the same handler passes every event through
+    (out,) = list(handler((pa.scalar("A"),), iter([_batch([0, 1, 1], [1.0, None, 3.0])])))
+    assert out.to_pydict() == {"k": ["A"] * 3, "ts": [0, 1, 1], "v": [1.0, None, 3.0]}
+
+
 def _plan_of(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -234,12 +353,15 @@ def _plan_of(df) -> str:
 
 
 def _assert_one_grouped_map(df):
+    """One Arrow grouped map over one shuffle and one sort on (keys, ts):
+    the grouped stage adds no sort of its own."""
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
-    assert optimized.count("FlatMapGroupsInPandas") == 1, optimized
+    assert optimized.count("FlatMapGroupsInArrow") == 1, optimized
     assert "Window" not in optimized, optimized
     tree = _plan_of(df).split("\n\n")[0]  # the operator tree, before node details
-    assert tree.count("Exchange") == 1, tree
-    assert tree.index("Exchange") > tree.index("FlatMapGroupsInPandas"), tree
+    assert len(re.findall(r"\bExchange\b", tree)) == 1, tree
+    assert len(re.findall(r"\bSort\b", tree)) == 1, tree
+    assert tree.index("Exchange") > tree.index("Sort") > tree.index("FlatMapGroupsInArrow"), tree
 
 
 def test_all_kernel_plan_is_one_grouped_map(spark, mixed_quotes):

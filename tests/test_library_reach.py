@@ -1,13 +1,13 @@
 """Guard against library code that only tests reach.
 
 A static scan, no Spark: every public, undecorated top-level ``def`` in
-``svoe_spark/`` must be referenced, as a whole word, somewhere other
-than the line that defines it, in the library, ``scripts/``,
-``examples/``, ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``
-(the driver contract). A function that only ``tests/`` call is a test
-helper or a deletion candidate, not library code. Decorated defs
-(registry queries) are reached through their decorator and are not
-scanned.
+``svoe_spark/`` must be referenced, as a whole word, somewhere outside
+its own definition (its ``def`` line through its body's last line), in
+the library, ``scripts/``, ``examples/``, ``perfbench/``, ``bench.py``
+or ``__spark_entry__.py`` (the driver contract). A function that only
+``tests/`` call is a test helper or a deletion candidate, not library
+code. Decorated defs (registry queries) are reached through their
+decorator and are not scanned.
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ ALLOWED = {
 }
 
 
-def _public_defs() -> list[tuple[str, Path, int]]:
+def _public_defs() -> list[tuple[str, Path, int, int]]:
     defs = []
     for path in sorted(LIBRARY.rglob("*.py")):
         for node in ast.parse(path.read_text(), filename=str(path)).body:
@@ -39,14 +39,14 @@ def _public_defs() -> list[tuple[str, Path, int]]:
                 and not node.name.startswith("_")
                 and not node.decorator_list
             ):
-                defs.append((node.name, path, node.lineno))
+                defs.append((node.name, path, node.lineno, node.end_lineno))
     return defs
 
 
 def unreached_defs() -> list[tuple[str, str]]:
     """(name, file:line) of the public undecorated top-level defs whose
-    name appears on no line of the reach set other than their own
-    ``def`` line."""
+    name appears on no line of the reach set outside their own
+    definition."""
     files = []
     for p in (ROOT / r for r in REACH):
         files += [p] if p.is_file() else sorted(f for f in p.rglob("*") if f.suffix in SUFFIXES)
@@ -57,8 +57,8 @@ def unreached_defs() -> list[tuple[str, str]]:
                 seen.setdefault(word, []).append((f, i))
     return [
         (name, f"{path.relative_to(ROOT)}:{lineno}")
-        for name, path, lineno in _public_defs()
-        if all(site == (path, lineno) for site in seen.get(name, []))
+        for name, path, lineno, end in _public_defs()
+        if all(f == path and lineno <= i <= end for f, i in seen.get(name, []))
     ]
 
 

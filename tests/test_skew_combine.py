@@ -1,10 +1,9 @@
-"""Salted aggregation + streaming combine_latest."""
+"""Streaming combine_latest against its batch form."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from svoe_spark.operators.combine import combine_latest
-from svoe_spark.operators.skew import salted_agg
 from svoe_spark.sources.tables import load_table
 from svoe_spark.streaming.combine_stream import combine_latest_stream
 from svoe_spark.streaming.sinks import run_available_to_memory
@@ -14,38 +13,6 @@ pytestmark = pytest.mark.heavy  # multi-minute suite: deselected by the
 # default `pytest tests/ -q` tier (pytest.ini); scripts/ptest.py shards and
 # the round-close sweep run it
 
-
-
-def test_salted_agg_equals_direct(spark, sf_small):
-    e = load_table(spark, "events", sf_small)
-    direct = {
-        (r["event_type"]): (r["s"], r["n"], sorted(r["vals"]))
-        for r in e.groupBy("event_type")
-        .agg(
-            F.sum("user_id").alias("s"),
-            F.count(F.lit(1)).alias("n"),
-            F.collect_list("event_id").alias("vals"),
-        )
-        .collect()
-    }
-    salted = {
-        (r["event_type"]): (r["s"], r["n"], sorted(r["vals"]))
-        for r in salted_agg(
-            e,
-            ["event_type"],
-            {
-                "s": F.sum("user_id"),
-                "n": F.count(F.lit(1)),
-                "vals": F.collect_list("event_id"),
-            },
-            {
-                "s": F.sum("s"),
-                "n": F.sum("n"),
-                "vals": F.flatten(F.collect_list("vals")),
-            },
-        ).collect()
-    }
-    assert salted == direct
 
 
 def test_combine_latest_stream_equals_batch(spark, sf_small, tmp_path):
