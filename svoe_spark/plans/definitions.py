@@ -48,10 +48,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
-from svoe_spark.functions.time import duration_ns, from_micros, micros_ns, to_micros
+from svoe_spark.functions.time import duration_ns, from_micros, to_micros
+from svoe_spark.operators.asof import _plan_size_bytes
 from svoe_spark.streaming.kernels import closed_bars, ewma, trailing_stddev, window_buffer, window_sums
 
 REGISTRY: dict[str, type["FeatureDefinition"]] = {}
+
+#: Input bytes (optimizer estimate) per task of ``per_key_map``'s Python
+#: stage: AQE's coalescing floor (the default of
+#: ``spark.sql.adaptive.coalescePartitions.minPartitionSize``). A Python
+#: task costs 20-40 ms of worker CPU before its first row, about what
+#: the kernel plan spends on 1 MB of quotes.
+KEY_TASK_BYTES = 1 << 20
 
 
 def register(cls: type["FeatureDefinition"]) -> type["FeatureDefinition"]:
@@ -118,14 +126,24 @@ def per_key_map(df: DataFrame, keys: list[str], inputs: list[str], outputs: list
     A per-key batch stage ignores events with no event time. The
     handler raises if a batch's ``ts`` decreases or does not continue
     the key's previous batch, and never computes on disordered input. A
-    key's Python memory is one batch plus what ``fn`` carries."""
+    key's Python memory is one batch plus what ``fn`` carries.
+
+    The shuffle has one partition per ``KEY_TASK_BYTES`` of input, at
+    most one per core, not ``spark.sql.shuffle.partitions``: each
+    partition is a Python task with a fixed cost, and AQE does not
+    coalesce the partitions of a persisted plan, such as a persisted
+    FeatureLabelSet, whose readers then run a task per partition too."""
     schema = StructType(
         [df.schema[c] for c in keys] + [StructField("ts", LongType())]
         + [StructField(c, DoubleType()) for c in outputs]
     )
     df = df.where(F.col("ts").isNotNull()).withColumn("ts", to_micros("ts"))
     df, names = project_inputs(df, [*keys, "ts"], inputs)
-    return (df.repartition(*keys).sortWithinPartitions(*keys, "ts").groupBy(*keys)
+    parts = max(df.sparkSession.sparkContext.defaultParallelism, 1)
+    size = _plan_size_bytes(df)
+    if size is not None:
+        parts = min(parts, max(1, -(-size // KEY_TASK_BYTES)))
+    return (df.repartition(parts, *keys).sortWithinPartitions(*keys, "ts").groupBy(*keys)
             .applyInArrow(key_handler(keys, names, outputs, fn), schema=schema).withColumn("ts", from_micros("ts")))
 
 

@@ -1517,9 +1517,9 @@ def ewma_final_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale note: this query form collects each key's series into one
     array — fine for bounded per-instrument cardinality; the unbounded
-    production path is the Ewma FeatureDefinition (applyInPandas,
-    Arrow-batched) and the fused streaming operator, both constant
-    memory per batch."""
+    production path is the Ewma FeatureDefinition (the per-key Arrow
+    pass, ``per_key_map``) and the fused streaming operator, both
+    constant memory per batch."""
     e = load_table(spark, "events", sf_dir)
     g = e.groupBy("event_type").agg(
         F.array_sort(
@@ -1552,7 +1552,8 @@ def ewma_final_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ewma_trend_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row EWMA trend (alpha=0.25) over each instrument's price
-    series via the Ewma FeatureDefinition (applyInPandas recursion).
+    series via the Ewma FeatureDefinition (its recursion in the per-key
+    Arrow pass, ``per_key_map``).
 
     Oracle: DuckDB windowed prefix `list()` + `list_reduce` fold — the
     fold `acc*0.75 + x*0.25` is bit-identical to pandas

@@ -359,13 +359,23 @@ def _assert_one_grouped_map(df):
     assert optimized.count("FlatMapGroupsInArrow") == 1, optimized
     assert "Window" not in optimized, optimized
     tree = _plan_of(df).split("\n\n")[0]  # the operator tree, before node details
-    assert len(re.findall(r"\bExchange\b", tree)) == 1, tree
-    assert len(re.findall(r"\bSort\b", tree)) == 1, tree
-    assert tree.index("Exchange") > tree.index("Sort") > tree.index("FlatMapGroupsInArrow"), tree
+    (exchange,) = re.finditer(r"\bExchange\b", tree)
+    (sort,) = re.finditer(r"\bSort\b", tree)
+    assert exchange.start() > sort.start() > tree.index("FlatMapGroupsInArrow"), tree
 
 
 def test_all_kernel_plan_is_one_grouped_map(spark, mixed_quotes):
     _assert_one_grouped_map(Featurizer(spark).run(_config(mixed_quotes, ["venue", "sym"])))
+
+
+def test_small_persisted_fls_is_one_python_task(spark, mixed_quotes):
+    """Under KEY_TASK_BYTES of input the per-key stage is one task, also
+    in a persisted FLS, whose partitions AQE does not coalesce."""
+    fls = Featurizer(spark).run(_config(mixed_quotes, ["venue", "sym"])).persist()
+    try:
+        assert fls.rdd.getNumPartitions() == 1
+    finally:
+        fls.unpersist()
 
 
 def test_tvi_and_diff_config_is_one_grouped_map(spark, tmp_path):

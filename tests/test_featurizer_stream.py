@@ -62,7 +62,7 @@ def test_run_stream_equals_batch(spark, sf_small, tmp_path):
 
 
 def test_ewma_batch_equals_stream(spark, sf_small, tmp_path):
-    """Kappa for EWMA: batch applyInPandas recursion == fused stream."""
+    """Kappa for EWMA: batch recursion (per-key Arrow pass) == fused stream."""
     cfg = {**CFG, "features": CFG["features"][:1] + [
         {"name": "trend", "feature_definition": "ewma",
          "deps": ["mid"], "params": {"alpha": 0.25, "value_col": "mid_price"}}
