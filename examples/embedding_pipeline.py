@@ -126,9 +126,9 @@ def main() -> None:
 
     # 3b. the DOCUMENTED DEFAULT for multi-query workloads (VERDICT r6
     # ask 7): the batch path at the production recall>=0.9 operating
-    # point — R=200 refine shortlist (ANN_REFINE_SHORTLIST, the
-    # search_ivfpq_index* default), all cells probed. Asserted, not
-    # assumed: the operating point must hold on the BATCH form too.
+    # point — R=200 refine shortlist (ANN_REFINE_SHORTLIST), all cells
+    # probed. Asserted, not assumed: the operating point must hold on
+    # the BATCH form too.
     from svoe_spark.operators.similarity import ANN_REFINE_SHORTLIST
 
     short_op = ann_ivfpq_topk_batch(

@@ -38,7 +38,7 @@ WEIGHTS = {
     "test_cleaning_property.py": 53, "test_streaming_asof.py": 52,
     "test_plan_quality.py": 46,
     "test_stream_api.py": 41, "test_point_in_time.py": 40,
-    "test_vector_index.py": 40, "test_streaming.py": 37,
+    "test_streaming.py": 37,
     "test_sketches.py": 36, "test_cleaning.py": 35,
     "test_empty_inputs.py": 31, "test_storage_ingest.py": 31,
     "test_curation.py": 30, "test_scd_store.py": 29,

@@ -126,7 +126,7 @@ def sorted_pair_expand(arr_col: str, a: str = "a", b: str = "b") -> str:
 # Store-path filesystem helpers (commit logs for the exactly-once stores)
 # ---------------------------------------------------------------------------
 #
-# The incremental stores (dedup_index, vector_index, rollup.RollupStore)
+# The incremental stores (dedup_index, rollup.RollupStore)
 # keep a tiny ``<path>._commits`` log of completed batch ids next to the
 # data. A plain ``open()`` only works when the store path is on the
 # driver's local filesystem; with an HDFS/S3 store path it would raise

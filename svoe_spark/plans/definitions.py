@@ -128,11 +128,15 @@ def per_key_map(df: DataFrame, keys: list[str], inputs: list[str], outputs: list
     the key's previous batch, and never computes on disordered input. A
     key's Python memory is one batch plus what ``fn`` carries.
 
-    The shuffle has one partition per ``KEY_TASK_BYTES`` of input, at
+    The stage has one partition per ``KEY_TASK_BYTES`` of input, at
     most one per core, not ``spark.sql.shuffle.partitions``: each
     partition is a Python task with a fixed cost, and AQE does not
     coalesce the partitions of a persisted plan, such as a persisted
-    FeatureLabelSet, whose readers then run a task per partition too."""
+    FeatureLabelSet, whose readers then run a task per partition too.
+    One partition is a ``coalesce(1)``, with no shuffle: its single
+    partition already groups every key, and an aggregate over the
+    persisted result needs no shuffle either. More are a hash
+    repartition on the keys."""
     schema = StructType(
         [df.schema[c] for c in keys] + [StructField("ts", LongType())]
         + [StructField(c, DoubleType()) for c in outputs]
@@ -143,7 +147,8 @@ def per_key_map(df: DataFrame, keys: list[str], inputs: list[str], outputs: list
     size = _plan_size_bytes(df)
     if size is not None:
         parts = min(parts, max(1, -(-size // KEY_TASK_BYTES)))
-    return (df.repartition(parts, *keys).sortWithinPartitions(*keys, "ts").groupBy(*keys)
+    df = df.coalesce(1) if parts == 1 else df.repartition(parts, *keys)
+    return (df.sortWithinPartitions(*keys, "ts").groupBy(*keys)
             .applyInArrow(key_handler(keys, names, outputs, fn), schema=schema).withColumn("ts", from_micros("ts")))
 
 

@@ -134,37 +134,135 @@ def test_trainer_end_to_end(spark):
     assert r2(scored, label) > 0.9
 
 
-def test_best_model_picks_the_grid_point_with_the_highest_valid_r2(spark):
-    """On a seeded frame with more noise features than signal, the
-    linear grid's points score differently on the validation split;
-    ``best_model`` returns the first point with the highest r2, the same
-    as fitting each point by hand."""
+def _noisy_frame(spark, rng, n, cols, start=0):
+    """Seeded rows of standard-normal ``cols``, ``y`` = x0 plus noise,
+    and a ``ts`` one second apart from ``start`` seconds after 2024-01-02."""
     import numpy as np
     import pandas as pd
+
+    pdf = pd.DataFrame(rng.normal(size=(n, len(cols))), columns=cols)
+    pdf["y"] = pdf["x0"] + rng.normal(scale=2.0, size=n)
+    pdf["ts"] = pd.Timestamp("2024-01-02") + pd.to_timedelta(start + np.arange(n), unit="s")
+    return spark.createDataFrame(pdf)
+
+
+def test_best_model_picks_the_grid_point_with_the_highest_valid_r2(spark):
+    """On a seeded frame with more noise features than signal, the
+    linear grid's three L2 points score differently on the validation
+    split; ``best_model`` returns the first point with the highest r2,
+    the same as fitting each point by hand."""
+    import numpy as np
     from pyspark.ml import Pipeline
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.regression import LinearRegression
 
     rng = np.random.default_rng(7)
     cols = [f"x{i}" for i in range(8)]
-
-    def frame(n):
-        pdf = pd.DataFrame(rng.normal(size=(n, len(cols))), columns=cols)
-        pdf["y"] = pdf["x0"] + rng.normal(scale=2.0, size=n)
-        return spark.createDataFrame(pdf)
-
-    train, valid = frame(24), frame(200)
-    grid = [{"regParam": rp, "elasticNetParam": en} for rp in (0.0, 0.01, 0.1) for en in (0.0, 0.5)]
+    train, valid = _noisy_frame(spark, rng, 24, cols), _noisy_frame(spark, rng, 200, cols)
+    grid = [{"regParam": rp} for rp in (0.0, 0.01, 0.1)]
     by_hand = []
     for params in grid:
         stages = [VectorAssembler(inputCols=cols, outputCol="features"),
                   LinearRegression(featuresCol="features", labelCol="y", **params)]
         by_hand.append(r2(Pipeline(stages=stages).fit(train).transform(valid), "y"))
     best = int(np.argmax(by_hand))
-    assert len(set(by_hand)) > 2  # the grid matters on this frame
+    assert len(set(by_hand)) == len(grid)  # the grid matters on this frame
     model, info = best_model(train, valid, cols, "y")
     assert info == {"params": grid[best], "valid_r2": by_hand[best]}
     assert r2(model.transform(valid), "y") == by_hand[best]
+
+
+def test_linear_fit_equals_linear_regression(spark):
+    """The linear fit is ``LinearRegression``'s model at elasticNetParam
+    0: the same coefficients and intercept, bit for bit, at each L2
+    strength."""
+    import numpy as np
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import VectorAssembler
+    from pyspark.ml.regression import LinearRegression
+
+    from svoe_spark.consumers.trainer import _fit
+
+    cols = [f"x{i}" for i in range(4)]
+    train = _noisy_frame(spark, np.random.default_rng(3), 300, cols)
+    for rp in (0.0, 0.01, 0.1):
+        got = _fit(train, cols, "y", "linear", regParam=rp).stages[-1]
+        stages = [VectorAssembler(inputCols=cols, outputCol="features"),
+                  LinearRegression(featuresCol="features", labelCol="y", regParam=rp)]
+        want = Pipeline(stages=stages).fit(train).stages[-1]
+        assert list(got.coefficients) == list(want.coefficients), rp
+        assert got.intercept == want.intercept, rp
+
+
+def test_linear_fit_is_one_spark_job(spark):
+    """``train_regressor``'s linear fit runs one Spark job: the fit
+    itself, with no eager training summary after it."""
+    import numpy as np
+
+    cols = ["x0", "x1"]
+    train = _noisy_frame(spark, np.random.default_rng(5), 200, cols)
+    sc = spark.sparkContext
+    sc.setJobGroup("test_linear_fit_is_one_spark_job", "linear fit")
+    try:
+        train_regressor(train, cols, "y", kind="linear")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("test_linear_fit_is_one_spark_job")) == 1
+
+
+def test_new_split_bounds_compile_no_new_code(spark):
+    """Split, train and score over a second frame with other split
+    bounds generate no new classes: the bounds reach generated code by
+    reference, not in its source."""
+    import numpy as np
+
+    cols = ["x0", "x1"]
+    rng = np.random.default_rng(9)
+    frames = [_noisy_frame(spark, rng, 300, cols, start=s).persist() for s in (0, 5_000)]
+    for f in frames:
+        f.count()
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def request(df):
+        train, _valid, test = time_split(df)
+        model = train_regressor(train, cols, "y")
+        return score(model, test).agg(F.count(F.lit(1)), F.sum("prediction")).first()
+
+    try:
+        request(frames[0])
+        before = metric.getCount()
+        assert request(frames[1])[0] > 0
+        assert metric.getCount() - before == 0
+    finally:
+        for f in frames:
+            f.unpersist()
+
+
+def test_time_split_boundaries(spark):
+    """Seeded event times with ties and one null: the three splits are
+    disjoint, cover every row with an event time, follow each other in
+    time, and a row at a bound's µs falls in the earlier split."""
+    import numpy as np
+    import pandas as pd
+
+    from svoe_spark.functions.time import to_micros
+
+    rng = np.random.default_rng(11)
+    n = 500
+    # 60 distinct instants a little over a second apart, each held by several rows
+    us = np.sort(rng.integers(0, 60, n)) * 1_000_003
+    pdf = pd.DataFrame({"id": np.arange(n), "ts": pd.Timestamp("2024-03-01") + pd.to_timedelta(us, unit="us")})
+    pdf.loc[7, "ts"] = pd.NaT
+    df = spark.createDataFrame(pdf)
+    splits = time_split(df)
+    ids = [{r["id"] for r in s.select("id").collect()} for s in splits]
+    assert sum(map(len, ids)) == len(set().union(*ids))  # disjoint
+    assert set().union(*ids) == set(range(n)) - {7}
+    spans = [s.agg(F.min("ts"), F.max("ts")).first() for s in splits]
+    assert all(a[1] <= b[0] for a, b in zip(spans, spans[1:]))
+    bounds = df.select(to_micros("ts").alias("e")).approxQuantile("e", [0.7, 0.85], 0.001)
+    at = [{r["id"] for r in df.where(to_micros("ts") == int(b)).select("id").collect()} for b in bounds]
+    assert at[0] and at[1] and at[0] <= ids[0] and at[1] <= ids[1]
 
 
 @pytest.mark.heavy  # round-10 quick-tier trim (slowest cases -> sharded tier)

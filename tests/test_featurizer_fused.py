@@ -23,7 +23,7 @@ from pyspark.sql.types import (
 
 from conftest import session_conf
 from svoe_spark.operators.asof import asof_join_multi, lookahead_shift
-from svoe_spark.plans import featurizer
+from svoe_spark.plans import definitions, featurizer
 from svoe_spark.plans.definitions import key_handler
 from test_definition_loading import USER_FD
 from svoe_spark.plans.featurizer import Featurizer, FeaturizerConfig
@@ -352,28 +352,49 @@ def _plan_of(df) -> str:
     return buf.getvalue()
 
 
-def _assert_one_grouped_map(df):
-    """One Arrow grouped map over one shuffle and one sort on (keys, ts):
-    the grouped stage adds no sort of its own."""
+def _assert_one_grouped_map(df, shuffled: bool = False):
+    """One Arrow grouped map over one sort on (keys, ts), so the grouped
+    stage adds no sort of its own. Below the sort, a coalesce to one
+    partition with no shuffle (under KEY_TASK_BYTES of input) or, when
+    ``shuffled``, one hash shuffle on the keys."""
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     assert optimized.count("FlatMapGroupsInArrow") == 1, optimized
     assert "Window" not in optimized, optimized
     tree = _plan_of(df).split("\n\n")[0]  # the operator tree, before node details
-    (exchange,) = re.finditer(r"\bExchange\b", tree)
+    (grouped,) = re.finditer(r"\bFlatMapGroupsInArrow\b", tree)
     (sort,) = re.finditer(r"\bSort\b", tree)
-    assert exchange.start() > sort.start() > tree.index("FlatMapGroupsInArrow"), tree
+    physical = df._jdf.queryExecution().executedPlan().toString()
+    if shuffled:
+        (below,) = re.finditer(r"\bExchange\b", tree)
+        assert "Exchange hashpartitioning" in physical, physical
+    else:
+        assert not re.search(r"\bExchange\b", tree), tree
+        (below,) = re.finditer(r"\bCoalesce\b", tree)
+        assert "Coalesce 1" in physical, physical
+    assert below.start() > sort.start() > grouped.start(), tree
 
 
 def test_all_kernel_plan_is_one_grouped_map(spark, mixed_quotes):
     _assert_one_grouped_map(Featurizer(spark).run(_config(mixed_quotes, ["venue", "sym"])))
 
 
+def test_per_key_stage_above_key_task_bytes_is_one_hash_shuffle(spark, mixed_quotes, monkeypatch):
+    """Over KEY_TASK_BYTES of input the per-key stage hash-shuffles on
+    the keys, into one partition per KEY_TASK_BYTES, at most one per core."""
+    monkeypatch.setattr(definitions, "KEY_TASK_BYTES", 1)
+    df = Featurizer(spark).run(_config(mixed_quotes, ["venue", "sym"]))
+    _assert_one_grouped_map(df, shuffled=True)
+
+
 def test_small_persisted_fls_is_one_python_task(spark, mixed_quotes):
     """Under KEY_TASK_BYTES of input the per-key stage is one task, also
-    in a persisted FLS, whose partitions AQE does not coalesce."""
+    in a persisted FLS, whose partitions AQE does not coalesce; an
+    aggregate over that FLS plans no shuffle."""
     fls = Featurizer(spark).run(_config(mixed_quotes, ["venue", "sym"])).persist()
     try:
         assert fls.rdd.getNumPartitions() == 1
+        agg = fls.agg(F.count(F.lit(1)), F.max("ts"))
+        assert not re.search(r"\bExchange\b", _plan_of(agg)), _plan_of(agg)
     finally:
         fls.unpersist()
 

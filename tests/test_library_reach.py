@@ -26,7 +26,6 @@ ALLOWED = {
     "run_parity": "the oracle-window harness: the registry parity check tests drive query by query",
     "read_time_range": "the lake's documented time-range read (README S3), read side of write_partitioned",
     "ingest_csv": "the documented CSV ingest entry point (README ingest, the reference's data_ingest/)",
-    "append_ivfpq_batch": "the write side of the documented IVF-PQ lake (README incremental vector index)",
 }
 
 
