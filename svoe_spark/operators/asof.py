@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from svoe_spark.functions.time import duration_to_seconds, epoch_seconds
+from svoe_spark.operators.util import plan_row_count, plan_size_bytes
 
 _SIDE = "__asof_side"
 _TS = "__asof_ts"
@@ -106,32 +107,6 @@ def _has_python_stage(df: DataFrame) -> bool:
 #: always safe for correctness; at production scale the estimate
 #: exceeds the gate and the profile runs unchanged.
 AUTO_PROFILE_MIN_BYTES = AUTO_TARGET_ROWS_PER_TASK * 20
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Optimizer cardinality estimate (bytes) — driver-side only, no
-    job. None when unavailable (e.g. Spark Connect)."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — estimate is advisory
-        return None
-
-
-def _plan_row_count(df: DataFrame) -> int | None:
-    """Optimizer ROW-COUNT estimate — known exactly for materialized
-    cached relations and CBO-analyzed tables, None otherwise. The
-    right gate quantity for row-budget dispatches (the hottest key
-    holds at most all rows): unlike sizeInBytes it cannot be skewed by
-    wide rows or compression factors."""
-    try:
-        rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
-        if rc.isDefined():
-            return int(rc.get().longValue())
-        return None
-    except Exception:  # noqa: BLE001 — estimate is advisory
-        return None
 
 
 def asof_join(
@@ -302,8 +277,8 @@ def asof_join_multi(
         if _has_python_stage(unioned):
             time_bucket = None
         else:
-            rc = _plan_row_count(unioned)
-            sz = _plan_size_bytes(unioned)
+            rc = plan_row_count(unioned)
+            sz = plan_size_bytes(unioned)
             if rc is not None and rc <= AUTO_TARGET_ROWS_PER_TASK:
                 # exact row count (cached/CBO input) under the budget:
                 # the hottest key cannot exceed it — skip the profile

@@ -323,7 +323,7 @@ def reconstruct_book_auto(
     ``reconstruct_book`` as the fallback if violated."""
     import math
 
-    from svoe_spark.operators.asof import _plan_row_count, _plan_size_bytes
+    from svoe_spark.operators.util import plan_row_count, plan_size_bytes
 
     # round 11, the asof-gate precedent: the profile is an EAGER
     # aggregation at plan-build time feeding a perf-only dispatch
@@ -340,8 +340,8 @@ def reconstruct_book_auto(
     # explicitly SMALL max_rows_per_task is a deliberate request to
     # bucket small data (tests, pathological feeds) — honor it.
     if max_rows_per_task >= AUTO_MAX_ROWS_PER_TASK:
-        rc = _plan_row_count(df)
-        sz = _plan_size_bytes(df)
+        rc = plan_row_count(df)
+        sz = plan_size_bytes(df)
         if (rc is not None and rc <= max_rows_per_task) or (
             rc is None and sz is not None and sz <= max_rows_per_task * 20
         ):

@@ -72,6 +72,27 @@ def spread(df: DataFrame) -> DataFrame:
     return out
 
 
+def plan_size_bytes(df: DataFrame) -> int | None:
+    """Optimizer size estimate (bytes): driver-side, no job. None when
+    unavailable (e.g. Spark Connect)."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 — estimate is advisory
+        return None
+
+
+def plan_row_count(df: DataFrame) -> int | None:
+    """Optimizer row-count estimate: exact for materialized cached
+    relations and CBO-analyzed tables, None otherwise. The gate quantity
+    of row-budget dispatches (the hottest key holds at most all rows):
+    wide rows and compression cannot skew it as they skew sizeInBytes."""
+    try:
+        rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
+        return int(rc.get().longValue()) if rc.isDefined() else None
+    except Exception:  # noqa: BLE001 — estimate is advisory
+        return None
+
+
 def fmt_double_literal(x) -> str:
     """THE SQL rendering of one double literal for single-parse
     expression strings: repr() round-trips the value exactly and Java's

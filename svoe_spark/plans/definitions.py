@@ -32,9 +32,9 @@ with ``state_fields = None`` runs in batch only (no built-in does).
 ``run_plan`` is the one body of both paths: ``Featurizer.run`` runs the
 kernel plan over each key's ts-ordered Arrow batches with carried state
 (``per_key_map``), ``Featurizer.run_stream`` per micro-batch carrying it
-(streaming.feature_vector). Kernel-less
-definitions (user ones that override ``transform``) are as-of joined
-onto the batch pass and do not stream.
+(streaming.feature_vector). The frames of kernel-less definitions (user
+ones that override ``transform``) enter that batch pass as tagged sides
+whose columns pass through in their own types; they do not stream.
 """
 
 from __future__ import annotations
@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from svoe_spark.functions.time import duration_ns, from_micros, to_micros
-from svoe_spark.operators.asof import _plan_size_bytes
+from svoe_spark.operators.util import plan_size_bytes
 from svoe_spark.streaming.kernels import closed_bars, ewma, trailing_stddev, window_buffer, window_sums
 
 REGISTRY: dict[str, type["FeatureDefinition"]] = {}
@@ -103,25 +103,30 @@ class FeatureDefinition:
         return per_key_map(df, keys, kernel_inputs(cls.name, cls, columns, params), list(cls.outputs), per_key)
 
 
-def project_inputs(df: DataFrame, columns: list[str], inputs: list[str]) -> tuple[DataFrame, list[str]]:
+def project_inputs(df: DataFrame, columns: list[str], inputs: list) -> tuple[DataFrame, list]:
     """``df``'s ``columns``, then each source input as a double under a
     safe name; returns (that frame, the names). An input is a column of
-    df or a SQL expression over its backquoted columns."""
-    names = [f"__in{i}" for i in range(len(inputs))]
+    df or a SQL expression over its backquoted columns; a
+    ``StructField`` names a column of df kept as it is."""
+    names = [i if isinstance(i, StructField) else f"__in{n}" for n, i in enumerate(inputs)]
     return df.select(*columns, *[
-        (F.col(c) if c in df.columns else F.expr(c)).cast("double").alias(n) for c, n in zip(inputs, names)
+        df[i.name] if isinstance(i, StructField)
+        else (F.col(i) if i in df.columns else F.expr(i)).cast("double").alias(n) for i, n in zip(inputs, names)
     ]), names
 
 
-def per_key_map(df: DataFrame, keys: list[str], inputs: list[str], outputs: list[str], fn) -> DataFrame:
+def per_key_map(df: DataFrame, keys: list[str], inputs: list, outputs: list, fn) -> DataFrame:
     """``fn`` over each key's events as ts-ordered Arrow batches with
     carried state: ``groupBy(keys).applyInArrow`` after a Spark sort on
     (keys, ts), so the grouped stage adds no sort of its own. ``fn``
     takes one key's batches, an iterator of (``ts`` int64 ns, ``up`` the
-    source ``inputs`` as float64 arrays with NaN = null,
-    ``project_inputs``), and yields (ts, {output: array}) for the rows it
-    emits, in any batching. Returns (keys, ts, *outputs) as doubles, NaN
-    read as NULL; ``ts`` crosses as UTC µs (``functions.time.to_micros``).
+    ``inputs``), and yields (ts, {output: array}) for the rows it emits,
+    in any batching. A named input is a source column or SQL expression
+    as a float64 array (``project_inputs``), a named output a float64
+    array read as a double, NaN = NULL; a ``StructField`` input or
+    output is an Arrow array in its own type, the input ``df``'s column.
+    Returns (keys, ts, *outputs); ``ts`` crosses as UTC µs
+    (``functions.time.to_micros``).
 
     A per-key batch stage ignores events with no event time. The
     handler raises if a batch's ``ts`` decreases or does not continue
@@ -137,14 +142,12 @@ def per_key_map(df: DataFrame, keys: list[str], inputs: list[str], outputs: list
     partition already groups every key, and an aggregate over the
     persisted result needs no shuffle either. More are a hash
     repartition on the keys."""
-    schema = StructType(
-        [df.schema[c] for c in keys] + [StructField("ts", LongType())]
-        + [StructField(c, DoubleType()) for c in outputs]
-    )
+    fields = [o if isinstance(o, StructField) else StructField(o, DoubleType()) for o in outputs]
+    schema = StructType([df.schema[c] for c in keys] + [StructField("ts", LongType())] + fields)
     df = df.where(F.col("ts").isNotNull()).withColumn("ts", to_micros("ts"))
     df, names = project_inputs(df, [*keys, "ts"], inputs)
     parts = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    size = _plan_size_bytes(df)
+    size = plan_size_bytes(df)
     if size is not None:
         parts = min(parts, max(1, -(-size // KEY_TASK_BYTES)))
     df = df.coalesce(1) if parts == 1 else df.repartition(parts, *keys)
@@ -152,24 +155,26 @@ def per_key_map(df: DataFrame, keys: list[str], inputs: list[str], outputs: list
             .applyInArrow(key_handler(keys, names, outputs, fn), schema=schema).withColumn("ts", from_micros("ts")))
 
 
-def key_handler(keys: list[str], names: list[str], outputs: list[str], fn):
+def key_handler(keys: list[str], names: list, outputs: list, fn):
     """``per_key_map``'s Arrow handler of one key: checks the order of
     its batches, hands ``fn`` their (ts ns, input columns ``names``) and
     builds the output batches."""
+    columns = [getattr(c, "name", c) for c in outputs]
 
     # the hints pick PySpark's iterator-of-batches form; they resolve from this module's globals
     def per_key(key: tuple, batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for ts, res in fn(_ordered(batches, names)):
             yield pa.RecordBatch.from_arrays(
                 [*(pa.repeat(k, len(ts)) for k in key), pa.array(ts // 1000)]
-                + [pa.array(res[c], pa.float64(), mask=np.isnan(res[c])) for c in outputs],
-                names=[*keys, "ts", *outputs],
+                + [pa.array(res[c], pa.float64(), mask=np.isnan(res[c])) if isinstance(o, str) else res[c]
+                   for c, o in zip(columns, outputs)],
+                names=[*keys, "ts", *columns],
             )
 
     return per_key
 
 
-def _ordered(batches, names: list[str]):
+def _ordered(batches, names: list):
     """(ts ns, input arrays) of each non-empty batch, raising where ts
     decreases within a batch or from the previous one."""
     last = np.iinfo(np.int64).min
@@ -180,14 +185,20 @@ def _ordered(batches, names: list[str]):
         if us[0] < last or (us[1:] < us[:-1]).any():
             raise ValueError("per_key_map: a key's batches are not ordered by ts")
         last = us[-1]
-        yield us * 1000, [batch.column(n).to_numpy(zero_copy_only=False) for n in names]
+        yield us * 1000, [batch.column(n).to_numpy(zero_copy_only=False) if isinstance(n, str)
+                          else batch.column(n.name) for n in names]
+
+
+def concat(arrays: list):
+    """float64 ndarrays or Arrow arrays, concatenated."""
+    return np.concatenate(arrays) if isinstance(arrays[0], np.ndarray) else pa.concat_arrays(arrays)
 
 
 def whole(batches) -> list:
     """A key's (ts, up) batches as one: how a plan with a batch-only
     kernel (``state_fields = None``) reads them."""
     ts, up = zip(*batches)
-    return [(np.concatenate(ts), [np.concatenate(c) for c in zip(*up)])]
+    return [(np.concatenate(ts), [concat(c) for c in zip(*up)])]
 
 
 def kernel_inputs(name: str, defn, columns: list[str], params: dict) -> list[str]:

@@ -26,25 +26,30 @@ Config shape (YAML or dict):
 from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructField
 
 from svoe_spark.functions.time import duration_ns
-from svoe_spark.operators.asof import asof_join_multi, lookahead_shift
 from svoe_spark.operators.sampling import every_nth
 from svoe_spark.plans.definitions import (
     REGISTRY,
     FeatureDefinition,
     KernelStep,
+    concat,
     kernel_inputs,
+    load_definitions_from_file,
     per_key_map,
     run_plan,
     source_inputs,
+    whole,
 )
 from svoe_spark.plans.feature_tree import Feature
 from svoe_spark.sources.synthetic import sine_mid_price
-from svoe_spark.sources.tables import load_table, read_parquet
+from svoe_spark.sources.tables import DEFAULT_SF_DIR, load_table, read_parquet
 
 
 @dataclass
@@ -82,10 +87,7 @@ class FeaturizerConfig:
                     obj = yaml.safe_load(f)
             else:
                 obj = yaml.safe_load(obj)
-        feats = [
-            fc if isinstance(fc, FeatureConfig) else FeatureConfig(**fc)
-            for fc in obj.get("features", [])
-        ]
+        feats = [fc if isinstance(fc, FeatureConfig) else FeatureConfig(**fc) for fc in obj.get("features", [])]
         return FeaturizerConfig(
             data_source=obj["data_source"],
             features=feats,
@@ -98,8 +100,6 @@ class FeaturizerConfig:
 
 
 def _load_definitions(config: FeaturizerConfig) -> None:
-    from svoe_spark.plans.definitions import load_definitions_from_file
-
     for p in config.definition_paths:
         load_definitions_from_file(p)
 
@@ -107,11 +107,12 @@ def _load_definitions(config: FeaturizerConfig) -> None:
 def _definition(fc: FeatureConfig) -> type[FeatureDefinition]:
     defn = REGISTRY.get(fc.feature_definition)
     if defn is None:
-        raise ValueError(
-            f"unknown feature_definition: {fc.feature_definition!r}; "
-            f"registered: {sorted(REGISTRY)}"
-        )
+        raise ValueError(f"unknown feature_definition: {fc.feature_definition!r}; registered: {sorted(REGISTRY)}")
     return defn
+
+
+#: the side tag of ``run``'s per-key pass: 0 the source, 1, 2, ... each other feature
+_SIDE = "__side"
 
 
 def _value_cols(df: DataFrame, keys: list[str]) -> list[str]:
@@ -137,9 +138,74 @@ def kernel_plan(config: FeaturizerConfig, columns: list[str], exclude=()) -> lis
     return list(plan.values())
 
 
-def _ffill(v: np.ndarray) -> np.ndarray:
-    """v with each NaN replaced by the last non-NaN value before it."""
-    return v[np.maximum.accumulate(np.where(np.isnan(v), 0, np.arange(len(v))))]
+def _take(v, idx):
+    """v, a float64 ndarray or an Arrow array, at the indices ``idx``."""
+    return v[idx] if isinstance(v, np.ndarray) else v.take(idx)
+
+
+def _ffill(v):
+    """v with each null (NaN in a float64 ndarray; in an Arrow array a
+    null, not a NaN) replaced by the last non-null value before it."""
+    null = np.isnan(v) if isinstance(v, np.ndarray) else v.is_null().to_numpy(zero_copy_only=False)
+    return _take(v, np.maximum.accumulate(np.where(null, 0, np.arange(len(v)))))
+
+
+def _fused(config: FeaturizerConfig, plan: list[KernelStep], sides: dict, label_name: str):
+    """``run``'s per-key pass as ``per_key_map``'s (inputs, outputs, fn):
+    the kernel ``plan`` over side 0's rows, and each of ``sides`` (name
+    -> its ``StructField``s; side 1, 2, ...) as Arrow arrays. Carried
+    from batch to batch: the kernels' state, each column's last non-null
+    value, and the rows not yet resolved (the trailing peer group, and
+    the rows whose lookahead no later event of the label's side passed)."""
+    cols = {s.name: s.columns for s in plan} | sides
+    label = cols[label_name] if config.label_lookahead else []
+    outputs = [f"label_{c}" if isinstance(c, str) else StructField(f"label_{c.name}", c.dataType) for c in label]
+    outputs += [c for name in dict.fromkeys(fc.name for fc in config.features) for c in cols[name]]
+    source_cols, kernel_cols = source_inputs(plan), [c for s in plan for c in s.columns]
+    inputs = [*source_cols, *([_SIDE] if sides else []), *(f for fs in sides.values() for f in fs)]
+    names, labels = [getattr(c, "name", c) for c in inputs], [getattr(c, "name", c) for c in label]
+    held_cols = [getattr(c, "name", c) for c in outputs[len(label):]]
+    tag = list(sides).index(label_name) + 1 if label_name in sides else 0
+    ahead = duration_ns(config.label_lookahead) if labels else 0
+    streams = all(s.defn.state_fields is not None for s in plan)
+
+    def resolve(ts, tags, held, n):
+        """The outputs of the label side's rows among the first ``n`` held:
+        their ``ts`` and the forward-filled ``held`` columns reaching past them."""
+        t = ts[np.flatnonzero(tags[:n] == tag) if sides else slice(0, n)]
+        peer, at = np.searchsorted(ts, t, "right") - 1, np.searchsorted(ts, t + ahead, "right") - 1
+        return t, {c: _take(held[c], peer) for c in held_cols} | {f"label_{c}": _take(held[c], at) for c in labels}
+
+    def fused_pass(batches):
+        state, last, held, ts, tags = None, None, {}, np.empty(0, np.int64), np.empty(0)
+        for bts, up in batches if streams else whole(batches):
+            vals = dict(zip(names, up))
+            if not sides:
+                state, last = run_plan(plan, bts, vals, state), bts[-1]
+            else:
+                side = vals[_SIDE]
+                src, tags = side == 0, np.concatenate([tags, side])
+                sub = {c: vals[c][src] for c in source_cols}
+                state = run_plan(plan, bts[src], sub, state) if src.any() else state
+                for c in kernel_cols:  # NaN on other sides' rows, or all NaN with no source row
+                    vals[c] = np.full(len(bts), np.nan)
+                    vals[c][src] = sub.get(c, np.nan)
+                last = bts[side == tag][-1] if (side == tag).any() else last
+            # the last event is always held, so its values seed the forward fill
+            held = {c: _ffill(concat([held[c], vals[c]]) if held else vals[c]) for c in held_cols}
+            ts = np.concatenate([ts, bts])
+            # resolved: a later event of the label's side has passed ts + lookahead (and
+            # ended the peer group); before that side's first event, all but the last peers
+            n = np.searchsorted(ts, ts[-1] if last is None else last - ahead, "left")
+            if n:
+                out = resolve(ts, tags, held, n)
+                if len(out[0]):
+                    yield out
+                ts, tags, held = ts[n:], tags[n:], {c: v[n:] for c, v in held.items()}
+        if last is not None:  # the key's end: keep the rows whose lookahead the side's last event reaches
+            yield resolve(ts, tags, held, np.searchsorted(ts, last - ahead, "right"))
+
+    return inputs, outputs, fused_pass
 
 
 class Featurizer:
@@ -160,20 +226,10 @@ class Featurizer:
     def _load_source(self, cfg: dict) -> DataFrame:
         kind = cfg.get("kind", "table")
         if kind == "table":
-            df = (
-                load_table(self.spark, cfg["table"], cfg["sf_dir"])
-                if "sf_dir" in cfg
-                else load_table(self.spark, cfg["table"])
-            )
-            if "select" in cfg:
-                df = df.selectExpr(*cfg["select"])
-            return df
-        if kind == "parquet":
+            df = load_table(self.spark, cfg["table"], cfg.get("sf_dir", DEFAULT_SF_DIR))
+        elif kind == "parquet":
             df = read_parquet(self.spark, cfg["path"])
-            if "select" in cfg:
-                df = df.selectExpr(*cfg["select"])
-            return df
-        if kind == "sine":
+        elif kind == "sine":
             return sine_mid_price(
                 self.spark,
                 start_ts=cfg.get("start_ts", 0.0),
@@ -184,13 +240,13 @@ class Featurizer:
                 freq=cfg.get("freq", 5.0),
                 keys=cfg.get("keys"),
             )
-        raise ValueError(f"unknown data_source kind: {kind}")
+        else:
+            raise ValueError(f"unknown data_source kind: {kind}")
+        return df.selectExpr(*cfg["select"]) if "select" in cfg else df
 
     # -- planning -----------------------------------------------------------
 
-    def build_features(
-        self, config: FeaturizerConfig
-    ) -> dict[str, tuple[Feature, DataFrame]]:
+    def build_features(self, config: FeaturizerConfig) -> dict[str, tuple[Feature, DataFrame]]:
         """Resolve every configured feature to a DataFrame, deduping
         shared subtrees by content hash and persisting fan-out > 1
         nodes (the reference's ref-count heuristic,
@@ -240,112 +296,52 @@ class Featurizer:
         the reference: '{feature}-{col}' and 'label_{feature}-{col}'
         (tasks.py:243-252).
 
-        Fused pass: the features whose definition has a per-event
-        kernel (every built-in; definitions module docstring) and whose
-        deps reach the source only through such features, bar stored
-        ones, come out with the label from ONE
-        ``groupBy(keys).applyInArrow`` over the source inputs they read
-        (``project_inputs``; ``per_key_map``, which ignores events with
-        no event time). Per key, over its ts-ordered Arrow batches with
-        carried state: kernels in dependency order, then
-        ``asof_join_multi``'s contract: each
-        column forward-filled over nulls and read at the row's last
-        equal-ts peer (so peers carry equal values), the label (one
-        column per output of the label feature) read at the last row
-        with ts <= ts + lookahead, and rows whose ts + lookahead passes
-        the key's last event dropped. A row's features read no event
-        after it: ``ohlcv`` gives the last bar closed by then. Cost:
-        O(rows) per key, windowed kernels included, however dense the
-        ticks. Memory: one Arrow batch of a key's rows with a float64
-        array per input and feature output, plus the kernels' state and
+        One ``groupBy(keys).applyInArrow`` (``per_key_map``, which
+        ignores events with no event time) over tagged sides (``_fused``).
+        Side 0 is the source inputs of the features with a per-event
+        kernel (every built-in) whose deps reach the source only through
+        such features, bar stored ones; each other feature (kernel-less
+        user definitions, stored features and their dependents) is one
+        more side, its ``build_features`` frame in its own types. Per key,
+        over its ts-ordered Arrow batches: the kernels over side 0's rows,
+        then ``asof_join_multi``'s contract: each column forward-filled
+        over nulls from its own side's rows and read at the row's last
+        equal-ts peer across all sides; one row per event of the label
+        feature's side, the label read at that side's last row with ts <=
+        ts + lookahead, and rows whose lookahead passes that side's last
+        event dropped. A row's features read no event after it: ``ohlcv``
+        gives the last bar closed by then. Cost: O(rows) per key, however
+        dense the ticks. Memory: one Arrow batch, the kernels' state and
         the rows held for the trailing peer group and the lookahead (a
-        plan with a batch-only kernel reads a key's batches as one).
-
-        Fallback: the other features (kernel-less user
-        definitions, stored features and their dependents) come
-        from ``build_features`` and are as-of joined onto the fused
-        output; a kernel-less label gets its rows from
-        ``lookahead_shift`` and the fused output is one more side."""
+        plan with a batch-only kernel reads a key's batches as one)."""
         config = config if isinstance(config, FeaturizerConfig) else FeaturizerConfig.load(config)
         _load_definitions(config)
         keys = config.keys
-        label_name = config.label_feature or config.features[0].name
-        stored = set(config.features_to_store) if self.store is not None else set()
+        names = [fc.name for fc in config.features]
+        label_name = config.label_feature or names[0]
+        if label_name not in names:
+            raise ValueError(f"label_feature {label_name!r} is not a configured feature: {names}")
         source_df = self._load_source(config.data_source)
-        fused = {s.name: s for s in kernel_plan(config, _value_cols(source_df, keys), stored)}
-        rest = [fc for fc in config.features if fc.name not in fused]
-        needed = {fc.name for fc in rest}  # and, below, what they depend on
+        stored = config.features_to_store if self.store is not None else ()
+        plan = kernel_plan(config, _value_cols(source_df, keys), stored)
+        rest = [n for n in dict.fromkeys(names) if all(s.name != n for s in plan)]
+        needed = set(rest)  # and, below, what they depend on
         for fc in reversed(config.features):
             if fc.name in needed:
                 needed.update(fc.deps)
         feats = self.build_features(replace(
             config, features=[fc for fc in config.features if fc.name in needed], definition_paths=[]
         )) if rest else {}
-
-        left = self._fused(config, source_df, list(fused.values()), label_name) if fused else None
-        rights = {f"{fc.name}-": feats[fc.name][1] for fc in rest}
-        if label_name not in fused:
-            labels = label_df = feats[label_name][1]
-            if config.label_lookahead:
-                labels = lookahead_shift(
-                    label_df, config.label_lookahead, on="ts", by=keys,
-                    value_cols=_value_cols(label_df, keys), prefix=f"label_{label_name}-",
-                )
-            if left is not None:
-                rights = {"": left, **rights}
-            left = labels.select(*keys, "ts", *[c for c in labels.columns if c.startswith("label_")])
-        # the as-of join's column order: ts, keys, label, features
-        columns = ["ts", *keys, *[c for c in left.columns if c.startswith("label_")]]
-        for name in dict.fromkeys(fc.name for fc in config.features):
-            if name in fused:
-                columns += fused[name].columns
-            else:
-                columns += [f"{name}-{c}" for c in _value_cols(feats[name][1], keys)]
-        if rights:
-            left = asof_join_multi(left, rights, on="ts", by=keys)
-        return left.select(*columns)
-
-    def _fused(self, config, source_df: DataFrame, plan: list[KernelStep], label_name: str) -> DataFrame:
-        """``run``'s fused pass over the kernel ``plan``, one key's
-        batches at a time. Carried from batch to batch: the kernels'
-        state, each column's last non-null value, and the rows not yet
-        resolved (the trailing equal-ts peer group, and the rows whose
-        ts + lookahead no later event has passed)."""
-        source_cols = source_inputs(plan)
-        features = [c for s in plan for c in s.columns]
-        labels = next((s.columns for s in plan if s.name == label_name), []) if config.label_lookahead else []
-        ahead = duration_ns(config.label_lookahead) if labels else 0
-        streams = all(s.defn.state_fields is not None for s in plan)
-
-        def resolve(ts, held, n):
-            """The outputs of the first ``n`` held rows, ``ts`` and the
-            forward-filled ``held`` columns reaching past them."""
-            last_peer = np.searchsorted(ts, ts[:n], "right") - 1
-            res = {c: held[c][last_peer] for c in features}
-            if labels:
-                at = np.searchsorted(ts, ts[:n] + ahead, "right") - 1
-                res.update({f"label_{c}": held[c][at] for c in labels})
-            return ts[:n], res
-
-        def fused_pass(batches):
-            state, ts = None, np.empty(0, np.int64)
-            held = {c: np.empty(0) for c in features}
-            for bts, src in batches if streams else whole(batches):
-                vals = dict(zip(source_cols, src))
-                state = run_plan(plan, bts, vals, state)
-                # the last event is always held, so its values seed the forward fill
-                held = {c: _ffill(np.concatenate([held[c], vals[c]])) for c in features}
-                ts = np.concatenate([ts, bts])
-                # resolved: a later event has passed ts + lookahead (and ended the peer group)
-                n = np.searchsorted(ts, ts[-1] - ahead, "left")
-                if n:
-                    yield resolve(ts, held, n)
-                    ts, held = ts[n:], {c: v[n:] for c, v in held.items()}
-            if len(ts):  # the key's end: keep the rows whose lookahead its last event reaches
-                yield resolve(ts, held, np.searchsorted(ts, ts[-1] - ahead, "right"))
-
-        outputs = [f"label_{c}" for c in labels] + features
-        return per_key_map(source_df, config.keys, source_cols, outputs, fused_pass)
+        sides, frames = {}, [source_df.withColumn(_SIDE, F.lit(0))] if plan else []
+        for tag, name in enumerate(rest, 1):
+            side = feats[name][1]
+            cols = _value_cols(side, keys)
+            sides[name] = [StructField(f"{name}-{c}", side.schema[c].dataType) for c in cols]
+            frames.append(side.select(*keys, "ts", F.lit(tag).alias(_SIDE),
+                                      *[side[c].alias(f"{name}-{c}") for c in cols]))
+        df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames) if rest else source_df
+        inputs, outputs, fn = _fused(config, plan, sides, label_name)
+        return per_key_map(df, keys, inputs, outputs, fn).select("ts", *keys, *[getattr(c, "name", c) for c in outputs])
 
     def run_stream(self, config, source_stream: DataFrame) -> DataFrame:
         """The Kappa ONLINE path (reference entry point 2, §3.2): the
@@ -377,15 +373,11 @@ class Featurizer:
         streams = {s.name for s in plan if s.defn.state_fields is not None}
         for fc in config.features:
             if fc.name not in streams:
-                raise ValueError(
-                    f"feature {fc.feature_definition!r} has no fused streaming "
-                    f"form: it needs a kernel that declares its state_fields"
-                )
+                raise ValueError(f"feature {fc.feature_definition!r} has no fused streaming form: "
+                                 "it needs a kernel that declares its state_fields")
         return feature_vector_stream(source_stream, plan, key=key, on="ts")
 
-    def get_materialized_data(
-        self, config, pick_every_nth_row: int = 1
-    ) -> DataFrame:
+    def get_materialized_data(self, config, pick_every_nth_row: int = 1) -> DataFrame:
         """Reference runner.py:148-164: the label set, optionally
         decimated."""
         out = self.run(config)

@@ -1,5 +1,6 @@
-"""Featurizer.run's fused pass (every kernel feature and the label in one
-grouped map) against the as-of path it replaced and against an
+"""Featurizer.run's one per-key pass (every feature and the label in one
+grouped map: kernel features over the source, every other feature as a
+tagged side) against the as-of composition it replaced and against an
 independent pandas merge_asof reference."""
 
 import contextlib
@@ -15,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
+    LongType,
     StringType,
     StructField,
     StructType,
@@ -24,9 +26,11 @@ from pyspark.sql.types import (
 from conftest import session_conf
 from svoe_spark.operators.asof import asof_join_multi, lookahead_shift
 from svoe_spark.plans import definitions, featurizer
-from svoe_spark.plans.definitions import key_handler
-from test_definition_loading import USER_FD
+from svoe_spark.plans.definitions import key_handler, load_definitions_from_source
 from svoe_spark.plans.featurizer import Featurizer, FeaturizerConfig
+from svoe_spark.sources.catalog import FeatureStore
+from test_definition_loading import USER_FD
+from test_featurizer_stream import _USER_FDS
 
 WINDOW_S, LOOKAHEAD_S, ALPHA = 20.0, 5.0, 0.2
 FEATURES = [
@@ -75,17 +79,21 @@ def _series(rng, n):
     return ts, bid, bid + rng.uniform(0.01, 0.1, n)
 
 
-def _old_run(spark, config):
-    """The as-of composition Featurizer.run used before the fused pass:
-    every feature's own frame, lookahead_shift for the label, one
-    asof_join_multi."""
+def _old_run(spark, config, store=None):
+    """The as-of composition Featurizer.run used before the one per-key
+    pass: every feature's own frame (``build_features``),
+    lookahead_shift for the label, one asof_join_multi."""
     cfg = FeaturizerConfig.load(config)
-    feats = Featurizer(spark).build_features(cfg)
-    mid = feats["mid"][1]
-    labels = lookahead_shift(
-        mid, cfg.label_lookahead, on="ts", by=cfg.keys, value_cols=["mid_price"],
-        prefix="label_mid-",
-    ).select(*cfg.keys, "ts", "label_mid-mid_price")
+    feats = Featurizer(spark, store).build_features(cfg)
+    name = cfg.label_feature or cfg.features[0].name
+    label = feats[name][1]
+    values = [c for c in label.columns if c not in (*cfg.keys, "ts")]
+    labels = label.select(*cfg.keys, "ts")
+    if cfg.label_lookahead:
+        labels = lookahead_shift(
+            label, cfg.label_lookahead, on="ts", by=cfg.keys, value_cols=values,
+            prefix=f"label_{name}-",
+        ).select(*cfg.keys, "ts", *[f"label_{name}-{c}" for c in values])
     return asof_join_multi(
         labels, {f"{n}-": df for n, (_, df) in feats.items()}, on="ts", by=cfg.keys
     )
@@ -217,7 +225,9 @@ def test_run_equals_merge_asof_reference(spark, tmp_path, mixed):
         extra = {"definition_paths": [str(tmp_path / "user_fd.py")]}
         cols = [*COLS[:4], "dbl-doubled", *COLS[4:], *BAR_COLS]
 
-    got = Featurizer(spark).run(_config(path, ["instrument"], features, **extra)).toPandas()
+    df = Featurizer(spark).run(_config(path, ["instrument"], features, **extra))
+    _assert_one_grouped_map(df)
+    got = df.toPandas()
     assert list(got.columns) == ["ts", "instrument", *cols]
     for inst, g in q.groupby("instrument"):
         want = _reference(g)
@@ -293,34 +303,67 @@ def test_null_ts_event_is_ignored(spark, tmp_path, label):
     np.testing.assert_allclose(got["vol-volatility"].to_numpy(dtype=float), want, rtol=1e-12)
 
 
-def test_fused_pass_in_any_batching_equals_one_batch(monkeypatch):
-    """No Spark: the fused pass over one key cut into batches of every
-    size equals the one-batch pass, with peers of different quotes and
-    a lookahead boundary (1 s + 5 s) on the 7-row batches' edge."""
-    captured = {}
-    monkeypatch.setattr(featurizer, "per_key_map", lambda df, keys, inputs, outputs, fn: captured.update(
-        inputs=inputs, outputs=outputs, fn=fn))
-    cfg = FeaturizerConfig.load(_config("unused.parquet", ["sym"], [*FEATURES, BARS]))
-    Featurizer(None)._fused(cfg, None, featurizer.kernel_plan(cfg, ["bid", "ask", "price", "amount"]), "mid")
-    secs = np.array([0, 1, 2, 3, 4, 5, 6, 6, 7, 8, 12, 13, 20, 30])
-    bid = 100.0 + np.arange(len(secs))
-    bid[[2, 9]] = np.nan
-    src = {"bid": bid, "ask": bid + 0.5, "price": bid + 0.5, "amount": np.ones(len(secs))}
-    ts, up = secs * 1_000_000_000, [src[c] for c in captured["inputs"]]
+SECS = np.array([0, 1, 2, 3, 4, 5, 6, 6, 7, 8, 12, 13, 20, 30])
+BID = 100.0 + np.arange(len(SECS))
+BID[[2, 9]] = np.nan
+SIDE_SECS = np.array([0.5, 3, 6, 6, 6.5, 13, 25])  # between, on and among the source's rows
+
+
+def _any_batching(label):
+    """No Spark: the per-key pass over one key cut into batches of every
+    size equals the one-batch pass. The source's peers at 6 s have
+    different quotes, a lookahead boundary (1 s + 5 s) falls on the
+    7-row batches' edge, and a bigint side (one value null) has rows
+    between, on and among the source's rows. Returns the one-batch
+    (ts, {output: float64 array})."""
+    load_definitions_from_source(USER_FD, module_name="fused_side")
+    features = [*FEATURES, BARS, {"name": "dbl", "feature_definition": "doubled_mid", "deps": ["mid"]}]
+    cfg = FeaturizerConfig.load({**_config("unused.parquet", ["sym"], features), "label_feature": label})
+    side = StructField("dbl-doubled", LongType())
+    plan = featurizer.kernel_plan(cfg, ["bid", "ask", "price", "amount"])
+    inputs, outputs, fn = featurizer._fused(cfg, plan, {"dbl": [side]}, label)
+
+    order = np.argsort(np.concatenate([SECS, SIDE_SECS]), kind="stable")
+    src = {"bid": BID, "ask": BID + 0.5, "price": BID + 0.5, "amount": np.ones(len(SECS))}
+    cols = {c: np.concatenate([v, np.full(len(SIDE_SECS), np.nan)])[order] for c, v in src.items()}
+    cols["__side"] = np.concatenate([np.zeros(len(SECS)), np.ones(len(SIDE_SECS))])[order]
+    cols[side] = pa.array([None] * len(SECS) + [10, 11, None, 13, 14, 15, 16], pa.int64()).take(order)
+    ts = (np.concatenate([SECS, SIDE_SECS])[order] * 1e9).astype(np.int64)
+    up = [cols[c] for c in inputs]
+    names = [getattr(o, "name", o) for o in outputs]
 
     def run(size):
-        outs = list(captured["fn"]((ts[i : i + size], [u[i : i + size] for u in up])
-                                   for i in range(0, len(ts), size)))
-        return np.concatenate([o[0] for o in outs]), {
-            c: np.concatenate([o[1][c] for o in outs]) for c in captured["outputs"]}
+        outs = list(fn((ts[i : i + size], [u[i : i + size] for u in up]) for i in range(0, len(ts), size)))
+        return np.concatenate([o[0] for o in outs]), {c: np.concatenate([
+            np.asarray(o[1][c].to_pylist() if isinstance(o[1][c], pa.Array) else o[1][c], dtype=float)
+            for o in outs]) for c in names}
 
     want_ts, want = run(len(ts))
-    assert want["label_mid-mid_price"][1] == bid[7] + 0.25  # the edge's later peer
     for size in range(1, len(ts)):
         got_ts, got = run(size)
         np.testing.assert_array_equal(got_ts, want_ts, err_msg=str(size))
-        for c in captured["outputs"]:
+        for c in names:
             np.testing.assert_allclose(got[c], want[c], rtol=1e-12, equal_nan=True, err_msg=f"{size} {c}")
+    return want_ts, want
+
+
+def test_fused_pass_in_any_batching_equals_one_batch():
+    """The source's rows whose lookahead its last event (30 s) reaches;
+    the side read at its last row at or before each, its null filled over."""
+    ts, out = _any_batching("mid")
+    assert (ts == SECS[SECS + LOOKAHEAD_S <= 30] * 1e9).all()
+    assert out["label_mid-mid_price"][1] == BID[7] + 0.25  # the edge's later peer
+    np.testing.assert_array_equal(out["dbl-doubled"][:9], [np.nan, 10, 10, 11, 11, 11, 13, 13, 14])
+
+
+def test_fused_pass_with_a_side_label_in_any_batching_equals_one_batch():
+    """A kernel-less label: the side's rows whose lookahead its last
+    event (25 s) reaches, its label its own value 5 s on."""
+    ts, out = _any_batching("dbl")
+    assert (ts == SIDE_SECS[SIDE_SECS + LOOKAHEAD_S <= 25] * 1e9).all()
+    np.testing.assert_array_equal(out["label_dbl-doubled"], [11, 14, 14, 14, 14, 15])
+    np.testing.assert_array_equal(out["dbl-doubled"], [10, 11, 13, 13, 14, 15])
+    assert out["mid-mid_price"][2] == BID[7] + 0.25  # the side's 6 s reads the source's last peer
 
 
 def _batch(secs, values):
@@ -444,3 +487,181 @@ def test_fls_build_emits_no_user_warning(spark, mixed_quotes):
         warnings.simplefilter("error", UserWarning)
         Featurizer(spark).build_features(FeaturizerConfig.load(cfg))
         Featurizer(spark).run(cfg).count()
+
+
+#: kernel-less user definitions over the source and over mid: a bigint
+#: and a string column, a double holding NaN (a value, not a null) and a
+#: side on its own ts grid. Each is NULL where the bid is.
+SIDE_FDS = '''
+from pyspark.sql import functions as F
+
+from svoe_spark.plans.definitions import FeatureDefinition
+
+
+class QuoteCents(FeatureDefinition):
+    name = "quote_cents"
+
+    @classmethod
+    def transform(cls, upstreams, params, keys):
+        df = upstreams["source"]
+        return df.select(*keys, "ts", (F.col("bid") * 100).cast("bigint").alias("cents"))
+
+
+class QuoteKind(FeatureDefinition):
+    name = "quote_kind"
+
+    @classmethod
+    def transform(cls, upstreams, params, keys):
+        df = upstreams["source"]
+        wide = F.col("ask") - F.col("bid") > 0.05
+        return df.select(*keys, "ts", F.when(wide, "wide").when(~wide, "tight").alias("kind"))
+
+
+class NanBid(FeatureDefinition):
+    name = "nan_bid"
+
+    @classmethod
+    def transform(cls, upstreams, params, keys):
+        df = upstreams["source"]
+        bid = F.col("bid")
+        return df.select(*keys, "ts", F.when(bid >= 100, bid).when(bid < 100, F.lit(float("nan"))).alias("bid"))
+
+
+class SparseMid(FeatureDefinition):
+    name = "sparse_mid"
+    dep_slots = ("upstream",)
+
+    @classmethod
+    def transform(cls, upstreams, params, keys):
+        df = upstreams["upstream"]
+        return df.where(F.pmod(F.hash("ts"), F.lit(3)) == 0).select(
+            *keys, (F.col("ts") + F.expr("INTERVAL 250 MILLISECONDS")).alias("ts"), "mid_price")
+'''
+
+#: features whose values are equal at equal-ts peers (mixed_quotes' peers
+#: repeat their quote), so the as-of composition's pick among peers is moot
+PEER_FREE = FEATURES[:3]
+DBL = {"name": "dbl", "feature_definition": "doubled_mid", "deps": ["mid"]}
+SIDE_CONFIGS = {
+    "kernelless_label": ([*PEER_FREE, DBL], {"label_feature": "dbl", "label_lookahead": None}),
+    "kernelless_label_lookahead": ([*PEER_FREE, DBL], {"label_feature": "dbl"}),
+    "bigint_column": ([*PEER_FREE, {"name": "cents", "feature_definition": "quote_cents"}], {}),
+    "string_column": ([*PEER_FREE, {"name": "kind", "feature_definition": "quote_kind"}], {}),
+    "nan_double": ([*PEER_FREE, {"name": "nanb", "feature_definition": "nan_bid"}], {}),
+    "sparse_side": ([*PEER_FREE, {"name": "sparse", "feature_definition": "sparse_mid", "deps": ["mid"]}], {}),
+}
+
+
+def _side_config(tmp_path, path, name):
+    (tmp_path / "side_fds.py").write_text(USER_FD + SIDE_FDS)
+    features, extra = SIDE_CONFIGS[name]
+    return {**_config(path, ["venue", "sym"], features,
+                      definition_paths=[str(tmp_path / "side_fds.py")]), **extra}
+
+
+def _assert_same_fls(new_df, old_df, keys):
+    """Equal schemas, rows and values; a NaN is told apart from a NULL."""
+    assert new_df.schema == old_df.schema
+    doubles = [f.name for f in new_df.schema if isinstance(f.dataType, DoubleType)]
+
+    def frame(df):
+        nans = [F.isnan(c).alias(f"nan {c}") for c in doubles]
+        return df.select("*", *nans).toPandas().sort_values([*keys, "ts"], kind="stable").reset_index(drop=True)
+
+    new, old = frame(new_df), frame(old_df)
+    assert len(new) == len(old) > 0
+    for c in new.columns:
+        if c in doubles:
+            np.testing.assert_allclose(new[c].to_numpy(dtype=float), old[c].to_numpy(dtype=float),
+                                       rtol=1e-12, equal_nan=True, err_msg=c)
+        else:
+            assert (new[c].isna() == old[c].isna()).all(), c
+            assert new[c].dropna().tolist() == old[c].dropna().tolist(), c
+
+
+@pytest.mark.parametrize("batch_rows", [None, 7], ids=["default_batches", "7_row_batches"])
+@pytest.mark.parametrize("name", list(SIDE_CONFIGS))
+def test_sides_equal_old_asof_path(spark, mixed_quotes, tmp_path, name, batch_rows):
+    """Each kernel-less feature is a typed side of the one per-key pass:
+    the FLS equals the as-of composition's, column types included, with
+    one grouped map and no Window."""
+    cfg = _side_config(tmp_path, mixed_quotes, name)
+    with contextlib.ExitStack() as stack:
+        if batch_rows:
+            stack.enter_context(_small_batches(spark))
+        new_df = Featurizer(spark).run(cfg)
+        _assert_same_fls(new_df, _old_run(spark, cfg), ["venue", "sym"])
+    _assert_one_grouped_map(new_df)
+    if name == "nan_double":
+        assert new_df.where(F.isnan("nanb-bid")).count() > 0
+        assert new_df.where(F.col("nanb-bid").isNull()).count() > 0
+
+
+@pytest.mark.parametrize("batch_rows", [None, 7], ids=["default_batches", "7_row_batches"])
+def test_stored_feature_equals_old_asof_path(spark, mixed_quotes, tmp_path, batch_rows):
+    """A stored feature is a side read from the store: its first run
+    (computed, written, read back) and its second run (read) equal the
+    as-of composition's; the second run plans one grouped map."""
+    cfg = {**_side_config(tmp_path, mixed_quotes, "kernelless_label_lookahead"),
+           "label_feature": "mid", "features_to_store": ["vol"]}
+    keys = ["venue", "sym"]
+    store = FeatureStore(spark, str(tmp_path / "store"))
+    with contextlib.ExitStack() as stack:
+        if batch_rows:
+            stack.enter_context(_small_batches(spark))
+        old = _old_run(spark, cfg, FeatureStore(spark, str(tmp_path / "old_store")))
+        _assert_same_fls(Featurizer(spark, store).run(cfg), old, keys)
+        second = Featurizer(spark, store).run(cfg)
+        _assert_same_fls(second, old, keys)
+    assert len(list((tmp_path / "store").iterdir())) == 1
+    _assert_one_grouped_map(second)
+
+
+@pytest.mark.parametrize("side", [False, True], ids=["kernels", "with_user_side"])
+def test_batch_only_kernel_runs_in_the_per_key_pass(spark, tmp_path, side):
+    """A kernel with no stream state (``state_fields = None``) reads each
+    key's batches as one: its running max equals np.fmax.accumulate of
+    the key's mids, in 7-row Arrow batches too."""
+    rng = np.random.default_rng(17)
+    parts = []
+    for sym, n in [("A", 90), ("B", 40)]:
+        ts, bid, ask = _series(rng, n)
+        parts.append(pd.DataFrame({"sym": sym, "ts": ts, "bid": np.where(rng.random(n) < 0.2, np.nan, bid),
+                                   "ask": ask}))
+    q = pd.concat(parts, ignore_index=True)
+    (tmp_path / "fds.py").write_text(_USER_FDS + USER_FD)
+    features = [FEATURES[0], {"name": "peak", "feature_definition": "running_max", "deps": ["mid"]},
+                *([DBL] if side else [])]
+    cfg = {**_config(_write(q, str(tmp_path / "q.parquet")), ["sym"], features,
+                     definition_paths=[str(tmp_path / "fds.py")]), "label_lookahead": None}
+    for batches in (contextlib.nullcontext(), _small_batches(spark)):
+        with batches:
+            got = Featurizer(spark).run(cfg).toPandas()
+        for sym, g in q.groupby("sym"):
+            mid = ((g["bid"] + g["ask"]) / 2).to_numpy()
+            have = got[got["sym"] == sym].sort_values("ts")
+            assert len(have) == len(g)
+            np.testing.assert_array_equal(have["peak-max"].to_numpy(dtype=float), np.fmax.accumulate(mid))
+            if side:
+                # a side's null reads its last non-null value
+                np.testing.assert_array_equal(have["dbl-doubled"].to_numpy(dtype=float),
+                                              pd.Series(2 * mid).ffill().to_numpy())
+
+
+def test_unknown_label_feature_is_rejected():
+    cfg = {**_config("unused.parquet", ["sym"]), "label_feature": "nope"}
+    with pytest.raises(ValueError, match=r"label_feature 'nope' is not a configured feature: \['mid', 'spr'"):
+        Featurizer(None).run(cfg)
+
+
+def test_null_ts_side_row_is_ignored(spark, tmp_path):
+    """A side's row with no event time drops out as a source event
+    does: it seeds no later row's value (the as-of composition sorted
+    it first, so its value filled the key's leading nulls)."""
+    q = pd.DataFrame({"venue": "X", "sym": "A", "ts": T0 + pd.to_timedelta([np.nan, 1, 2], unit="s"),
+                      "bid": [150.0, np.nan, 120.0], "ask": [151.0, 121.0, 121.0]})
+    path = _write(q, str(tmp_path / "null_ts.parquet"))
+    cfg = {**_side_config(tmp_path, path, "nan_double"), "label_lookahead": None}
+    got = Featurizer(spark).run(cfg).toPandas()
+    assert got["ts"].tolist() == q["ts"][1:].tolist()
+    assert got["nanb-bid"].isna().tolist() == [True, False] and got["nanb-bid"].iloc[1] == 120.0
