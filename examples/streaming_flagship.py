@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Product-level Kappa demo: train on the batch FeatureLabelSet, then
-serve the SAME feature graph online — feature stream -> exactly-once
-block sink -> combine_latest inference vector -> in-stream scoring —
-and report batch==stream agreement on the flagship columns.
+serve the SAME feature graph online as one streaming query — feature
+stream (one inference vector per event) -> in-stream scoring — and
+report batch==stream agreement on the flagship columns.
 
 Run: python examples/streaming_flagship.py [sf_dir]
 (reference topology: batch builder.py:302-330 + online

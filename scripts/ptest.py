@@ -45,12 +45,11 @@ WEIGHTS = {
     "test_curation.py": 30, "test_scd_store.py": 29,
     "test_quant.py": 29, "test_graph.py": 27, "test_pair_blocking.py": 26,
     "test_events_analytics.py": 26,
-    "test_skew_combine.py": 24,
     "test_tokenizer.py": 20, "test_quality_checks.py": 19,
     "test_selection.py": 19, "test_window_ops.py": 18,
     "test_orderbook_property.py": 18,
     "test_profiling.py": 16,
-    "test_streaming_flagship.py": 15, "test_rollup.py": 14,
+    "test_streaming_flagship.py": 35, "test_rollup.py": 14,
     "test_similarity_train.py": 14, "test_multimodal.py": 14,
     "test_library_reach.py": 2,
 }

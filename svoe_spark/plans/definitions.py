@@ -397,7 +397,9 @@ class Ewma(FeatureDefinition):
     a Spark window function — so batch runs the shared kernel
     `streaming.kernels.ewma` (pandas ewm(adjust=False)) over each key's
     Arrow batches and the stream per micro-batch, both carrying its
-    (value, null count) state."""
+    (value, null count) state. At alpha 1 it is the forward fill of its
+    input: a non-null value comes out as itself, a null as the last
+    non-null value before it (NULL before the first)."""
 
     name = "ewma"
     dep_slots = ("upstream",)

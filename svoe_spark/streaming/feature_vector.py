@@ -65,9 +65,12 @@ def feature_vector_stream(
     A plan whose kernels carry no state runs as a stateless
     ``mapInPandas`` of the same body: the engine rejects an
     applyInPandasWithState with an EMPTY state struct ('head of empty
-    list'), and row-local kernels need no event-time order."""
+    list'), and row-local kernels need no event-time order. Both forms
+    ignore events with a null event time."""
     source_cols = source_inputs(plan)
-    src, names = project_inputs(src.withColumn(on, to_micros(on)), [key, on], source_cols)
+    # an event with no event time is ignored, as the batch per-key stages ignore it
+    src = src.filter(F.col(on).isNotNull()).withColumn(on, to_micros(on))
+    src, names = project_inputs(src, [key, on], source_cols)
     value_cols = {f"{s.name}_{o if len(s.columns) > 1 else 'value'}": c
                   for s in plan for o, c in zip(s.defn.outputs, s.columns)}
 
@@ -94,8 +97,7 @@ def feature_vector_stream(
         # one frame, one sort: chunk arrival order is fetch order, not event time
         pdf = batch_frame(pdfs, [on], columns=[on, *names])
         out, new_state = advance(key_tuple[0], pdf, decode(state.get) if state.exists else None)
-        # Int64: a null ts packs as None, not as a float NaN
-        cols = {on: out[on].astype("Int64").array, **{c: out[c].to_numpy() for c in value_cols}}
+        cols = {c: out[c].to_numpy() for c in (on, *value_cols)}
         starts = range(0, len(out), cap)
         yield pd.DataFrame({key: [key_tuple[0]] * len(starts),
                             **{c: [x[i : i + cap].tolist() for i in starts] for c, x in cols.items()}})

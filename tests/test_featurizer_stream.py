@@ -543,9 +543,11 @@ def test_batch_frame_assembles_and_sorts_across_chunks():
     assert len(empty) == 0
 
 
-def test_run_stream_keeps_a_null_ts_event(spark, tmp_path):
-    """An event with a null ts streams without error and comes out with
-    a null ts; the other events keep theirs."""
+def test_run_stream_ignores_a_null_ts_event(spark, tmp_path):
+    """An event with a null ts is ignored by the stream, as by batch:
+    the other events stream, none reads the null event's value, and
+    stream == ``Featurizer.run``."""
+    import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -557,13 +559,23 @@ def test_run_stream_keeps_a_null_ts_event(spark, tmp_path):
         "bid": pa.array([1.0, 2.0, 3.0, 4.0]),
         "ask": pa.array([1.0, 2.0, 3.0, 4.0]),
     }), path / "part-000.parquet")
+    cfg = _quote_cfg(path, [
+        {"name": "mid", "feature_definition": "mid_price"},
+        {"name": "vol", "feature_definition": "volatility_stddev",
+         "deps": ["mid"], "params": {"window": "1m"}},
+    ])
     rows = run_available_to_memory(
-        Featurizer(spark).run_stream(_quote_cfg(path, _STATEFUL), _quote_stream(spark, path))
+        Featurizer(spark).run_stream(cfg, _quote_stream(spark, path))
     ).collect()
-    got = sorted((r["mid_value"], r["ts"]) for r in rows)
-    assert [m for m, _ in got] == [1.0, 2.0, 3.0, 4.0]
+    got = sorted((r["ts"], r["mid_value"], r["vol_value"]) for r in rows)
+    want = sorted((r["ts"], r["mid-mid_price"], r["vol-volatility"])
+                  for r in Featurizer(spark).run(cfg).collect())
     epoch = datetime.datetime(1970, 1, 1)
-    assert [t and (t - epoch).total_seconds() for _, t in got] == [0.0, 1.0, None, 3.0]
+    assert [((t - epoch).total_seconds(), m) for t, m, _ in got] == [(0.0, 1.0), (1.0, 2.0), (3.0, 4.0)]
+    assert [(t, m) for t, m, _ in got] == [(t, m) for t, m, _ in want]
+    assert got[0][2] is None or math.isnan(got[0][2])
+    assert [v for *_, v in got[1:]] == pytest.approx([v for *_, v in want[1:]], rel=1e-12)
+    assert got[2][2] == pytest.approx(np.std([1.0, 2.0, 4.0], ddof=1), rel=1e-12)
 
 
 def test_state_codec_round_trips_every_state_field_type():

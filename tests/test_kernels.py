@@ -216,7 +216,8 @@ def test_empty_batch_keeps_state():
 
 def test_nulls_follow_batch():
     """stddev skips a null as stddev_samp does; ewma outputs the carried
-    value at a null and carries through it, as pandas ewm does."""
+    value at a null and carries through it, as pandas ewm does, so at
+    alpha 1 it is the forward fill."""
     ts = np.arange(5, dtype=np.int64)
     v = np.array([1.0, np.nan, 3.0, np.nan, np.nan])
     sd, state = trailing_stddev(ts, v, 10)
@@ -229,6 +230,17 @@ def test_nulls_follow_batch():
     nxt, _ = ewma(np.array([5.0]), 0.5, state)
     full = pd.Series([*v, 5.0]).ewm(alpha=0.5, adjust=False).mean().to_numpy()
     assert nxt[0] == full[-1]
+    # alpha 1 is the forward fill, in one pass and carried across batches
+    rng = np.random.default_rng(3)
+    v = np.where(rng.random(200) < 0.6, np.nan, rng.normal(100, 5, 200))
+    v[:4] = np.nan
+    want = pd.Series(v).ffill().to_numpy()
+    np.testing.assert_array_equal(ewma(v, 1.0)[0], want)
+    state, parts = None, []
+    for part in np.array_split(v, 7):
+        out, state = ewma(part, 1.0, state)
+        parts.append(out)
+    np.testing.assert_array_equal(np.concatenate(parts), want)
 
 
 def test_constant_window_is_exact_zero():
