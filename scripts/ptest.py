@@ -51,7 +51,7 @@ WEIGHTS = {
     "test_profiling.py": 16,
     "test_streaming_flagship.py": 35, "test_rollup.py": 14,
     "test_similarity_train.py": 14, "test_multimodal.py": 14,
-    "test_library_reach.py": 2,
+    "test_library_reach.py": 2, "test_hot_key_gate.py": 17,
 }
 DEFAULT_WEIGHT = 12
 

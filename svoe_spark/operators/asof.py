@@ -18,25 +18,26 @@ Two physical strategies, same semantics:
   bucket, seeding each bucket with the latest prior right row. Use when
   a single key's history exceeds one task (hot instruments at 100 TB):
   parallelism becomes (keys x buckets) instead of (keys).
-* ``time_bucket="auto"`` (the default): a cheap per-key profile (one
-  narrow count/span aggregation) picks between the two — below
-  AUTO_TARGET_ROWS_PER_TASK rows on the hottest key the single-window
-  plan runs; above it, a bucket width is derived so the hottest key
-  splits into ~target-sized pieces. The plan a naive user gets is
-  therefore the 100x-safe one without tuning. The profile costs one
-  eager aggregation job at call time; pass ``time_bucket=None`` to
-  force the lazy single-window plan.
+* ``time_bucket="auto"`` (the default): the hot-key gate
+  ``operators.util.hot_key_bucket``, shared with
+  ``orderbook.reconstruct_book_auto``, picks between the two — at most
+  AUTO_TARGET_ROWS_PER_TASK rows on the hottest key runs the
+  single-window plan; above it, a bucket width splits the hottest key
+  into ~target-sized pieces. The plan a naive user gets is therefore
+  the 100x-safe one without tuning. The optimizer's row count or size
+  estimate settles small inputs with no job; otherwise the gate runs
+  one eager per-key count/span aggregation at call time. A lineage
+  with a Python stage takes the single-window plan unprofiled. Pass
+  ``time_bucket=None`` to force the lazy single-window plan.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from svoe_spark.functions.time import duration_to_seconds, epoch_seconds
-from svoe_spark.operators.util import plan_row_count, plan_size_bytes
+from svoe_spark.operators.util import hot_key_bucket
 
 _SIDE = "__asof_side"
 _TS = "__asof_ts"
@@ -46,67 +47,6 @@ _BUCKET = "__asof_bucket"
 #: time bucket. One window-sort task of ~2M narrow rows is seconds of
 #: work; far below executor memory at any sane row width.
 AUTO_TARGET_ROWS_PER_TASK = 2_000_000
-
-
-def _auto_bucket(
-    unioned: DataFrame, by: list[str], target: int
-) -> float | None:
-    """Per-key profile -> None (single-window plan) or bucket seconds.
-
-    One narrow aggregation over (by, _TS): max per-key row count and
-    the hottest key's time span. Bucket width splits that key into
-    ~``target``-row pieces."""
-    per_key = unioned.groupBy(*by).agg(
-        F.count(F.lit(1)).alias("__n"),
-        (F.max(_TS) - F.min(_TS)).alias("__span"),
-    )
-    row = per_key.agg(
-        F.max("__n").alias("n"), F.max_by("__span", "__n").alias("span")
-    ).first()
-    if row is None or row["n"] is None or row["n"] <= target:
-        return None
-    pieces = math.ceil(row["n"] / target)
-    return max(1.0, float(row["span"] or 0.0) / pieces)
-
-
-def _prep(df: DataFrame, on: str, by: list[str]) -> DataFrame:
-    return df.withColumn(_TS, epoch_seconds(on))
-
-
-#: Analyzed-plan node names that mark a Python evaluation stage —
-#: column pruning cannot reach through these, so an eager profile
-#: aggregation would re-execute the whole Python subtree.
-_PY_STAGES = (
-    "FlatMapGroupsInPandas",
-    "FlatMapGroupsInArrow",
-    "MapInPandas",
-    "FlatMapCoGroupsInPandas",
-    "ArrowEvalPython",
-    "BatchEvalPython",
-)
-
-
-def _has_python_stage(df: DataFrame) -> bool:
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-    except Exception:  # pragma: no cover - defensive: profile anyway
-        return False
-    return any(s in plan for s in _PY_STAGES)
-
-
-#: Below this optimizer size estimate for the unioned input, the auto
-#: dispatch takes the single-window plan WITHOUT running the per-key
-#: profile job: sized as AUTO_TARGET_ROWS_PER_TASK x 20 B — the
-#: conservative FLOOR of Catalyst's per-row width estimate for these
-#: schemas (measured ~26 B/row; arrays/strings are under- not
-#: over-estimated) — so even a floor-width input admitted by the gate
-#: cannot put more rows on one key than the per-task budget. The
-#: profile is an EAGER aggregation at plan-build time — ~1-1.5 s of
-#: fixed latency per asof call at bench scale — while the dispatch it
-#: feeds is perf-only (both plans are exact), so a size-gated skip is
-#: always safe for correctness; at production scale the estimate
-#: exceeds the gate and the profile runs unchanged.
-AUTO_PROFILE_MIN_BYTES = AUTO_TARGET_ROWS_PER_TASK * 20
 
 
 def asof_join(
@@ -186,6 +126,11 @@ def asof_join_multi(
     staleness test uses the tag's latest ROW — with sparse nulls
     inside a feed, a value older than tolerance can survive if a
     fresher row of the same tag exists.
+
+    ``time_bucket``: None runs the single-window plan, a duration the
+    keys x time-buckets plan, and ``"auto"`` lets
+    ``operators.util.hot_key_bucket`` choose over the unioned sides at
+    ``AUTO_TARGET_ROWS_PER_TASK`` rows per key (module docstring).
     """
     if isinstance(by, str):
         by = [by]
@@ -266,30 +211,7 @@ def asof_join_multi(
     )
 
     if time_bucket == "auto":
-        # the profile is an eager aggregation over the union: cheap for
-        # scan-rooted inputs (column pruning reduces it to (by, ts)),
-        # but a lineage containing a Python stage (applyInPandas /
-        # mapInPandas feature graphs) cannot be pruned through — the
-        # profile would execute the whole Python subtree a second time.
-        # For those, skip profiling and take the lazy single-window
-        # plan; callers with genuinely hot keys behind Python stages
-        # pass an explicit time_bucket.
-        if _has_python_stage(unioned):
-            time_bucket = None
-        else:
-            rc = plan_row_count(unioned)
-            sz = plan_size_bytes(unioned)
-            if rc is not None and rc <= AUTO_TARGET_ROWS_PER_TASK:
-                # exact row count (cached/CBO input) under the budget:
-                # the hottest key cannot exceed it — skip the profile
-                time_bucket = None
-            elif sz is not None and sz <= AUTO_PROFILE_MIN_BYTES:
-                # provably-small input: skip the eager profile job
-                time_bucket = None
-            else:
-                time_bucket = _auto_bucket(
-                    unioned, by, AUTO_TARGET_ROWS_PER_TASK
-                )
+        time_bucket = hot_key_bucket(unioned, by, F.col(_TS), AUTO_TARGET_ROWS_PER_TASK)
 
     fill_cols = list(val_cols) + list(mts.values())
     if time_bucket is None:

@@ -43,7 +43,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from svoe_spark.functions.time import duration_to_seconds, from_micros, micros_ns, to_micros
+from svoe_spark.functions.time import duration_to_seconds, epoch_seconds, from_micros, micros_ns, to_micros
+from svoe_spark.operators.util import hot_key_bucket
 
 LEVEL = StructType(
     [StructField("price", DoubleType()), StructField("size", DoubleType())]
@@ -241,42 +242,30 @@ def _replay(
     return _acc_frame(acc, "__key")
 
 
-def _default_bundles(df: DataFrame) -> int:
-    """Session parallelism as the default bundle count, falling back to
-    the shuffle-partitions conf when the session has no sparkContext
-    (Spark Connect — same guard pattern as asof._has_python_stage)."""
-    try:
-        return df.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # noqa: BLE001 — Connect sessions lack sparkContext
-        try:
-            return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:  # noqa: BLE001
-            return 32
-
-
 def reconstruct_book(
     df: DataFrame,
     key: str = "symbol",
     depth: int = 20,
     emit_every: str | float | None = None,
     seq_col: str | None = None,
-    bundles: int | None = None,
 ) -> DataFrame:
-    """Batch reconstruction: df(key, ts, update_type, orders:array<
-    struct<side,price,size>>) -> depth-truncated snapshots per event
-    (or per emit_every bucket). ``seq_col``: optional monotone column
-    breaking equal-timestamp ties deterministically.
+    """Batch reconstruction, one sequential replay per key: df(key, ts,
+    update_type, orders:array<struct<side,price,size>>) ->
+    depth-truncated snapshots per event (or per emit_every bucket).
+    ``seq_col``: optional monotone column breaking equal-timestamp ties
+    deterministically. A hot key is one task; ``reconstruct_book_auto``
+    switches to the time-parallel form when it is.
 
-    Keys are hash-bundled onto ``bundles`` tasks (default: the
-    session's parallelism) and replayed per key inside each task: with
-    thousands of cold instruments, one-Arrow-group-per-key spends more
-    time on per-group pandas/Arrow plumbing than on the replay itself
-    (profiled ~3x), while bundling keeps task count = cores and builds
-    one output frame per task. Per-key order and emissions are
-    identical — the bundle is only a scheduling unit."""
+    Keys are hash-bundled onto the session's ``defaultParallelism``
+    tasks and replayed per key inside each task: with thousands of cold
+    instruments, one-Arrow-group-per-key spends more time on per-group
+    pandas/Arrow plumbing than on the replay itself (profiled ~3x),
+    while bundling keeps task count = cores and builds one output frame
+    per task. Per-key order and emissions are identical — the bundle is
+    only a scheduling unit."""
     every = duration_to_seconds(emit_every) if emit_every is not None else None
     schema = snapshot_schema(key)
-    nb = bundles or _default_bundles(df)
+    nb = df.sparkSession.sparkContext.defaultParallelism
 
     # no type hints on the applyInPandas functions in this module: partial
     # ones make PySpark warn it cannot infer the eval type
@@ -305,64 +294,28 @@ def reconstruct_book_auto(
     depth: int = 20,
     emit_every: str | float | None = None,
     seq_col: str | None = None,
-    max_rows_per_task: int = AUTO_MAX_ROWS_PER_TASK,
 ) -> DataFrame:
     """Reconstruction with automatic physical-plan selection.
 
-    A cheap per-key profile (one narrow count/span aggregation over the
-    update stream) dispatches: if the hottest instrument has at most
-    ``max_rows_per_task`` updates, the per-key sequential replay runs
-    (one task per instrument — the many-instrument regime); above it,
-    the time-parallel bucketed replay runs with a bucket width sized so
-    the hottest key splits into ~task-sized pieces (keys x buckets
-    parallelism — the hot-instrument regime). This makes the plan a
-    naive caller gets the 100x-safe one.
+    The hot-key gate ``operators.util.hot_key_bucket``, shared with
+    ``asof_join_multi(time_bucket="auto")``, dispatches: if the hottest
+    instrument has at most ``AUTO_MAX_ROWS_PER_TASK`` updates, the
+    per-key sequential ``reconstruct_book`` runs (the many-instrument
+    regime); above it, ``reconstruct_book_bucketed`` runs with a bucket
+    width sized so the hottest key splits into ~task-sized pieces (keys
+    x buckets parallelism — the hot-instrument regime). This makes the
+    plan a naive caller gets the 100x-safe one. The optimizer's row
+    count or size estimate settles small inputs with no job; otherwise
+    the gate runs one eager per-key count/span aggregation. A lineage
+    with a Python stage replays per key unprofiled.
 
     Caveat: the bucketed path requires the positive-ADD-size invariant
     (true of any real exchange feed); it raises a ValueError naming
     ``reconstruct_book`` as the fallback if violated."""
-    import math
-
-    from svoe_spark.operators.util import plan_row_count, plan_size_bytes
-
-    # round 11, the asof-gate precedent: the profile is an EAGER
-    # aggregation at plan-build time feeding a perf-only dispatch
-    # (both plans are exact). Prefer the optimizer's ROW-COUNT
-    # estimate when defined (CBO) — the exact budget quantity; else a
-    # byte gate sized to THIS op's row budget: max_rows_per_task x
-    # 20 B, the conservative floor of Catalyst's per-row width for
-    # this schema (the measured estimate for the parse relations is
-    # ~26 B/row — arrays are heavily under-estimated), so even a
-    # floor-width input admitted by the gate cannot exceed the
-    # per-task budget (asof's 64 MB gate, sized for a 2M-row window
-    # budget, would admit ~10x too many rows — review r11). Only when
-    # the caller kept the default-or-larger per-task target: an
-    # explicitly SMALL max_rows_per_task is a deliberate request to
-    # bucket small data (tests, pathological feeds) — honor it.
-    if max_rows_per_task >= AUTO_MAX_ROWS_PER_TASK:
-        rc = plan_row_count(df)
-        sz = plan_size_bytes(df)
-        if (rc is not None and rc <= max_rows_per_task) or (
-            rc is None and sz is not None and sz <= max_rows_per_task * 20
-        ):
-            return reconstruct_book(df, key, depth, emit_every, seq_col)
-
-    per_key = df.groupBy(key).agg(
-        F.count(F.lit(1)).alias("__n"),
-        (F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts"))).alias(
-            "__span"
-        ),
-    )
-    row = per_key.agg(
-        F.max("__n").alias("n"), F.max_by("__span", "__n").alias("span")
-    ).first()
-    if row is None or row["n"] is None or row["n"] <= max_rows_per_task:
+    bucket_s = hot_key_bucket(df, [key], epoch_seconds("ts"), AUTO_MAX_ROWS_PER_TASK)
+    if bucket_s is None:
         return reconstruct_book(df, key, depth, emit_every, seq_col)
-    pieces = math.ceil(row["n"] / max_rows_per_task)
-    bucket_s = max(1.0, float(row["span"] or 0.0) / pieces)
-    return reconstruct_book_bucketed(
-        df, key, depth, emit_every, bucket=bucket_s, seq_col=seq_col
-    )
+    return reconstruct_book_bucketed(df, key, depth, emit_every, bucket=bucket_s, seq_col=seq_col)
 
 
 # --------------------------------------------------------------------------

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+
+from pyspark.sql import Column, DataFrame
 
 
 #: (id(input df), defaultParallelism) -> (input df, spread output). The
@@ -38,8 +40,8 @@ def spread(df: DataFrame) -> DataFrame:
     if df.isStreaming:
         return df
     try:
-        # no sparkContext/rdd under Spark Connect — same guard as
-        # orderbook._default_bundles; pass through rather than probe
+        # no sparkContext/rdd under Spark Connect: pass through rather
+        # than probe
         sc = df.sparkSession.sparkContext
     except Exception:  # noqa: BLE001
         return df
@@ -88,9 +90,67 @@ def plan_row_count(df: DataFrame) -> int | None:
     wide rows and compression cannot skew it as they skew sizeInBytes."""
     try:
         rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
-        return int(rc.get().longValue()) if rc.isDefined() else None
+        # py4j hands the BigInt over as a Python int
+        return int(rc.get()) if rc.isDefined() else None
     except Exception:  # noqa: BLE001 — estimate is advisory
         return None
+
+
+#: Analyzed-plan node names that mark a Python evaluation stage —
+#: column pruning cannot reach through these, so an eager profile
+#: aggregation would re-execute the whole Python subtree.
+_PY_STAGES = (
+    "FlatMapGroupsInPandas",
+    "FlatMapGroupsInArrow",
+    "MapInPandas",
+    "FlatMapCoGroupsInPandas",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+)
+
+
+def hot_key_bucket(df: DataFrame, by: list[str], seconds: Column, target_rows: int) -> float | None:
+    """The hot-key gate of the keys x time-buckets plans
+    (``asof_join_multi(time_bucket="auto")``, ``reconstruct_book_auto``):
+    None when no key of ``df`` holds more than ``target_rows`` rows,
+    else the bucket width in seconds that splits the hottest key into
+    ~``target_rows``-row pieces. Both plans of each op are exact, so the
+    gate picks a plan, never a result. In order:
+
+    1. a lineage with a Python stage gives None and runs no job — the
+       profile would execute the Python subtree a second time; callers
+       with hot keys behind one pass an explicit bucket;
+    2. an exact optimizer row count (a materialized cache, CBO stats)
+       gives None iff it is <= ``target_rows``: the hottest key holds at
+       most all rows;
+    3. without one, a size estimate <= ``target_rows`` x 20 B gives None
+       — 20 B is the floor of Catalyst's per-row width for these
+       schemas (measured ~26 B; arrays and strings are under-, not
+       over-estimated), so an admitted input cannot exceed the budget;
+    4. otherwise one eager aggregation (column pruning reduces it to
+       ``by`` and ``seconds``) reads the hottest key's row count n and
+       the span of ``seconds``: None if n <= ``target_rows``, else
+       max(1, span / ceil(n / ``target_rows``))."""
+    from pyspark.sql import functions as F
+
+    if any(s in df._jdf.queryExecution().analyzed().toString() for s in _PY_STAGES):
+        return None
+    rc = plan_row_count(df)
+    if rc is not None and rc <= target_rows:
+        return None
+    if rc is None:
+        sz = plan_size_bytes(df)
+        if sz is not None and sz <= target_rows * 20:
+            return None
+    row = (
+        df.groupBy(*by)
+        .agg(F.count(F.lit(1)).alias("__n"), (F.max(seconds) - F.min(seconds)).alias("__span"))
+        .agg(F.max("__n").alias("n"), F.max_by("__span", "__n").alias("span"))
+        .first()
+    )
+    if row is None or row["n"] is None or row["n"] <= target_rows:
+        return None
+    return max(1.0, float(row["span"] or 0.0) / math.ceil(row["n"] / target_rows))
 
 
 def fmt_double_literal(x) -> str:
@@ -100,8 +160,6 @@ def fmt_double_literal(x) -> str:
     bit-identical to F.lit(x); NaN/Infinity render as explicit CASTs
     (bare literals do not parse). Shared by lit_double_array and
     similarity._lit_nested so the rendering can never drift."""
-    import math
-
     v = float(x)
     if math.isnan(v):
         return "CAST('NaN' AS DOUBLE)"

@@ -124,10 +124,9 @@ def test_auto_dispatch_switches_to_bucketed(spark, monkeypatch):
         "k string, ts timestamp, rv double",
     )
 
+    # the gate's size floor follows the target, so 800 rows over a
+    # 100-row target run the profile (and dispatch)
     monkeypatch.setattr(asof_mod, "AUTO_TARGET_ROWS_PER_TASK", 100)
-    # the round-11 size-estimate gate skips the profile job outright on
-    # provably-small inputs; zero it so the profile (and dispatch) runs
-    monkeypatch.setattr(asof_mod, "AUTO_PROFILE_MIN_BYTES", 0)
     auto = asof_join(left, right, on="ts", by="k", right_cols=["rv"])
     # the bucketed plan is visibly different: it sorts within the
     # synthetic coarse-time-bucket column

@@ -232,11 +232,11 @@ def test_full_event_zero_size_counts_inconsistency():
     assert b2.inconsistencies == 0
 
 
-def test_auto_dispatch_equals_sequential(spark, sf_small):
+def test_auto_dispatch_equals_sequential(spark, sf_small, monkeypatch):
     """reconstruct_book_auto must produce identical emissions whichever
     physical plan its per-key profile selects; a tiny threshold forces
     the bucketed branch, the default threshold the sequential one."""
-    from svoe_spark.operators.orderbook import reconstruct_book_auto
+    from svoe_spark.operators import orderbook
 
     events = load_table(spark, "events", sf_small)
     updates = synthetic_l2_updates(events, passthrough=("event_id",))
@@ -244,13 +244,12 @@ def test_auto_dispatch_equals_sequential(spark, sf_small):
     seq = _emission_map(reconstruct_book(updates, depth=10, seq_col="event_id"))
     # default threshold: hottest key is tiny -> sequential branch
     auto_seq = _emission_map(
-        reconstruct_book_auto(updates, depth=10, seq_col="event_id")
+        orderbook.reconstruct_book_auto(updates, depth=10, seq_col="event_id")
     )
     # threshold of 1 row: every key is "hot" -> bucketed branch
+    monkeypatch.setattr(orderbook, "AUTO_MAX_ROWS_PER_TASK", 1)
     auto_par = _emission_map(
-        reconstruct_book_auto(
-            updates, depth=10, seq_col="event_id", max_rows_per_task=1
-        )
+        orderbook.reconstruct_book_auto(updates, depth=10, seq_col="event_id")
     )
     assert seq == auto_seq == auto_par
     assert len(seq) > 0
