@@ -34,8 +34,8 @@ WEIGHTS = {
     "test_oracle_parity.py": 265, "test_pagerank.py": 190,
     "test_asof_property.py": 101,
     "test_orderbook.py": 86, "test_spans_property.py": 73, "test_pq.py": 69,
-    "test_dedup_index.py": 67, "test_featurizer_fused.py": 65,
-    "test_featurizer_stream.py": 58,
+    "test_dedup_index.py": 67, "test_featurizer_fused.py": 70,
+    "test_featurizer_stream.py": 73,
     "test_cleaning_property.py": 53, "test_streaming_asof.py": 52,
     "test_plan_quality.py": 46,
     "test_stream_api.py": 41, "test_point_in_time.py": 40,

@@ -56,9 +56,9 @@ def epoch_seconds(ts: Column | str) -> Column:
 def to_micros(ts: str) -> Column:
     """Event time as int64 µs since the epoch (UTC): the one form in
     which it crosses into a per-key Python stage, which hands its
-    kernels these µs as ns (``micros_ns`` in a pandas stage) and returns
-    the µs. An instant, so the session time zone never shifts or
-    reorders it; a NULL stays NULL."""
+    kernels these µs as ns (µs × 1000; ``micros_ns`` in the order book's
+    pandas stages) and returns the µs. An instant, so the session time
+    zone never shifts or reorders it; a NULL stays NULL."""
     return F.unix_micros(F.col(ts).cast("timestamp"))
 
 
@@ -69,9 +69,9 @@ def from_micros(us: str) -> Column:
 
 
 def micros_ns(us: pd.Series) -> np.ndarray:
-    """A Python stage's ``to_micros`` column (float64 with NaN when it
-    holds nulls) as the int64 ns of the kernels; a null reads as
-    INT64_MIN, NaT's value."""
+    """An order-book pandas stage's ``to_micros`` column (float64 with
+    NaN when it holds nulls) as int64 ns; a null reads as INT64_MIN,
+    NaT's value."""
     ns = us.to_numpy(dtype=np.int64, na_value=0) * 1000
     ns[us.isna().to_numpy()] = np.iinfo(np.int64).min
     return ns

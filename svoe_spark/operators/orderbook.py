@@ -696,15 +696,9 @@ def reconstruct_book_stream(
             book._ask_px = sorted(book.asks)
             book.started = bool(started)
             book.inconsistencies = inc
-        # whole micro-batch as one frame: Arrow chunks arrive in fetch
-        # order, and replaying them chunk-by-chunk would apply updates
-        # out of event-time order (_replay sorts WITHIN the frame)
-        from svoe_spark.streaming.chunks import batch_frame
-
-        out = _replay(
-            batch_frame(pdfs, columns=["ts", "update_type", "orders"]),
-            book, depth, every, key_tuple[0],
-        )
+        # whole micro-batch as one frame, which _replay sorts: Arrow chunks arrive
+        # in fetch order. A NoTimeout key never fires without data, so one chunk is there.
+        out = _replay(pd.concat(list(pdfs), ignore_index=True), book, depth, every, key_tuple[0])
         yield out.rename(columns={"__key": key})
         state.update(
             (

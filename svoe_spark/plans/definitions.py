@@ -26,15 +26,15 @@ double (``project_inputs``).
 State half: ``state_fields`` declares that state as (name, Spark type)
 pairs; ``state`` is a tuple of their values, None before the first
 batch. Any split of a key's events into batches must give the outputs
-of one pass. A kernel with no state (``()``) must be row-local; one
-with ``state_fields = None`` runs in batch only (no built-in does).
+of one pass. Every kernel declares it (``kernel_inputs`` checks); one
+with no state (``()``) must be row-local.
 
-``run_plan`` is the one body of both paths: ``Featurizer.run`` runs the
-kernel plan over each key's ts-ordered Arrow batches with carried state
-(``per_key_map``), ``Featurizer.run_stream`` per micro-batch carrying it
-(streaming.feature_vector). The frames of kernel-less definitions (user
-ones that override ``transform``) enter that batch pass as tagged sides
-whose columns pass through in their own types; they do not stream.
+``run_plan`` is the one body of both paths, fed ordered numpy batches
+with carried state: ``Featurizer.run``'s per key's ts-ordered Arrow
+batches (``per_key_map``), ``Featurizer.run_stream``'s per key's sorted
+micro-batch (streaming.feature_vector). The frames of kernel-less
+definitions (user ones that override ``transform``, e.g. over a key's
+whole series) enter that batch pass as tagged sides; they do not stream.
 """
 
 from __future__ import annotations
@@ -73,7 +73,7 @@ class FeatureDefinition:
     dep_slots: tuple[str, ...] = ("source",)
     #: the value columns of a per-event kernel, one array each; () = no kernel
     outputs: tuple[str, ...] = ()
-    #: the kernel's carried state, (name, Spark type) pairs; None = batch only
+    #: the kernel's carried state, (name, Spark type) pairs; a kernel must declare it
     state_fields: tuple | None = None
 
     @classmethod
@@ -96,7 +96,7 @@ class FeatureDefinition:
 
         def per_key(batches):
             state = None
-            for ts, up in batches if cls.state_fields is not None else whole(batches):
+            for ts, up in batches:
                 outs, state = cls.kernel(ts, up, params, state)
                 yield ts, dict(zip(cls.outputs, outs))
 
@@ -194,18 +194,14 @@ def concat(arrays: list):
     return np.concatenate(arrays) if isinstance(arrays[0], np.ndarray) else pa.concat_arrays(arrays)
 
 
-def whole(batches) -> list:
-    """A key's (ts, up) batches as one: how a plan with a batch-only
-    kernel (``state_fields = None``) reads them."""
-    ts, up = zip(*batches)
-    return [(np.concatenate(ts), [concat(c) for c in zip(*up)])]
-
-
 def kernel_inputs(name: str, defn, columns: list[str], params: dict) -> list[str]:
-    """``defn.inputs``, checked: the one column-resolution rule of the
-    batch and stream paths. Raises a ValueError naming feature ``name``
-    if it reads a column its upstream lacks (a SQL expression input
-    reads its backquoted columns)."""
+    """``defn.inputs``, checked: the one input rule of the batch and
+    stream paths. Raises a ValueError naming feature ``name`` if its
+    kernel declares no ``state_fields`` or reads a column its upstream
+    lacks (a SQL expression input reads its backquoted columns)."""
+    if defn.state_fields is None:
+        raise ValueError(f"feature {name!r} has a kernel but declares no state_fields "
+                         "(a row-local kernel declares ())")
     inputs = defn.inputs(columns, params)
     if not {c for i in inputs for c in re.findall(r"`([^`]+)`", str(i)) or [i]} <= set(columns):
         raise ValueError(f"feature {name!r} reads {inputs}, not among its upstream's value columns {columns}")
@@ -242,7 +238,7 @@ def run_plan(plan: list[KernelStep], ts, vals: dict, state=None) -> list:
     Returns the new state, in the same layout."""
     new_state = []
     for s in plan:
-        n = len(s.defn.state_fields or ())
+        n = len(s.defn.state_fields)
         carried = state and state[len(new_state) : len(new_state) + n]
         outs, st = s.defn.kernel(ts, [vals[c] for c in s.inputs], s.params, carried)
         vals.update(zip(s.columns, outs))

@@ -45,7 +45,6 @@ from svoe_spark.plans.definitions import (
     per_key_map,
     run_plan,
     source_inputs,
-    whole,
 )
 from svoe_spark.plans.feature_tree import Feature
 from svoe_spark.sources.synthetic import sine_mid_price
@@ -167,7 +166,6 @@ def _fused(config: FeaturizerConfig, plan: list[KernelStep], sides: dict, label_
     held_cols = [getattr(c, "name", c) for c in outputs[len(label):]]
     tag = list(sides).index(label_name) + 1 if label_name in sides else 0
     ahead = duration_ns(config.label_lookahead) if labels else 0
-    streams = all(s.defn.state_fields is not None for s in plan)
 
     def resolve(ts, tags, held, n):
         """The outputs of the label side's rows among the first ``n`` held:
@@ -178,7 +176,7 @@ def _fused(config: FeaturizerConfig, plan: list[KernelStep], sides: dict, label_
 
     def fused_pass(batches):
         state, last, held, ts, tags = None, None, {}, np.empty(0, np.int64), np.empty(0)
-        for bts, up in batches if streams else whole(batches):
+        for bts, up in batches:
             vals = dict(zip(names, up))
             if not sides:
                 state, last = run_plan(plan, bts, vals, state), bts[-1]
@@ -312,8 +310,9 @@ class Featurizer:
         event dropped. A row's features read no event after it: ``ohlcv``
         gives the last bar closed by then. Cost: O(rows) per key, however
         dense the ticks. Memory: one Arrow batch, the kernels' state and
-        the rows held for the trailing peer group and the lookahead (a
-        plan with a batch-only kernel reads a key's batches as one)."""
+        the rows held for the trailing peer group and the lookahead. A
+        kernel that declares no ``state_fields`` raises a ValueError
+        naming its feature (``kernel_inputs``)."""
         config = config if isinstance(config, FeaturizerConfig) else FeaturizerConfig.load(config)
         _load_definitions(config)
         keys = config.keys
@@ -358,10 +357,10 @@ class Featurizer:
         with several outputs (``ohlcv``) gives one ``{name}_{output}``
         column each.
 
-        Every feature must be in the plan and declare stream state
-        (``state_fields``), as every built-in does; a kernel-less or
-        batch-only (``state_fields = None``) user definition raises. A
-        config must have exactly one key column."""
+        Every feature must be in the plan: a kernel-less user definition
+        raises, as does a kernel that declares no ``state_fields``
+        (``kernel_inputs``, the input rule ``run`` shares). A config must
+        have exactly one key column."""
         from svoe_spark.streaming.feature_vector import feature_vector_stream
 
         config = config if isinstance(config, FeaturizerConfig) else FeaturizerConfig.load(config)
@@ -370,11 +369,11 @@ class Featurizer:
             raise ValueError("run_stream needs exactly one key column")
         (key,) = config.keys
         plan = kernel_plan(config, _value_cols(source_stream, config.keys))
-        streams = {s.name for s in plan if s.defn.state_fields is not None}
+        planned = {s.name for s in plan}
         for fc in config.features:
-            if fc.name not in streams:
+            if fc.name not in planned:
                 raise ValueError(f"feature {fc.feature_definition!r} has no fused streaming form: "
-                                 "it needs a kernel that declares its state_fields")
+                                 "it needs a per-event kernel")
         return feature_vector_stream(source_stream, plan, key=key, on="ts")
 
     def get_materialized_data(self, config, pick_every_nth_row: int = 1) -> DataFrame:

@@ -68,7 +68,7 @@ from pyspark.sql.types import (
 )
 
 from svoe_spark.functions.time import duration_to_seconds, from_micros, to_micros
-from svoe_spark.streaming.chunks import batch_frame
+from svoe_spark.streaming.chunks import batch_arrays
 
 
 def _norm_cols(
@@ -315,16 +315,12 @@ def asof_nearest_stream(
             out_t.append(t)
             out_v.append(val if tol_us is None or dist <= tol_us else None)
 
-        pdf = batch_frame(
-            pdfs, ["__us", "__side"], columns=["__us", "__side", "__v"]
-        )
         max_us = None
-        vcol = pdf["__v"]
-        for i, (us, side) in enumerate(zip(pdf["__us"], pdf["__side"])):
+        for us, side, v in zip(*batch_arrays(pdfs, ["__us", "__side", "__v"], 2)):
             us = int(us)
             max_us = us
             if side == 0:
-                v = _v_tuple(vcol.iloc[i], enc)
+                v = _v_tuple(v, enc)
                 keep_t, keep_bt, keep_bv = [], [], []
                 for t, bt, bv in zip(p_t, p_bt, p_bv):
                     if t <= us:

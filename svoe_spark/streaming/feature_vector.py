@@ -10,18 +10,19 @@ featurizer_stream_worker_actor.py:29-61, feature_stream_graph.py:114-136).
 
 The graph is a kernel plan (plans.definitions: ``KernelStep``s, built by
 ``Featurizer.run``'s ``kernel_plan``), and each key's micro-batch runs
-through it as whole arrays with ``run_plan`` — the same body as the
-batch FeatureLabelSet pass. The group state is the steps' carried state
-fields (``state_fields``) in plan order, named ``{field}_{feature}``:
-per windowed definition (``volatility_stddev``, ``diff``, ``tvi``) its
-``kernels.window_buffer`` of (ts ns, values), per ``ewma`` its (value,
-null count), per ``ohlcv`` its open bucket's partial aggregates and last
-closed bar; row-local kernels carry none. A key's micro-batch crosses
-the Python/JVM boundary once, not per event: array state as
-little-endian bytes (``state_codec``; checkpoints written before do not
-resume), output as packed rows of arrays the JVM expands with
-``inline``. Event time crosses both ways as int64 UTC µs
-(``functions.time.to_micros``), never as session-zone wall time.
+through it with ``run_plan`` as ts-ordered numpy columns
+(``chunks.batch_arrays``), as in the batch FeatureLabelSet pass. The
+group state is the steps' carried state fields (``state_fields``) in
+plan order, named ``{field}_{feature}``: per windowed definition
+(``volatility_stddev``, ``diff``, ``tvi``) its ``kernels.window_buffer``
+of (ts ns, values), per ``ewma`` its (value, null count), per ``ohlcv``
+its open bucket's partial aggregates and last closed bar; row-local
+kernels carry none. A key's micro-batch crosses the Python/JVM boundary
+once, not per event: array state as little-endian bytes
+(``state_codec``; checkpoints written before do not resume), output as
+packed rows of array slices the JVM expands with ``inline``. Event time
+crosses both ways as int64 UTC µs (``functions.time.to_micros``), never
+as session-zone wall time.
 """
 
 from __future__ import annotations
@@ -33,9 +34,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import ArrayType, BinaryType, DoubleType, LongType, StructField, StructType
 
-from svoe_spark.functions.time import from_micros, micros_ns, to_micros
+from svoe_spark.functions.time import from_micros, to_micros
 from svoe_spark.plans.definitions import KernelStep, project_inputs, run_plan, source_inputs
-from svoe_spark.streaming.chunks import batch_frame
+from svoe_spark.streaming.chunks import batch_arrays
 
 #: events per packed output row: a hot key's rows stay far below the JVM's 2 GB limit
 PACKED_ROW_EVENTS = 8192
@@ -57,16 +58,16 @@ def feature_vector_stream(
     key: str = "symbol",
     on: str = "ts",
 ) -> DataFrame:
-    """src: streaming df (key, ts, source cols); plan: kernel steps whose
-    definitions all declare ``state_fields``. Output: one row per source
-    event, (key, ts, then per step ``{name}_value`` for one output, else
-    ``{name}_{output}`` each) as doubles.
+    """src: streaming df (key, ts, source cols); plan: kernel steps
+    (``run_plan``'s). Output: one row per source event, (key, ts, then
+    per step ``{name}_value`` for one output, else ``{name}_{output}``
+    each) as doubles.
 
     A plan whose kernels carry no state runs as a stateless
-    ``mapInPandas`` of the same body: the engine rejects an
-    applyInPandasWithState with an EMPTY state struct ('head of empty
-    list'), and row-local kernels need no event-time order. Both forms
-    ignore events with a null event time."""
+    ``mapInPandas`` calling the same ``advance`` for each chunk: the
+    engine rejects an applyInPandasWithState with an EMPTY state struct
+    ('head of empty list'), and row-local kernels need no event-time
+    order. Both forms ignore events with a null event time."""
     source_cols = source_inputs(plan)
     # an event with no event time is ignored, as the batch per-key stages ignore it
     src = src.filter(F.col(on).isNotNull()).withColumn(on, to_micros(on))
@@ -80,27 +81,26 @@ def feature_vector_stream(
 
     state_schema, encode, decode = state_codec([(f"{f}_{s.name}", t) for s in plan for f, t in s.defn.state_fields])
 
-    def advance(key_value, pdf, carried):
-        vals = {c: pdf[n].to_numpy(dtype=float) for c, n in zip(source_cols, names)}
-        new_state = run_plan(plan, micros_ns(pdf[on]), vals, carried)
-        out = pd.DataFrame({key: key_value, on: pdf[on], **{c: vals[col] for c, col in value_cols.items()}})
-        return out, new_state
+    def advance(us, ins, carried):
+        vals = dict(zip(source_cols, ins))
+        new_state = run_plan(plan, us * 1000, vals, carried)
+        return {c: vals[col] for c, col in value_cols.items()}, new_state
 
     if not state_schema.fields:
         return src.mapInPandas(
-            lambda pdfs: (advance(pdf[key], pdf, None)[0] for pdf in pdfs),
+            lambda pdfs: (pd.DataFrame({key: pdf[key], on: pdf[on], **advance(
+                pdf[on].to_numpy(), [pdf[n].to_numpy() for n in names], None)[0]}) for pdf in pdfs),
             schema=schema(LongType(), DoubleType()),
         ).withColumn(on, from_micros(on))
     cap = PACKED_ROW_EVENTS  # bound here: the workers see the driver's value
 
     def fn(key_tuple, pdfs, state):
-        # one frame, one sort: chunk arrival order is fetch order, not event time
-        pdf = batch_frame(pdfs, [on], columns=[on, *names])
-        out, new_state = advance(key_tuple[0], pdf, decode(state.get) if state.exists else None)
-        cols = {c: out[c].to_numpy() for c in (on, *value_cols)}
-        starts = range(0, len(out), cap)
+        # one sort: chunk arrival order is fetch order, not event time
+        us, *ins = batch_arrays(pdfs, [on, *names])
+        out, new_state = advance(us, ins, decode(state.get) if state.exists else None)
+        starts = range(0, len(us), cap)
         yield pd.DataFrame({key: [key_tuple[0]] * len(starts),
-                            **{c: [x[i : i + cap].tolist() for i in starts] for c, x in cols.items()}})
+                            **{c: [x[i : i + cap] for i in starts] for c, x in {on: us, **out}.items()}})
         state.update(encode(new_state))
 
     packed = src.groupBy(key).applyInPandasWithState(

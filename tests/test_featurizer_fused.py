@@ -618,10 +618,10 @@ def test_stored_feature_equals_old_asof_path(spark, mixed_quotes, tmp_path, batc
 
 
 @pytest.mark.parametrize("side", [False, True], ids=["kernels", "with_user_side"])
-def test_batch_only_kernel_runs_in_the_per_key_pass(spark, tmp_path, side):
-    """A kernel with no stream state (``state_fields = None``) reads each
-    key's batches as one: its running max equals np.fmax.accumulate of
-    the key's mids, in 7-row Arrow batches too."""
+def test_user_kernel_carries_its_state_in_the_per_key_pass(spark, tmp_path, side):
+    """A user kernel's declared state crosses the key's Arrow batches:
+    its running max, seeded with the carried max, equals
+    np.fmax.accumulate of the key's mids, in 7-row batches too."""
     rng = np.random.default_rng(17)
     parts = []
     for sym, n in [("A", 90), ("B", 40)]:
@@ -646,6 +646,18 @@ def test_batch_only_kernel_runs_in_the_per_key_pass(spark, tmp_path, side):
                 # a side's null reads its last non-null value
                 np.testing.assert_array_equal(have["dbl-doubled"].to_numpy(dtype=float),
                                               pd.Series(2 * mid).ffill().to_numpy())
+
+
+def test_run_rejects_a_kernel_with_no_state_fields(spark, tmp_path):
+    """``Featurizer.run`` raises on a user kernel that declares no
+    ``state_fields``, naming its feature."""
+    (tmp_path / "fds.py").write_text(_USER_FDS)
+    features = [FEATURES[0], {"name": "peak", "feature_definition": "undeclared_max", "deps": ["mid"]}]
+    q = pd.DataFrame({"sym": ["A"], "ts": [T0], "bid": [1.0], "ask": [2.0]})
+    cfg = _config(_write(q, str(tmp_path / "q.parquet")), ["sym"], features,
+                  definition_paths=[str(tmp_path / "fds.py")])
+    with pytest.raises(ValueError, match="feature 'peak' has a kernel but declares no state_fields"):
+        Featurizer(spark).run(cfg)
 
 
 def test_unknown_label_feature_is_rejected():

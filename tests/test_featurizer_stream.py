@@ -93,20 +93,6 @@ def test_ewma_batch_equals_stream(spark, sf_small, tmp_path):
         assert gv == pytest.approx(want[k], rel=1e-12), k
 
 
-def test_run_stream_rejects_unfusable_feature(spark, sf_small, tmp_path):
-    """A kernel that declares no stream state runs in batch only."""
-    defs = tmp_path / "user_fds.py"
-    defs.write_text(_USER_FDS)
-    cfg = {**CFG, "definition_paths": [str(defs)], "features": CFG["features"] + [
-        {"name": "peak", "feature_definition": "running_max", "deps": ["mid"]}
-    ]}
-    src = load_table(spark, "events", sf_small).select("ts", "event_type", "value")
-    path = str(tmp_path / "src2")
-    src.write.parquet(path)
-    with pytest.raises(ValueError, match="no fused streaming form"):
-        Featurizer(spark).run_stream(cfg, replay_parquet(spark, path))
-
-
 def test_run_stream_equals_batch_with_null_bids(spark, tmp_path):
     """Null feature values: stream stddev skips a null mid as batch
     stddev_samp does, and stream ewma carries through it as batch
@@ -341,6 +327,7 @@ def test_run_stream_equals_batch_for_every_streaming_kernel(spark, tmp_path, fea
 _USER_FDS = """
 import numpy as np
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
 from svoe_spark.plans.definitions import FeatureDefinition
 
@@ -355,32 +342,41 @@ class HalvedMid(FeatureDefinition):
         return df.select(*keys, "ts", (F.col("mid_price") / 2).alias("halved"))
 
 
-# a kernel that declares no state to carry between batches: batch only
+# a kernel that carries its running max from batch to batch
 class RunningMax(FeatureDefinition):
     name = "running_max"
     dep_slots = ("upstream",)
     outputs = ("max",)
+    state_fields = (("max", DoubleType()),)
 
     @classmethod
     def kernel(cls, ts, up, params, state=None):
-        return [np.fmax.accumulate(up[0])], ()
+        peak = np.fmax.accumulate(np.concatenate([[state[0] if state else np.nan], up[0]]))
+        return [peak[1:]], (float(peak[-1]),)
+
+
+# a kernel that declares no state_fields: neither path runs it
+class UndeclaredMax(RunningMax):
+    name = "undeclared_max"
+    state_fields = None
 """
 
 
 @pytest.mark.parametrize("feature", [
     {"name": "half", "feature_definition": "halved_mid", "deps": ["mid"]},
-    {"name": "peak", "feature_definition": "running_max", "deps": ["mid"]},
+    {"name": "peak", "feature_definition": "undeclared_max", "deps": ["mid"]},
 ])
 def test_run_stream_rejects_batch_only_features(spark, tmp_path, feature):
-    """A kernel-less user definition and a user kernel that declares no
-    state (``state_fields = None``) have no fused streaming form."""
+    """A kernel-less user definition has no fused streaming form, and a
+    user kernel that declares no ``state_fields`` runs on neither path."""
     path = tmp_path / "quotes"
     _write_quotes(path, files=[0])
     defs = tmp_path / "user_fds.py"
     defs.write_text(_USER_FDS)
     cfg = {**_quote_cfg(path, [{"name": "mid", "feature_definition": "mid_price"}, feature]),
            "definition_paths": [str(defs)]}
-    with pytest.raises(ValueError, match="no fused streaming form"):
+    error = {"half": "no fused streaming form", "peak": "feature 'peak' has a kernel but declares no state_fields"}
+    with pytest.raises(ValueError, match=error[feature["name"]]):
         Featurizer(spark).run_stream(cfg, _quote_stream(spark, path))
 
 
@@ -524,23 +520,52 @@ def test_run_stream_equals_batch_across_chunks_and_packed_rows(spark, tmp_path, 
     _assert_stream_equals_batch(spark, cfg, rows, _TOL)
 
 
-def test_batch_frame_assembles_and_sorts_across_chunks():
+def test_batch_arrays_assembles_and_sorts_across_chunks():
     import pandas as pd
 
-    from svoe_spark.streaming.chunks import batch_frame
+    from svoe_spark.streaming.chunks import batch_arrays
 
     # chunk 2 holds EARLIER events than chunk 1 (fetch order != time)
-    c1 = pd.DataFrame({"ts": [5, 7], "v": [50, 70]})
-    c2 = pd.DataFrame({"ts": [1, 6], "v": [10, 60]})
-    got = batch_frame(iter([c1, c2]), ["ts"])
-    assert list(got["ts"]) == [1, 5, 6, 7]
-    assert list(got["v"]) == [10, 50, 60, 70]
-    one = batch_frame(iter([c1]), ["ts"])
-    assert list(one["ts"]) == [5, 7]
-    # a timeout-fired key arrives with ZERO chunks: an empty frame,
-    # not a crash in pd.concat([])
-    empty = batch_frame(iter([]), ["ts"])
-    assert len(empty) == 0
+    c1 = pd.DataFrame({"ts": [5, 7], "side": [1, 0], "v": [50, 70]})
+    c2 = pd.DataFrame({"ts": [1, 6, 5], "side": [1, 0, 0], "v": [10, 60, 51]})
+    ts, v = batch_arrays(iter([c1, c2]), ["ts", "v"])
+    assert ts.tolist() == [1, 5, 5, 6, 7]
+    assert v.tolist() == [10, 50, 51, 60, 70]  # stable: equal ts keep arrival order
+    ts, side, v = batch_arrays(iter([c1, c2]), ["ts", "side", "v"], 2)
+    assert (ts.tolist(), side.tolist(), v.tolist()) == ([1, 5, 5, 6, 7], [1, 0, 1, 0, 0], [10, 51, 50, 60, 70])
+    (one,) = batch_arrays(iter([c1]), ["ts"])
+    assert one.tolist() == [5, 7]
+    # a timeout-fired key arrives with ZERO chunks: empty arrays, not a
+    # crash in np.concatenate([])
+    assert [len(a) for a in batch_arrays(iter([]), ["ts", "side", "v"], 2)] == [0, 0, 0]
+
+
+def test_run_stream_equals_batch_over_files_interleaved_in_time(spark, tmp_path):
+    """One micro-batch of two files whose events interleave in time for
+    every key (file 0 at even seconds, file 1 at odd): the handler
+    orders each key's events before its order-dependent kernels (a 20 s
+    stddev and ewma), and stream == batch."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "quotes"
+    path.mkdir()
+    rng = np.random.default_rng(5)
+    for j in range(2):
+        s = np.repeat(np.arange(j, 120, 2), 3)
+        bid = 100.0 + np.cumsum(rng.normal(0, 0.2, len(s)))
+        pq.write_table(pa.table({
+            "ts": pa.array(s * 1_000_000, pa.timestamp("us")),
+            "symbol": pa.array(np.tile(["A", "B", "C"], len(s) // 3)),
+            "bid": pa.array(bid),
+            "ask": pa.array(bid + rng.uniform(0.01, 0.05, len(s))),
+        }), path / f"part-{j:03d}.parquet")
+    cfg = _quote_cfg(path, _STATEFUL)
+    stream = spark.readStream.schema(spark.read.parquet(str(path)).schema).parquet(str(path))
+    rows = run_available_to_memory(Featurizer(spark).run_stream(cfg, stream)).collect()
+    assert len(rows) == 360
+    _assert_stream_equals_batch(spark, cfg, rows, _TOL)
 
 
 def test_run_stream_ignores_a_null_ts_event(spark, tmp_path):

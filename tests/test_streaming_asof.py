@@ -144,8 +144,9 @@ def test_asof_nearest_stream_tolerance_nulls_match_batch(
 def test_asof_nearest_stream_survives_tiny_arrow_chunks(
     spark, sf_small, asof_parquet
 ):
-    """The shared Arrow-chunk-reassembly guard (chunks.batch_frame):
-    3-row chunks must not break cross-chunk event-time ordering."""
+    """The shared Arrow-chunk-reassembly guard (chunks.batch_arrays, one
+    sort over (ts, side)): 3-row chunks must not break cross-chunk
+    event-time ordering."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "3")
