@@ -11,8 +11,9 @@ This is the maintenance loop a 100 TB corpus actually runs: the
 expensive relations (LSH postings, shingle sets) are derived once per
 document ever, each day's work is proportional to the batch, and the
 index read is a broadcast-filtered, partition-pruned scan. The same
-loop runs unattended from a document stream via
-``maintain_dedup_index_stream`` (see tests/test_dedup_index.py).
+loop runs unattended from a document stream by handing
+``apply_index_batch`` to ``streaming.sinks.foreach_batch`` (see
+tests/test_dedup_index.py).
 
 Prints one JSON line of per-day counts.
 

@@ -29,10 +29,9 @@ from svoe_spark.queries import QUERIES  # noqa: F401
 # overflowed the r9 window (`orderbook_snapshots_cryptofeed`,
 # `local_extrema`, `ewma_final_by_type`, `ewma_trend_by_type`), then
 # refill with the queries whose newest driver row is CORRECTNESS_r06,
-# in their r6 check order. 5 + 50 = 55 names; the overflow rotates to
-# round 11 — compute the actual split with driver_window() below (a
-# helper for maintainers and the verify harness — nothing prints it
-# automatically) instead of hard-coding counts in comments.
+# in their r6 check order. 5 + 50 = 55 names; the first 50 of the
+# rotated registry are the driver's window, the overflow rotates to
+# round 11.
 _DRIVER_PRIORITY = [
     "approx_quantiles_daily",
     "orderbook_snapshots_cryptofeed",
@@ -94,18 +93,6 @@ _DRIVER_PRIORITY = [
 # Queue for names that should lead the NEXT round's window (none
 # pending after the r10 rotation).
 _PRIORITY_EXTRA: list[str] = []
-
-
-DRIVER_WINDOW_SLOTS = 50
-
-
-def driver_window() -> tuple[list[str], list[str]]:
-    """Return (inside, overflow): the registry names that land in the
-    driver's 50-entry hash-check window this round vs those that
-    rotate to the next round. Computed from the live registry so the
-    split is never hard-coded wrong."""
-    names = list(QUERIES)
-    return names[:DRIVER_WINDOW_SLOTS], names[DRIVER_WINDOW_SLOTS:]
 
 
 def _rotate() -> None:

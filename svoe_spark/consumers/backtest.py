@@ -199,7 +199,6 @@ def run_backtest_grid(
     grid: list[SimConfig],
     by: str = "symbol",
     signal_fn: Callable[[pd.Series], pd.Series] = buy_low_sell_high,
-    mode: str = "replicate",
     order_cols: tuple[str, ...] = ("ts",),
 ) -> DataFrame:
     """Distributed strategy-parameter sweep: every config in ``grid``
@@ -207,47 +206,24 @@ def run_backtest_grid(
     (config, instrument) — the reference's config fan-out across Ray
     actors (backtester/runner.py:132-180) as a single Spark job.
 
-    ``mode='replicate'`` explodes a config-id array onto the feature
-    rows so each (instrument, config) pair is its own task — maximum
-    parallelism, at the cost of shuffling |grid| copies of the data
-    (exactly the reference's one-actor-per-config data duplication).
-    ``mode='loop'`` keeps one task per instrument and loops the grid
-    pandas-side — one copy of the data, the right trade when |grid| is
-    small relative to available tasks or the feature set is huge.
-    Results are identical; the equivalence test drives both against
-    sequential per-config runs."""
+    A config-id array is exploded onto the feature rows, so each
+    (instrument, config) pair is its own task — maximum parallelism, at
+    the cost of shuffling |grid| copies of the data (exactly the
+    reference's one-actor-per-config data duplication). The
+    equivalence test drives it against sequential per-config runs."""
     if not grid:
         raise ValueError("empty parameter grid")
     cfgs = list(grid)
+    ids = F.array(*[F.lit(i) for i in range(len(cfgs))])
+    rep = features.withColumn("__cfg", F.explode(ids))
 
-    if mode == "replicate":
-        ids = F.array(*[F.lit(i) for i in range(len(cfgs))])
-        rep = features.withColumn("__cfg", F.explode(ids))
+    def fn_rep(key, pdf):
+        cid = int(key[1])
+        cfg = cfgs[cid]
+        out = _simulate(pdf, key[0], price_col, signal_fn, cfg, order_cols)
+        return _with_cfg(out, cid, cfg)
 
-        def fn_rep(key, pdf):
-            cid = int(key[1])
-            cfg = cfgs[cid]
-            out = _simulate(pdf, key[0], price_col, signal_fn, cfg, order_cols)
-            return _with_cfg(out, cid, cfg)
-
-        return rep.groupBy(by, "__cfg").applyInPandas(fn_rep, schema=GRID_SCHEMA)
-
-    if mode == "loop":
-
-        def fn_loop(key, pdf):
-            outs = [
-                _with_cfg(
-                    _simulate(pdf, key[0], price_col, signal_fn, cfg,
-                              order_cols),
-                    cid, cfg,
-                )
-                for cid, cfg in enumerate(cfgs)
-            ]
-            return pd.concat(outs, ignore_index=True)
-
-        return features.groupBy(by).applyInPandas(fn_loop, schema=GRID_SCHEMA)
-
-    raise ValueError(f"unknown mode: {mode!r}; use 'replicate' or 'loop'")
+    return rep.groupBy(by, "__cfg").applyInPandas(fn_rep, schema=GRID_SCHEMA)
 
 
 def _with_cfg(out: pd.DataFrame, cid: int, cfg: SimConfig) -> pd.DataFrame:

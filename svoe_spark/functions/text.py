@@ -47,14 +47,6 @@ def tokens(text: Column | str) -> Column:
     return F.filter(F.split(_col(text), " ", -1), lambda t: F.length(t) > 0)
 
 
-def codepoints(text: Column | str) -> Column:
-    """array<int> of character codepoints."""
-    c = _col(text)
-    return F.transform(
-        F.sequence(F.lit(1), F.length(c)), lambda i: F.ascii(c.substr(i, F.lit(1)))
-    )
-
-
 def _md5_hash_sql(text: str) -> str:
     return (
         f"CAST(conv(substring(md5(encode({text}, 'UTF-8')), 1, 15), 16, 10)"

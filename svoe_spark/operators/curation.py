@@ -580,7 +580,7 @@ def contrastive_crops(
     positive-pair generator for contrastive retrieval pretraining
     (independent cropping à la Contriever/SimCSE: two views of one
     document are a positive pair; other documents in the batch are
-    negatives — the complement of `hard_negatives`, which mines the
+    negatives — the complement of `hard_negatives_lsh`, which mines the
     negative side). Crop length is ``len div frac_den``; each crop's
     start is an md5-hash draw (seeded on the doc id + crop salt) over
     the valid range, so crops may overlap (as in the paper), the draw

@@ -15,7 +15,7 @@ from __future__ import annotations
 import random
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from svoe_spark.functions.text import (
@@ -28,15 +28,6 @@ from svoe_spark.functions.text import (
 
 
 from svoe_spark.operators.util import spread as _spread
-
-
-def doc_shingles(text: str = "text"):
-    """Array form of the word-trigram shingles. NOTE: do not index into
-    this expression repeatedly from sibling projections — Catalyst's
-    projection collapse inlines it into every element_at access (one md5
-    pass over the whole document per access, quadratic). The operators
-    below route it through the explode-barrier in _shingle_arrays."""
-    return word_shingles_from_hashes(token_hashes(text))
 
 
 def _shingle_arrays(
@@ -58,7 +49,7 @@ def _shingle_arrays(
     to an exploded-row formulation where they produce no rows, and to
     the SQL oracle where their NULL band keys never equi-join.
 
-    Same shingle values as doc_shingles / the SQL oracle:
+    Same shingle values as the SQL oracle:
     s = ((h0*31+h1) % P * 31 + h2) % P.
     """
     extra_cols = extra_cols or []
@@ -159,7 +150,6 @@ def minhash_signature(
     text: str = "text",
     id_col: str = "doc_id",
     params: MinHashParams = MinHashParams(),
-    shingled: DataFrame | None = None,
     with_sets: bool = False,
 ) -> DataFrame:
     """(id, m0..m{K-1}): MinHash computed entirely ARRAY-SIDE —
@@ -167,10 +157,9 @@ def minhash_signature(
     shuffles: every document's signature is derived inside its scan
     task (the explode+groupBy formulation shuffles every shingle row).
     Min over the multiset equals min over the distinct set, so shingle
-    multiplicity is irrelevant. ``shingled``: optional precomputed
-    _shingle_arrays; ``with_sets=True`` adds a '__set' column (distinct
-    shingles) in the same narrow pass for verification reuse."""
-    rows = shingled if shingled is not None else _shingle_arrays(df, text, id_col)
+    multiplicity is irrelevant. ``with_sets=True`` adds a '__set' column
+    (distinct shingles) in the same narrow pass for verification reuse."""
+    rows = _shingle_arrays(df, text, id_col)
     # long cast: a*x exceeds int32 (ANSI mode makes that a hard error).
     # One selectExpr call: building K array_min/transform Column trees
     # through py4j cost ~10 round trips per hash (~0.4 s per call at
@@ -191,27 +180,6 @@ def minhash_signature(
     return rows.select(
         F.col(id_col), *(F.expr(m) for m in mins), *(F.expr(x) for x in extra)
     )
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
-    params: MinHashParams = MinHashParams(),
-    shingled: DataFrame | None = None,
-) -> DataFrame:
-    """Near-duplicate candidate pairs (id_a < id_b) that collide in at
-    least one LSH band. Shuffle key = (band, band-signature): the join
-    is equi on compact ints; bucket sizes bound the pair blow-up."""
-    # persist: the signature feeds every band AND both join sides;
-    # without it Catalyst re-derives the (expensive) shingling per use.
-    # The handle is exposed as result._svoe_persisted so long-lived
-    # sessions can release executor storage after the final action
-    # (same convention as reconstruct_book_bucketed).
-    sig = minhash_signature(df, text, id_col, params, shingled=shingled).persist()
-    out = _band_pairs(sig, id_col, params)
-    out._svoe_persisted = sig
-    return out
 
 
 def band_postings(

@@ -81,8 +81,8 @@ def write_index(
     one band key reads one partition's row groups), sets in
     ``sets/batch=<id>/``. Batch-scoped directories make every write
     IDEMPOTENT — a replayed batch overwrites its own subtree instead of
-    appending duplicate postings — which is what lets the streaming
-    maintainer run exactly-once on top of foreachBatch's
+    appending duplicate postings — which is what lets
+    ``apply_index_batch`` run exactly-once on top of foreachBatch's
     at-least-once delivery."""
     bands, sets = index_tables(docs, text, id_col, params)
     bands.write.mode("overwrite").partitionBy("band").parquet(
@@ -91,25 +91,11 @@ def write_index(
     sets.write.mode("overwrite").parquet(f"{path}/sets/batch={batch_id}")
 
 
-def append_index(
-    docs: DataFrame,
-    path: str,
-    batch_id: int,
-    text: str = "text",
-    id_col: str = "doc_id",
-    params: MinHashParams = MinHashParams(),
-) -> None:
-    """Incremental maintenance: add a (deduped) batch under its own
-    ``batch=<id>`` subtree. Re-running the same batch id overwrites in
-    place — idempotent by construction."""
-    write_index(docs, path, text, id_col, params, batch_id=batch_id)
-
-
 def read_index(
     spark: SparkSession, path: str, exclude_batch: int | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """(bands, sets) across every ingested batch. ``exclude_batch``
-    partition-prunes one batch subtree away — the streaming maintainer
+    partition-prunes one batch subtree away — ``apply_index_batch``
     uses it so a REPLAYED batch never probes against its own crashed
     attempt's partial writes (which would make every document match
     itself and drop the whole batch)."""
@@ -203,7 +189,8 @@ def dedup_against_index(
     transitive in effect — in a chain 1~2, 2~3 (1!~3), both 2 and 3
     are dropped, matching ``dedup_clusters``' keep-the-canonical-min
     semantics rather than a greedy keep-if-your-duplicate-also-died
-    rule. The survivors are what ``append_index`` should ingest."""
+    rule. The survivors are what ``write_index`` should ingest under the
+    batch's own ``batch_id``."""
     dup_vs_index = probe_index(
         new_docs, index_bands, index_sets, text, id_col, params,
         threshold, "sets" if index_sets is not None else "signature",
@@ -266,31 +253,3 @@ def apply_index_batch(
         handle.unpersist()
     append_commit(spark, path, batch_id)
     return True
-
-
-def maintain_dedup_index_stream(
-    doc_stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    text: str = "text",
-    id_col: str = "doc_id",
-    params: MinHashParams = MinHashParams(),
-    threshold: float = 0.5,
-):
-    """Keep the near-dup index continuously ingesting from a document
-    stream (the streaming leg of incremental dedup): each micro-batch
-    is deduped against everything already indexed, survivors become
-    the next batch subtree. Single concurrent writer per path, like
-    any partition-overwrite maintainer. Returns the StreamingQuery
-    (availableNow trigger — bounded replay semantics, same as
-    maintain_rollup_stream)."""
-    from svoe_spark.streaming.sinks import foreach_batch
-
-    return foreach_batch(
-        doc_stream,
-        lambda bdf, bid: apply_index_batch(
-            path, bdf, bid, text, id_col, params, threshold
-        ),
-        checkpoint,
-        trigger={"availableNow": True},
-    )

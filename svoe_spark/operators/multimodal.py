@@ -1,13 +1,11 @@
 """Multimodal columns: opaque binary payloads + typed metadata, with
-decode / feature-extraction / frame-sampling as Arrow-batched
-mapInPandas operators.
+feature extraction as an Arrow-batched mapInPandas operator and frame
+sampling as pure expressions.
 
 The Spark-side plumbing is real and tested: binary columns, metadata
 structs, Arrow batch transfer, partition-parallel numpy work, explode of
-frame chunks. The image/audio DECODE itself is stubbed (this container
-ships no codec libs): `decode_image` tries PIL and otherwise raises or
-falls back to a clearly-marked deterministic fake, so swapping in a real
-codec is a one-function change.
+frame chunks. No codec is shipped: a real image/audio decoder is one
+more mapInPandas over the payload column.
 
 At 100 TB: payloads stay columnar in parquet (never hit the driver),
 features compute next to the scan, and only compact feature vectors
@@ -26,7 +24,6 @@ from pyspark.sql.types import (
     ArrayType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -80,71 +77,6 @@ def byte_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                         "byte_hist": hist.astype(np.int64).tolist(),
                     }
                 )
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, "payload").mapInPandas(fn, schema=schema)
-
-
-IMAGE_SCHEMA = StructType(
-    [
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("mode", StringType()),
-    ]
-)
-
-
-def decode_image(
-    df: DataFrame, id_col: str = "doc_id", allow_fake: bool = False
-) -> DataFrame:
-    """Decode the payload as an image -> (width,height,channels,mode).
-
-    STUB: PIL/codec libs are absent in this environment. With
-    allow_fake=True the deterministic fake decoder is FORCED (even when
-    pillow is importable — the repo's payloads are text bytes, not real
-    images, so the stub is the only path that works on them); with
-    allow_fake=False and pillow present, the real decoder runs;
-    otherwise raises NotImplementedError naming the dependency."""
-    try:
-        from PIL import Image  # noqa: F401
-
-        have_pil = True
-    except ImportError:
-        have_pil = False
-    have_pil = have_pil and not allow_fake
-
-    if not have_pil and not allow_fake:
-        raise NotImplementedError(
-            "image decode needs pillow (not installed here); pass "
-            "allow_fake=True for the deterministic stub decoder"
-        )
-
-    schema = StructType(
-        [StructField(id_col, LongType()), *IMAGE_SCHEMA.fields]
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf["payload"]):
-                if have_pil:
-                    from PIL import Image
-
-                    img = Image.open(io.BytesIO(payload))
-                    rows.append(
-                        {id_col: i, "width": img.width, "height": img.height,
-                         "channels": len(img.getbands()), "mode": img.mode}
-                    )
-                else:
-                    n = len(payload)
-                    side = max(1, int(n ** 0.5))
-                    rows.append(
-                        {id_col: i, "width": side, "height": (n + side - 1) // side,
-                         "channels": 1, "mode": "FAKE-L"}
-                    )
             yield pd.DataFrame(rows)
 
     return df.select(id_col, "payload").mapInPandas(fn, schema=schema)

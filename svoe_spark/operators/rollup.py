@@ -225,33 +225,3 @@ class RollupStore:
             batch_id,
             lambda: self.refresh(batch_df, batch_id=batch_id),
         )
-
-
-def maintain_rollup_stream(
-    store: RollupStore, tick_stream: DataFrame, checkpoint: str
-):
-    """Keep a RollupStore continuously refreshed from a tick stream
-    (the streaming leg of the hypertable-style continuous aggregate):
-    foreachBatch -> incremental refresh, so each micro-batch costs the
-    touched partitions only.
-
-    foreachBatch offers at-least-once delivery — a failed/restarted
-    batch re-runs with the SAME batch id. A blind re-merge would
-    double-count its ticks, so `RollupStore.apply_batch` layers two
-    idempotency guards: the ``<path>._commits`` log (fast path) and a
-    per-day-partition batch stamp inside the data that survives a
-    crash BETWEEN the partition swap and the log append (see
-    `RollupStore.refresh`). (Single concurrent writer per store path,
-    same as any dynamic-partition-overwrite maintainer.)
-
-    Returns the StreamingQuery; use .trigger(availableNow=True)
-    semantics via `streaming.sinks.foreach_batch` for bounded replays.
-    """
-    from svoe_spark.streaming.sinks import foreach_batch
-
-    return foreach_batch(
-        tick_stream,
-        store.apply_batch,
-        checkpoint,
-        trigger={"availableNow": True},
-    )

@@ -1316,8 +1316,8 @@ def ivfpq_encode(
 ) -> DataFrame:
     """IVF-PQ encode: (cluster_id, m one-byte codes) per vector — the
     FAISS IVFADC layout. At 100 TB the table is written parquet-
-    PARTITIONED by ``cluster_id`` (``write_ivfpq`` below — the probe's
-    IN-list then prunes whole directories, plan-gated in
+    PARTITIONED by ``cluster_id`` (``partitionBy("cluster_id")`` — the
+    probe's IN-list then prunes whole directories, plan-gated in
     tests/test_pq.py), so a search reads only the probed cells and
     scans m bytes a row instead of dim floats. Both steps are
     shuffle-free projections."""
@@ -1438,7 +1438,7 @@ def ann_ivfpq_topk_numpy(
     batched ``mapInPandas`` — BIT-identical results (same probe
     ranking and LUTs via ``_ivfpq_probe_luts``; the distance
     accumulates column-by-column in the expression fold's exact s
-    order, float64 adds from 0.0 — the ``pq_encode_numpy`` trick, no
+    order, float64 adds from 0.0 — the ``ivfpq_encode_numpy`` trick, no
     pairwise-summation reassociation).
 
     Why it exists: the expression path ships the nprobe x m x ksub
@@ -1780,43 +1780,6 @@ def _pq_codes_numpy(E, cbs_np):
     return codes
 
 
-def pq_encode_numpy(
-    vectors: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    out: str = "codes",
-) -> DataFrame:
-    """Vectorized (Arrow + numpy) form of pq_encode — the throughput
-    path for corpus-scale encoding (measured ~5x at 2M x 64; see
-    ARCHITECTURE.md). BIT-IDENTICAL to the expression path, not just
-    approximately equal: distances accumulate in the same left-fold
-    column order (no np.sum/BLAS reassociation) and argmin ties break
-    to the lowest code, so the differential test asserts exact code
-    equality. The expression path stays the default (and the oracle
-    form); this one earns its pandas round trip only when encoding is
-    the bottleneck."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    cbs_np = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
-    out_schema = T.StructType(
-        list(vectors.schema.fields)
-        + [T.StructField(out, T.ArrayType(T.IntegerType()))]
-    )
-
-    def fn(it):
-        for pdf in it:
-            if len(pdf):
-                E = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-                pdf = pdf.assign(**{out: _pq_codes_numpy(E, cbs_np).tolist()})
-            else:
-                pdf = pdf.assign(**{out: pd.Series([], dtype=object)})
-            yield pdf
-
-    return _spread(vectors).mapInPandas(fn, schema=out_schema)
-
-
 def ivfpq_encode_numpy(
     vectors: DataFrame,
     centroids: list[list[float]],
@@ -1884,55 +1847,6 @@ def ivfpq_encode_numpy(
     return _spread(vectors).mapInPandas(fn, schema=out_schema)
 
 
-def hard_negatives(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-) -> DataFrame:
-    """Hard-negative mining for contrastive training: for each query
-    (anchor), the k most-cosine-similar corpus vectors with a
-    DIFFERENT label. One corpus scan against the broadcast anchor
-    batch; the window shuffle carries scored (id, cosine) rows only.
-    Right for an anchor batch small enough to broadcast — for mining
-    over the whole corpus use ``hard_negatives_lsh``."""
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(id_col).alias("anchor_id"),
-        F.col(vec_col).alias("__qv"),
-        F.col(label_col).alias("__qlabel"),
-        F.sqrt(norm_sq(vec_col)).alias("__qnorm"),
-    )
-    # norms once per ROW/anchor, not once per (row, anchor) pair — the
-    # stored-norm division is bit-identical to the per-pair cosine()
-    # (same sqrt values, same divide; embedding_neardup_pairs precedent)
-    v = vectors.withColumn("__n", F.sqrt(norm_sq(vec_col)))
-    den = F.col("__n") * F.col("__qnorm")
-    cos = F.when(
-        den != 0.0, dot(vec_col, "__qv") / den
-    ).otherwise(F.lit(0.0))
-    scored = (
-        v.crossJoin(F.broadcast(q))
-        .where(F.col(label_col) != F.col("__qlabel"))
-        .select(
-            "anchor_id",
-            F.col(id_col).alias("neg_id"),
-            cos.alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cosine").desc(), F.col("neg_id")
-    )
-    return (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= k)
-        .drop("__rk")
-    )
-
-
 def hard_negatives_lsh(
     vectors: DataFrame,
     dim: int,
@@ -1956,7 +1870,7 @@ def hard_negatives_lsh(
     # don't let a single-file corpus serialize it onto one task.
     # persist: b feeds BOTH self-join sides — without it a broadcast
     # plan would re-run the full scan + bucket fold per side (same
-    # rationale as lsh_candidate_pairs' persisted signature; handle
+    # rationale as minhash_dedup_pairs' persisted signature; handle
     # exposed as result._svoe_persisted). Norms stored once per row —
     # the stored-norm division is bit-identical to per-pair cosine()
     b = _spread(vectors).select(
@@ -1990,19 +1904,6 @@ def hard_negatives_lsh(
     )
     out._svoe_persisted = b
     return out
-
-
-def write_ivfpq(
-    coded: DataFrame, path: str, cluster_col: str = "cluster_id",
-    mode: str = "overwrite",
-) -> None:
-    """Lake layout for the IVF-PQ relation: parquet partitioned by
-    coarse cell. A probe's IN-list on ``cluster_col`` then becomes
-    DIRECTORY-level partition pruning (PartitionFilters in the scan) —
-    at 100 TB an nprobe=2 search reads 2 of k directories of an
-    8-bytes-per-row table and nothing else. Plan-gated in
-    tests/test_pq.py::test_ivfpq_parquet_probe_partition_prunes."""
-    coded.write.mode(mode).partitionBy(cluster_col).parquet(path)
 
 
 def jl_project(

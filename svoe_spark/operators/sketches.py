@@ -665,7 +665,8 @@ def hll_build(
     at most m rows per group — one partial-aggregated max per bucket,
     no matter the cardinality. rho uses the binary-string length of the
     word (pure integer -> string, portable) instead of floor(log2)
-    floats. Merge sketches with register-wise max (``hll_merge``)."""
+    floats. Sketches merge by register-wise max: hll(A ∪ B) is the
+    per-bucket max of hll(A) and hll(B), exactly."""
     groups = list(group_cols or [])
     h = _key_hash(key)
     m, wb = params.m, params.w_bits
@@ -680,21 +681,6 @@ def hll_build(
     return d.select(*groups, "bucket", rho.alias("rho")).groupBy(
         *groups, "bucket"
     ).agg(F.max("rho").cast("int").alias("rho"))
-
-
-def hll_merge(
-    sketches: list[DataFrame],
-    group_cols: list[str] | None = None,
-) -> DataFrame:
-    """Register-wise max — hll(A ∪ B) == merge(hll(A), hll(B))
-    exactly."""
-    from functools import reduce
-
-    groups = list(group_cols or [])
-    u = reduce(lambda a, b: a.unionByName(b), sketches)
-    return u.groupBy(*groups, "bucket").agg(
-        F.max("rho").cast("int").alias("rho")
-    )
 
 
 def hll_estimate(

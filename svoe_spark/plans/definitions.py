@@ -130,8 +130,10 @@ def per_key_map(df: DataFrame, keys: list[str], inputs: list, outputs: list, fn)
 
     A per-key batch stage ignores events with no event time. The
     handler raises if a batch's ``ts`` decreases or does not continue
-    the key's previous batch, and never computes on disordered input. A
-    key's Python memory is one batch plus what ``fn`` carries.
+    the key's previous batch, and never computes on disordered input.
+    ``fn``'s batches never split an equal-ts peer group, wherever Arrow
+    cuts the key's rows. A key's Python memory is two batches plus what
+    ``fn`` carries.
 
     The stage has one partition per ``KEY_TASK_BYTES`` of input, at
     most one per core, not ``spark.sql.shuffle.partitions``: each
@@ -175,18 +177,31 @@ def key_handler(keys: list[str], names: list, outputs: list, fn):
 
 
 def _ordered(batches, names: list):
-    """(ts ns, input arrays) of each non-empty batch, raising where ts
-    decreases within a batch or from the previous one."""
-    last = np.iinfo(np.int64).min
+    """(ts ns, input arrays) of a key's events, batch by batch, raising
+    where ts decreases within a batch or from the previous one. A batch
+    is yielded once the next one shows whether it continues the batch's
+    trailing equal-ts peer group; if it does, those peers move into it,
+    so no yielded batch splits a peer group."""
+    held = None
     for batch in batches:
         us = batch.column("ts").to_numpy()
         if not len(us):
             continue
-        if us[0] < last or (us[1:] < us[:-1]).any():
+        if (us[1:] < us[:-1]).any() or (held is not None and us[0] < held[0][-1]):
             raise ValueError("per_key_map: a key's batches are not ordered by ts")
-        last = us[-1]
-        yield us * 1000, [batch.column(n).to_numpy(zero_copy_only=False) if isinstance(n, str)
-                          else batch.column(n.name) for n in names]
+        cols = [batch.column(n).to_numpy(zero_copy_only=False) if isinstance(n, str)
+                else batch.column(n.name) for n in names]
+        if held is not None:
+            h_us, h_cols = held
+            if us[0] == h_us[-1]:
+                cut = np.searchsorted(h_us, h_us[-1])
+                us, cols = np.concatenate([h_us[cut:], us]), [concat([h[cut:], c]) for h, c in zip(h_cols, cols)]
+                h_us, h_cols = h_us[:cut], [h[:cut] for h in h_cols]
+            if len(h_us):
+                yield h_us * 1000, h_cols
+        held = us, cols
+    if held is not None:
+        yield held[0] * 1000, held[1]
 
 
 def concat(arrays: list):

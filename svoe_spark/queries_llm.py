@@ -90,7 +90,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shingle_sql() -> str:
-    """Word-trigram shingles from token hashes (mirrors doc_shingles)."""
+    """Word-trigram shingles from token hashes (mirrors dedup._shingle_arrays)."""
     return sql_word_shingles_from_hashes("th")
 
 

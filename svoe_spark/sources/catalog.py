@@ -44,7 +44,7 @@ def write_partitioned(
         # same) because the dynamic-partition writer re-sorts any task
         # whose rows aren't ordered by the partition columns — a
         # day-only, tie-unstable sort that would scramble the ts order
-        # inside files (see write_clustered)
+        # inside files
         .sortWithinPartitions("day", ts_col)
         .write.mode(mode)
         .option("compression", compression)
@@ -72,47 +72,6 @@ def read_time_range(
             & (F.col(ts_col) <= F.lit(end))
         )
     return df.drop("day")
-
-
-def compact(
-    spark: SparkSession,
-    path: str,
-    target_mb: int = 128,
-    ts_col: str = "ts",
-) -> int:
-    """Compact a day-partitioned lake path to ~target_mb files per
-    partition (reference S11 compaction: memory_based_compactor.py:11-49
-    sizes blocks by estimated memory; here we size by actual on-disk
-    bytes). Returns the new file count. Rewrite is atomic-ish via a
-    staging directory swap."""
-    import shutil
-
-    df = spark.read.parquet(path)
-    total_bytes = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, round(total_bytes / (target_mb * 1024 * 1024)))
-    staging = path.rstrip("/") + ".compacting"
-    (
-        df.repartitionByRange(n_files, ts_col)
-        .sortWithinPartitions("day", ts_col)  # see write_partitioned
-        .write.mode("overwrite")
-        .partitionBy("day")
-        .parquet(staging)
-    )
-    backup = path.rstrip("/") + ".old"
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
-    return sum(
-        1
-        for dp, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
 
 
 class FeatureStore:
@@ -156,45 +115,3 @@ class FeatureStore:
         with open(os.path.join(path, "_meta.json"), "w") as f:
             json.dump(meta, f)
         return out.drop("day")
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_cols: list[str] | str,
-    ts_col: str = "ts",
-    mode: str = "overwrite",
-) -> None:
-    """Key-clustered day-partitioned lake write (the z-order-lite layout
-    lever): co-locate each cluster key's rows with a repartition on the
-    key, then sort row groups by (key..., ts).
-
-    Parquet keeps min/max statistics per row group; once rows are
-    key-sorted, a per-key predicate prunes whole row groups at scan
-    time (and the time sort inside each key keeps `write_partitioned`'s
-    time-range skipping). At 100 TB this is the difference between
-    reading a symbol's slice and reading every block of every day it
-    appears in — same idea as Delta/Iceberg data clustering, with plain
-    parquet stats. Verified structurally in
-    tests/test_storage_ingest.py::test_write_clustered_row_group_stats.
-    """
-    if isinstance(cluster_cols, str):
-        cluster_cols = [cluster_cols]
-    (
-        df.withColumn("day", utc_day(ts_col))
-        .repartition(
-            max(df.sparkSession.sparkContext.defaultParallelism, 1),
-            *[F.col(c) for c in cluster_cols],
-        )
-        # "day" must LEAD the sort: the dynamic-partition writer
-        # requires each task's rows ordered by the partition columns
-        # and inserts its own (day)-only sort when they aren't —
-        # silently scrambling the (key, ts) run order inside files
-        # (observed at low task counts, where multi-day tasks are
-        # common). With day first, the writer's required ordering is
-        # already satisfied and the clustered order survives verbatim.
-        .sortWithinPartitions("day", *cluster_cols, ts_col)
-        .write.mode(mode)
-        .partitionBy("day")
-        .parquet(path)
-    )

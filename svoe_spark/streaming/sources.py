@@ -6,8 +6,8 @@ offline replay merges stored blocks into a ts-ordered stream
 (offline_feature_stream_generator.py:36-189). Structured Streaming
 equivalents:
 
-* live: any readStream source (kafka/socket/rate); `rate_ticks` shapes
-  the built-in rate source into the tick schema for tests/demos.
+* live: any readStream source (kafka/socket/rate) shaped into the tick
+  schema by the caller.
 * replay: a parquet directory consumed with `availableNow` — identical
   code path to live, bounded input (the Kappa property, T6).
 """
@@ -15,32 +15,6 @@ equivalents:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def rate_ticks(
-    spark: SparkSession,
-    rows_per_second: int = 100,
-    symbols: tuple[str, ...] = ("BTC-USD", "ETH-USD"),
-) -> DataFrame:
-    """Deterministic-shape synthetic tick stream from the rate source:
-    (ts, symbol, price, amount, side)."""
-    n = len(symbols)
-    sym = F.array(*[F.lit(s) for s in symbols])[
-        (F.col("value") % n).cast("int")
-    ]
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-        .select(
-            F.col("timestamp").alias("ts"),
-            sym.alias("symbol"),
-            (100.0 + 10.0 * F.sin(F.col("value") / 10.0)).alias("price"),
-            (1.0 + (F.col("value") % 5)).alias("amount"),
-            F.when(F.col("value") % 2 == 0, F.lit("BUY")).otherwise(F.lit("SELL")).alias("side"),
-        )
-    )
 
 
 def replay_parquet(

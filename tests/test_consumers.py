@@ -45,8 +45,8 @@ def test_backtest_time_split(spark, sine_df):
 
 @pytest.mark.filterwarnings("error::UserWarning")  # e.g. "Cannot infer the eval type"
 def test_backtest_param_grid_equals_sequential_runs(spark, sine_df):
-    """Grid fan-out (both physical modes) == N independent sequential
-    runs, config for config — the reference's actor-per-config sweep
+    """Grid fan-out == N independent sequential runs, config for
+    config — the reference's actor-per-config sweep
     (backtester/runner.py:132-180) without the approximation drift."""
     from svoe_spark.consumers.backtest import run_backtest_grid
 
@@ -73,20 +73,17 @@ def test_backtest_param_grid_equals_sequential_runs(spark, sine_df):
                 r["total_commission"],
             )
 
-    for mode in ("replicate", "loop"):
-        got = {
-            (r["config_id"], r["symbol"]): (
-                r["n_trades"],
-                r["final_balance"],
-                r["final_equity"],
-                r["total_commission"],
-            )
-            for r in run_backtest_grid(
-                two, price_col="mid_price", grid=grid, mode=mode
-            ).collect()
-        }
-        assert got == want, mode
-        assert len(got) == len(grid) * 2
+    got = {
+        (r["config_id"], r["symbol"]): (
+            r["n_trades"],
+            r["final_balance"],
+            r["final_equity"],
+            r["total_commission"],
+        )
+        for r in run_backtest_grid(two, price_col="mid_price", grid=grid).collect()
+    }
+    assert got == want
+    assert len(got) == len(grid) * 2
 
     # param columns ride along for downstream best-config selection
     row = run_backtest_grid(two, "mid_price", grid=grid).filter(

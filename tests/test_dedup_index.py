@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from svoe_spark.operators.dedup import MinHashParams, minhash_dedup_pairs
 from svoe_spark.operators.dedup_index import (
-    append_index,
     dedup_against_index,
     index_tables,
     probe_index,
@@ -94,7 +93,7 @@ def test_append_equals_rebuild(spark, split, tmp_path):
     half2 = old.where(F.col("doc_id") % 2 != 0)
     inc = str(tmp_path / "inc")
     write_index(half1, inc, params=_MH)
-    append_index(half2, inc, batch_id=1, params=_MH)
+    write_index(half2, inc, params=_MH, batch_id=1)
     full = str(tmp_path / "full")
     write_index(old, full, params=_MH)
     for i in (0, 1):
@@ -102,7 +101,7 @@ def test_append_equals_rebuild(spark, split, tmp_path):
         b = read_index(spark, full)[i]
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     # re-running the same append overwrites, not duplicates
-    append_index(half2, inc, batch_id=1, params=_MH)
+    write_index(half2, inc, params=_MH, batch_id=1)
     assert read_index(spark, inc)[0].count() == read_index(spark, full)[0].count()
 
 
@@ -159,10 +158,8 @@ def test_crash_replay_recomputes_same_survivors(spark, docs, tmp_path):
 
 
 def test_streaming_maintainer_matches_batch_ingest(spark, docs, tmp_path):
-    from svoe_spark.operators.dedup_index import (
-        apply_index_batch,
-        maintain_dedup_index_stream,
-    )
+    from svoe_spark.operators.dedup_index import apply_index_batch
+    from svoe_spark.streaming.sinks import foreach_batch
 
     src = str(tmp_path / "src")
     docs.limit(200).write.parquet(src)
@@ -172,8 +169,11 @@ def test_streaming_maintainer_matches_batch_ingest(spark, docs, tmp_path):
         .parquet(src)
     )
     path = str(tmp_path / "sidx")
-    q = maintain_dedup_index_stream(
-        stream, path, str(tmp_path / "ckpt"), params=_MH
+    q = foreach_batch(
+        stream,
+        lambda bdf, bid: apply_index_batch(path, bdf, bid, params=_MH),
+        str(tmp_path / "ckpt"),
+        trigger={"availableNow": True},
     )
     q.awaitTermination(120)
     got_ids = {

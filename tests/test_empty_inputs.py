@@ -204,7 +204,7 @@ def test_round4_tail_ops_on_empty(spark):
         numeric_histogram,
         profile_columns,
     )
-    from svoe_spark.operators.similarity import hard_negatives, hard_negatives_lsh
+    from svoe_spark.operators.similarity import hard_negatives_lsh
     from svoe_spark.operators.tokenizer import bpe_encode, word_frequencies
 
     doc = _empty(spark, DOC)
@@ -229,7 +229,6 @@ def test_round4_tail_ops_on_empty(spark):
         ]
     )
     emb = _empty(spark, emb_schema)
-    assert hard_negatives(emb, emb, k=1).collect() == []
     assert hard_negatives_lsh(emb, dim=4, k=1).collect() == []
 
 

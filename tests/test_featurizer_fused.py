@@ -388,6 +388,24 @@ def test_handler_raises_on_disordered_ts(batches):
     assert out.to_pydict() == {"k": ["A"] * 3, "ts": [0, 1, 1], "v": [1.0, None, 3.0]}
 
 
+def test_handler_never_splits_an_equal_ts_peer_group():
+    """No Spark: a peer group that Arrow cuts across three batches
+    reaches ``fn`` in one batch, with its values; batches with no peer
+    group across their cut pass as they are."""
+    seen = []
+
+    def identity(chunks):
+        for ts, (v,) in chunks:
+            seen.append((ts // 1000).tolist())
+            yield ts, {"v": v}
+
+    handler = key_handler(["k"], ["__in0"], ["v"], identity)
+    cuts = [[0, 1, 1], [1, 1], [1, 2], [3]]
+    out = list(handler((pa.scalar("A"),), iter(_batch(b, [float(i) for i in range(len(b))]) for b in cuts)))
+    assert seen == [[0], [1, 1, 1, 1, 1, 2], [3]]
+    assert pa.Table.from_batches(out).to_pydict()["v"] == [0.0, 1.0, 2.0, 0.0, 1.0, 0.0, 1.0, 0.0]
+
+
 def _plan_of(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):

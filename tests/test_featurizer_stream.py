@@ -568,6 +568,74 @@ def test_run_stream_equals_batch_over_files_interleaved_in_time(spark, tmp_path)
     _assert_stream_equals_batch(spark, cfg, rows, _TOL)
 
 
+_PEER_FEATURES = [
+    {"name": "mid", "feature_definition": "mid_price", "params": {"price_col": "price"}},
+    {"name": "vol", "feature_definition": "volatility_stddev", "deps": ["mid"], "params": {"window": "20s"}},
+    {"name": "diff", "feature_definition": "diff", "deps": ["mid"], "params": {"window": "20s"}},
+]
+
+
+def _write_peer_cut_quotes(path, sizes):
+    """One key's 14 events: prices 100.01..110.01 at 0..10 s, a second
+    10 s event at 130.01, then 131.01 at 11 s and 132.01 at 12 s. Written
+    in order as one parquet file per entry of ``sizes`` (its row count),
+    with mtimes in file order."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    s = np.array([*range(11), 10, 11, 12])
+    price = np.array([100.01 + i for i in range(11)] + [130.01, 131.01, 132.01])
+    path.mkdir()
+    for j, (lo, hi) in enumerate(zip(np.cumsum([0, *sizes[:-1]]), np.cumsum(sizes))):
+        f = path / f"part-{j:03d}.parquet"
+        pq.write_table(pa.table({
+            "ts": pa.array(s[lo:hi] * 1_000_000, pa.timestamp("us")),
+            "symbol": pa.array(["A"] * (hi - lo)),
+            "price": pa.array(price[lo:hi]),
+        }), f)
+        os.utime(f, (1_000_000 + j, 1_000_000 + j))
+
+
+def test_build_features_holds_equal_ts_peers_across_arrow_batches(spark, tmp_path):
+    """An Arrow batch of 11 rows ends between the two 10 s peers: every
+    kernel still sees the whole peer group, so ``build_features`` equals
+    the run whose one batch holds the key."""
+    path = tmp_path / "quotes"
+    _write_peer_cut_quotes(path, [14])
+    cfg = FeaturizerConfig.load(_quote_cfg(path, _PEER_FEATURES))
+
+    def features(batch_rows):
+        old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_rows))
+        try:
+            return {name: _by_event(df.collect(), [c for c in df.columns if c not in ("symbol", "ts")])
+                    for name, (_, df) in Featurizer(spark).build_features(cfg).items()}
+        finally:
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+    whole = features(10_000)
+    peers = whole["vol"][("A", datetime.datetime(1970, 1, 1, 0, 0, 10))]
+    assert peers == [[pytest.approx(7.8793, abs=1e-4)] * 2]
+    assert features(11) == whole
+
+
+@pytest.mark.xfail(strict=True, raises=AssertionError, reason=(
+    "run_stream does not hold a key's trailing equal-ts peers for its next "
+    "micro-batch (ROADMAP items 15 and 16)"))
+def test_run_stream_holds_equal_ts_peers_across_micro_batches(spark, tmp_path):
+    """The events of the batch test above in two micro-batches, the
+    first ending between the 10 s peers: stream == batch."""
+    path = tmp_path / "quotes"
+    _write_peer_cut_quotes(path, [11, 3])
+    cfg = _quote_cfg(path, _PEER_FEATURES)
+    rows = run_available_to_memory(Featurizer(spark).run_stream(cfg, _quote_stream(spark, path))).collect()
+    assert len(rows) == 14
+    _assert_stream_equals_batch(spark, cfg, rows, _TOL)
+
+
 def test_run_stream_ignores_a_null_ts_event(spark, tmp_path):
     """An event with a null ts is ignored by the stream, as by batch:
     the other events stream, none reads the null event's value, and

@@ -1,38 +1,56 @@
-"""Hard-negative mining: known-answer correctness on crafted vectors,
-label-exclusion invariant, and the broadcast plan shape."""
+"""Hard-negative mining (LSH-blocked): known-answer correctness on
+crafted vectors, the label-exclusion invariant, and equality with an
+exact brute-force reference wherever the true hard negative shares the
+anchor's bucket."""
 
 from __future__ import annotations
 
-import contextlib
-import io
+import math
 
 import pytest
 from pyspark.sql import functions as F
 
-from svoe_spark.operators.similarity import hard_negatives, hard_negatives_lsh
+from svoe_spark.operators.similarity import hard_negatives_lsh, lsh_bucket
 from svoe_spark.sources.tables import load_table
 
 
 @pytest.fixture(scope="module")
 def crafted(spark):
-    # anchor 0 (label A) at e1; vec 1 (label A) AT e1 — same label, must
-    # be skipped; vec 2 (label B) near e1 — the true hard negative;
-    # vec 3 (label B) orthogonal — easy negative
+    # every vector a small perturbation of u = (8, 4, 2, 1), whose
+    # hyperplane projections are all >= 1 in magnitude, so all four
+    # share one bucket. vec 1 (label A) equals anchor 0 (label A) — same
+    # label, must be skipped; vec 2 (label B) is the nearest other-label
+    # vector — the true hard negative; vec 3 (label B) is further off
     rows = [
-        (0, "A", [1.0, 0.0, 0.0, 0.0]),
-        (1, "A", [1.0, 0.0, 0.0, 0.0]),
-        (2, "B", [0.9, 0.1, 0.0, 0.0]),
-        (3, "B", [0.0, 0.0, 1.0, 0.0]),
+        (0, "A", [8.0, 4.0, 2.0, 1.0]),
+        (1, "A", [8.0, 4.0, 2.0, 1.0]),
+        (2, "B", [8.0, 4.0, 2.0, 1.1]),
+        (3, "B", [8.0, 4.0, 2.3, 0.7]),
     ]
     return spark.createDataFrame(
         rows, "vec_id bigint, label string, embedding array<double>"
     )
 
 
+def _cosine(a, b):
+    """The engine's cosine, operation for operation: fold-left dots from
+    0.0, then dot / (sqrt(|a|^2) * sqrt(|b|^2))."""
+
+    def dot(x, y):
+        acc = 0.0
+        for p, q in zip(x, y):
+            acc += p * q
+        return acc
+
+    den = math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))
+    return dot(a, b) / den if den != 0.0 else 0.0
+
+
 def test_hard_negatives_picks_most_similar_other_label(crafted):
-    got = hard_negatives(
-        crafted, crafted.where(F.col("vec_id") == 0), k=2
-    ).collect()
+    assert crafted.select(lsh_bucket("embedding", 4)).distinct().count() == 1
+    out = hard_negatives_lsh(crafted, dim=4, k=2)
+    got = out.where(F.col("anchor_id") == 0).orderBy(F.col("cosine").desc()).collect()
+    out._svoe_persisted.unpersist()
     assert [r["neg_id"] for r in got] == [2, 3]
     assert got[0]["cosine"] > got[1]["cosine"]
 
@@ -40,50 +58,46 @@ def test_hard_negatives_picks_most_similar_other_label(crafted):
 def test_hard_negatives_never_returns_same_label(spark, sf_mid):
     emb = load_table(spark, "embeddings", sf_mid)
     labels = {r["vec_id"]: r["label"] for r in emb.select("vec_id", "label").collect()}
-    out = hard_negatives(emb, emb.where(F.col("vec_id") < 10), k=3).collect()
+    df = hard_negatives_lsh(emb, dim=64, k=3)
+    out = df.collect()
+    df._svoe_persisted.unpersist()
     assert len(out) > 0
+    per_anchor: dict[int, int] = {}
     for r in out:
         assert labels[r["anchor_id"]] != labels[r["neg_id"]]
+        per_anchor[r["anchor_id"]] = per_anchor.get(r["anchor_id"], 0) + 1
+    assert max(per_anchor.values()) <= 3
 
 
 def test_hard_negatives_lsh_matches_exact_when_truth_shares_bucket(spark, sf_mid):
-    from svoe_spark.operators.similarity import lsh_bucket
-
     emb = load_table(spark, "embeddings", sf_mid)
-    labels = {r["vec_id"]: r["label"] for r in emb.select("vec_id", "label").collect()}
-    buckets = {
-        r["vec_id"]: r["b"]
+    rows = {
+        r["vec_id"]: r
         for r in emb.select(
-            "vec_id", lsh_bucket("embedding", 64).alias("b")
+            "vec_id", "label", "embedding", lsh_bucket("embedding", 64).alias("b")
         ).collect()
     }
-    out = {r["anchor_id"]: r for r in hard_negatives_lsh(emb, dim=64, k=1).collect()}
-    anchors = list(out)
-    assert len(anchors) > 0
+    df = hard_negatives_lsh(emb, dim=64, k=1)
+    out = {r["anchor_id"]: r for r in df.collect()}
+    df._svoe_persisted.unpersist()
+    assert len(out) > 0
     for r in out.values():
-        assert labels[r["anchor_id"]] != labels[r["neg_id"]]
+        assert rows[r["anchor_id"]]["label"] != rows[r["neg_id"]]["label"]
     # the REAL check: for anchors whose exact (unblocked) hard negative
-    # happens to share their bucket, the LSH pick must equal the exact
-    # pick (same cosine expression, same tie-break)
-    probe = emb.where(F.col("vec_id") < 40)
-    exact = {
-        r["anchor_id"]: r
-        for r in hard_negatives(emb, probe, k=1).collect()
-    }
+    # happens to share their bucket, the LSH pick must equal the
+    # brute-force pick (same cosine arithmetic, same (cosine desc,
+    # neg_id) tie-break)
     compared = 0
-    for aid, er in exact.items():
-        if buckets[er["neg_id"]] == buckets[aid]:
+    for aid in (v for v in rows if v < 40):
+        a = rows[aid]
+        cos, nid = max(
+            (_cosine(a["embedding"], n["embedding"]), -n["vec_id"])
+            for n in rows.values()
+            if n["label"] != a["label"]
+        )
+        nid = -nid
+        if rows[nid]["b"] == a["b"]:
             compared += 1
-            assert out[aid]["neg_id"] == er["neg_id"], aid
-            assert out[aid]["cosine"] == er["cosine"], aid
+            assert out[aid]["neg_id"] == nid, aid
+            assert out[aid]["cosine"] == cos, aid
     assert compared >= 3  # the fixture provides in-bucket truths
-
-
-def test_hard_negatives_plan_broadcasts_anchors(spark, sf_mid):
-    emb = load_table(spark, "embeddings", sf_mid)
-    df = hard_negatives(emb, emb.where(F.col("vec_id") < 10), k=1)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    p = buf.getvalue()
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p, p

@@ -1,11 +1,8 @@
-"""Multimodal plumbing: payload attachment, stubbed decode, frame math."""
-
-import pytest
+"""Multimodal plumbing: payload attachment, byte features, frame math."""
 
 from svoe_spark.operators.multimodal import (
     attach_payload,
     byte_features,
-    decode_image,
     frame_sample,
 )
 from svoe_spark.sources.tables import load_table
@@ -21,15 +18,6 @@ def test_payload_and_features(spark, sf_small):
     assert row["first_byte"] == ord(text[0])
     assert row["checksum"] == sum(text.encode())
     assert sum(row["byte_hist"]) == len(text)
-
-
-def test_decode_image_stub_contract(spark, sf_small):
-    docs = attach_payload(load_table(spark, "documents", sf_small)).limit(5)
-    with pytest.raises(NotImplementedError, match="pillow"):
-        decode_image(docs).collect()  # codec absent -> explicit stub error
-    fake = decode_image(docs, allow_fake=True).collect()
-    assert len(fake) == 5
-    assert all(r["mode"] == "FAKE-L" and r["width"] * r["height"] >= 1 for r in fake)
 
 
 def test_frame_sample_covers_payload(spark, sf_small):

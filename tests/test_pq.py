@@ -217,17 +217,6 @@ def test_ivfpq_probe_scan_is_shuffle_free_with_cell_filter(emb, cents, ivfpq):
     assert "cluster_id" in p and (" IN " in p or "isin" in p.lower()), p
 
 
-def test_pq_encode_numpy_bit_identical(emb, cbs):
-    from svoe_spark.operators.similarity import pq_encode_numpy
-
-    a = {r["vec_id"]: list(r["codes"]) for r in pq_encode(emb, cbs).collect()}
-    b = {
-        r["vec_id"]: list(r["codes"])
-        for r in pq_encode_numpy(emb, cbs).collect()
-    }
-    assert a == b  # exact: same fold order, same tie-break
-
-
 def test_ivfpq_encode_numpy_bit_identical(emb, cents, ivfpq):
     from svoe_spark.operators.similarity import ivfpq_encode_numpy
 
@@ -255,11 +244,12 @@ def test_ivfpq_encode_numpy_zero_vector_lands_in_cell_zero(spark, cents, ivfpq):
 
 
 def test_ivfpq_parquet_probe_partition_prunes(spark, emb, cents, ivfpq, tmp_path):
-    from svoe_spark.operators.similarity import ann_ivfpq_topk, write_ivfpq
+    from svoe_spark.operators.similarity import ann_ivfpq_topk
 
     cbs, coded = ivfpq
     path = str(tmp_path / "ivfpq")
-    write_ivfpq(coded, path)
+    # the lake layout: parquet partitioned by coarse cell
+    coded.write.mode("overwrite").partitionBy("cluster_id").parquet(path)
     stored = spark.read.parquet(path)
     df = ann_ivfpq_topk(
         stored, emb.where(F.col("vec_id") == 0), cents, cbs, k=10, nprobe=2

