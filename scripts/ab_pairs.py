@@ -6,7 +6,10 @@ Exports ``--parent`` with ``git archive`` into a temporary directory (no
 worktree, no change to the checkout), then, per workload, runs
 ``perfbench/run.py --seconds 6 --trace 0`` on both trees ``--pairs``
 times, one run at a time. Pair ``i`` runs seed ``i`` on both trees, the
-parent first in odd pairs and the change first in even ones. Each run's
+parent first in odd pairs and the change first in even ones. Before pair 1
+each tree runs the first workload once, unmeasured, so that a one-time
+effect (a tree's first class-data-sharing dump, a cold page cache for the
+jars) does not land on pair 1 alone. Each run's
 last-line JSON is parsed and printed as one line; then, per end-to-end
 metric of BENCHMARK.json, each side's median, its quartile spread over
 the median, and in how many pairs the change was better (in the
@@ -73,6 +76,9 @@ def main() -> int:
     try:
         export(opts.parent, parent)
         trees = {"parent": parent, "change": ROOT}
+        for side in ("parent", "change"):
+            res = run(trees[side], opts.workload[0], 1)
+            print(f"{opts.workload[0]} warm-up {side}: {res.get('error') or 'unmeasured'}", flush=True)
         for workload in opts.workload:
             runs: dict[str, list[dict]] = {"parent": [], "change": []}
             for i in range(1, opts.pairs + 1):
