@@ -15,8 +15,13 @@ metric of BENCHMARK.json, each side's median, its quartile spread over
 the median, and in how many pairs the change was better (in the
 metric's ``better`` direction).
 
+With ``--trace 1`` every run is traced, and the summary is of the
+per-layer metrics in ``TRACED`` instead: the micro-batch time,
+the burst catch-up, the steady latency and the Spark task counts.
+
     python scripts/ab_pairs.py --parent HEAD~1 --pairs 5 --workload fls_batch
     python scripts/ab_pairs.py --parent main --pairs 10 --workload fls_batch stream_online
+    python scripts/ab_pairs.py --parent main --pairs 4 --workload stream_online --trace 1
 
 Run from the root of a checkout; the checkout is measured as it is on
 disk, uncommitted edits included. It gates nothing.
@@ -34,6 +39,11 @@ import sys
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+#: per-layer metrics summarized for traced runs
+TRACED = (
+    "streaming.batch_ms_p50", "trace.wall_s", "trace.latency_p50_ms", "trace.latency_p99_ms",
+    "spark.tasks", "spark.executor_cpu_s",
+)
 
 
 def export(rev: str, dest: str) -> None:
@@ -42,11 +52,11 @@ def export(rev: str, dest: str) -> None:
     subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
 
 
-def run(tree: str, workload: str, seed: int) -> dict:
+def run(tree: str, workload: str, seed: int, trace: int) -> dict:
     """One benchmark run in ``tree``: its last-line JSON result, or
     ``{"error": ...}`` when the run printed none."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", "6", "--trace", "0"]
+           "--seconds", "6", "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
     lines = proc.stdout.replace("\r", "\n").strip().splitlines()
     try:
@@ -68,22 +78,25 @@ def main() -> int:
     p.add_argument("--parent", required=True, help="git revision to compare against")
     p.add_argument("--pairs", type=int, default=5)
     p.add_argument("--workload", nargs="+", required=True)
+    p.add_argument("--trace", type=int, choices=(0, 1), default=0,
+                   help="1: traced runs, summarized by the per-layer metrics in TRACED")
     opts = p.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        metrics = json.load(f)["end_to_end"]
+        spec = json.load(f)
+    metrics = [m for m in spec["per_layer"] if m["name"] in TRACED] if opts.trace else spec["end_to_end"]
 
     parent = tempfile.mkdtemp(prefix="ab_pairs-")
     try:
         export(opts.parent, parent)
         trees = {"parent": parent, "change": ROOT}
         for side in ("parent", "change"):
-            res = run(trees[side], opts.workload[0], 1)
+            res = run(trees[side], opts.workload[0], 1, opts.trace)
             print(f"{opts.workload[0]} warm-up {side}: {res.get('error') or 'unmeasured'}", flush=True)
         for workload in opts.workload:
             runs: dict[str, list[dict]] = {"parent": [], "change": []}
             for i in range(1, opts.pairs + 1):
                 for side in ("parent", "change") if i % 2 else ("change", "parent"):
-                    res = run(trees[side], workload, i)
+                    res = run(trees[side], workload, i, opts.trace)
                     runs[side].append(res)
                     vals = " ".join(f"{m['name']}={res['metrics'][m['name']]['value']:.3f}"
                                     for m in metrics if m["name"] in res.get("metrics", {}))

@@ -30,6 +30,12 @@ A poller thread lists ``/proc`` every millisecond and counts the
 ``chmod`` and ``jspawnhelper`` processes it sees: a lower bound on the
 forks, as one that starts and exits between two polls is missed.
 
+Each burst's micro-batches are counted from the sink's calls, and the
+state-store instances of those micro-batches are read from
+``query.recentProgress``: each instance is one Python task and one
+state-store commit per micro-batch, so the fixed cost per burst is
+about instances x micro-batches.
+
     python scripts/stream_cost.py                  # 5 bursts of 50 000 events
     python scripts/stream_cost.py --bursts 3 --seed 2
 
@@ -156,17 +162,21 @@ def main(argv=None) -> int:
                 feeder.burst(rows, start_us)
                 sink.wait_rows(sink.rows + rows, query)
                 start_us = feeder.last_us + GAP_US
-            per_burst, forks = [], []
+            per_burst, forks, batch_ids = [], [], []
             for _ in range(opts.bursts):
-                before = []
+                before, first = [], len(sink.batches)
                 with ForkPoller() as poller:
                     feeder.burst(opts.rows, feeder.last_us + GAP_US, lambda: before.append(snapshot(jvm_pid)))
                     sink.wait_rows(sink.rows + opts.rows, query)
                     after = snapshot(jvm_pid)
                 per_burst.append({c: after[c] - before[0][c] for c in CLASSES})
                 forks.append(poller.forks)
+                batch_ids.append({b["id"] for b in sink.batches[first:]})
         finally:
             query.stop()
+        timed = set().union(*batch_ids)
+        instances = sorted({op["numStateStoreInstances"] for p in query.recentProgress
+                            if p["batchId"] in timed for op in p["stateOperators"]})
     finally:
         spark.stop()
         shutil.rmtree(run_dir, ignore_errors=True)
@@ -177,6 +187,9 @@ def main(argv=None) -> int:
         xs = [sum(b[k] for k in CLASSES if k != "jit") if c == "engine" else b[c] for b in per_burst]
         print(f"{c:<18} {statistics.median(xs):7.2f}  {' '.join(f'{x:.2f}' for x in xs)}")
     print(f"{'chmod_forks_seen':<18} {statistics.median(forks):7.0f}  {' '.join(map(str, forks))}")
+    counts = [len(ids) for ids in batch_ids]
+    print(f"{'micro_batches':<18} {statistics.median(counts):7.0f}  {' '.join(map(str, counts))}")
+    print(f"{'state_store_instances':<18} {','.join(map(str, instances)) or 'none reported'}")
     return 0
 
 

@@ -360,7 +360,15 @@ class Featurizer:
         Every feature must be in the plan: a kernel-less user definition
         raises, as does a kernel that declares no ``state_fields``
         (``kernel_inputs``, the input rule ``run`` shares). A config must
-        have exactly one key column."""
+        have exactly one key column.
+
+        A stateful graph's query keeps its state in one partition per
+        micro-batch when its checkpoint is new
+        (``session.STREAM_STATE_PARTITIONS``); a resumed checkpoint keeps
+        the count it recorded. Its DataFrame is bound to a clone of
+        ``source_stream``'s session (``session.bind_stream_session``), so
+        conf set on the caller's session after this call does not reach
+        the query."""
         from svoe_spark.streaming.feature_vector import feature_vector_stream
 
         config = config if isinstance(config, FeaturizerConfig) else FeaturizerConfig.load(config)

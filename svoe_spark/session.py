@@ -17,6 +17,9 @@ install the package on the executors.
 Streaming checkpoints are written by temp file + ``FileSystem.rename``
 (the FileSystem-based manager): the default FileContext one creates more
 files, and without native-hadoop each new local file forks a ``chmod``.
+A stateful stream the engine builds keeps a new checkpoint's state in
+``STREAM_STATE_PARTITIONS`` partitions through a clone of the caller's
+session (``bind_stream_session``); the caller's own count is untouched.
 
 Cold start: a local-master driver JVM maps the classes an earlier session
 loaded from a class-data-sharing archive (JDK 17 dynamic AppCDS, JEP 350)
@@ -49,9 +52,23 @@ from typing import NamedTuple
 
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+#: State partitions of a new checkpoint's stateful stage, for every stateful
+#: stream the engine builds (``bind_stream_session``). Structured Streaming
+#: versions and checkpoints every state partition in every micro-batch, so
+#: each partition is one Python task and one state-store commit per batch,
+#: however few rows it holds. On perfbench's ``stream_online`` (4 cores,
+#: 50k-event bursts), 1 partition against 4 cut ``cpu_s`` by 30% (10 of 10
+#: alternating pairs) and halved the Spark tasks; 2 partitions won in only
+#: 4 of 6 pairs. The trade-off: one task runs every key of a micro-batch in
+#: series, so a burst may catch up later (``trace.wall_s`` read 0.73 ->
+#: 0.85 s in one set of traced pairs, 0.542 -> 0.544 s in another) and a
+#: batch may take a few percent longer; steady-state latency did not rise.
+#: See docs/ARCHITECTURE.md, "Online path: per-micro-batch cost".
+STREAM_STATE_PARTITIONS = 1
 
 
 def _install_py4j_resolution_cache() -> None:
@@ -292,6 +309,35 @@ def _await_dump(proc: subprocess.Popen, cds_dir: str, key: str) -> None:
         proc.kill()
         proc.wait()
     _promote(cds_dir, key, exited=(os.getpid(),))
+
+
+def bind_stream_session(df: DataFrame) -> DataFrame:
+    """``df`` bound to a clone of its session whose
+    ``spark.sql.shuffle.partitions`` is ``STREAM_STATE_PARTITIONS``, the
+    caller's session unchanged: a streaming query started from it, or from
+    a DataFrame derived from it, gives a new checkpoint's stateful stage
+    that many state partitions.
+
+    Spark records the count in a new checkpoint's offset log from the conf
+    of the session the query starts in, and a resumed checkpoint keeps the
+    count it recorded. The count also partitions every other shuffle of
+    the query, and of the batches a ``foreachBatch`` function gets.
+
+    The clone is a snapshot taken at this call: conf set on the caller's
+    session afterwards does not reach the query. The streaming listeners
+    registered on the caller's session by then are registered on the clone
+    too, so they see the query; one added later does not. The query belongs
+    to the clone (the returned DataFrame's ``sparkSession``): the caller's
+    ``spark.streams.active`` does not list it, and a memory sink's table is
+    read from the clone."""
+    jsession = df._jdf.sparkSession()
+    clone = jsession.cloneSession()
+    clone.conf().set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
+    for listener in jsession.streams().listListeners():
+        clone.streams().addListener(listener)
+    spark = df.sparkSession
+    bound = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(clone, df._jdf.logicalPlan())
+    return DataFrame(bound, SparkSession(spark.sparkContext, clone))
 
 
 def get_spark(

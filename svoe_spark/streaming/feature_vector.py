@@ -36,6 +36,7 @@ from pyspark.sql.types import ArrayType, BinaryType, DoubleType, LongType, Struc
 
 from svoe_spark.functions.time import from_micros, to_micros
 from svoe_spark.plans.definitions import KernelStep, project_inputs, run_plan, source_inputs
+from svoe_spark.session import bind_stream_session
 from svoe_spark.streaming.chunks import batch_arrays
 
 #: events per packed output row: a hot key's rows stay far below the JVM's 2 GB limit
@@ -67,7 +68,13 @@ def feature_vector_stream(
     ``mapInPandas`` calling the same ``advance`` for each chunk: the
     engine rejects an applyInPandasWithState with an EMPTY state struct
     ('head of empty list'), and row-local kernels need no event-time
-    order. Both forms ignore events with a null event time."""
+    order. Both forms ignore events with a null event time.
+
+    The stateful form is bound to a clone of ``src``'s session
+    (``session.bind_stream_session``): a new checkpoint's stateful stage
+    has ``STREAM_STATE_PARTITIONS`` (1) partition, a resumed one keeps
+    its recorded count, and conf set on the caller's session after this
+    call does not reach the query."""
     source_cols = source_inputs(plan)
     # an event with no event time is ignored, as the batch per-key stages ignore it
     src = src.filter(F.col(on).isNotNull()).withColumn(on, to_micros(on))
@@ -103,7 +110,7 @@ def feature_vector_stream(
                             **{c: [x[i : i + cap] for i in starts] for c, x in {on: us, **out}.items()}})
         state.update(encode(new_state))
 
-    packed = src.groupBy(key).applyInPandasWithState(
+    packed = bind_stream_session(src).groupBy(key).applyInPandasWithState(
         fn,
         outputStructType=schema(ArrayType(LongType()), ArrayType(DoubleType())),
         stateStructType=state_schema,

@@ -55,3 +55,10 @@ def session_conf(spark, key: str, value):
 def session_time_zone(spark, zone: str):
     """``session_conf`` of ``spark.sql.session.timeZone``."""
     return session_conf(spark, "spark.sql.session.timeZone", zone)
+
+
+def state_store_instances(query) -> set[int]:
+    """The state-store instance counts that ``query``'s micro-batches with
+    input reported, over every stateful operator."""
+    return {op["numStateStoreInstances"] for p in query.recentProgress if p["numInputRows"]
+            for op in p["stateOperators"]}

@@ -430,10 +430,17 @@ def test_run_stream_and_batch_share_one_input_rule(spark, tmp_path):
             Featurizer(spark).run({**missing, "label_lookahead": "1s"})
 
 
-def test_run_stream_restart_carries_state(spark, tmp_path):
+def test_run_stream_restart_carries_state(spark, tmp_path, monkeypatch):
     """State survives a query restart: the first half of the files
     drained to a checkpointed parquet sink, then the rest on the same
-    checkpoint; the union of both runs == batch over all files."""
+    checkpoint; the union of both runs == batch over all files, and ==
+    one uninterrupted run. The state-partition count the checkpoint
+    recorded wins over the one the resumed call asks for: the first run
+    starts with 4, the resumed one keeps 4."""
+    from conftest import state_store_instances
+
+    from svoe_spark import session
+
     path, sink, ckpt = tmp_path / "quotes", tmp_path / "out", tmp_path / "ckpt"
     cfg = _quote_cfg(path, [
         {"name": "mid", "feature_definition": "mid_price"},
@@ -442,21 +449,83 @@ def test_run_stream_restart_carries_state(spark, tmp_path):
         {"name": "ew", "feature_definition": "ewma", "deps": ["mid"],
          "params": {"alpha": 0.3}},
     ])
-    half = len(_WINDOWS) // 2
-    for files in (range(half), range(half, len(_WINDOWS))):
-        n = _write_quotes(path, files)
-        (
+
+    def drain():
+        query = (
             Featurizer(spark).run_stream(cfg, _quote_stream(spark, path))
             .writeStream.format("parquet")
             .option("path", str(sink))
             .option("checkpointLocation", str(ckpt))
             .trigger(availableNow=True)
             .start()
-            .awaitTermination()
         )
+        query.awaitTermination()
+        return state_store_instances(query)
+
+    half = len(_WINDOWS) // 2
+    _write_quotes(path, range(half))
+    with monkeypatch.context() as m:
+        m.setattr(session, "STREAM_STATE_PARTITIONS", 4)
+        assert drain() == {4}
+    n = _write_quotes(path, range(half, len(_WINDOWS)))
+    assert drain() == {4}
     rows = spark.read.parquet(str(sink)).collect()
     assert len(rows) == n
     _assert_stream_equals_batch(spark, cfg, rows, _TOL)
+    whole = run_available_to_memory(Featurizer(spark).run_stream(cfg, _quote_stream(spark, path)))
+    assert _exact(rows) == _exact(whole.collect())
+
+
+def _exact(rows):
+    """``rows`` as sorted tuples, NaN as None, for exact comparison."""
+    return sorted(tuple(None if isinstance(x, float) and math.isnan(x) else x for x in r) for r in rows)
+
+
+def test_run_stream_keeps_its_state_in_one_partition(spark, tmp_path):
+    """A query started from ``run_stream`` with a plain ``writeStream``
+    has one state-store instance per micro-batch, and its new
+    checkpoint records one shuffle partition, while the caller's
+    session keeps its 8. A streaming listener registered on the caller's
+    session before the call sees the query start, and a memory sink's
+    table is read from the returned DataFrame's session."""
+    import json
+
+    from conftest import state_store_instances
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Starts(StreamingQueryListener):
+        def __init__(self):
+            self.started = 0
+
+        def onQueryStarted(self, event):
+            self.started += 1
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    path, sink, ckpt = tmp_path / "quotes", tmp_path / "out", tmp_path / "ckpt"
+    n = _write_quotes(path)
+    cfg = _quote_cfg(path, _STATEFUL)
+    starts = Starts()
+    spark.streams.addListener(starts)
+    try:
+        out = Featurizer(spark).run_stream(cfg, _quote_stream(spark, path))
+    finally:
+        spark.streams.removeListener(starts)
+    query = out.writeStream.format("parquet").option("path", str(sink)) \
+        .option("checkpointLocation", str(ckpt)).trigger(availableNow=True).start()
+    query.awaitTermination()
+    assert starts.started == 1
+    assert state_store_instances(query) == {1}
+    metadata = json.loads((ckpt / "offsets" / "0").read_text().splitlines()[1])
+    assert metadata["conf"]["spark.sql.shuffle.partitions"] == "1"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    rows = spark.read.parquet(str(sink)).collect()
+    table = run_available_to_memory(Featurizer(spark).run_stream(cfg, _quote_stream(spark, path)))
+    assert len(rows) == n and _exact(table.collect()) == _exact(rows)
 
 
 # -- the packed boundary: byte-encoded state and packed output rows --
@@ -724,10 +793,11 @@ def test_state_codec_round_trips_every_state_field_type():
 
 
 def test_run_stream_maps_ts_back_in_the_zone_the_query_runs_in(spark, tmp_path):
-    """The session zone, here set after the plan is built, does not
-    touch event time: the handler reads it as UTC µs, so every event
-    keeps its instant, including the two that share a wall time in the
-    DST fall-back hour."""
+    """The session zone the query runs in, here not UTC, does not touch
+    event time: the handler reads it as UTC µs, so every event keeps its
+    instant, including the two that share a wall time in the DST
+    fall-back hour. The zone is set before ``run_stream``: the query
+    runs in a clone of the session taken at the call."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from conftest import session_time_zone
@@ -743,8 +813,9 @@ def test_run_stream_maps_ts_back_in_the_zone_the_query_runs_in(spark, tmp_path):
         "bid": pa.array([1.0, 2.0, 3.0, 4.0]),
         "ask": pa.array([1.0, 2.0, 3.0, 4.0]),
     }), path / "part-000.parquet")
-    out = Featurizer(spark).run_stream(_quote_cfg(path, _STATEFUL), _quote_stream(spark, path))
     with session_time_zone(spark, "America/New_York"):
+        out = Featurizer(spark).run_stream(_quote_cfg(path, _STATEFUL), _quote_stream(spark, path))
+        assert out.sparkSession.conf.get("spark.sql.session.timeZone") == "America/New_York"
         rows = run_available_to_memory(out).select(
             "mid_value", F.unix_micros("ts").alias("us")
         ).collect()

@@ -8,6 +8,7 @@ same un-emittable set as the interpolation stream's trailing NULLs."""
 import time
 
 import pytest
+from conftest import state_store_instances
 from pyspark.sql import functions as F
 
 from svoe_spark.operators.asof import asof_join_nearest
@@ -236,19 +237,24 @@ def test_asof_nearest_hand_case_tiebreak_and_exact_match(spark, tmp_path):
     ).select(
         "event_type", F.timestamp_seconds("sec").alias("ts")
     ).coalesce(1).write.parquet(lp)
-    out = run_available_to_memory(
-        asof_nearest_stream(
-            _replay(spark, lp),
-            _replay(spark, rp),
-            on="ts",
-            by="event_type",
-            value_col="value",
-            out="v",
-        )
+    stream = asof_nearest_stream(
+        _replay(spark, lp),
+        _replay(spark, rp),
+        on="ts",
+        by="event_type",
+        value_col="value",
+        out="v",
     )
+    query = (
+        stream.writeStream.format("memory").queryName("asof_hand_case")
+        .trigger(availableNow=True).start()
+    )
+    query.awaitTermination()
+    # the stateful stage keeps its state in one partition
+    assert state_store_instances(query) == {1}
     got = sorted(
         (r["event_type"], int(r["ts"].timestamp()), r["v"])
-        for r in out.collect()
+        for r in stream.sparkSession.table("asof_hand_case").collect()
     )
     assert got == [("k", 200, 1.0), ("k", 300, 2.0)]
 
