@@ -45,7 +45,6 @@ from pyspark.sql.types import (
 
 from svoe_spark.functions.time import duration_to_seconds, epoch_seconds, from_micros, micros_ns, to_micros
 from svoe_spark.operators.util import hot_key_bucket
-from svoe_spark.session import bind_stream_session
 
 LEVEL = StructType(
     [StructField("price", DoubleType()), StructField("size", DoubleType())]
@@ -671,11 +670,10 @@ def reconstruct_book_stream(
     """Streaming reconstruction: the book lives in GroupState; assumes
     in-order delivery per key (the reference's invariant, T5).
 
-    The result is bound to a clone of ``df``'s session
-    (``session.bind_stream_session``): a new checkpoint's stateful stage
-    has ``STREAM_STATE_PARTITIONS`` (1) partition, a resumed one keeps
-    its recorded count, and conf set on the caller's session after this
-    call does not reach the query."""
+    Started by ``streaming.sinks`` with a live trigger, a new checkpoint's
+    book state is kept in ``session.STREAM_STATE_PARTITIONS`` (1)
+    partition; a drain keeps the session's count, and a resumed checkpoint
+    the count it recorded (``session.bind_stream_session``)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     every = duration_to_seconds(emit_every) if emit_every is not None else None
@@ -719,7 +717,7 @@ def reconstruct_book_stream(
         )
 
     return (
-        bind_stream_session(df.select(key, to_micros("ts").alias("ts"), "update_type", "orders"))
+        df.select(key, to_micros("ts").alias("ts"), "update_type", "orders")
         .groupBy(key)
         .applyInPandasWithState(
             fn,

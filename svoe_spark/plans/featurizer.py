@@ -362,13 +362,11 @@ class Featurizer:
         (``kernel_inputs``, the input rule ``run`` shares). A config must
         have exactly one key column.
 
-        A stateful graph's query keeps its state in one partition per
-        micro-batch when its checkpoint is new
-        (``session.STREAM_STATE_PARTITIONS``); a resumed checkpoint keeps
-        the count it recorded. Its DataFrame is bound to a clone of
-        ``source_stream``'s session (``session.bind_stream_session``), so
-        conf set on the caller's session after this call does not reach
-        the query."""
+        Started by ``streaming.sinks`` with a live trigger, a stateful
+        graph keeps a new checkpoint's state in
+        ``session.STREAM_STATE_PARTITIONS`` (1) partition; a drain keeps the
+        session's count, and a resumed checkpoint the count it recorded
+        (``session.bind_stream_session``)."""
         from svoe_spark.streaming.feature_vector import feature_vector_stream
 
         config = config if isinstance(config, FeaturizerConfig) else FeaturizerConfig.load(config)

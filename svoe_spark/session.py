@@ -17,9 +17,10 @@ install the package on the executors.
 Streaming checkpoints are written by temp file + ``FileSystem.rename``
 (the FileSystem-based manager): the default FileContext one creates more
 files, and without native-hadoop each new local file forks a ``chmod``.
-A stateful stream the engine builds keeps a new checkpoint's state in
-``STREAM_STATE_PARTITIONS`` partitions through a clone of the caller's
-session (``bind_stream_session``); the caller's own count is untouched.
+A streaming query the engine's sinks start with a live trigger keeps a
+new checkpoint's state in ``STREAM_STATE_PARTITIONS`` partitions, through
+a clone of the caller's session (``bind_stream_session``); the caller's own
+count is untouched.
 
 Cold start: a local-master driver JVM maps the classes an earlier session
 loaded from a class-data-sharing archive (JDK 17 dynamic AppCDS, JEP 350)
@@ -48,6 +49,7 @@ import os
 import shutil
 import struct
 import subprocess
+import weakref
 from typing import NamedTuple
 
 from pyspark import SparkContext
@@ -56,19 +58,24 @@ from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-#: State partitions of a new checkpoint's stateful stage, for every stateful
-#: stream the engine builds (``bind_stream_session``). Structured Streaming
-#: versions and checkpoints every state partition in every micro-batch, so
-#: each partition is one Python task and one state-store commit per batch,
-#: however few rows it holds. On perfbench's ``stream_online`` (4 cores,
-#: 50k-event bursts), 1 partition against 4 cut ``cpu_s`` by 30% (10 of 10
-#: alternating pairs) and halved the Spark tasks; 2 partitions won in only
-#: 4 of 6 pairs. The trade-off: one task runs every key of a micro-batch in
-#: series, so a burst may catch up later (``trace.wall_s`` read 0.73 ->
-#: 0.85 s in one set of traced pairs, 0.542 -> 0.544 s in another) and a
-#: batch may take a few percent longer; steady-state latency did not rise.
+#: State partitions of a new checkpoint's stateful stage, for a streaming
+#: query the engine's sinks start with a live trigger (``bind_stream_session``).
+#: Structured Streaming versions and checkpoints every state partition in
+#: every micro-batch, so each partition is one Python task and one
+#: state-store commit per batch, however few rows it holds. On perfbench's
+#: ``stream_online`` (4 cores, the default trigger, 50k-event bursts, about
+#: one micro-batch each), 1 partition against 4 halved the Spark tasks and
+#: lowered ``cpu_s`` in 10 of 10 alternating pairs, twice, each median gap
+#: inside the parent's quartile distance; 2 partitions won in only 4 of 6.
+#: A drain (``availableNow``) keeps the session's count: one task runs in
+#: series what the partitions run in parallel, and on 4 cores an 8M-row
+#: backlog took 1.6-2.5x as long in one partition as in 32
+#: (scripts/stream_backfill.py). A live query whose first batch meets such
+#: a backlog pays that too.
 #: See docs/ARCHITECTURE.md, "Online path: per-micro-batch cost".
 STREAM_STATE_PARTITIONS = 1
+#: the stream session of each caller session (``bind_stream_session``)
+_STREAM_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _install_py4j_resolution_cache() -> None:
@@ -311,33 +318,58 @@ def _await_dump(proc: subprocess.Popen, cds_dir: str, key: str) -> None:
     _promote(cds_dir, key, exited=(os.getpid(),))
 
 
-def bind_stream_session(df: DataFrame) -> DataFrame:
-    """``df`` bound to a clone of its session whose
-    ``spark.sql.shuffle.partitions`` is ``STREAM_STATE_PARTITIONS``, the
-    caller's session unchanged: a streaming query started from it, or from
-    a DataFrame derived from it, gives a new checkpoint's stateful stage
-    that many state partitions.
+def bind_stream_session(df: DataFrame, trigger: dict | None) -> DataFrame:
+    """``df`` ready to start a streaming query with ``trigger`` (the
+    keywords of ``DataStreamWriter.trigger``; None is Spark's default, the
+    next micro-batch as soon as the last one ends).
 
-    Spark records the count in a new checkpoint's offset log from the conf
-    of the session the query starts in, and a resumed checkpoint keeps the
-    count it recorded. The count also partitions every other shuffle of
-    the query, and of the batches a ``foreachBatch`` function gets.
+    A live trigger (None or ``processingTime``) binds ``df`` to its
+    session's stream session: a clone of it whose
+    ``spark.sql.shuffle.partitions`` is ``STREAM_STATE_PARTITIONS``, so a
+    new checkpoint's stateful stage gets that many state partitions. Any
+    other trigger (``availableNow``, ``once``: a drain whose first batch
+    carries the whole backlog) returns ``df`` as it is, and the query keeps
+    the session's count.
 
-    The clone is a snapshot taken at this call: conf set on the caller's
-    session afterwards does not reach the query. The streaming listeners
-    registered on the caller's session by then are registered on the clone
-    too, so they see the query; one added later does not. The query belongs
-    to the clone (the returned DataFrame's ``sparkSession``): the caller's
-    ``spark.streams.active`` does not list it, and a memory sink's table is
-    read from the clone."""
-    jsession = df._jdf.sparkSession()
-    clone = jsession.cloneSession()
-    clone.conf().set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    for listener in jsession.streams().listListeners():
-        clone.streams().addListener(listener)
+    Spark records the count in a new checkpoint's offset log, and a resumed
+    checkpoint keeps the count it recorded, whatever the trigger: a query
+    that drains a backlog with ``availableNow`` and then goes on live on the
+    same checkpoint keeps the session's count. The count also partitions
+    every other shuffle of the query, and of the batches a ``foreachBatch``
+    function gets.
+
+    Each caller session has one stream session, which with its streaming
+    listener bus lives as long as the SparkContext. Every bind first sets
+    the caller's conf and streaming listeners on it, so the query starts
+    with those of this call; a listener removed from the caller later still
+    hears the query. The query belongs to the stream session (the returned
+    DataFrame's ``sparkSession``): the caller's ``spark.streams.active``
+    does not list it."""
+    if trigger and "processingTime" not in trigger:
+        return df
     spark = df.sparkSession
-    bound = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(clone, df._jdf.logicalPlan())
-    return DataFrame(bound, SparkSession(spark.sparkContext, clone))
+    stream = _STREAM_SESSIONS.get(spark)
+    if stream is None:
+        stream = _STREAM_SESSIONS[spark] = SparkSession(
+            spark.sparkContext, spark._jsparkSession.cloneSession()
+        )
+    want = {**spark.conf.getAll, "spark.sql.shuffle.partitions": str(STREAM_STATE_PARTITIONS)}
+    have = stream.conf.getAll
+    for k in have.keys() - want.keys():
+        stream.conf.unset(k)
+    for k, v in want.items():
+        if have.get(k) != v:
+            stream.conf.set(k, v)
+    listeners, jstreams = spark._jsparkSession.streams().listListeners(), stream._jsparkSession.streams()
+    bound = jstreams.listListeners()
+    for listener in bound:
+        if listener not in listeners:
+            jstreams.removeListener(listener)
+    for listener in listeners:
+        if listener not in bound:
+            jstreams.addListener(listener)
+    plan = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(stream._jsparkSession, df._jdf.logicalPlan())
+    return DataFrame(plan, stream)
 
 
 def get_spark(

@@ -68,7 +68,6 @@ from pyspark.sql.types import (
 )
 
 from svoe_spark.functions.time import duration_to_seconds, from_micros, to_micros
-from svoe_spark.session import bind_stream_session
 from svoe_spark.streaming.chunks import batch_arrays
 
 
@@ -256,11 +255,10 @@ def asof_nearest_stream(
     would finalize one key's pendings off another key's traffic — run
     tolerance mode only on globally ordered replays.
 
-    The result is bound to a clone of ``left``'s session
-    (``session.bind_stream_session``): a new checkpoint's stateful stage
-    has ``STREAM_STATE_PARTITIONS`` (1) partition, a resumed one keeps
-    its recorded count, and conf set on the caller's session after this
-    call does not reach the query."""
+    Started by ``streaming.sinks`` with a live trigger, a new checkpoint's
+    state is kept in ``session.STREAM_STATE_PARTITIONS`` (1) partition; a
+    drain keeps the session's count, and a resumed checkpoint the count it
+    recorded (``session.bind_stream_session``)."""
     cols, names = _norm_cols(value_col, out, "nearest_value")
     tol_us = (
         None
@@ -385,7 +383,7 @@ def asof_nearest_stream(
         if out_t:
             yield _emit_frame(by, key_tuple, names, out_t, out_v)
 
-    u, timeout_conf = _prep(bind_stream_session(u), tol_us)
+    u, timeout_conf = _prep(u, tol_us)
     res = u.groupBy(by).applyInPandasWithState(
         fn,
         outputStructType=out_schema,

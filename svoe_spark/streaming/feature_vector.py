@@ -36,7 +36,6 @@ from pyspark.sql.types import ArrayType, BinaryType, DoubleType, LongType, Struc
 
 from svoe_spark.functions.time import from_micros, to_micros
 from svoe_spark.plans.definitions import KernelStep, project_inputs, run_plan, source_inputs
-from svoe_spark.session import bind_stream_session
 from svoe_spark.streaming.chunks import batch_arrays
 
 #: events per packed output row: a hot key's rows stay far below the JVM's 2 GB limit
@@ -70,11 +69,10 @@ def feature_vector_stream(
     ('head of empty list'), and row-local kernels need no event-time
     order. Both forms ignore events with a null event time.
 
-    The stateful form is bound to a clone of ``src``'s session
-    (``session.bind_stream_session``): a new checkpoint's stateful stage
-    has ``STREAM_STATE_PARTITIONS`` (1) partition, a resumed one keeps
-    its recorded count, and conf set on the caller's session after this
-    call does not reach the query."""
+    Started by ``streaming.sinks`` with a live trigger, the stateful form
+    keeps a new checkpoint's state in ``session.STREAM_STATE_PARTITIONS``
+    (1) partition; a drain keeps the session's count, and a resumed
+    checkpoint the count it recorded (``session.bind_stream_session``)."""
     source_cols = source_inputs(plan)
     # an event with no event time is ignored, as the batch per-key stages ignore it
     src = src.filter(F.col(on).isNotNull()).withColumn(on, to_micros(on))
@@ -110,7 +108,7 @@ def feature_vector_stream(
                             **{c: [x[i : i + cap] for i in starts] for c, x in {on: us, **out}.items()}})
         state.update(encode(new_state))
 
-    packed = bind_stream_session(src).groupBy(key).applyInPandasWithState(
+    packed = src.groupBy(key).applyInPandasWithState(
         fn,
         outputStructType=schema(ArrayType(LongType()), ArrayType(DoubleType())),
         stateStructType=state_schema,

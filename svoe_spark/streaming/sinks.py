@@ -5,6 +5,11 @@ frames, writes Parquet and registers catalog rows
 (block_writer.py:25-123, memory_based_compactor.py:11-49). Structured
 Streaming's file sink + checkpoint does all of that natively — these are
 thin policy wrappers.
+
+A query these sinks start with a live trigger (the default, or
+``processingTime``) keeps a new checkpoint's state in
+``session.STREAM_STATE_PARTITIONS`` partitions; a drain (``availableNow``)
+keeps the session's count (``session.bind_stream_session``).
 """
 
 from __future__ import annotations
@@ -15,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from svoe_spark.functions.time import utc_day
+from svoe_spark.session import bind_stream_session
 
 
 def write_parquet_blocks(
@@ -33,7 +39,7 @@ def write_parquet_blocks(
     if "day" in partition_by and "day" not in df.columns:
         out = df.withColumn("day", utc_day(ts_col))
     writer = (
-        out.writeStream.format("parquet")
+        bind_stream_session(out, trigger).writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .partitionBy(*partition_by)
@@ -65,8 +71,10 @@ def run_available_to_memory(
 
 def foreach_batch(df: DataFrame, fn, checkpoint: str, trigger: dict | None = None) -> StreamingQuery:
     """Consumer-callback sink (reference S10 sink(func) / backtester
-    on_data_udf, strategy/base.py:51-57)."""
-    writer = df.writeStream.foreachBatch(fn).option("checkpointLocation", checkpoint)
+    on_data_udf, strategy/base.py:51-57). Under a live trigger ``fn`` gets
+    batches of the stream session, whose shuffles have
+    ``session.STREAM_STATE_PARTITIONS`` partitions."""
+    writer = bind_stream_session(df, trigger).writeStream.foreachBatch(fn).option("checkpointLocation", checkpoint)
     if trigger:
         writer = writer.trigger(**trigger)
     return writer.start()

@@ -430,17 +430,10 @@ def test_run_stream_and_batch_share_one_input_rule(spark, tmp_path):
             Featurizer(spark).run({**missing, "label_lookahead": "1s"})
 
 
-def test_run_stream_restart_carries_state(spark, tmp_path, monkeypatch):
+def test_run_stream_restart_carries_state(spark, tmp_path):
     """State survives a query restart: the first half of the files
     drained to a checkpointed parquet sink, then the rest on the same
-    checkpoint; the union of both runs == batch over all files, and ==
-    one uninterrupted run. The state-partition count the checkpoint
-    recorded wins over the one the resumed call asks for: the first run
-    starts with 4, the resumed one keeps 4."""
-    from conftest import state_store_instances
-
-    from svoe_spark import session
-
+    checkpoint; the union of both runs == batch over all files."""
     path, sink, ckpt = tmp_path / "quotes", tmp_path / "out", tmp_path / "ckpt"
     cfg = _quote_cfg(path, [
         {"name": "mid", "feature_definition": "mid_price"},
@@ -449,31 +442,21 @@ def test_run_stream_restart_carries_state(spark, tmp_path, monkeypatch):
         {"name": "ew", "feature_definition": "ewma", "deps": ["mid"],
          "params": {"alpha": 0.3}},
     ])
-
-    def drain():
-        query = (
+    half = len(_WINDOWS) // 2
+    for files in (range(half), range(half, len(_WINDOWS))):
+        n = _write_quotes(path, files)
+        (
             Featurizer(spark).run_stream(cfg, _quote_stream(spark, path))
             .writeStream.format("parquet")
             .option("path", str(sink))
             .option("checkpointLocation", str(ckpt))
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        query.awaitTermination()
-        return state_store_instances(query)
-
-    half = len(_WINDOWS) // 2
-    _write_quotes(path, range(half))
-    with monkeypatch.context() as m:
-        m.setattr(session, "STREAM_STATE_PARTITIONS", 4)
-        assert drain() == {4}
-    n = _write_quotes(path, range(half, len(_WINDOWS)))
-    assert drain() == {4}
     rows = spark.read.parquet(str(sink)).collect()
     assert len(rows) == n
     _assert_stream_equals_batch(spark, cfg, rows, _TOL)
-    whole = run_available_to_memory(Featurizer(spark).run_stream(cfg, _quote_stream(spark, path)))
-    assert _exact(rows) == _exact(whole.collect())
 
 
 def _exact(rows):
@@ -481,16 +464,33 @@ def _exact(rows):
     return sorted(tuple(None if isinstance(x, float) and math.isnan(x) else x for x in r) for r in rows)
 
 
-def test_run_stream_keeps_its_state_in_one_partition(spark, tmp_path):
-    """A query started from ``run_stream`` with a plain ``writeStream``
-    has one state-store instance per micro-batch, and its new
-    checkpoint records one shuffle partition, while the caller's
-    session keeps its 8. A streaming listener registered on the caller's
-    session before the call sees the query start, and a memory sink's
-    table is read from the returned DataFrame's session."""
+def _start(spark, cfg, path, checkpoint, trigger=None):
+    """``run_stream`` over the quote files at ``path`` started by
+    ``sinks.foreach_batch``, run until it has processed every file and
+    stopped: its rows and its state-store instance counts."""
+    from conftest import state_store_instances
+
+    from svoe_spark.streaming.sinks import foreach_batch
+
+    rows = []
+    out = Featurizer(spark).run_stream(cfg, _quote_stream(spark, path))
+    query = foreach_batch(out, lambda df, _: rows.extend(df.collect()), str(checkpoint), trigger)
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    return rows, state_store_instances(query)
+
+
+def test_run_stream_state_partitions_follow_the_trigger(spark, tmp_path):
+    """Started live (``sinks.foreach_batch``'s default trigger), a
+    ``run_stream`` query keeps its new checkpoint's state in one
+    partition and records 1 shuffle partition, while the caller's session
+    keeps its 8; drained with ``availableNow`` it keeps the session's 8.
+    Both emit the same rows. A listener registered on the caller's
+    session hears the live query start."""
     import json
 
-    from conftest import state_store_instances
     from pyspark.sql.streaming import StreamingQueryListener
 
     class Starts(StreamingQueryListener):
@@ -506,26 +506,89 @@ def test_run_stream_keeps_its_state_in_one_partition(spark, tmp_path):
         def onQueryTerminated(self, event):
             pass
 
-    path, sink, ckpt = tmp_path / "quotes", tmp_path / "out", tmp_path / "ckpt"
+    def recorded(checkpoint):
+        meta = json.loads((checkpoint / "offsets" / "0").read_text().splitlines()[1])
+        return meta["conf"]["spark.sql.shuffle.partitions"]
+
+    path = tmp_path / "quotes"
     n = _write_quotes(path)
     cfg = _quote_cfg(path, _STATEFUL)
     starts = Starts()
     spark.streams.addListener(starts)
     try:
-        out = Featurizer(spark).run_stream(cfg, _quote_stream(spark, path))
+        live, live_instances = _start(spark, cfg, path, tmp_path / "live")
     finally:
         spark.streams.removeListener(starts)
-    query = out.writeStream.format("parquet").option("path", str(sink)) \
-        .option("checkpointLocation", str(ckpt)).trigger(availableNow=True).start()
-    query.awaitTermination()
+    drained, drained_instances = _start(spark, cfg, path, tmp_path / "drained", {"availableNow": True})
     assert starts.started == 1
-    assert state_store_instances(query) == {1}
-    metadata = json.loads((ckpt / "offsets" / "0").read_text().splitlines()[1])
-    assert metadata["conf"]["spark.sql.shuffle.partitions"] == "1"
+    assert (live_instances, recorded(tmp_path / "live")) == ({1}, "1")
+    assert (drained_instances, recorded(tmp_path / "drained")) == ({8}, "8")
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-    rows = spark.read.parquet(str(sink)).collect()
-    table = run_available_to_memory(Featurizer(spark).run_stream(cfg, _quote_stream(spark, path)))
-    assert len(rows) == n and _exact(table.collect()) == _exact(rows)
+    assert len(live) == n and _exact(live) == _exact(drained)
+
+
+def test_live_run_stream_resumes_with_its_recorded_state_partitions(spark, tmp_path, monkeypatch):
+    """The state-partition count a live query's checkpoint recorded wins
+    over the one the resumed start asks for: the first run starts with 4,
+    the resumed one keeps 4. The state carries over: the union of both
+    runs == one uninterrupted drain."""
+    from svoe_spark import session
+
+    path, ckpt = tmp_path / "quotes", tmp_path / "ckpt"
+    cfg = _quote_cfg(path, _STATEFUL)
+    half = len(_WINDOWS) // 2
+    _write_quotes(path, range(half))
+    with monkeypatch.context() as m:
+        m.setattr(session, "STREAM_STATE_PARTITIONS", 4)
+        first, instances = _start(spark, cfg, path, ckpt)
+    assert instances == {4}
+    n = _write_quotes(path, range(half, len(_WINDOWS)))
+    rest, instances = _start(spark, cfg, path, ckpt)
+    assert instances == {4}
+    whole = run_available_to_memory(Featurizer(spark).run_stream(cfg, _quote_stream(spark, path)))
+    assert len(first + rest) == n and _exact(first + rest) == _exact(whole.collect())
+
+
+def test_bind_stream_session_follows_the_caller(spark, tmp_path):
+    """A live trigger binds to one stream session per caller session,
+    which takes the caller's conf and streaming listeners at each bind;
+    a drain's DataFrame is left as it is."""
+    from conftest import session_time_zone
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from svoe_spark.session import bind_stream_session
+
+    class Quiet(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    def listeners(s):
+        return len(s._jsparkSession.streams().listListeners())
+
+    path = tmp_path / "quotes"
+    _write_quotes(path, range(1))
+    df = _quote_stream(spark, path)
+    assert bind_stream_session(df, {"availableNow": True}) is df
+    quiet = Quiet()
+    spark.streams.addListener(quiet)
+    try:
+        with session_time_zone(spark, "America/New_York"):
+            during = bind_stream_session(df, None).sparkSession
+            assert during.conf.get("spark.sql.session.timeZone") == "America/New_York"
+            assert listeners(during) == listeners(spark)
+    finally:
+        spark.streams.removeListener(quiet)
+    after = bind_stream_session(df, {"processingTime": "1 second"}).sparkSession
+    assert after is during
+    assert after.conf.get("spark.sql.session.timeZone") == spark.conf.get("spark.sql.session.timeZone")
+    assert after.conf.get("spark.sql.shuffle.partitions") == "1"
+    assert listeners(after) == listeners(spark)
 
 
 # -- the packed boundary: byte-encoded state and packed output rows --
@@ -793,11 +856,10 @@ def test_state_codec_round_trips_every_state_field_type():
 
 
 def test_run_stream_maps_ts_back_in_the_zone_the_query_runs_in(spark, tmp_path):
-    """The session zone the query runs in, here not UTC, does not touch
-    event time: the handler reads it as UTC µs, so every event keeps its
-    instant, including the two that share a wall time in the DST
-    fall-back hour. The zone is set before ``run_stream``: the query
-    runs in a clone of the session taken at the call."""
+    """The session zone, here set after the plan is built, does not
+    touch event time: the handler reads it as UTC µs, so every event
+    keeps its instant, including the two that share a wall time in the
+    DST fall-back hour."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from conftest import session_time_zone
@@ -813,9 +875,8 @@ def test_run_stream_maps_ts_back_in_the_zone_the_query_runs_in(spark, tmp_path):
         "bid": pa.array([1.0, 2.0, 3.0, 4.0]),
         "ask": pa.array([1.0, 2.0, 3.0, 4.0]),
     }), path / "part-000.parquet")
+    out = Featurizer(spark).run_stream(_quote_cfg(path, _STATEFUL), _quote_stream(spark, path))
     with session_time_zone(spark, "America/New_York"):
-        out = Featurizer(spark).run_stream(_quote_cfg(path, _STATEFUL), _quote_stream(spark, path))
-        assert out.sparkSession.conf.get("spark.sql.session.timeZone") == "America/New_York"
         rows = run_available_to_memory(out).select(
             "mid_value", F.unix_micros("ts").alias("us")
         ).collect()

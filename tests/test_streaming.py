@@ -146,6 +146,34 @@ def test_orderbook_stream_equals_batch(spark, sf_small, tmp_path):
     assert diffs == []
 
 
+def test_book_stream_started_live_keeps_state_in_one_partition(spark, sf_small, tmp_path):
+    """Started live (``sinks.foreach_batch``'s default trigger), the book
+    stream keeps its new checkpoint's state in one partition and emits
+    the batch books of a one-file replay."""
+    from conftest import state_store_instances
+
+    from svoe_spark.streaming.sinks import foreach_batch
+
+    updates = synthetic_l2_updates(load_table(spark, "events", sf_small))
+    path = str(tmp_path / "l2")
+    updates.coalesce(1).write.parquet(path)
+    rows = []
+    query = foreach_batch(
+        reconstruct_book_stream(replay_parquet(spark, path), depth=10),
+        lambda df, _: rows.extend(df.collect()),
+        str(tmp_path / "ckpt"),
+    )
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    assert state_store_instances(query) == {1}
+    got = {(r["symbol"], r["ts"]): (r["bids"], r["asks"], r["inconsistencies"]) for r in rows}
+    want = _rows(reconstruct_book(updates, depth=10), ("symbol", "ts"))
+    assert got == {k: (w["bids"], w["asks"], w["inconsistencies"]) for k, w in want.items()}
+    assert len(rows) == len(want)
+
+
 def test_stateless_minhash_runs_on_stream(spark, sf_small, tmp_path):
     """The array-side MinHash signature is a narrow projection, so the
     SAME operator code must run unchanged on a streaming DataFrame

@@ -8,7 +8,6 @@ same un-emittable set as the interpolation stream's trailing NULLs."""
 import time
 
 import pytest
-from conftest import state_store_instances
 from pyspark.sql import functions as F
 
 from svoe_spark.operators.asof import asof_join_nearest
@@ -237,25 +236,51 @@ def test_asof_nearest_hand_case_tiebreak_and_exact_match(spark, tmp_path):
     ).select(
         "event_type", F.timestamp_seconds("sec").alias("ts")
     ).coalesce(1).write.parquet(lp)
-    stream = asof_nearest_stream(
-        _replay(spark, lp),
-        _replay(spark, rp),
-        on="ts",
-        by="event_type",
-        value_col="value",
-        out="v",
+    out = run_available_to_memory(
+        asof_nearest_stream(
+            _replay(spark, lp),
+            _replay(spark, rp),
+            on="ts",
+            by="event_type",
+            value_col="value",
+            out="v",
+        )
     )
-    query = (
-        stream.writeStream.format("memory").queryName("asof_hand_case")
-        .trigger(availableNow=True).start()
-    )
-    query.awaitTermination()
-    # the stateful stage keeps its state in one partition
-    assert state_store_instances(query) == {1}
     got = sorted(
         (r["event_type"], int(r["ts"].timestamp()), r["v"])
-        for r in stream.sparkSession.table("asof_hand_case").collect()
+        for r in out.collect()
     )
+    assert got == [("k", 200, 1.0), ("k", 300, 2.0)]
+
+
+def test_asof_nearest_stream_started_live_keeps_state_in_one_partition(spark, tmp_path):
+    """Started live (``sinks.foreach_batch``'s default trigger), the
+    nearest stream keeps its new checkpoint's state in one partition and
+    emits the hand case's matches."""
+    from conftest import state_store_instances
+
+    from svoe_spark.streaming.sinks import foreach_batch
+
+    lp, rp = str(tmp_path / "l"), str(tmp_path / "r")
+    spark.createDataFrame(
+        [("k", 100, 1.0), ("k", 300, 2.0)], "event_type string, sec long, value double"
+    ).select("event_type", F.timestamp_seconds("sec").alias("ts"), "value").coalesce(1).write.parquet(rp)
+    spark.createDataFrame(
+        [("k", 200), ("k", 300), ("k", 999)], "event_type string, sec long"
+    ).select("event_type", F.timestamp_seconds("sec").alias("ts")).coalesce(1).write.parquet(lp)
+    rows = []
+    query = foreach_batch(
+        asof_nearest_stream(_replay(spark, lp), _replay(spark, rp), on="ts", by="event_type",
+                            value_col="value", out="v"),
+        lambda df, _: rows.extend(df.collect()),
+        str(tmp_path / "ckpt"),
+    )
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    assert state_store_instances(query) == {1}
+    got = sorted((r["event_type"], int(r["ts"].timestamp()), r["v"]) for r in rows)
     assert got == [("k", 200, 1.0), ("k", 300, 2.0)]
 
 
