@@ -65,8 +65,10 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 #: state-store commit per batch, however few rows it holds. On perfbench's
 #: ``stream_online`` (4 cores, the default trigger, 50k-event bursts, about
 #: one micro-batch each), 1 partition against 4 halved the Spark tasks and
-#: lowered ``cpu_s`` in 10 of 10 alternating pairs, twice, each median gap
-#: inside the parent's quartile distance; 2 partitions won in only 4 of 6.
+#: lowered ``cpu_s`` in 10 of 10 alternating pairs in each of three sets; on
+#: a quiet host the median fell 0.93 -> 0.66 s, a gap larger than the
+#: parent's quartile distance (0.86-0.97 s), and on a loaded host twice by
+#: less than that distance. 2 partitions won in only 4 of 6.
 #: A drain (``availableNow``) keeps the session's count: one task runs in
 #: series what the partitions run in parallel, and on 4 cores an 8M-row
 #: backlog took 1.6-2.5x as long in one partition as in 32
